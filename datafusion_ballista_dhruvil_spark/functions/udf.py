@@ -59,13 +59,18 @@ ORDER BY event_id
 def udf_vectorized_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-vectorized pandas UDF in a projection; the oracle evaluates the
     same IEEE-double expression in SQL — results match exactly because the
-    UDF sticks to fixed-order double arithmetic."""
+    UDF sticks to fixed-order double arithmetic.
+
+    The UDF runs after the global sort: under the sort's range-partition
+    exchange it would run twice, once in the sampling job that picks the
+    range bounds and once in the shuffle's map stage."""
     t = Tables(spark, sf_dir)
     score = make_signal_score()
     return (
         t.events.where(F.col("event_id") < 500)
-        .select("event_id", score(F.col("value")).alias("score"))
+        .select("event_id", "value")
         .orderBy("event_id")
+        .select("event_id", score(F.col("value")).alias("score"))
     )
 
 

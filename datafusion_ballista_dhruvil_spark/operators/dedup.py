@@ -173,9 +173,10 @@ def _input_bytes(path: str) -> int:
 
 def _shingle_arrays(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     docs = Tables(spark, sf_dir).documents
-    cpus = spark.sparkContext.defaultParallelism
     parts = shingle_spread_partitions(
-        _input_bytes(table_path(sf_dir, "documents")), cpus
+        _input_bytes(table_path(sf_dir, "documents")),
+        spark.sparkContext.defaultParallelism,
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes(),
     )
     if parts:
         docs = docs.repartition(parts)

@@ -468,13 +468,15 @@ def mm_resize_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     assets = with_payload(t.documents).where(F.col("doc_id") < 200)
+    # no orderBy (the driver compare sorts): a range exchange over this
+    # map-only chain would run its Python a second time in the sampling
+    # job, and sorting first would shuffle the payload
     return (
         assets.select("doc_id", "payload")
         .mapInPandas(
             resize_batch,
             schema="doc_id long, orig_chars long, thumb_chars long, thumb_md5 string",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -933,6 +935,9 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     assets = with_payload(t.documents).where(F.col("doc_id") < 200)
+    # no orderBy (the driver compare sorts): a range exchange over this
+    # map-only chain would run its Python a second time in the sampling
+    # job, and sorting first would shuffle the payload
     return (
         assets.select("doc_id", "payload")
         .mapInPandas(encode_batch, schema="doc_id long, audio binary")
@@ -941,7 +946,6 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="doc_id long, sample_rate long, n_samples long, "
             "duration_ms long, mean_abs double, peak long",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1028,10 +1032,13 @@ def mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["longest_static"].append(best)
             yield pd.DataFrame(out)
 
+    # no orderBy (the driver compare sorts): a range exchange over this
+    # map-only chain would run its Python a second time in the sampling
+    # job, and sorting first would shuffle the payload
     return docs.mapInPandas(
         cuts_batch,
         schema="doc_id long, n_frames long, n_cuts long, longest_static long",
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1245,6 +1252,9 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     assets = with_payload(t.documents).where(F.col("doc_id") < 200)
+    # no orderBy (the driver compare sorts): a range exchange over this
+    # map-only chain would run its Python a second time in the sampling
+    # job, and sorting first would shuffle the payload
     return (
         assets.select("doc_id", "payload")
         .mapInPandas(encode_batch, schema="doc_id long, audio binary")
@@ -1253,7 +1263,6 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="doc_id long, n_frames long, n_active long, "
             "n_segments long, longest_seg long",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1490,6 +1499,9 @@ def mm_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     assets = with_payload(t.documents).where(F.col("doc_id") < 200)
+    # no orderBy (the driver compare sorts): a range exchange over this
+    # map-only chain would run its Python a second time in the sampling
+    # job, and sorting first would shuffle the payload
     return (
         assets.select("doc_id", "payload")
         .mapInPandas(encode_batch, schema="doc_id long, image binary")
@@ -1498,7 +1510,6 @@ def mm_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="doc_id long, n_levels long, ent_num_q6 long, "
             "entropy_bits double",
         )
-        .orderBy("doc_id")
     )
 
 

@@ -334,8 +334,8 @@ def owned_result(
         orig = getattr(df, name)
 
         def wrapped(*a, **k):
-            _prepare_once()
             try:
+                _prepare_once()
                 return orig(*a, **k)
             finally:
                 _release()

@@ -37,7 +37,7 @@ from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.session import Tables
+from datafusion_ballista_dhruvil_spark.session import Tables, local_frame
 
 # elements quantize to round(x * 1e7) (away-from-zero, matching Spark's
 # HALF_UP and DuckDB's round()); a 64-dim dot of |x| < 10 values stays
@@ -1780,7 +1780,7 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qi in range(5)
         for cid in _np.lexsort((_np.arange(8), cd[qi]))[:2]
     ]
-    probe = spark.createDataFrame(probe_rows, "query_id long, cid long")
+    probe = local_frame(spark, probe_rows, "query_id long, cid long")
 
     coded = pq_coded(t.embeddings, C, Spq)
 
@@ -3295,8 +3295,8 @@ def sim_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d in range(_PI_DIMS)
         if not empty
     ]
-    return spark.createDataFrame(
-        rows, "d int, v_fixed long, direction double"
+    return local_frame(
+        spark, rows, "d int, v_fixed long, direction double"
     ).orderBy("d")
 
 

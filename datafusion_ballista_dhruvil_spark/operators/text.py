@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.session import Tables
+from datafusion_ballista_dhruvil_spark.session import Tables, local_frame
 
 #: tiny embedded stopword list (documents use a synthetic lowercase vocab)
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
@@ -2308,13 +2308,12 @@ def text_crosslingual_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang_rows = [
         (lang, int(tot)) for lang, tot in sorted(tot_by_lang.items())
     ]
-    prof_local = spark.createDataFrame(
+    prof_local = local_frame(
+        spark,
         [(r.lang, r.tok, int(r.f)) for r in prof_rows],
         "cand_lang string, tok string, f bigint",
     )
-    lang_tot = spark.createDataFrame(
-        lang_rows, "cand_lang string, tot bigint"
-    )
+    lang_tot = local_frame(spark, lang_rows, "cand_lang string, tot bigint")
     q6 = lambda c: F.round(F.log2(c) * 1000000).cast("bigint")  # noqa: E731
     cand = (
         toks.crossJoin(F.broadcast(lang_tot))  # bounded: one row per lang
@@ -2478,7 +2477,8 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     if prev is not None:
         prev.unpersist()
     docs.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, t1, t2, c, int(total_val)) for r, t1, t2, c in merges],
         "rank int, t1 string, t2 string, pair_count bigint, "
         "corpus_tokens_after bigint",
@@ -2699,7 +2699,7 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     if prev is not None:
         prev.unpersist()
     cur.unpersist()
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # --------------------------------------------------------------------------

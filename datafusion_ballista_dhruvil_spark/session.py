@@ -17,9 +17,13 @@ clusters and match naive-UTC parquet data.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_log = logging.getLogger(__name__)
 
 #: Every table the driver's testdata provides (TESTDATA.md). TPC-H-ish star
 #: schema plus an events stream table and LLM-pipeline tables.
@@ -106,10 +110,9 @@ def create_session(
     # unchanged; a knob only moves into the defaults after a measured win
     # (PERF.md records the A/Bs). On a real cluster the same env carries
     # site-specific values without code edits.
-    for item in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
+    for k, v in _extra_conf_items(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")):
+        _log.warning("SPARK_GRAFT_EXTRA_CONF: %s=%s", k, v)
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -127,6 +130,28 @@ _REQUIRED_SQL_CONFS = {
     # events.parquet is TIMESTAMP(NANOS); without this the scan throws
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+def _extra_conf_items(raw: str) -> list[tuple[str, str]]:
+    """Parse ``SPARK_GRAFT_EXTRA_CONF`` (``k=v`` items separated by ``;``).
+
+    An item without ``=`` is an error, not a silent no-op, and so is any
+    key in ``_REQUIRED_SQL_CONFS``: results depend on those values, so no
+    environment knob may override them. Empty items are skipped.
+    """
+    items = []
+    for item in raw.split(";"):
+        if not item.strip():
+            continue
+        if "=" not in item:
+            raise ValueError(f"SPARK_GRAFT_EXTRA_CONF item {item!r} has no '='")
+        k, v = (x.strip() for x in item.split("=", 1))
+        if k in _REQUIRED_SQL_CONFS:
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF may not set {k}: results depend on it"
+            )
+        items.append((k, v))
+    return items
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
@@ -216,12 +241,96 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet data at ``path``, inferred once per SparkContext.
+
+    Inferring a parquet schema launches a Spark job that reads the footers;
+    the reference resolves it once, as catalog metadata, when a table is
+    registered (``register_parquet``). Here the inferred schema is kept in
+    a dict on the SparkContext, keyed by ``path``, by the (name, size,
+    mtime) of the path's entries and by the ``nanosAsLong`` setting; any
+    mismatch infers again. The entries come from one Hadoop
+    ``FileSystem.listStatus`` call, so files, directories and object-store
+    URIs take the same path. Only the schema is held — never data, and
+    never on disk — so every query still scans the files. A new
+    SparkContext starts with an empty dict.
+    """
+    sc = spark.sparkContext
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        statuses = hpath.getFileSystem(sc._jsc.hadoopConfiguration()).listStatus(hpath)
+    except Exception:  # noqa: BLE001 - the reader raises the clean error
+        return spark.read.parquet(path).schema
+    stamp = (
+        sorted(
+            (st.getPath().getName(), st.getLen(), st.getModificationTime())
+            for st in statuses
+        ),
+        # the inferred type of TIMESTAMP(NANOS) columns depends on it
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schemas = sc.__dict__.setdefault("_dbds_schemas", {})
+    hit = schemas.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = schemas[path] = (stamp, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One testdata table, read through the schema-bound seam.
+
+    The read carries the schema from ``table_schema``, held per
+    SparkContext and keyed by path, by the (name, size, mtime) of the
+    path's entries and by ``nanosAsLong``, so only the first read of a
+    file state launches the inference job. No data is cached: each query
+    plans and runs its own scan. Local and remote paths take the same
+    code path. ``events.ts`` is normalized to TimestampType.
+    """
     ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df
+
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream counterpart of ``load_table(..., "events")``: the same
+    bound schema over ``sf_dir`` filtered to the events file, ``ts``
+    normalized."""
+    ensure_session_confs(spark)
+    raw = (
+        spark.readStream.schema(table_schema(spark, table_path(sf_dir, "events")))
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return normalize_events_ts(raw)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A driver-side result as a DataFrame: ``rows`` (tuples or Rows, in
+    ``schema`` order) become a ``pyarrow.Table`` typed by ``schema`` (a
+    StructType or DDL string), handed to ``createDataFrame``.
+
+    Rule: every DataFrame built from driver-side rows goes through here.
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` Spark plans
+    the table as a ``LocalRelation``: no ``Scan ExistingRDD``, no Python
+    worker and no job, where ``createDataFrame(list)`` pays all three on
+    every action. The ``pa.Table`` path does not read the Arrow conf, so a
+    foreign session gets the same plan. Naive datetimes are read as UTC,
+    the engine's pinned session timezone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class Tables:
@@ -229,7 +338,10 @@ class Tables:
 
     ``Tables(spark, sf_dir).lineitem`` returns the lineitem DataFrame; reads
     are lazy so touching only the tables a query needs keeps scan planning
-    minimal (column pruning + filter pushdown happen per-query).
+    minimal (column pruning + filter pushdown happen per-query). Each read
+    goes through the module attribute ``load_table``, whose bound schema
+    (see ``table_schema``) is keyed by path, file state and ``nanosAsLong``
+    and holds no data, for local and remote paths alike.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):

@@ -175,9 +175,9 @@ def read_snapshot(
     if not m["files"]:
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(m["schema"]))
-        )
+        from datafusion_ballista_dhruvil_spark.session import local_frame
+
+        return local_frame(spark, [], StructType.fromJson(json.loads(m["schema"])))
     return spark.read.parquet(*[os.path.join(root, p) for p in m["files"]])
 
 

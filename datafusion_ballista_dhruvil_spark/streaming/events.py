@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.functions.compat import dsum
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.session import Tables, normalize_events_ts
+from datafusion_ballista_dhruvil_spark.session import Tables, local_frame, stream_events
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
 
@@ -46,17 +46,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream variant with a watermark for late data; run it with
     Trigger.AvailableNow for batch-equivalent backfill (tests assert
     stream == batch)."""
-    from datafusion_ballista_dhruvil_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # same ns->us conversion as session.load_table
-    events = normalize_events_ts(raw)
+    events = stream_events(spark, sf_dir)
     return build_tumbling_counts(events.withWatermark("ts", "2 hours"))
 
 
@@ -71,16 +61,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     output must equal the distinct batch input. Batch counterpart of the
     same operator family: dedup_exact (operators/dedup.py).
     """
-    from datafusion_ballista_dhruvil_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    events = normalize_events_ts(raw)
+    events = stream_events(spark, sf_dir)
     doubled = events.union(events)
     return doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -117,16 +98,7 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plans this as StreamingSymmetricHashJoin; batch parity is asserted
     in tests/test_streaming.py (same build function on the batch table).
     """
-    from datafusion_ballista_dhruvil_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    events = normalize_events_ts(raw)
+    events = stream_events(spark, sf_dir)
     return build_click_purchase_join(events.withWatermark("ts", "2 hours"))
 
 
@@ -975,16 +947,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     user/profile dim) of a production feature pipeline; batch parity
     asserted in tests/test_streaming.py.
     """
-    from datafusion_ballista_dhruvil_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    events = normalize_events_ts(raw)
+    events = stream_events(spark, sf_dir)
     return build_segment_value(events, static_user_dim(spark, sf_dir))
 
 
@@ -4105,7 +4068,8 @@ def ev_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for c, full_, removed_ in rows
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "channel string, conv_full_ppm long, conv_removed_ppm long, "
         "removal_effect_ppm long, attribution_ppm long",

@@ -127,19 +127,9 @@ def stream_sessionize(
     per-key Python group count (each user is one Arrow batch round-trip; at
     local test scale that overhead, not data volume, dominates).
     """
-    from datafusion_ballista_dhruvil_spark.session import (
-        ensure_session_confs,
-        normalize_events_ts,
-    )
+    from datafusion_ballista_dhruvil_spark.session import stream_events
 
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events = stream_events(spark, sf_dir)
     if user_limit is not None:
-        raw = raw.where(F.col("user_id") < user_limit)
-    events = normalize_events_ts(raw)
+        events = events.where(F.col("user_id") < user_limit)
     return sessionize_stateful(events)

@@ -80,21 +80,11 @@ def stream_user_streaks(
 ) -> DataFrame:
     """readStream form over the events parquet (AvailableNow-compatible):
     distinct (user, epoch-day) rows into the streak processor."""
-    from datafusion_ballista_dhruvil_spark.session import (
-        ensure_session_confs,
-        normalize_events_ts,
-    )
+    from datafusion_ballista_dhruvil_spark.session import stream_events
 
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events = stream_events(spark, sf_dir)
     if user_limit is not None:
-        raw = raw.where(F.col("user_id") < user_limit)
-    events = normalize_events_ts(raw)
+        events = events.where(F.col("user_id") < user_limit)
     keyed = events.select(
         "user_id", F.expr("unix_micros(ts) div 86400000000").alias("day_no")
     )

@@ -421,11 +421,11 @@ def test_image_ahash_shuffles_hashes_not_bytes(spark):
 
 
 def test_audio_features_map_only(spark):
-    # WAV synth + decode + features: map-only, orderBy is the lone exchange.
+    # WAV synth + decode + features: map-only, no exchange at all.
     plan = formatted_plan(QUERIES["mm_audio_features"](spark, SF_DIR))
     assert "MapInPandas" in plan
     assert "Join" not in plan
-    assert exchange_count(QUERIES["mm_audio_features"](spark, SF_DIR)) <= 1
+    assert exchange_count(QUERIES["mm_audio_features"](spark, SF_DIR)) == 0
 
 
 def test_quality_classifier_zero_shuffle(spark):

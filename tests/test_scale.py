@@ -296,3 +296,35 @@ def test_owned_result_prepare_fires_once_at_first_action(spark):
     assert calls == [1]
     df.collect()  # idempotent: once per query instance, not per action
     assert calls == [1]
+
+
+def test_owned_result_releases_caches_when_prepare_raises(spark):
+    """A failing ``prepare`` must not leak the owned caches into the
+    long-lived session: release runs on that error path too."""
+    import time as _time
+
+    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted_ids() -> set:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = persisted_ids()
+    cache = spark.range(100).selectExpr("id * 2 AS x").persist()
+    cache.count()
+    assert persisted_ids() - before
+
+    def prepare():
+        raise RuntimeError("prepare failed")
+
+    df = owned_result(cache.selectExpr("sum(x) AS s"), cache, prepare=prepare)
+    with pytest.raises(RuntimeError, match="prepare failed"):
+        df.collect()
+    leaked = set()
+    for _ in range(20):
+        leaked = persisted_ids() - before
+        if not leaked:
+            break
+        _time.sleep(0.25)
+    assert not leaked, f"persisted RDDs leaked by a failing prepare: {leaked}"

@@ -184,21 +184,15 @@ def test_foreachbatch_exactly_once_sink(spark, tmp_path):
     NOTHING, and the landed rows must equal the batch read of the input."""
     from pyspark.sql import functions as F
 
-    from datafusion_ballista_dhruvil_spark.session import normalize_events_ts
+    from datafusion_ballista_dhruvil_spark.session import stream_events
     from datafusion_ballista_dhruvil_spark.streaming.sinks import (
         start_exactly_once_parquet_sink,
     )
 
-    raw_schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
     out, ck = str(tmp_path / "landed"), str(tmp_path / "ck")
 
     def start():
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(SF_DIR)
-        )
-        ev = normalize_events_ts(stream).select("event_id", "event_type")
+        ev = stream_events(spark, SF_DIR).select("event_id", "event_type")
         return start_exactly_once_parquet_sink(ev, out, ck)
 
     q = start()
@@ -302,21 +296,11 @@ def test_streaming_hopping_window_matches_batch(spark):
 
     from datafusion_ballista_dhruvil_spark.operators import load_all
     from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
-    from datafusion_ballista_dhruvil_spark.session import (
-        ensure_session_confs,
-        normalize_events_ts,
-    )
+    from datafusion_ballista_dhruvil_spark.session import stream_events
 
     load_all()
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(SF_DIR)
-    )
     hopped = (
-        normalize_events_ts(raw)
+        stream_events(spark, SF_DIR)
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -349,7 +333,7 @@ def test_streaming_snapshot_log_sink_exactly_once(spark, tmp_path):
     commits NOTHING new, and the landed table equals the batch read."""
     from pyspark.sql import functions as F
 
-    from datafusion_ballista_dhruvil_spark.session import normalize_events_ts
+    from datafusion_ballista_dhruvil_spark.session import stream_events
     from datafusion_ballista_dhruvil_spark.sources.snapshots import (
         history,
         read_snapshot,
@@ -359,16 +343,10 @@ def test_streaming_snapshot_log_sink_exactly_once(spark, tmp_path):
         start_snapshot_log_sink,
     )
 
-    raw_schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
     root, ck = str(tmp_path / "snap_tbl"), str(tmp_path / "ck")
 
     def start():
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(SF_DIR)
-        )
-        ev = normalize_events_ts(stream).select("event_id", "event_type")
+        ev = stream_events(spark, SF_DIR).select("event_id", "event_type")
         return start_snapshot_log_sink(ev, root, ck)
 
     q = start()
