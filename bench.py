@@ -342,8 +342,11 @@ def inline_query_tranche(
 ) -> dict[str, float]:
     """Bounded per-query map for the final stdout line: the 22 TPC-H
     queries in numeric order, then every other query slowest-first, filled
-    greedily until the serialized map would exceed ``budget`` chars.
-    Deterministic given the measured times; pure (unit-tested)."""
+    greedily while ``len(json.dumps(out)) <= budget``. Each entry costs its
+    own ``{"name": v}`` length: the braces are paid once by the first entry
+    and the 2-char ``", "`` separator by every later one, so the sum is the
+    serialized length exactly. Deterministic given the measured times;
+    pure (unit-tested)."""
 
     def canon(name: str) -> tuple:
         m_q = re.fullmatch(r"q(\d+)", name)
@@ -354,7 +357,7 @@ def inline_query_tranche(
     out: dict[str, float] = {}
     used = 0
     for name in sorted(times, key=canon):
-        entry = len(json.dumps({name: round(times[name], 3)})) - 1
+        entry = len(json.dumps({name: round(times[name], 3)}))
         if used + entry > budget:
             break
         used += entry
@@ -371,6 +374,25 @@ def inline_query_tranche(
 #: probably-host without a judge session.
 CANARY_ELEVATED_RATIO = 1.5
 CANARY_ELEVATED_DELTA_SEC = 0.1
+
+
+def fit_summary_line(summary: dict, limit: int = SUMMARY_LINE_MAX) -> str:
+    """Serialize the final stdout line within ``limit`` chars, dropping
+    per-query tranche entries from the fast end until it fits. Raises
+    ValueError if the line still exceeds ``limit`` once the tranche is
+    empty: the fixed fields alone overflow, and a truncated capture would
+    lose the whole line. Pure (unit-tested); ``summary`` is not mutated."""
+    queries = dict(summary["queries"])
+    while True:
+        line = json.dumps({**summary, "queries": queries})
+        if len(line) <= limit:
+            return line
+        if not queries:
+            raise ValueError(
+                f"final summary line is {len(line)} chars with an empty "
+                f"per-query tranche; the cap is {limit}"
+            )
+        queries.popitem()
 
 
 def canary_elevated_families(noise_index: list[dict]) -> set[str]:
@@ -637,12 +659,14 @@ def main() -> int:
         "queries_file": "bench_queries.json",
         "protocol": protocol,
     }
-    line = json.dumps(summary)
-    while len(line) > SUMMARY_LINE_MAX and summary["queries"]:
-        summary["queries"].popitem()
-        line = json.dumps(summary)
-    print(line)
     spark.stop()
+    try:
+        line = fit_summary_line(summary)
+    except ValueError as e:
+        # the complete map is already on the line above and on disk
+        print(f"bench: {e}", file=sys.stderr)
+        return 1
+    print(line)
     return 0
 
 

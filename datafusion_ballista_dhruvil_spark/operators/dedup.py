@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
+from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables, table_path
 
 #: MinHash parameters: k = BANDS * ROWS_PER_BAND signatures.
@@ -543,11 +543,7 @@ def verified_pairs_of(arrs: DataFrame, owned: list | None = None) -> DataFrame:
     if owned is not None:
         cd = cd.persist()
         owned.append(cd)
-    reps = (
-        cd.groupBy("dg1", "dg2")
-        .agg(F.min(F.struct("d1", "d2")).alias("r"))
-        .select("dg1", "dg2", F.col("r.d1").alias("d1"), F.col("r.d2").alias("d2"))
-    )
+    reps = top_k(cd, ["dg1", "dg2"], ["d1", "d2"], 1).select("dg1", "dg2", "d1", "d2")
     s1 = arrs.select(F.col("doc_id").alias("d1"), F.col("ss").alias("ss1"))
     s2 = arrs.select(F.col("doc_id").alias("d2"), F.col("ss").alias("ss2"))
     common = F.array_size(F.array_intersect(F.col("ss1"), F.col("ss2")))
@@ -1962,8 +1958,6 @@ def dedup_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 224 Exchange nodes in the r10-before plan, all recomputed. Caching
     # the edge set per round makes each peel compute its input once; the
     # caches release when the query's action completes.
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
-
     owned: list[DataFrame] = []
     edges = pairs
     for _ in range(3):
@@ -2233,9 +2227,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy of a boilerplate page survives into training, where the "best"
     copy can differ meaningfully in truncation/extraction quality.
 
-    One map-side fingerprint+score projection, one window per
-    fingerprint group (WindowGroupLimit-eligible rank<=1) — the
-    exact-dedup shuffle shape with a policy column instead of min().
+    One map-side fingerprint+score projection, one fingerprint-keyed
+    exchange for the member count, then top_k's rank-1 WindowGroupLimit
+    on that same partitioning — the exact-dedup shuffle shape with a
+    policy column instead of min().
     """
     t = Tables(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
@@ -2249,12 +2244,12 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.array_size(toks).cast("bigint")
         ).alias("quality"),
     )
-    w = Window.partitionBy("fp").orderBy(F.desc("quality"), "doc_id")
-    wc = Window.partitionBy("fp")
+    counted = scored.withColumn(
+        "n_members", F.count(F.lit(1)).over(Window.partitionBy("fp")).cast("bigint")
+    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_members", F.count(F.lit(1)).over(wc).cast("bigint"))
-        .where((F.col("rn") == 1) & (F.col("n_members") >= 2))
+        top_k(counted, ["fp"], [F.desc("quality"), "doc_id"], 1)
+        .where(F.col("n_members") >= 2)
         .select(
             "fp",
             "n_members",

@@ -21,10 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.functions.compat import dsum, sql_dsum
 from datafusion_ballista_dhruvil_spark.operators.registry import query
+from datafusion_ballista_dhruvil_spark.operators.scale import top_k
 from datafusion_ballista_dhruvil_spark.session import Tables
 
 _V = "CAST(value AS DECIMAL(18,6))"
@@ -129,10 +129,8 @@ ORDER BY event_type, value DESC
 )
 def h2o_top2_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
     return (
-        t.events.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 2)
+        top_k(t.events, ["event_type"], [F.desc("value"), F.asc("event_id")], 2)
         .select("event_type", "value")
         .orderBy("event_type", F.desc("value"))
     )

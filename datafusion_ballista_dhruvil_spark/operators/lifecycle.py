@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
 from datafusion_ballista_dhruvil_spark.operators.sampling import _hash_bucket
+from datafusion_ballista_dhruvil_spark.operators.scale import top_k
 from datafusion_ballista_dhruvil_spark.session import Tables
 
 #: doc_id -> [0,100) bucket, identical text in both engines (see
@@ -176,17 +177,16 @@ def pipeline_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select("user_id").distinct().withColumn(
         "base_value", F.col("user_id") * 10
     )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
     cdc = ev.select(
         "user_id",
+        "ts",
         "event_id",
         F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
-        F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n_ops"),
     )
-    latest = cdc.where(F.col("rn") == 1).select("user_id", "event_id", "op", "n_ops")
+    latest = top_k(
+        cdc, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()], 1
+    ).select("user_id", "event_id", "op", "n_ops")
     m = base.alias("b").join(
         latest.alias("l"), F.col("b.user_id") == F.col("l.user_id"), "left"
     )

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
+from datafusion_ballista_dhruvil_spark.operators.scale import top_k
 from datafusion_ballista_dhruvil_spark.session import Tables
 
 
@@ -160,13 +161,11 @@ def sample_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole corpus (asserted in tests/test_plans.py).
     """
     t = Tables(spark, sf_dir)
-    w = Window.partitionBy("source").orderBy("hk", "doc_id")
+    hashed = t.documents.select(
+        "source", "doc_id", F.md5(F.col("doc_id").cast("string")).alias("hk")
+    )
     return (
-        t.documents.select(
-            "source", "doc_id", F.md5(F.col("doc_id").cast("string")).alias("hk")
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
+        top_k(hashed, ["source"], ["hk", "doc_id"], 5, rank="rk")
         .select("source", "doc_id", "rk")
         .orderBy("source", "rk")
     )

@@ -15,10 +15,11 @@ cases AQE can't fix alone:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def salted_join(
@@ -61,6 +62,43 @@ def salted_join(
         how,
     )
     return joined.drop("__salt")
+
+
+def top_k(
+    df: DataFrame,
+    by: Sequence[str | Column],
+    order: Sequence[str | Column],
+    k: int,
+    rank: str | None = None,
+) -> DataFrame:
+    """The ``k`` first rows of each ``by`` group under ``order``: the one
+    place a per-group rank-limit is spelled.
+
+    ``row_number() OVER (PARTITION BY by ORDER BY order) <= k`` with the
+    filter directly on the window, the shape Spark's InferWindowGroupLimit
+    rewrites into a ``WindowGroupLimit`` heap below the group's exchange —
+    at 100 TB the shuffle carries <= k rows per (map partition, group), not
+    the corpus. Every k takes this path, k=1 included: ``min(struct(...))``
+    plans a SortAggregate on Spark 4.1 and picks a different row than the
+    window when an order key is null or NaN.
+
+    ``order`` must end in a total tie-break (a key unique within the
+    group), or the chosen rows are nondeterministic — the README's LIMIT
+    contract. Keep other windows on the same frame (group counts, sums)
+    in an earlier step: a second window spec in the same projection puts
+    another Window node between the filter and the rank, and Spark then
+    infers no group limit.
+
+    The rank column is dropped unless ``rank`` names it. An empty ``by``
+    raises: a global top-k is one task over the corpus and needs a
+    distributed rank, not this kernel.
+    """
+    if not by:
+        raise ValueError("top_k needs a partition key; a global rank is one task over the corpus")
+    rn = rank or "__top_k_rn"
+    w = Window.partitionBy(*by).orderBy(*order)
+    out = df.withColumn(rn, F.row_number().over(w)).where(F.col(rn) <= k)
+    return out if rank else out.drop(rn)
 
 
 def write_bucketed(

@@ -37,6 +37,7 @@ from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
+from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables, local_frame
 
 # elements quantize to round(x * 1e7) (away-from-zero, matching Spark's
@@ -79,6 +80,12 @@ def dot(a: Column, b: Column) -> Column:
 def norm(a: Column) -> Column:
     """sqrt(<a,a>) — precompute per row, never per pair."""
     return F.sqrt(dot(a, a))
+
+
+def _by_cosine() -> list[Column]:
+    """Nearest-first neighbor order: cosine DESC, neighbor_id as the
+    total tie-break."""
+    return [F.desc("cosine"), F.asc("neighbor_id")]
 
 
 _SQL_DOT = (
@@ -187,10 +194,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial = t.embeddings.select("vec_id", "embedding").mapInPandas(
         topk_part, schema="query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
+        top_k(partial, ["query_id"], _by_cosine(), 5)
         .select("query_id", "neighbor_id", "cosine")
         .orderBy("query_id", F.desc("cosine"), "neighbor_id")
     )
@@ -277,10 +282,8 @@ def sim_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
+        top_k(scored, ["query_id"], _by_cosine(), 3)
         .select("query_id", "bucket", "neighbor_id", "cosine")
         .orderBy("query_id", F.desc("cosine"), "neighbor_id")
     )
@@ -473,10 +476,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "centroid_id",
         (dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
+        top_k(scored, ["query_id"], _by_cosine(), 3)
         .select("query_id", "neighbor_id", "centroid_id", "cosine")
         .orderBy("query_id", F.desc("cosine"), "neighbor_id")
     )
@@ -624,10 +625,10 @@ def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: self-dots precomputed ONCE per row (never per pair); the K
     centroids BROADCAST so assignment is map-side (corpus never shuffles);
-    the argmin is a lexicographic min(struct) with map-side partial
-    aggregation — the exchange carries one (vec_id, best) row per vector,
-    and in a real iteration loop only the K centroid rows move between
-    steps.
+    the argmin is scale.top_k with k=1, whose WindowGroupLimit heap runs
+    before the exchange — it carries one (vec_id, best) row per vector
+    and map partition, and in a real iteration loop only the K centroid
+    rows move between steps.
     """
     t = Tables(spark, sf_dir)
     e = t.embeddings.select(
@@ -642,15 +643,13 @@ def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
     ).alias("d")
     return (
-        e.crossJoin(F.broadcast(c))
-        .select("vec_id", F.struct(d, F.col("cid")).alias("dc"))
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("m"))
-        .select(
-            "vec_id",
-            F.col("m.cid").alias("cluster"),
-            F.col("m.d").alias("dist2_q"),
+        top_k(
+            e.crossJoin(F.broadcast(c)).select("vec_id", "cid", d),
+            ["vec_id"],
+            ["d", "cid"],
+            1,
         )
+        .select("vec_id", F.col("cid").alias("cluster"), F.col("d").alias("dist2_q"))
         .orderBy("vec_id")
     )
 
@@ -796,8 +795,9 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid (vec_id tie-break) — reporting how many near-semantic
     duplicates each kept item stands for.
 
-    Composition: reuses the broadcast-centroid exact-integer argmin from
-    the k-means assign step, then a per-cluster lexicographic min(struct)
+    Composition: reuses the broadcast-centroid exact-integer argmin
+    (scale.top_k) from the k-means assign step, then a per-cluster
+    lexicographic min(struct) beside the cluster-size count in one aggregate
     — K output rows, so the second aggregation is trivially small. At
     100 TB the cluster count scales with corpus diversity (K ~ N/dup_rate)
     and the keep-step remains one partial-agg shuffle keyed by cluster;
@@ -816,17 +816,12 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
     ).alias("d")
-    assigned = (
-        e.crossJoin(F.broadcast(c))
-        .select("vec_id", F.struct(d, F.col("cid")).alias("dc"))
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("m"))
-        .select(
-            "vec_id",
-            F.col("m.cid").alias("cluster"),
-            F.col("m.d").alias("d"),
-        )
-    )
+    assigned = top_k(
+        e.crossJoin(F.broadcast(c)).select("vec_id", "cid", d),
+        ["vec_id"],
+        ["d", "cid"],
+        1,
+    ).select("vec_id", F.col("cid").alias("cluster"), "d")
     return (
         assigned.select(
             "cluster",
@@ -1148,8 +1143,6 @@ def sim_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials. Iterations are data-independent stages; nothing
     ever pairs vectors with each other.
     """
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
-
     t = Tables(spark, sf_dir)
     # Lineage hygiene (guide §3.3 "materialise intermediates to truncate
     # the plan"): uncached, `cent` is referenced twice per round (cself +
@@ -1192,14 +1185,12 @@ def sim_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.col("qi") * F.col("cq")).cast("long").alias("s"))
         )
         d = F.col("selfq") + F.col("cselfq") - 2 * F.col("s")
-        w = Window.partitionBy("vec_id").orderBy(d.asc(), F.col("cid").asc())
-        assign = (
-            dotq.join(eself, "vec_id")
-            .join(F.broadcast(cself), "cid")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vec_id", "cid", d.alias("d"))
-        )
+        assign = top_k(
+            dotq.join(eself, "vec_id").join(F.broadcast(cself), "cid"),
+            ["vec_id"],
+            [d.asc(), F.col("cid").asc()],
+            1,
+        ).select("vec_id", "cid", d.alias("d"))
         cent = (
             assign.join(ecomp, "vec_id")
             .groupBy("cid", "pos")
@@ -1401,13 +1392,9 @@ def _exact_top3(t: Tables) -> DataFrame:
     partial = t.embeddings.select("vec_id", "embedding").mapInPandas(
         topk_part, schema="query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
+    return top_k(partial, ["query_id"], _by_cosine(), 3).select(
+        "query_id", "neighbor_id"
     )
-
 
 
 # --------------------------------------------------------------------------
@@ -1475,10 +1462,6 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     exact_top = _exact_top3(t)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-
     coded = t.embeddings.select(
         "vec_id",
         "embedding",
@@ -1502,10 +1485,8 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    ann_top = (
-        ann_scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
+    ann_top = top_k(ann_scored, ["query_id"], _by_cosine(), 3).select(
+        "query_id", "neighbor_id"
     )
     hit = ann_top.withColumnRenamed("neighbor_id", "nid")
     return (
@@ -1809,10 +1790,8 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             adc(F.col("query_id"), F.col("codes")).alias("di"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("di", "vec_id")
     return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
+        top_k(cand, ["query_id"], ["di", "vec_id"], 5)
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -2014,13 +1993,8 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial = t.embeddings.select("vec_id", "embedding").mapInPandas(
             part, schema="query_id long, neighbor_id long, cosine double"
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            partial.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= 3)
-            .select("query_id", "neighbor_id")
+        return top_k(partial, ["query_id"], _by_cosine(), 3).select(
+            "query_id", "neighbor_id"
         )
 
     full_top = topk_at(64)
@@ -2167,8 +2141,7 @@ def sim_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cosine double",
     )
     # global top-3 per probe over its <= nprobe*3 surviving candidates
-    w = Window.partitionBy("a_id").orderBy(F.desc("cosine"), F.asc("b_id"))
-    nn = scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 3)
+    nn = top_k(scored, ["a_id"], [F.desc("cosine"), F.asc("b_id")], 3)
     return (
         nn.groupBy(F.col("a_label").alias("label"))
         .agg(
@@ -2354,8 +2327,7 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("cbucket"),
         F.col("nrm").alias("cn"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    ranked = (
+    scored = (
         q.join(
             c,
             (F.col("bucket") == F.col("cbucket"))
@@ -2367,9 +2339,8 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
             "neighbor_id",
         )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 10)
     )
+    ranked = top_k(scored, ["query_id"], _by_cosine(), 10, rank="rn")
     g = ranked.groupBy("query_id").agg(
         F.sum("rel").cast("bigint").alias("n_rel"),
         F.sum(F.col("rel") * F.expr(_SQL_NDCG_W)).cast("bigint").alias("dcg"),
@@ -2548,9 +2519,9 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: the argmax orders by the cosine double (one fixed
     division chain over exact integer dots) with neg_id tiebreak; the
-    reported score quantizes to 1e-7. Scale: bucket equi-join + per-anchor
-    top-1 window (WindowGroupLimit pushes the rank-1 filter below the
-    exchange).
+    reported score quantizes to 1e-7. Scale: bucket equi-join, one
+    anchor-keyed exchange for the candidate count, then top_k's rank-1
+    WindowGroupLimit on that same partitioning.
     """
     t = Tables(spark, sf_dir)
     coded = t.embeddings.select(
@@ -2586,12 +2557,12 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine"
         ),
     )
-    w = Window.partitionBy("anchor").orderBy(F.desc("cosine"), F.asc("neg_id"))
-    wc = Window.partitionBy("anchor")
+    counted = cand.withColumn(
+        "n_candidates",
+        F.count(F.lit(1)).over(Window.partitionBy("anchor")).cast("bigint"),
+    )
     return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_candidates", F.count(F.lit(1)).over(wc).cast("bigint"))
-        .where(F.col("rn") == 1)
+        top_k(counted, ["anchor"], [F.desc("cosine"), F.asc("neg_id")], 1)
         .select(
             "anchor",
             "anchor_label",
@@ -2730,17 +2701,14 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rel"),
         )
     )
-    wrel = Window.partitionBy("a").orderBy(F.desc("rel"), F.asc("id"))
+    by_rel = [F.desc("rel"), F.asc("id")]
+    by_score = [F.desc("score"), F.asc("id")]
     # <= 5 rows x queries, consumed by FIVE downstream subplans (sims x2,
     # p1, s2, s3); NOT cached — measured A/B at sf0.1: AQE's exchange
     # reuse already dedupes the identical scoring subplan across the
     # consumers — cached read 3.7-3.9s solo vs 2.9-3.5s uncached (the
     # InMemoryRelation breaks exchange reuse and adds store overhead)
-    cand = (
-        scored.withColumn("rn", F.row_number().over(wrel))
-        .where(F.col("rn") <= 5)
-        .drop("rn")
-    )
+    cand = top_k(scored, ["a"], by_rel, 5)
     x = cand.select("a", F.col("id").alias("i"), F.col("e").alias("xe"), F.col("cn").alias("xn"))
     y = cand.select(F.col("a").alias("ya"), F.col("id").alias("j"), F.col("e").alias("ye"), F.col("cn").alias("yn"))
     sims = (
@@ -2756,10 +2724,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sim"),
         )
     )
-    p1 = (
-        cand.withColumn("rn", F.row_number().over(wrel))
-        .where(F.col("rn") == 1)
-        .select("a", F.col("id").alias("pick1"), F.col("rel").alias("rel1"))
+    p1 = top_k(cand, ["a"], by_rel, 1).select(
+        "a", F.col("id").alias("pick1"), F.col("rel").alias("rel1")
     )
     s2 = (
         cand.join(p1, "a")
@@ -2772,11 +2738,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("a", "id", "rel", (F.col("rel") - F.col("sim")).alias("score"))
     )
-    wsc = Window.partitionBy("a").orderBy(F.desc("score"), F.asc("id"))
-    p2 = (
-        s2.withColumn("rn", F.row_number().over(wsc))
-        .where(F.col("rn") == 1)
-        .select("a", F.col("id").alias("pick2"), F.col("rel").alias("rel2"))
+    p2 = top_k(s2, ["a"], by_score, 1).select(
+        "a", F.col("id").alias("pick2"), F.col("rel").alias("rel2")
     )
     sa = sims.select(F.col("a").alias("saa"), F.col("i").alias("sai"), F.col("j").alias("saj"), F.col("sim").alias("sim1"))
     sb = sims.select(F.col("a").alias("sba"), F.col("i").alias("sbi"), F.col("j").alias("sbj"), F.col("sim").alias("sim2"))
@@ -2803,10 +2766,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("rel") - F.greatest(F.col("sim1"), F.col("sim2"))).alias("score"),
         )
     )
-    p3 = (
-        s3.withColumn("rn", F.row_number().over(wsc))
-        .where(F.col("rn") == 1)
-        .select("a", F.col("id").alias("pick3"), F.col("rel").alias("rel3"))
+    p3 = top_k(s3, ["a"], by_score, 1).select(
+        "a", F.col("id").alias("pick3"), F.col("rel").alias("rel3")
     )
     return (
         p1.join(p2, "a")
@@ -3050,16 +3011,8 @@ def sim_cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
         ).alias("d"),
     )
-    # argmin as min(struct(d, cid)) under a groupBy instead of a
-    # row_number window (r11, guide §2.3 "aggregate before you shuffle"):
-    # struct ordering is lexicographic, so min(struct(d, cid)).cid is
-    # exactly the rn=1 row of ORDER BY d, cid — but a hash aggregate does
-    # map-side partial argmin, collapsing the K rows per vector BEFORE the
-    # exchange (the window form shuffled and sorted the full N x K frame).
-    asg = (
-        p.groupBy("vec_id", "label")
-        .agg(F.min(F.struct("d", "cid")).alias("m"))
-        .select("vec_id", "label", F.col("m.cid").alias("cid"))
+    asg = top_k(p, ["vec_id", "label"], ["d", "cid"], 1).select(
+        "vec_id", "label", "cid"
     )
     # the (cid x label) contingency table feeds FIVE consumers (both
     # marginals, the total, the MI sum, purity) — persist the bounded
@@ -3114,7 +3067,6 @@ def sim_cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kc = nc.agg(F.count(F.lit(1)).alias("n_clusters"))
     kl = nl.agg(F.count(F.lit(1)).alias("n_labels"))
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
 
     return owned_result(
         tot.crossJoin(pur)
@@ -4212,13 +4164,8 @@ def sim_recall_at_k_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    wq = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    topk = (
-        scored.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= 3)
-        .select("nprobe", "query_id", "neighbor_id")
+    topk = top_k(scored, ["nprobe", "query_id"], _by_cosine(), 3).select(
+        "nprobe", "query_id", "neighbor_id"
     )
     exact = _exact_top3(t)
     counts = scored.groupBy("nprobe").agg(
@@ -4388,10 +4335,7 @@ def sim_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         mine_part,
         schema="en_id long, de_id long, cos_q6 long, syq long",
     )
-    wx = Window.partitionBy("en_id").orderBy(F.desc("cos_q6"), F.asc("de_id"))
-    topk = partial.withColumn("rx", F.row_number().over(wx)).where(
-        F.col("rx") <= k
-    )
+    topk = top_k(partial, ["en_id"], [F.desc("cos_q6"), F.asc("de_id")], k)
     wsum = Window.partitionBy("en_id")
     mined = (
         topk.withColumn("sxq", F.sum("cos_q6").over(wsum).cast("bigint"))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
+from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables, local_frame
 
 #: tiny embedded stopword list (documents use a synthetic lowercase vocab)
@@ -236,7 +237,6 @@ def text_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~L tokens/doc; the count is partial-aggregated map-side so the shuffle
     carries only (source, bigram) partial counts."""
     t = Tables(spark, sf_dir)
-    from pyspark.sql.window import Window
 
     # tokens materialized as a projection first: referencing the split
     # expression inside the higher-order lambda re-runs it per element
@@ -250,14 +250,14 @@ def text_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(tk, 2, n1),
         lambda x, y: F.concat(x, F.lit(" "), y),
     )
-    w = Window.partitionBy("source").orderBy(F.desc("n"), F.asc("bigram"))
-    return (
+    counts = (
         t.documents.select("source", _toks().alias("__tk"))
         .select("source", F.explode(bigrams).alias("bigram"))
         .groupBy("source", "bigram")
         .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
+    )
+    return (
+        top_k(counts, ["source"], [F.desc("n"), F.asc("bigram")], 5)
         .select("source", "bigram", "n")
         .orderBy("source", F.desc("n"), "bigram")
     )
@@ -367,13 +367,14 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), "term")
     return (
-        scored.where(F.col("doc_id") < 100)
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
+        top_k(
+            scored.where(F.col("doc_id") < 100),
+            ["doc_id"],
+            [F.desc("tfidf"), "term"],
+            3,
+            rank="rk",
+        )
         .select("doc_id", "term", "tf", "df", "tfidf", "rk")
         .orderBy("doc_id", "rk")
     )
@@ -1567,10 +1568,8 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "tok")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    w = Window.partitionBy("lang").orderBy(F.desc("freq"), "tok")
     q = (
-        v.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 100)
+        top_k(v, ["lang"], [F.desc("freq"), "tok"], 100, rank="rnk")
         .select(
             "lang",
             F.round(F.log2("rnk") * 1000000).cast("long").alias("x"),
@@ -1871,8 +1870,6 @@ def text_source_entropy_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("kl_bits"),
         )
     )
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
-
     return owned_result(out.orderBy("lang"), v)
 
 
@@ -2279,15 +2276,13 @@ def text_crosslingual_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("doc_lang"),
         F.explode(_toks()).alias("tok"),
     )
-    wk = Window.partitionBy("lang").orderBy(F.desc("f"), F.asc("tok"))
-    prof = (
-        toks.groupBy(F.col("doc_lang").alias("lang"), "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
-        .withColumn("rk", F.row_number().over(wk))
-        # read the cap at call time so tests can shrink it to force
-        # truncation and prove the oracle mirror holds
-        .where(F.col("rk") <= CROSSLINGUAL_PROFILE_TOPK)
-        .drop("rk")
+    freqs = toks.groupBy(F.col("doc_lang").alias("lang"), "tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("f")
+    )
+    # read the cap at call time so tests can shrink it to force
+    # truncation and prove the oracle mirror holds
+    prof = top_k(
+        freqs, ["lang"], [F.desc("f"), F.asc("tok")], CROSSLINGUAL_PROFILE_TOPK
     )
     # ONE corpus pass builds the truncated profile, then a BOUNDED collect
     # (<= K x n_langs rows by construction — the IVF-codebook pattern):
@@ -2331,16 +2326,9 @@ def text_crosslingual_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores = cand.groupBy("doc_id", "doc_lang", "cand_lang").agg(
         F.sum("y").cast("bigint").alias("ll_q6")
     )
-    # argmax as min(struct(-ll_q6, cand_lang)) under a groupBy instead of
-    # a row_number window (r11, guide §2.3): struct ordering makes
-    # min(struct(-ll, lang)).lang exactly the ORDER BY ll DESC, lang ASC
-    # rn=1 row, but the hash aggregate partial-aggregates map-side and
-    # skips the window's full exchange+sort over the doc x lang frame.
-    best = (
-        scores.groupBy("doc_id", "doc_lang")
-        .agg(F.min(F.struct(F.negate(F.col("ll_q6")), F.col("cand_lang"))).alias("m"))
-        .select("doc_lang", F.col("m.cand_lang").alias("best_lang"))
-    )
+    best = top_k(
+        scores, ["doc_id", "doc_lang"], [F.desc("ll_q6"), F.asc("cand_lang")], 1
+    ).select("doc_lang", F.col("cand_lang").alias("best_lang"))
     return (
         best.groupBy("doc_lang", "best_lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))

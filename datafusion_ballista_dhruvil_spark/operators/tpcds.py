@@ -116,6 +116,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
+from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables
 
 #: scaled-integer revenue: dollars x 1e6 as BIGINT (see module docstring)
@@ -1892,12 +1893,8 @@ def tpcds_q57(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("absdev_milli"),
         )
     )
-    wr = Window.partitionBy("n_name").orderBy(
-        F.desc("absdev_milli"), F.asc("m")
-    )
     return (
-        dev.withColumn("rn", F.row_number().over(wr))
-        .where(F.col("rn") <= 3)
+        top_k(dev, ["n_name"], [F.desc("absdev_milli"), F.asc("m")], 3)
         .select("n_name", "y", "m", "rev6", "psum6", "nsum6", "absdev_milli")
         .orderBy("n_name", F.desc("absdev_milli"), "m")
     )
@@ -2189,8 +2186,6 @@ def tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
     (brand x nation) grain — a tiny broadcast join, never a second fact
     pass: the two year slices come from ONE persisted aggregate (the
     fact chain runs once; owned_result releases it)."""
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
-
     t = Tables(spark, sf_dir)
     yr = F.year("o_orderdate")
     agg = (
@@ -2548,7 +2543,6 @@ def tpcds_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("mo").alias("mo2"),
         F.col("cov_ppm").alias("cov2"),
     )
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
 
     return owned_result(
         a.join(

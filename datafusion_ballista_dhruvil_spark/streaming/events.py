@@ -21,6 +21,7 @@ from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.functions.compat import dsum
 from datafusion_ballista_dhruvil_spark.operators.registry import query
+from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables, local_frame, stream_events
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
@@ -1315,7 +1316,6 @@ def ev_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_ballista_dhruvil_spark.operators.relational import (
         weighted_quantile,
     )
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
 
     t = Tables(spark, sf_dir)
     u = (
@@ -1457,11 +1457,8 @@ def ev_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "event_type", "ts_us",
         F.sum(is_new).over(wrun).alias("session_id"),
     )
-    wsess = Window.partitionBy("user_id", "session_id").orderBy(
-        "ts_us", "event_id"
-    )
-    headed = sessions.withColumn("rn", F.row_number().over(wsess)).where(
-        F.col("rn") <= 5
+    headed = top_k(
+        sessions, ["user_id", "session_id"], ["ts_us", "event_id"], 5
     )
     paths = (
         headed.groupBy("user_id", "session_id")
@@ -2178,7 +2175,6 @@ def ev_chisquare_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select("event_type", F.expr(_CHI_CELL).alias("contrib_q6"))
     )
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
 
     return owned_result(
         q.groupBy("event_type")
@@ -2439,7 +2435,6 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if i == 0:
             pi1 = pi
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
 
     return owned_result(
         pi.join(
@@ -3575,27 +3570,22 @@ def ev_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("area2"),
         )
     )
-    w_mid = Window.partitionBy("event_type", "b").orderBy(F.desc("area2"), "d")
-    sel_mid = (
-        mid.withColumn("rn", F.row_number().over(w_mid))
-        .where(F.col("rn") == 1)
-        .select("event_type", "b", "d", "v", F.lit("lttb").alias("role"))
-    )
+    sel_mid = top_k(
+        mid, ["event_type", "b"], [F.desc("area2"), "d"], 1
+    ).select("event_type", "b", "d", "v", F.lit("lttb").alias("role"))
     edge_pts = pts.join(F.broadcast(bounds), "event_type").where(
         (F.col("b") == F.col("bmin")) | (F.col("b") == F.col("bmax"))
     )
-    w_edge = Window.partitionBy("event_type", "b").orderBy(
-        F.when(F.col("b") == F.col("bmin"), F.col("d")).otherwise(-F.col("d"))
+    edge_first = F.when(F.col("b") == F.col("bmin"), F.col("d")).otherwise(
+        -F.col("d")
     )
     sel_edge = (
-        edge_pts.withColumn("rn", F.row_number().over(w_edge))
-        .where(F.col("rn") == 1)
+        top_k(edge_pts, ["event_type", "b"], [edge_first], 1)
         .select(
             "event_type", "b", "d", "v",
             F.when(F.col("b") == F.col("bmin"), "first").otherwise("last").alias("role"),
         )
     )
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
 
     return owned_result(
         sel_mid.unionAll(sel_edge)
@@ -3722,7 +3712,6 @@ def ev_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("tie_term")
     )
     denom = F.sqrt(var18.cast("double") / F.lit(18.0))
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
 
     return owned_result(
         pairs.join(ties, "event_type")
@@ -4228,12 +4217,13 @@ def ev_path_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar merge. Exact integer share_ppm.
     """
     t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros(F.col("ts")), F.col("event_id")
+    ranked = top_k(
+        t.events.select("user_id", "event_type", "ts", "event_id"),
+        ["user_id"],
+        [F.unix_micros(F.col("ts")), F.col("event_id")],
+        3,
+        rank="rn",
     )
-    ranked = t.events.select(
-        "user_id", "event_type", F.row_number().over(w).alias("rn")
-    ).where(F.col("rn") <= 3)
     paths = ranked.groupBy("user_id").agg(
         F.array_join(
             F.transform(

@@ -22,7 +22,10 @@ against the batch read of the same input.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from datafusion_ballista_dhruvil_spark.operators.scale import top_k
 
 
 def start_exactly_once_parquet_sink(
@@ -66,20 +69,10 @@ def start_cdc_upsert_sink(
     real cluster. Compaction = periodically rewriting the merged view as a
     new base (same reduction, so it commutes with further deltas).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    o1, o2 = order_cols
+    latest_first = [F.col(c).desc() for c in order_cols]
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        w = Window.partitionBy(key).orderBy(
-            F.col(o1).desc(), F.col(o2).desc()
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = top_k(batch_df, [key], latest_first, 1)
         latest.write.mode("overwrite").parquet(f"{delta_dir}/epoch={epoch_id}")
 
     return (
@@ -106,17 +99,9 @@ def cdc_merge_view(
     to one row per touched key (window keyed by ``key``); the base join is
     a single co-partitioned left join.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    o1, o2 = order_cols
     deltas = spark.read.parquet(delta_dir)
-    w = Window.partitionBy(key).orderBy(F.col(o1).desc(), F.col(o2).desc())
-    latest = (
-        deltas.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(key, "event_id", "op")
-    )
+    latest_first = [F.col(c).desc() for c in order_cols]
+    latest = top_k(deltas, [key], latest_first, 1).select(key, "event_id", "op")
     m = base_df.alias("b").join(
         latest.alias("l"), F.col(f"b.{key}") == F.col(f"l.{key}"), "left"
     )

@@ -9,6 +9,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 
 
@@ -379,7 +381,7 @@ def test_inline_query_tranche_order_and_budget():
     sys.path.insert(0, str(REPO))
     import json
 
-    from bench import SUMMARY_LINE_MAX, inline_query_tranche
+    from bench import INLINE_QUERIES_BUDGET, SUMMARY_LINE_MAX, inline_query_tranche
 
     times = {f"q{i}": 0.5 + i / 100 for i in range(1, 23)}
     times.update({f"heavy_query_{i:03d}": 10.0 - i / 10 for i in range(60)})
@@ -400,3 +402,44 @@ def test_inline_query_tranche_order_and_budget():
     small = {"q1": 1.0, "a": 2.0}
     assert inline_query_tranche(small) == {"q1": 1.0, "a": 2.0}
     assert SUMMARY_LINE_MAX < 2000
+
+    # a suite-sized map: the budget bounds the serialized length exactly
+    # (the ", " separator is 2 chars), for the default and tight budgets
+    full = {f"q{i}": 0.5 + i / 100 for i in range(1, 23)}
+    full.update(
+        {f"family_{i:03d}_{'x' * (i % 23)}": 0.123 + i / 7 for i in range(332)}
+    )
+    assert len(full) == 354
+    ordered = inline_query_tranche(full, budget=10**6)
+    assert len(ordered) == 354
+    for budget in (INLINE_QUERIES_BUDGET, 300, 40):
+        out = inline_query_tranche(full, budget)
+        assert len(json.dumps(out)) <= budget
+        # greedy: the next entry in order would have overflowed
+        nxt = list(ordered)[len(out)]
+        assert len(json.dumps({**out, nxt: ordered[nxt]})) > budget
+
+
+def test_fit_summary_line_trims_tranche_then_fails_loudly():
+    sys.path.insert(0, str(REPO))
+    from bench import fit_summary_line
+
+    summary = {
+        "metric": "query_suite_total_sec",
+        "value": 1.0,
+        "queries": {f"query_{i:03d}": 1.5 for i in range(100)},
+        "noisy_blocks": {},
+    }
+    line = fit_summary_line(summary, limit=500)
+    assert len(line) <= 500
+    kept = json.loads(line)["queries"]
+    # drops from the fast end, keeps the prefix order; input untouched
+    assert 0 < len(kept) < 100
+    assert list(kept) == list(summary["queries"])[: len(kept)]
+    assert len(summary["queries"]) == 100
+    assert fit_summary_line(summary, limit=10_000) == json.dumps(summary)
+
+    # fixed fields alone overflow: empty the tranche, then refuse
+    summary["noisy_blocks"] = {f"family_{i}": 2.5 for i in range(200)}
+    with pytest.raises(ValueError, match="empty per-query tranche"):
+        fit_summary_line(summary, limit=500)

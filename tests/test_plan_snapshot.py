@@ -1,6 +1,7 @@
 """Suite-level plan-shape regression guard: every query's physical-plan
-fingerprint (exchange count, join strategy mix, Python-node count) is
-checked against the reviewed baseline in PLAN_FINGERPRINTS.json.
+fingerprint (exchange count, join strategy mix, Python-node count,
+windows with no partition key) is checked against the reviewed baseline
+in PLAN_FINGERPRINTS.json.
 
 A refactor that adds a shuffle, flips a broadcast join to sort-merge, or
 pushes work into a Python eval node FAILS here before it costs anything
@@ -25,7 +26,7 @@ BASELINE = os.path.join(REPO, "PLAN_FINGERPRINTS.json")
 SF = "/root/testdata/sf0.01"
 
 #: Counters where MORE than baseline is a scale regression.
-TIGHT = ("exchanges", "py_eval", "py_map", "nested_loop")
+TIGHT = ("exchanges", "py_eval", "py_map", "nested_loop", "unpartitioned_windows")
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(BASELINE), reason="no PLAN_FINGERPRINTS.json baseline"
@@ -107,7 +108,7 @@ def test_plan_shapes_do_not_regress(spark):
 def test_fingerprint_tool_runs_on_named_queries():
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "plan_fingerprint.py"),
-         "q6"],
+         "q6", "q15"],
         capture_output=True,
         text=True,
         timeout=300,
@@ -115,3 +116,6 @@ def test_fingerprint_tool_runs_on_named_queries():
     assert r.returncode == 0, r.stderr[-2000:]
     out = json.loads(r.stdout)
     assert "q6" in out and out["q6"]["exchanges"] >= 1
+    # q15's max-revenue window has no partition key; q6 has no window
+    assert out["q15"]["unpartitioned_windows"] == 1
+    assert out["q6"]["unpartitioned_windows"] == 0

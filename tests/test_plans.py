@@ -7,6 +7,7 @@ at scale.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_ballista_dhruvil_spark.operators import load_all
@@ -295,11 +296,22 @@ def test_knn_label_agreement_is_cell_local(spark):
     assert "Join" not in plan
 
 
-def test_per_group_topk_uses_window_group_limit(spark):
-    # sample_topk_per_group's rank<=k filter must push a per-partition top-k
-    # heap BELOW the shuffle (WindowGroupLimit, Spark >= 3.5) — at scale the
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sample_topk_per_group",
+        # these three also compute a per-group count window; it must come
+        # in an earlier step than the rank, or no group limit is inferred
+        "dedup_keep_best",
+        "pipeline_merge_upsert",
+        "sim_hard_negatives",
+    ],
+)
+def test_per_group_topk_uses_window_group_limit(spark, name):
+    # a scale.top_k rank<=k filter must push a per-partition top-k heap
+    # BELOW the shuffle (WindowGroupLimit, Spark >= 3.5) — at scale the
     # exchange then carries <= k rows per (partition, group), not the corpus.
-    plan = formatted_plan(QUERIES["sample_topk_per_group"](spark, SF_DIR))
+    plan = formatted_plan(QUERIES[name](spark, SF_DIR))
     assert "WindowGroupLimit" in plan
 
 

@@ -13,6 +13,9 @@ plan — deterministic for fixed testdata + confs, no execution needed):
   py_map         MapInPandas/FlatMapGroupsInPandas/MapInArrow kernels
   scans          FileScan nodes
   aggregates     HashAggregate/SortAggregate/ObjectHashAggregate nodes
+  unpartitioned_windows
+                 Window nodes with no PARTITION BY: one task sees every
+                 row of their input, a single-partition sort at scale
 
 Usage:
   python tools/plan_fingerprint.py            # regenerate PLAN_FINGERPRINTS.json
@@ -20,7 +23,8 @@ Usage:
 
 The checked-in JSON is the reviewed baseline. Regenerate deliberately
 after a plan-affecting change and re-commit; the test treats MORE
-exchanges / py_eval / nested_loop than recorded as a regression, fewer
+exchanges / py_eval / py_map / nested_loop / unpartitioned_windows than
+recorded as a regression, fewer
 as an improvement (it prints a reminder to re-baseline).
 """
 
@@ -66,6 +70,37 @@ def _tree_nodes(plan: str) -> list[str]:
     return out
 
 
+def _unpartitioned_windows(plan: str) -> int:
+    """Window nodes whose spec has no partition key, read from the detail
+    sections. Formatted mode omits empty argument lists, so the test is on
+    the first argument of the first windowspecdefinition(...): a sort
+    order or the frame itself means nothing was partitioned on."""
+    n = 0
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if not re.fullmatch(r"\(\d+\) Window", line.strip()):
+            continue
+        args = next((x for x in lines[i + 1 : i + 4] if x.startswith("Arguments:")), "")
+        start = args.find("windowspecdefinition(")
+        if start < 0:
+            continue
+        depth, j = 0, start + len("windowspecdefinition(")
+        for end in range(j, len(args)):
+            ch = args[end]
+            if ch in "([":
+                depth += 1
+            elif ch in ")]" and depth:
+                depth -= 1
+            elif ch in ",)" and not depth:
+                break
+        first = args[j:end].strip()
+        if first.startswith(("specifiedwindowframe", "unspecifiedframe")) or first.endswith(
+            (" NULLS FIRST", " NULLS LAST")
+        ):
+            n += 1
+    return n
+
+
 def node_counts(plan: str) -> dict[str, int]:
     """Count physical-plan TREE nodes by name (detail sections excluded)."""
     nodes = _tree_nodes(plan)
@@ -90,6 +125,7 @@ def node_counts(plan: str) -> dict[str, int]:
         "scans": sum(1 for x in nodes if x.startswith("Scan "))
         + n("BatchScan", "LocalTableScan"),
         "aggregates": n("HashAggregate", "SortAggregate", "ObjectHashAggregate"),
+        "unpartitioned_windows": _unpartitioned_windows(plan),
     }
 
 
