@@ -15,7 +15,7 @@ APIs + the executed-plan metrics module:
 - ``POST /api/sql?format=arrow``    same, result as an Arrow IPC stream —
   the reference's FlightSQL RESULT ENCODING (Arrow record batches,
   flight_sql.rs:87-146) over HTTP framing; the gRPC/Flight framing itself
-  still needs grpcio (absent in-container, documented gap)
+  is served by ``flight.py`` through ``pyarrow.flight``
 - ``GET  /api/job/<id>/dot``        executed-plan dot graph of that query
 - ``GET  /api/job/<id>/metrics``    per-operator SQLMetrics of that query
 - ``POST /api/job/<id>/cancel``     cancel the job group (long queries)

@@ -1,72 +1,103 @@
-"""Per-round bench regression gate (VERDICT r3 item 5; r8 item 2).
+"""Per-round bench regression gate: one rule, judged on CPU time.
 
-Compares the CURRENT per-query suite timings (bench_queries.json, written
-by ``python bench.py``) against a PREVIOUS round's file, flags >1.5x
-regressions above a floor, then RE-MEASURES every flagged query run-alone
-(``bench.py --solo`` — fresh JVM per query, warmup discarded) so same-JVM
-suite contention can't masquerade as a code regression. The solo result
-is the verdict, judged SOLO-TO-SOLO against the query's prior
-BENCH_SOLO baseline when one exists (fresh-JVM cold-cache tax makes
-solo-vs-suite incomparable — PERF.md r8/r10); only with no solo
-baseline does it fall back to the previous suite time (conservative:
-can over-confirm, which the recorded ``solo_baseline: null`` makes
-visible for adjudication).
+Compares two ``bench.py`` detail files (``bench_queries.json``), a
+PREVIOUS run's and the CURRENT one. Each holds per-query wall-time
+medians under ``queries`` and per-layer medians under ``layers``. Every
+query both runs timed is sorted into one of three bins:
 
-Self-adjudication (VERDICT r8 #2) — two cheap filters run BEFORE the
-expensive solo re-measure, both fed by instrumentation the suite now
-emits:
+* **code regression**: task CPU + build CPU (``exec.task_cpu_s`` +
+  ``operators.build_cpu_s``) rose by more than RATIO and by more than
+  DELTA_SEC.
+* **shape regression**: every current iteration ran more jobs, or more
+  stages, than every previous one (``exec.jobs_range``,
+  ``exec.stages_range``), and wall time rose by more than RATIO and by
+  more than DELTA_SEC (lost parallelism, an extra pass). Ranges, not
+  medians, because AQE re-plans as stages finish: unchanged code can run
+  a job more in some iterations than in others.
+* **noise**: wall time rose past both bars for any other reason. It is
+  listed, with no verdict.
 
-* **min-of-iters**: if the query's fastest iteration this run is within
-  the ratio bar of the previous median — or within DELTA_SEC absolute,
-  the same two-bar rule the solo confirmation applies (ADVICE r9 #3) —
-  the slow median was suite/host contention, not code. Every rescue is
-  recorded WITH its delta so a query rescued round after round is
-  visible in the artifact trail rather than silently immune.
-* **block sentinel**: each family block re-runs its first query at block
-  end; a block whose sentinel moved >2x and >0.3s (bench.block_is_noisy)
-  was measured inside a co-tenant interference window, and its readings
-  are recorded as ``noisy_skipped`` instead of flagged.
-* **boundary canary** (VERDICT r9 #1): the suite re-runs ONE fixed cheap
-  query at every family boundary; a family whose enclosing canary pair
-  reads >2x the series minimum was bracketed by a host-noise window even
-  if its own end-of-block sentinel came back clean (the r9 mid-block
-  blind spot: a window that starts and fades inside a block). Rows in
-  such families are recorded as ``window_suspect_skipped``.
+Why CPU: host contention stretches wall time but barely moves the CPU time
+a task spends. In a full ``bench.py`` run at local[4] beside 8 in-guest
+busy-loops on a 4-core host, per-query wall time rose 2.10x at the median
+(IQR 1.72-2.55x) while task + build CPU moved 0.90x (IQR 0.77-1.04x). So
+the rule needs no re-measure and no noise filter; the record of one run
+is enough.
+
+Queries whose previous wall time is at most FLOOR_SEC are not judged on
+wall time. The CPU rule needs no floor: its DELTA_SEC bar is above it.
+
+Out of reach of this rule:
+
+* Catalyst-side slowdowns (analysis, optimization, planning) run in the
+  driver JVM. They spend no task CPU and change no job or stage count.
+  The plan-fingerprint gate in ``tests/test_plan_snapshot.py`` covers them.
+* Python-worker CPU (pandas and Python UDFs) is not task CPU. A slowdown
+  there shows in ``functions.python_s`` and wall time, and is listed as
+  noise.
 
 Usage: python tools/bench_gate.py PREV_bench_queries.json [CUR.json]
-Writes BENCH_SOLO.json via bench.py --solo; exits 1 on confirmed
-regressions.
+CUR defaults to the repo's bench_queries.json. Prints one JSON line and
+exits 1 on regressions. A file without ``layers`` exits 2: it cannot be
+judged, so it never passes silently.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
 FLOOR_SEC = 0.3
 RATIO = 1.5
-#: a confirmed regression must also be at least this much slower in
-#: absolute terms — sub-second queries swing ~0.1-0.3s from JVM/heap/
-#: scheduling alone (PERF.md r4), which a pure ratio misreads as real
+#: a regression must also be at least this much slower in absolute terms:
+#: sub-second figures swing ~0.1-0.3s from JVM/heap/scheduling alone
+#: (PERF.md r4), which a pure ratio misreads as real
 DELTA_SEC = 0.5
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
-
-from bench import (  # noqa: E402 — shared noise rules
-    block_is_noisy,
-    canary_elevated_families,
-    canary_suspect_families,
-)
 
 
-def _family(name: str) -> str:
-    # mirror of bench.py's family(): the TPC-H block is one family "q"
-    import re
+def _rose(before: float, after: float) -> bool:
+    return after > RATIO * before and after - before > DELTA_SEC
 
-    return "q" if re.fullmatch(r"q\d+", name) else name.split("_", 1)[0]
+
+def _cpu(layer: dict) -> float:
+    return layer["exec.task_cpu_s"] + layer["operators.build_cpu_s"]
+
+
+def judge(prev: dict, cur: dict) -> dict:
+    """Sort every query both detail records timed into regressions and
+    noise (pure; both records must carry ``layers``)."""
+    regressions, noise = [], []
+    judged = sorted(n for n in cur["queries"] if n in prev["queries"])
+    for n in judged:
+        p, c = prev["layers"][n], cur["layers"][n]
+        wall = (prev["queries"][n], cur["queries"][n])
+        row = {
+            "query": n,
+            "wall": list(wall),
+            "cpu": [round(_cpu(p), 4), round(_cpu(c), 4)],
+            "jobs": [p["exec.jobs_range"], c["exec.jobs_range"]],
+            "stages": [p["exec.stages_range"], c["exec.stages_range"]],
+        }
+        wall_rose = wall[0] > FLOOR_SEC and _rose(*wall)
+        more = any(
+            c[f"exec.{k}_range"][0] > p[f"exec.{k}_range"][1] for k in ("jobs", "stages")
+        )
+        if _rose(_cpu(p), _cpu(c)):
+            regressions.append({**row, "rule": "code"})
+        elif wall_rose and more:
+            regressions.append({**row, "rule": "shape"})
+        elif wall_rose:
+            noise.append(row)
+    return {
+        "metric": "bench_gate",
+        "judged": len(judged),
+        "flagged": len(regressions),
+        "regressions": regressions,
+        "noise": noise,
+    }
 
 
 def main() -> int:
@@ -74,103 +105,21 @@ def main() -> int:
     cur_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         _REPO, "bench_queries.json"
     )
-    with open(prev_path) as f:
-        prev = json.load(f)["queries"]
-    with open(cur_path) as f:
-        cur_doc = json.load(f)
-    cur = cur_doc["queries"]
-    cur_min = cur_doc.get("queries_min", {})
-    noisy_fams = {
-        fam
-        for fam, info in cur_doc.get("blocks", {}).items()
-        if block_is_noisy(info)
-    }
-    suspect_fams = canary_suspect_families(cur_doc.get("noise_index", []))
-
-    suite_slow = sorted(
-        (n, prev[n], cur[n])
-        for n in cur
-        if n in prev and prev[n] > FLOOR_SEC and cur[n] > RATIO * prev[n]
-    )
-    # min-of-iters rescue: fastest iteration within the ratio bar OR
-    # within DELTA_SEC absolute (the solo confirmation's two bars,
-    # ADVICE r9 #3) → contention, not code
-    min_ok = [
-        (n, p, c)
-        for n, p, c in suite_slow
-        if cur_min.get(n, c) <= RATIO * p or cur_min.get(n, c) - p <= DELTA_SEC
-    ]
-    rest = [t for t in suite_slow if t not in min_ok]
-    # sentinel skip: measured inside a self-documented noise window
-    noisy_skipped = [(n, p, c) for n, p, c in rest if _family(n) in noisy_fams]
-    rest2 = [t for t in rest if t not in noisy_skipped]
-    # canary skip: family bracketed by elevated boundary-canary readings
-    window_skipped = [(n, p, c) for n, p, c in rest2 if _family(n) in suspect_fams]
-    flagged = [t for t in rest2 if t not in window_skipped]
-
-    base = {
-        "metric": "bench_gate",
-        "suite_slow": len(suite_slow),
-        # deltas recorded so a query rescued every round is VISIBLE in
-        # the artifact trail (ADVICE r9 #3's anti-immunity clause)
-        "min_rescued": [
-            {"query": n, "prev": p, "cur_min": cur_min.get(n, c),
-             "min_delta": round(cur_min.get(n, c) - p, 4)}
-            for n, p, c in min_ok
-        ],
-        "noisy_skipped": [n for n, _, _ in noisy_skipped],
-        "noisy_blocks": sorted(noisy_fams),
-        "window_suspect_skipped": [n for n, _, _ in window_skipped],
-        "window_suspect_blocks": sorted(suspect_fams),
-        # informational (no skip): sub-bar canary elevation — family-wide
-        # inflation here reads as probably-host (the r10 dedup/ops case)
-        "window_elevated_blocks": sorted(
-            canary_elevated_families(cur_doc.get("noise_index", []))
-        ),
-    }
-    if not flagged:
-        print(json.dumps({**base, "regressions": [], "flagged": 0}))
-        return 0
-    names = [n for n, _, _ in flagged]
-    print(f"suite-flagged (>{RATIO}x, prev>{FLOOR_SEC}s): "
-          + ", ".join(f"{n} {p}->{c}" for n, p, c in flagged),
-          file=sys.stderr)
-    # Capture prior SOLO baselines BEFORE --solo merges new rows over
-    # them: solo-to-solo is the only like-for-like confirmation bar
-    # (PERF.md r8/r10 — a fresh solo JVM pays cold-cache/shingle-cache
-    # costs the suite amortizes, so solo-vs-prev-SUITE over-confirms;
-    # the r10 dedup_containment false-confirm is the motivating case).
-    solo_path = os.environ.get(
-        "BENCH_SOLO_PATH", os.path.join(_REPO, "BENCH_SOLO.json")
-    )
-    prior_solo: dict[str, float] = {}
-    if os.path.exists(solo_path):
-        with open(solo_path) as f:
-            prior_solo = json.load(f).get("queries", {})
-    r = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "bench.py"), "--solo", *names],
-        capture_output=True, text=True,
-    )
-    if r.returncode != 0:
-        print(r.stderr[-2000:], file=sys.stderr)
-        return 1
-    solo = json.loads(r.stdout.strip().splitlines()[-1])["queries"]
-    confirmed = []
-    for n, p, c in flagged:
-        sb = prior_solo.get(n)
-        bar = sb if sb is not None else p  # fall back to prev suite
-        if solo[n] > RATIO * bar and solo[n] - bar > DELTA_SEC:
-            confirmed.append({
-                "query": n, "prev_suite": p, "cur_suite": c,
-                "solo": solo[n], "solo_baseline": sb,
-            })
-    print(json.dumps({
-        **base,
-        "flagged": len(flagged),
-        "solo": solo,
-        "regressions": confirmed,
-    }))
-    return 1 if confirmed else 0
+    docs = []
+    for path in (prev_path, cur_path):
+        with open(path) as f:
+            doc = json.load(f)
+        if "layers" not in doc:
+            print(
+                f"{path} has no per-query layers record; re-run bench.py to "
+                "write one (the gate judges task CPU, not wall time alone)",
+                file=sys.stderr,
+            )
+            return 2
+        docs.append(doc)
+    out = judge(*docs)
+    print(json.dumps(out))
+    return 1 if out["regressions"] else 0
 
 
 if __name__ == "__main__":

@@ -15,13 +15,12 @@ Steps, in fail-fast order (cheapest gate first):
 4. **pytest**   — the full test suite, ~15-25 min.
 5. **bench**    — ``bench.py`` at $SPARK_GRAFT_SF_DIR; reports
                   tpch_total_sec against the recorded 18.49s baseline
-                  (2x bar) and surfaces self-flagged noisy blocks.
+                  (2x bar) and the cpus the run used.
 
 ``--quick`` runs steps 1-3 only (the correctness gate); ``--dry-run``
 prints the plan without executing. Exit code: 0 iff every executed step
-passed. Timings land in the summary table; host-noise adjudication
-stays the bench gate's job — this tool only REPORTS the bench's own
-sentinel verdicts, it does not re-litigate them.
+passed. Timings land in the summary table; regression judgement between
+runs stays ``tools/bench_gate.py``'s job.
 """
 
 from __future__ import annotations
@@ -102,9 +101,7 @@ def main() -> int:
                 ratio = b["tpch_total_sec"] / TPCH_BASELINE_SEC
                 note = (
                     f"tpch {b['tpch_total_sec']}s = {ratio:.2f}x baseline; "
-                    f"suite {b['value']}s/{b['n_queries']}; "
-                    f"noisy={sorted(b.get('noisy_blocks', {}))} "
-                    f"window_suspect={b.get('window_suspect', [])}"
+                    f"suite {b['value']}s/{b['n_queries']}; cpus={b['cpus']}"
                 )
                 if ratio > 2.0:
                     ok = False
