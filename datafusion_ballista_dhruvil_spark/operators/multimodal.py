@@ -16,16 +16,20 @@ and raise a loud NotImplementedError gate in ``decode_image`` /
 Scale posture at 100 TB:
 - payloads live in their own column so column pruning keeps metadata-only
   queries from ever reading bytes;
-- decode runs in ``mapInPandas`` (Arrow batches, no per-row Python overhead)
-  and is map-only — no shuffle touches raw bytes;
+- every payload query runs ONE ``mapInPandas`` stage
+  (:func:`map_payload_rows`: Arrow batches in, one row function per
+  payload). The synthetic container is encoded and decoded inside the same
+  call, so payload bytes cross the JVM/Python boundary once — as ingested
+  bytes would, straight into the decoder — and no shuffle touches them;
 - frame sampling emits (doc, offset) index rows, not byte slices, so the
   shuffle after sampling carries only coordinates.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,8 +66,6 @@ def encode_bmp(width: int, height: int, pixel_bytes: bytes) -> bytes:
     """
     import struct
 
-    import numpy as np
-
     if len(pixel_bytes) != width * height * 3:
         raise ValueError("pixel_bytes must be width*height*3 bytes")
     rowsize = (3 * width + 3) // 4 * 4
@@ -97,8 +99,6 @@ def encode_png(width: int, height: int, pixel_bytes: bytes, color_type: int = 2)
     """
     import struct
     import zlib
-
-    import numpy as np
 
     ch = {0: 1, 2: 3, 6: 4}[color_type]
     stride = width * ch
@@ -161,8 +161,6 @@ def _decode_png(payload: bytes):
     """
     import struct
     import zlib
-
-    import numpy as np
 
     pos = len(PNG_MAGIC)
     idat = bytearray()
@@ -257,8 +255,6 @@ def decode_image(payload: bytes):
     """
     import struct
 
-    import numpy as np
-
     if payload[: len(PNG_MAGIC)] == PNG_MAGIC:
         return _decode_png(payload)
 
@@ -323,7 +319,7 @@ def with_payload(documents: DataFrame) -> DataFrame:
 
 def tile_doc_pixels(data: bytes, channels: int = 3):
     """THE doc-bytes → fake-image convention every mm_image_* /
-    mm_decode_* / mm_png_* encode stage AND its arithmetic DuckDB oracle
+    mm_decode_* / mm_png_* row function AND its arithmetic DuckDB oracle
     share (ADVICE r9 #4: one definition instead of N inline copies that
     must stay in lockstep): sizes derived from byte length —
     ``w=(n%64)+1, h=(n%48)+1`` — pixels by tiling the utf-8 bytes over
@@ -332,8 +328,6 @@ def tile_doc_pixels(data: bytes, channels: int = 3):
     Change here and in the oracles' size formulas TOGETHER, or the hash
     gate breaks by design.
     """
-    import numpy as np
-
     tb = np.frombuffer(data, np.uint8)
     n = len(tb)
     w, h = (n % 64) + 1, (n % 48) + 1
@@ -341,20 +335,76 @@ def tile_doc_pixels(data: bytes, channels: int = 3):
     return w, h, (np.resize(tb, npix) if n else np.full(npix, 127, np.uint8))
 
 
+def doc_bmp(data: bytes) -> bytes:
+    """The doc's 24-bit BMP: :func:`tile_doc_pixels` RGB pixels, encoded."""
+    w, h, px = tile_doc_pixels(data)
+    return encode_bmp(w, h, px.tobytes())
+
+
+def doc_jpeg_blocks(data: bytes):
+    """THE doc-bytes → JPEG block-image convention mm_jpeg_features,
+    mm_jpeg_color_stats and their oracles share: the tile convention at
+    8x8-block grain — ``wb=(n%8)+1, hb=(n%6)+1`` blocks, block (by, bx)
+    constant at byte ``(by*wb+bx) % n`` (127 for empty docs). Constant
+    blocks are what make the flat-8 quant table decode bit-exactly (see
+    jpeg_py). Returns the ``(hb*8, wb*8)`` uint8 gray image.
+    """
+    tb = np.frombuffer(data, np.uint8)
+    n = len(tb)
+    wb, hb = (n % 8) + 1, (n % 6) + 1
+    blockvals = (
+        np.resize(tb, wb * hb) if n else np.full(wb * hb, 127, np.uint8)
+    ).reshape(hb, wb)
+    return np.repeat(np.repeat(blockvals, 8, 0), 8, 1)
+
+
 def doc_pcm16(data: bytes):
-    """THE doc-bytes → PCM16 sample convention the mm_audio_* encode
-    stages and their oracles share (ADVICE r9 #4): ``samples =
+    """THE doc-bytes → PCM16 sample convention the mm_audio_* row
+    functions and their oracles share (ADVICE r9 #4): ``samples =
     (byte-128)*256``, ONE zero sample for an empty doc (a RIFF data
     chunk must be non-empty — and it makes n=0 vs n=1 indistinguishable
-    after decode, which is why resample carries n_in separately).
+    after decode, which is why resample reads n_in from the payload).
     Returns a little-endian int16 array; pair with rate 16000.
     """
-    import numpy as np
-
     tb = np.frombuffer(data, np.uint8)
     if len(tb):
         return ((tb.astype(np.int64) - 128) * 256).astype("<i2")
     return np.zeros(1, dtype="<i2")
+
+
+def map_payload_rows(
+    spark: SparkSession,
+    sf_dir: str,
+    row: Callable[[int, bytes], tuple | None],
+    schema: str,
+) -> DataFrame:
+    """THE payload-query shape: the first 200 documents' payloads go
+    through ONE ``mapInPandas`` stage that calls ``row(doc_id, payload)``
+    per document. ``row`` returns the output values after ``doc_id`` (a
+    tuple in ``schema`` order) or ``None`` to emit no row; ``schema`` is
+    the output DDL and starts with ``doc_id long``.
+
+    No orderBy (the driver compare sorts): a range exchange over this
+    map-only stage would run its Python a second time in the sampling
+    job, and sorting first would shuffle the payload.
+    """
+    names = [col.split()[0] for col in schema.split(",")]
+
+    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                out = row(doc_id, bytes(payload))
+                if out is not None:
+                    rows.append((doc_id, *out))
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    assets = with_payload(Tables(spark, sf_dir).documents)
+    return (
+        assets.where(F.col("doc_id") < 200)
+        .select("doc_id", "payload")
+        .mapInPandas(batch, schema=schema)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -441,42 +491,25 @@ def mm_resize_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The downsample here runs on the decoded characters so it is exactly
     reproducible in the oracle (a hash-verified mapInPandas stage, not a
-    rows-only stub); a real image resize swaps the batch body for
+    rows-only stub); a real image resize swaps the row body for
     PIL.Image.resize over decoded pixels with the same (binary in, typed
     row out) plumbing. Map-only: no shuffle ever carries the payload;
     output rows carry sizes + digest, not bytes.
     """
+    import hashlib
 
-    def resize_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import pandas as _pd
-
-        for pdf in it:
-            s = pdf["payload"].map(lambda b: bytes(b).decode("utf-8"))
-            thumb = s.map(lambda x: x[:1024:4])
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "orig_chars": s.str.len().astype("int64"),
-                    "thumb_chars": thumb.str.len().astype("int64"),
-                    "thumb_md5": thumb.map(
-                        lambda x: hashlib.md5(x.encode("utf-8")).hexdigest()
-                    ),
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    # no orderBy (the driver compare sorts): a range exchange over this
-    # map-only chain would run its Python a second time in the sampling
-    # job, and sorting first would shuffle the payload
-    return (
-        assets.select("doc_id", "payload")
-        .mapInPandas(
-            resize_batch,
-            schema="doc_id long, orig_chars long, thumb_chars long, thumb_md5 string",
+    def row(doc_id, data):
+        text = data.decode("utf-8")
+        thumb = text[:1024:4]
+        return (
+            len(text),
+            len(thumb),
+            hashlib.md5(thumb.encode("utf-8")).hexdigest(),
         )
+
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, orig_chars long, thumb_chars long, thumb_md5 string",
     )
 
 
@@ -507,12 +540,12 @@ ORDER BY doc_id
 """,
 )
 def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode + feature-extract via two mapInPandas stages.
+    """REAL image decode + feature-extract in one mapInPandas stage.
 
-    Stage 1 materializes an actual 24-bit uncompressed BMP per document
+    Each row materializes an actual 24-bit uncompressed BMP per document
     (pixels = the document's utf-8 bytes tiled over width*height*3, sizes
     derived from the byte length; all-127 gray for empty docs) — standing
-    in for ingested image bytes. Stage 2 DECODES the container for real
+    in for ingested image bytes — and DECODES the container for real
     with :func:`decode_image`: magic check, header field parse, row-padding
     strip — then emits header dimensions and the mean pixel value of the
     decoded array. Codec formats (PNG/JPEG magic) hit decode_image's loud
@@ -523,56 +556,15 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     total + prefix remainder); a decoder bug — wrong offset, padding
     mishandled, flipped rows dropped — breaks the hash. Map-only: the
     payload bytes never shuffle; output rows carry features, not pixels.
-
-    Batch fns are nested so cloudpickle ships them BY VALUE (Python workers
-    lack this package on their path when launched from outside the repo).
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
-        tile_doc_pixels as _tile,
-        encode_bmp as _enc,
-    )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        w, h, px = decode_image(doc_bmp(data))
+        return w, h, float(px.astype(np.int64).sum()) / px.size, True
 
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                w, h, px = _tile(bytes(b))
-                images.append(_enc(w, h, px.tobytes()))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            widths, heights, means = [], [], []
-            for b in pdf["image"]:
-                w, h, px = _dec(bytes(b))
-                widths.append(w)
-                heights.append(h)
-                means.append(float(px.astype(_np.int64).sum()) / px.size)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": _pd.Series(widths, dtype="int64"),
-                    "height": _pd.Series(heights, dtype="int64"),
-                    "mean_pixel": means,
-                    "decode_ok": True,
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    images = assets.select("doc_id", "payload").mapInPandas(
-        encode_batch, schema="doc_id long, image binary"
-    )
-    return images.mapInPandas(
-        decode_batch,
-        schema="doc_id long, width long, height long, mean_pixel double, decode_ok boolean",
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, width long, height long, mean_pixel double, decode_ok boolean",
     )
 
 
@@ -607,12 +599,12 @@ FROM sized
 def mm_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG encode → decode → feature-extract (VERDICT r8 #6).
 
-    Stage 1 materializes a genuine PNG per document — zlib-compressed
+    Each row materializes a genuine PNG per document — zlib-compressed
     IDAT, CRC'd chunks, rows cycling ALL FIVE filter types — with the
     color type varying by doc_id: gray (%3==0), RGB (%3==1), RGBA
     (%3==2); pixels are the document's utf-8 bytes tiled over the pixel
     buffer (all-127 gray for empty docs), sizes derived from byte length
-    exactly as mm_decode_features. Stage 2 decodes with
+    exactly as mm_decode_features — then decodes it with
     :func:`decode_image`'s PNG path — inflate, chunk walk, defilter —
     and emits header dims + the mean pixel of the decoded array.
 
@@ -622,68 +614,23 @@ def mm_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     w*h*3 (RGB/RGBA). Any defilter/inflate/chunk-walk bug — Paeth
     predictor tie-break, Sub prefix-sum, split-IDAT handling — lands in
     mean_pixel and breaks the hash. Map-only: payload bytes never
-    shuffle; no orderBy — the driver compare sorts.
-
-    Batch fns nested so cloudpickle ships them by value (worker path).
+    shuffle.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
-        tile_doc_pixels as _tile,
-        encode_png as _enc,
-    )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        ct = (0, 2, 6)[int(doc_id) % 3]
+        w, h, px = tile_doc_pixels(data, channels=1 if ct == 0 else 3)
+        if ct == 6:  # append a constant opaque alpha channel
+            rgba = np.empty((w * h, 4), np.uint8)
+            rgba[:, :3] = px.reshape(w * h, 3)
+            rgba[:, 3] = 255
+            px = rgba.reshape(-1)
+        w, h, px = decode_image(encode_png(w, h, px.tobytes(), color_type=ct))
+        return w, h, ct, float(px.astype(np.int64).sum()) / px.size
 
-        for pdf in it:
-            images, cts = [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                ct = (0, 2, 6)[int(doc_id) % 3]
-                ch = {0: 1, 2: 3, 6: 4}[ct]
-                w, h, px = _tile(bytes(b), channels=1 if ct == 0 else 3)
-                if ct == 6:  # append a constant opaque alpha channel
-                    rgba = _np.empty((w * h, 4), _np.uint8)
-                    rgba[:, :3] = px.reshape(w * h, 3)
-                    rgba[:, 3] = 255
-                    px = rgba.reshape(-1)
-                assert px.size == w * h * ch
-                images.append(_enc(w, h, px.tobytes(), color_type=ct))
-                cts.append(ct)
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ct": _pd.Series(cts, dtype="int64"),
-                 "image": images}
-            )
-
-    def decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            widths, heights, means = [], [], []
-            for b in pdf["image"]:
-                w, h, px = _dec(bytes(b))
-                widths.append(w)
-                heights.append(h)
-                means.append(float(px.astype(_np.int64).sum()) / px.size)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": _pd.Series(widths, dtype="int64"),
-                    "height": _pd.Series(heights, dtype="int64"),
-                    "color_type": pdf["ct"].astype("int64"),
-                    "mean_pixel": means,
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    images = assets.select("doc_id", "payload").mapInPandas(
-        encode_batch, schema="doc_id long, ct long, image binary"
-    )
-    return images.mapInPandas(
-        decode_batch,
-        schema="doc_id long, width long, height long, color_type long, mean_pixel double",
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, width long, height long, color_type long, mean_pixel double",
     )
 
 
@@ -732,7 +679,7 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     per sample = pixel > image mean; identical/near-identical images
     collide, enabling hash-bucket image dedup with no pairwise compare).
 
-    Pipeline: encode the deterministic BMP (as in mm_decode_features),
+    Row function: encode the deterministic BMP (as in mm_decode_features),
     REALLY decode it (header parse + padding strip via decode_image), then
     64 evenly-spaced pixel samples compare against the exact image mean in
     pure integer arithmetic (pixel * npix > sum — no float mean, so the
@@ -743,47 +690,16 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries (doc_id, 64-bit hash) — bytes never move. Collision
     groups then drive the same keep-min/cluster machinery as text dedup.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
-        tile_doc_pixels as _tile,
-        encode_bmp as _enc,
-    )
+    idx = np.arange(64, dtype=np.int64)
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        _, _, px = decode_image(doc_bmp(data))
+        flat = px.reshape(-1).astype(np.int64)  # row-major = tile order
+        npix = flat.size
+        bits = flat[idx * npix // 64] * npix > int(flat.sum())
+        return ("".join("1" if v else "0" for v in bits),)
 
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                w, h, px = _tile(bytes(b))
-                images.append(_enc(w, h, px.tobytes()))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def ahash_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        idx = _np.arange(64, dtype=_np.int64)
-        for pdf in it:
-            hashes = []
-            for b in pdf["image"]:
-                _, _, px = _dec(bytes(b))
-                flat = px.reshape(-1).astype(_np.int64)  # row-major = tile order
-                npix = flat.size
-                s = int(flat.sum())
-                pos = idx * npix // 64
-                bits = flat[pos] * npix > s
-                hashes.append("".join("1" if v else "0" for v in bits))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "ahash": hashes})
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    hashed = (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, image binary")
-        .mapInPandas(ahash_batch, schema="doc_id long, ahash string")
-    )
+    hashed = map_payload_rows(spark, sf_dir, row, "doc_id long, ahash string")
     from pyspark.sql.window import Window as _W
 
     return hashed.select(
@@ -806,8 +722,6 @@ def encode_wav(sample_rate: int, samples) -> bytes:
     """Encode an int16 numpy array as a PCM16 mono WAV file."""
     import struct
 
-    import numpy as np
-
     data = np.asarray(samples, dtype="<i2").tobytes()
     byte_rate = sample_rate * 2
     fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, byte_rate, 2, 16)
@@ -825,8 +739,6 @@ def decode_audio(payload: bytes):
     NotImplementedError — compressed audio needs a codec library.
     """
     import struct
-
-    import numpy as np
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise NotImplementedError(
@@ -892,60 +804,17 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (missed word padding, wrong data offset) breaks the hash. Map-only:
     audio bytes never shuffle; rows carry features.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_audio as _dec,
-        doc_pcm16 as _pcm,
-        encode_wav as _enc,
-    )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        rate, samples = decode_audio(encode_wav(16000, doc_pcm16(data)))
+        a = np.abs(samples.astype(np.int64))
+        n = len(samples)
+        return rate, n, n * 1000 // rate, float(int(a.sum())) / n, int(a.max())
 
-        for pdf in it:
-            wavs = []
-            for b in pdf["payload"]:
-                wavs.append(_enc(16000, _pcm(bytes(b))))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "audio": wavs})
-
-    def feature_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            rates, counts, durs, means, peaks = [], [], [], [], []
-            for b in pdf["audio"]:
-                rate, samples = _dec(bytes(b))
-                a = _np.abs(samples.astype(_np.int64))
-                rates.append(rate)
-                counts.append(len(samples))
-                durs.append(len(samples) * 1000 // rate)
-                means.append(float(int(a.sum())) / len(samples))
-                peaks.append(int(a.max()))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": _pd.Series(rates, dtype="int64"),
-                    "n_samples": _pd.Series(counts, dtype="int64"),
-                    "duration_ms": _pd.Series(durs, dtype="int64"),
-                    "mean_abs": _pd.Series(means, dtype="float64"),
-                    "peak": _pd.Series(peaks, dtype="int64"),
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    # no orderBy (the driver compare sorts): a range exchange over this
-    # map-only chain would run its Python a second time in the sampling
-    # job, and sorting first would shuffle the payload
-    return (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, audio binary")
-        .mapInPandas(
-            feature_batch,
-            schema="doc_id long, sample_rate long, n_samples long, "
-            "duration_ms long, mean_abs double, peak long",
-        )
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, sample_rate long, n_samples long, "
+        "duration_ms long, mean_abs double, peak long",
     )
 
 
@@ -1001,47 +870,41 @@ def mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-only — frames never leave their executor, no shuffle
     carries payload bytes; output is 3 small ints per asset. The Python
-    loop is per-batch (Arrow-fed), bounded by frames-per-asset (<= 16).
+    loop is per-row (Arrow-fed), bounded by frames-per-asset (<= 16).
     """
     import hashlib
 
-    t = Tables(spark, sf_dir)
-    docs = t.documents.where(F.col("doc_id") < 200).select("doc_id", "text")
+    def row(doc_id, data):
+        s = data.decode("utf-8")[:1024]
+        if not s:
+            return None
+        sigs = [
+            hashlib.md5(s[i : i + 64].encode("utf-8")).hexdigest()[:8]
+            for i in range(0, len(s), 64)
+        ]
+        cuts = sum(1 for a, b in zip(sigs, sigs[1:]) if a != b)
+        best = cur = 1
+        for a, b in zip(sigs, sigs[1:]):
+            cur = cur + 1 if a == b else 1
+            best = max(best, cur)
+        return len(sigs), cuts, best
 
-    def cuts_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "n_frames": [], "n_cuts": [], "longest_static": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                s = (text or "")[:1024]
-                frames = [s[i : i + 64] for i in range(0, len(s), 64)]
-                frames = [fr for fr in frames if fr]
-                if not frames:
-                    continue
-                sigs = [
-                    hashlib.md5(fr.encode("utf-8")).hexdigest()[:8]
-                    for fr in frames
-                ]
-                cuts = sum(1 for a, b in zip(sigs, sigs[1:]) if a != b)
-                best = cur = 1
-                for a, b in zip(sigs, sigs[1:]):
-                    cur = cur + 1 if a == b else 1
-                    best = max(best, cur)
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(len(sigs))
-                out["n_cuts"].append(cuts)
-                out["longest_static"].append(best)
-            yield pd.DataFrame(out)
-
-    # no orderBy (the driver compare sorts): a range exchange over this
-    # map-only chain would run its Python a second time in the sampling
-    # job, and sorting first would shuffle the payload
-    return docs.mapInPandas(
-        cuts_batch,
-        schema="doc_id long, n_frames long, n_cuts long, longest_static long",
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, n_frames long, n_cuts long, longest_static long",
     )
 
 
 # --------------------------------------------------------------------------
+def dhash_bits(data: bytes):
+    """The doc image's 64 dHash bits over its DECODED BMP pixels: bit i =
+    sample[i] > sample[i+1] across 65 evenly spaced pixel samples."""
+    _, _, px = decode_image(doc_bmp(data))
+    flat = px.reshape(-1).astype(np.int64)
+    samples = flat[np.arange(65, dtype=np.int64) * flat.size // 65]
+    return samples[:-1] > samples[1:]
+
+
 @query(
     "mm_image_dhash",
     oracle="""
@@ -1086,47 +949,11 @@ def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the binary column; only (doc_id, 64-bit hash) ever shuffles for
     the collision-count window.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
-        tile_doc_pixels as _tile,
-        encode_bmp as _enc,
-    )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        return ("".join("1" if v else "0" for v in dhash_bits(data)),)
 
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                w, h, px = _tile(bytes(b))
-                images.append(_enc(w, h, px.tobytes()))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def dhash_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        idx = _np.arange(65, dtype=_np.int64)
-        for pdf in it:
-            hashes = []
-            for b in pdf["image"]:
-                _, _, px = _dec(bytes(b))
-                flat = px.reshape(-1).astype(_np.int64)
-                npix = flat.size
-                pos = idx * npix // 65
-                samples = flat[pos]
-                bits = samples[:-1] > samples[1:]
-                hashes.append("".join("1" if v else "0" for v in bits))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "dhash": hashes})
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    hashed = (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, image binary")
-        .mapInPandas(dhash_batch, schema="doc_id long, dhash string")
-    )
+    hashed = map_payload_rows(spark, sf_dir, row, "doc_id long, dhash string")
     from pyspark.sql.window import Window as _W
 
     return hashed.select(
@@ -1204,65 +1031,27 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoded framing arithmetically. Map-only per clip: audio bytes
     never shuffle; each clip's segments resolve inside its own row.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_audio as _dec,
-        doc_pcm16 as _pcm,
-        encode_wav as _enc,
-    )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        _, samples = decode_audio(encode_wav(16000, doc_pcm16(data)))
+        dev = samples.astype(np.int64) // 256  # back to byte-128
+        n = dev.size
+        n_frames = (n + _VAD_FRAME - 1) // _VAD_FRAME
+        se = np.add.reduceat(dev * dev, np.arange(0, n, _VAD_FRAME))
+        idx = np.flatnonzero(se > _VAD_SE_THRESH)
+        if idx.size:
+            breaks = np.diff(idx) > 1
+            n_segments = 1 + int(breaks.sum())
+            seg_ids = np.concatenate(([0], np.cumsum(breaks)))
+            longest = int(np.bincount(seg_ids).max())
+        else:
+            n_segments, longest = 0, 0
+        return n_frames, int(idx.size), n_segments, longest
 
-        for pdf in it:
-            wavs = []
-            for b in pdf["payload"]:
-                wavs.append(_enc(16000, _pcm(bytes(b))))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "audio": wavs})
-
-    def vad_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            out = {"doc_id": [], "n_frames": [], "n_active": [],
-                   "n_segments": [], "longest_seg": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf["audio"]):
-                _, samples = _dec(bytes(b))
-                dev = (samples.astype(_np.int64) // 256)  # back to byte-128
-                n = dev.size
-                n_frames = (n + _VAD_FRAME - 1) // _VAD_FRAME
-                starts = _np.arange(0, n, _VAD_FRAME)
-                se = _np.add.reduceat(dev * dev, starts)
-                active = se > _VAD_SE_THRESH
-                idx = _np.flatnonzero(active)
-                if idx.size:
-                    breaks = _np.diff(idx) > 1
-                    n_segments = 1 + int(breaks.sum())
-                    seg_ids = _np.concatenate(([0], _np.cumsum(breaks)))
-                    longest = int(_np.bincount(seg_ids).max())
-                else:
-                    n_segments, longest = 0, 0
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(n_frames)
-                out["n_active"].append(int(idx.size))
-                out["n_segments"].append(n_segments)
-                out["longest_seg"].append(longest)
-            yield _pd.DataFrame(out)
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    # no orderBy (the driver compare sorts): a range exchange over this
-    # map-only chain would run its Python a second time in the sampling
-    # job, and sorting first would shuffle the payload
-    return (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, audio binary")
-        .mapInPandas(
-            vad_batch,
-            schema="doc_id long, n_frames long, n_active long, "
-            "n_segments long, longest_seg long",
-        )
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, n_frames long, n_active long, "
+        "n_segments long, longest_seg long",
     )
 
 
@@ -1330,51 +1119,12 @@ def mm_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands (cap with MAX_BUCKET_DOCS machinery if a degenerate corpus
     demands it).
     """
-    from pyspark.sql.window import Window as _W  # noqa: F401
+    pow2 = 1 << np.arange(64, dtype=np.int64)
 
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
-        tile_doc_pixels as _tile,
-        encode_bmp as _enc,
-    )
+    def row(doc_id, data):
+        return (int(pow2[dhash_bits(data)].sum()),)
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                w, h, px = _tile(bytes(b))
-                images.append(_enc(w, h, px.tobytes()))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def dhash_int_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        idx = _np.arange(65, dtype=_np.int64)
-        pow2 = 1 << _np.arange(64, dtype=_np.int64)
-        for pdf in it:
-            hs = []
-            for b in pdf["image"]:
-                _, _, px = _dec(bytes(b))
-                flat = px.reshape(-1).astype(_np.int64)
-                npix = flat.size
-                samples = flat[idx * npix // 65]
-                bits = samples[:-1] > samples[1:]
-                hs.append(int((pow2[bits]).sum()))
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "h": _pd.Series(hs, dtype="int64")}
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    hashed = (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, image binary")
-        .mapInPandas(dhash_int_batch, schema="doc_id long, h long")
-    )
+    hashed = map_payload_rows(spark, sf_dir, row, "doc_id long, h long")
     bands = hashed.select(
         "doc_id",
         "h",
@@ -1449,67 +1199,28 @@ def mm_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic fill; the image-side analogue of the text repetition
     filters) an image-curation pipeline thresholds on before captioning.
 
-    Pipeline: deterministic BMP encode -> REAL decode -> 256-bin pixel
+    Row function: deterministic BMP encode -> REAL decode -> 256-bin pixel
     histogram -> the engine's quantized-log entropy identity
     (N*log2(N) - SUM(c*log2(c)) in exact micro-bit BIGINTs, one final
     double division). The kernel computes the histogram with one
     np.bincount per image, map-only; only (doc_id, histogram-derived
     integers) leave the executor — pixels never shuffle.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
-        tile_doc_pixels as _tile,
-        encode_bmp as _enc,
-    )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        _, _, px = decode_image(doc_bmp(data))
+        flat = px.reshape(-1)
+        npix = flat.size
+        c = np.bincount(flat, minlength=256).astype(np.int64)
+        c = c[c > 0]
+        logs = np.round(np.log2(c.astype(np.float64)) * 1000000).astype(np.int64)
+        log_n = int(round(np.log2(float(npix)) * 1000000))
+        ent_num = npix * log_n - int((c * logs).sum())
+        return int(c.size), ent_num, ent_num / npix / 1000000.0
 
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                w, h, px = _tile(bytes(b))
-                images.append(_enc(w, h, px.tobytes()))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def entropy_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            out = {"doc_id": [], "n_levels": [], "ent_num_q6": [],
-                   "entropy_bits": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf["image"]):
-                _, _, px = _dec(bytes(b))
-                flat = px.reshape(-1)
-                npix = flat.size
-                c = _np.bincount(flat, minlength=256).astype(_np.int64)
-                c = c[c > 0]
-                logs = _np.round(
-                    _np.log2(c.astype(_np.float64)) * 1000000
-                ).astype(_np.int64)
-                log_n = int(round(_np.log2(float(npix)) * 1000000))
-                ent_num = npix * log_n - int((c * logs).sum())
-                out["doc_id"].append(doc_id)
-                out["n_levels"].append(int(c.size))
-                out["ent_num_q6"].append(ent_num)
-                out["entropy_bits"].append(ent_num / npix / 1000000.0)
-            yield _pd.DataFrame(out)
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    # no orderBy (the driver compare sorts): a range exchange over this
-    # map-only chain would run its Python a second time in the sampling
-    # job, and sorting first would shuffle the payload
-    return (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, image binary")
-        .mapInPandas(
-            entropy_batch,
-            schema="doc_id long, n_levels long, ent_num_q6 long, "
-            "entropy_bits double",
-        )
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, n_levels long, ent_num_q6 long, entropy_bits double",
     )
 
 
@@ -1549,7 +1260,7 @@ def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     character-thumbnail placeholder to actual pixel math now that the
     PNG decoder exists — VERDICT r8 #6 follow-through).
 
-    Pipeline: materialize a real RGB PNG per document (tiled utf-8
+    Row function: materialize a real RGB PNG per document (tiled utf-8
     bytes, all five row filters), DECODE it (inflate + defilter via
     decode_image), then NEAREST-NEIGHBOR resize to a fixed 8x6 thumb:
     out[y][x][c] = px[y*h//6][(x*w//8)*3 + c] — the standard index-map
@@ -1561,65 +1272,26 @@ def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiset survives. The DuckDB oracle recomputes every sampled pixel
     arithmetically from the tiled byte stream.
 
-    Map-only: two chained mapInPandas stages, no shuffle touches bytes;
-    output is 5 scalars per image. At 100 TB the same plumbing carries
+    Map-only: one mapInPandas stage, no shuffle touches bytes; output is
+    5 scalars per image. At 100 TB the same plumbing carries
     PIL/libvips resize over ingested bytes — the batch shape, schema,
     and partitioning are what this query pins.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
-        tile_doc_pixels as _tile,
-        encode_png as _enc,
-    )
+    tw, th = 8, 6
+    weights = np.arange(tw * th * 3, dtype=np.int64) + 1
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def row(doc_id, data):
+        w, h, px = tile_doc_pixels(data)
+        w, h, px = decode_image(encode_png(w, h, px.tobytes(), color_type=2))
+        ys = (np.arange(th) * h) // th
+        xs = (np.arange(tw) * w) // tw
+        cols = (xs[:, None] * 3 + np.arange(3)).ravel()
+        flat = px[ys][:, cols].astype(np.int64).ravel()  # (th, tw*3) thumb
+        return w, h, float(flat.sum()) / flat.size, int((flat * weights).sum())
 
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                w, h, px = _tile(bytes(b))
-                images.append(_enc(w, h, px.tobytes(), color_type=2))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def resize_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        tw, th = 8, 6
-        weights = _np.arange(tw * th * 3, dtype=_np.int64) + 1
-        for pdf in it:
-            widths, heights, means, sums = [], [], [], []
-            for b in pdf["image"]:
-                w, h, px = _dec(bytes(b))
-                ys = (_np.arange(th) * h) // th
-                xs = (_np.arange(tw) * w) // tw
-                cols = (xs[:, None] * 3 + _np.arange(3)).ravel()
-                thumb = px[ys][:, cols].astype(_np.int64)  # (th, tw*3)
-                flat = thumb.ravel()
-                widths.append(w)
-                heights.append(h)
-                means.append(float(flat.sum()) / flat.size)
-                sums.append(int((flat * weights).sum()))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": _pd.Series(widths, dtype="int64"),
-                    "height": _pd.Series(heights, dtype="int64"),
-                    "rmean": means,
-                    "rchecksum": _pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    images = assets.select("doc_id", "payload").mapInPandas(
-        encode_batch, schema="doc_id long, image binary"
-    )
-    return images.mapInPandas(
-        resize_batch,
-        schema="doc_id long, width long, height long, rmean double, rchecksum long",
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, width long, height long, rmean double, rchecksum long",
     )
 
 
@@ -1651,7 +1323,7 @@ def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     analogue of mm_image_resize) — sample-rate conversion, the
     first-stage op of every speech pipeline.
 
-    Pipeline: synthesize a real RIFF PCM16 WAV per document (samples =
+    Row function: synthesize a real RIFF PCM16 WAV per document (samples =
     (byte-128)*256 at 16 kHz, the mm_audio_features convention; [0] for
     empty docs), DECODE it (chunk walk + fmt validation via
     decode_audio), then NEAREST-SAMPLE resample to a fixed 48-sample
@@ -1662,69 +1334,27 @@ def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes every picked sample arithmetically from the byte
     stream.
 
-    Map-only: two chained mapInPandas stages, zero shuffles; at 100 TB
+    Map-only: one mapInPandas stage, zero shuffles; at 100 TB
     the same plumbing carries a real polyphase resampler over ingested
     audio bytes — batch shape, schema, and index-map layout are what
     this query pins.
     """
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_audio as _dec,
-        doc_pcm16 as _pcm,
-        encode_wav as _enc,
-    )
+    weights = np.arange(48, dtype=np.int64) + 1
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            wavs, n_bytes = [], []
-            for b in pdf["payload"]:
-                wavs.append(_enc(16000, _pcm(bytes(b))))
-                n_bytes.append(len(bytes(b)))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_in": _pd.Series(n_bytes, dtype="int64"),
-                    "audio": wavs,
-                }
-            )
-
-    def resample_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        weights = _np.arange(48, dtype=_np.int64) + 1
-        for pdf in it:
-            sums, means = [], []
-            for b in pdf["audio"]:
-                _rate, s = _dec(bytes(b))
-                s = s.astype(_np.int64)
-                idx = (_np.arange(48) * len(s)) // 48
-                out = s[idx]
-                sums.append(int((out * weights).sum()))
-                means.append(float(_np.abs(out).sum()) / 48)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    # original byte count, carried from the encode stage —
-                    # an empty doc encodes as ONE zero sample, so the
-                    # decoded length cannot distinguish n=0 from n=1
-                    "n_in": pdf["n_in"].astype("int64"),
-                    "r_checksum": _pd.Series(sums, dtype="int64"),
-                    "r_mean_abs": _pd.Series(means, dtype="float64"),
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    return (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, n_in long, audio binary")
-        .mapInPandas(
-            resample_batch,
-            schema="doc_id long, n_in long, r_checksum long, r_mean_abs double",
+    def row(doc_id, data):
+        _rate, s = decode_audio(encode_wav(16000, doc_pcm16(data)))
+        out = s.astype(np.int64)[(np.arange(48) * len(s)) // 48]
+        # n_in is the payload's byte count: an empty doc encodes as ONE
+        # zero sample, so the decoded length cannot tell n=0 from n=1
+        return (
+            len(data),
+            int((out * weights).sum()),
+            float(np.abs(out).sum()) / 48,
         )
+
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, n_in long, r_checksum long, r_mean_abs double",
     )
 
 
@@ -1759,11 +1389,9 @@ def mm_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r9 #6 — with PNG this covers the two dominant web image
     formats, both jar-less).
 
-    Stage 1 materializes a genuine baseline JPEG per document: a
-    grayscale image of ``wb x hb`` 8x8-constant blocks — ``wb=(n%8)+1``,
-    ``hb=(n%6)+1`` (the tile convention at block grain), block (by,bx)
-    carrying byte ``(by*wb+bx) % n`` (127 for empty docs) — encoded with
-    the all-8s quant table. Stage 2 decodes with
+    Each row materializes a genuine baseline JPEG per document — the
+    :func:`doc_jpeg_blocks` gray image of 8x8-constant blocks, encoded
+    with the all-8s quant table — and decodes it with
     :func:`decode_image`'s JPEG path: full marker walk, canonical
     Huffman, DC prediction, dequant, vectorized IDCT.
 
@@ -1778,75 +1406,34 @@ def mm_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     it even when the pixel multiset survives). Any Huffman/DC-pred/
     dequant/IDCT bug lands in one or both.
 
-    Map-only: two chained mapInPandas stages, payload bytes never
+    Map-only: one mapInPandas stage, payload bytes never
     shuffle. At 100 TB the same plumbing carries libjpeg-turbo over
     ingested bytes; batch shape, schema, and partitioning are what this
     query pins.
     """
     from datafusion_ballista_dhruvil_spark.operators.jpeg_py import (
         QTABLE_FLAT8,
-        encode_jpeg as _enc,
-    )
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
+        encode_jpeg,
     )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                tb = _np.frombuffer(bytes(b), _np.uint8)
-                n = len(tb)
-                wb, hb = (n % 8) + 1, (n % 6) + 1
-                blockvals = (
-                    _np.resize(tb, wb * hb)
-                    if n
-                    else _np.full(wb * hb, 127, _np.uint8)
-                ).reshape(hb, wb)
-                img = _np.repeat(_np.repeat(blockvals, 8, 0), 8, 1)
-                images.append(
-                    _enc(wb * 8, hb * 8, img.tobytes(), gray=True, qtable=QTABLE_FLAT8)
-                )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            widths, heights, means, sums = [], [], [], []
-            for b in pdf["image"]:
-                w, h, px = _dec(bytes(b))
-                gray = px.reshape(h, w, 3)[:, :, 0]
-                blockvals = gray[::8, ::8].astype(_np.int64)
-                weights = _np.arange(1, blockvals.size + 1, dtype=_np.int64)
-                widths.append(w)
-                heights.append(h)
-                means.append(float(px.astype(_np.int64).sum()) / px.size)
-                sums.append(int((blockvals.ravel() * weights).sum()))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": _pd.Series(widths, dtype="int64"),
-                    "height": _pd.Series(heights, dtype="int64"),
-                    "mean_pixel": means,
-                    "block_checksum": _pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    return (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, image binary")
-        .mapInPandas(
-            decode_batch,
-            schema="doc_id long, width long, height long, "
-            "mean_pixel double, block_checksum long",
+    def row(doc_id, data):
+        img = doc_jpeg_blocks(data)
+        h, w = img.shape
+        jpeg = encode_jpeg(w, h, img.tobytes(), gray=True, qtable=QTABLE_FLAT8)
+        w, h, px = decode_image(jpeg)
+        blockvals = px.reshape(h, w, 3)[::8, ::8, 0].astype(np.int64)
+        weights = np.arange(1, blockvals.size + 1, dtype=np.int64)
+        return (
+            w,
+            h,
+            float(px.astype(np.int64).sum()) / px.size,
+            int((blockvals.ravel() * weights).sum()),
         )
+
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, width long, height long, "
+        "mean_pixel double, block_checksum long",
     )
 
 
@@ -1896,85 +1483,37 @@ def mm_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's literal 0 — any chroma-path bug (wrong upsample phase,
     swapped Cb/Cr, transform rounding) lands there or in mean/checksum.
 
-    Map-only two-stage mapInPandas like every mm_* kernel; bytes never
+    Map-only: one mapInPandas stage like every mm_* kernel; bytes never
     shuffle.
     """
     from datafusion_ballista_dhruvil_spark.operators.jpeg_py import (
         QTABLE_FLAT8,
-        encode_jpeg as _enc,
-    )
-    from datafusion_ballista_dhruvil_spark.operators.multimodal import (
-        decode_image as _dec,
+        encode_jpeg,
     )
 
-    def encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            images = []
-            for b in pdf["payload"]:
-                tb = _np.frombuffer(bytes(b), _np.uint8)
-                n = len(tb)
-                wb, hb = (n % 8) + 1, (n % 6) + 1
-                blockvals = (
-                    _np.resize(tb, wb * hb)
-                    if n
-                    else _np.full(wb * hb, 127, _np.uint8)
-                ).reshape(hb, wb)
-                gray = _np.repeat(_np.repeat(blockvals, 8, 0), 8, 1)
-                rgb = _np.repeat(gray[:, :, None], 3, axis=2)
-                images.append(
-                    _enc(
-                        wb * 8,
-                        hb * 8,
-                        rgb.tobytes(),
-                        subsampling="420",
-                        qtable=QTABLE_FLAT8,
-                        qtable_chrom=QTABLE_FLAT8,
-                    )
-                )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "image": images})
-
-    def decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            widths, heights, means, sums, spreads = [], [], [], [], []
-            for b in pdf["image"]:
-                w, h, px = _dec(bytes(b))
-                rgb = px.reshape(h, w, 3).astype(_np.int64)
-                r, g, bl = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-                spread = int(
-                    max(_np.abs(r - g).max(), _np.abs(r - bl).max())
-                )
-                blockvals = r[::8, ::8]
-                weights = _np.arange(1, blockvals.size + 1, dtype=_np.int64)
-                widths.append(w)
-                heights.append(h)
-                means.append(float(r.sum()) / r.size)
-                sums.append(int((blockvals.ravel() * weights).sum()))
-                spreads.append(spread)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": _pd.Series(widths, dtype="int64"),
-                    "height": _pd.Series(heights, dtype="int64"),
-                    "mean_pixel": means,
-                    "block_checksum": _pd.Series(sums, dtype="int64"),
-                    "channel_spread": _pd.Series(spreads, dtype="int64"),
-                }
-            )
-
-    t = Tables(spark, sf_dir)
-    assets = with_payload(t.documents).where(F.col("doc_id") < 200)
-    return (
-        assets.select("doc_id", "payload")
-        .mapInPandas(encode_batch, schema="doc_id long, image binary")
-        .mapInPandas(
-            decode_batch,
-            schema="doc_id long, width long, height long, "
-            "mean_pixel double, block_checksum long, channel_spread long",
+    def row(doc_id, data):
+        gray = doc_jpeg_blocks(data)
+        h, w = gray.shape
+        rgb = np.repeat(gray[:, :, None], 3, axis=2)
+        jpeg = encode_jpeg(
+            w, h, rgb.tobytes(), subsampling="420",
+            qtable=QTABLE_FLAT8, qtable_chrom=QTABLE_FLAT8,
         )
+        w, h, px = decode_image(jpeg)
+        rgb = px.reshape(h, w, 3).astype(np.int64)
+        r, g, bl = rgb[..., 0], rgb[..., 1], rgb[..., 2]
+        blockvals = r[::8, ::8]
+        weights = np.arange(1, blockvals.size + 1, dtype=np.int64)
+        return (
+            w,
+            h,
+            float(r.sum()) / r.size,
+            int((blockvals.ravel() * weights).sum()),
+            int(max(np.abs(r - g).max(), np.abs(r - bl).max())),
+        )
+
+    return map_payload_rows(
+        spark, sf_dir, row,
+        "doc_id long, width long, height long, "
+        "mean_pixel double, block_checksum long, channel_spread long",
     )

@@ -7,13 +7,12 @@ contract (exact decimal aggregation surfaced as double) makes that achievable.
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
-from datafusion_ballista_dhruvil_spark.session import TABLE_NAMES, create_session
+from datafusion_ballista_dhruvil_spark.session import create_session
+from tools.drive_common import canon, make_duckdb
 
 # sf0.01 = the driver's t2 correctness gate scale
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
@@ -36,29 +35,15 @@ def spark():
 
 @pytest.fixture(scope="session")
 def oracle():
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_DIR}/{name}.parquet')"
-        )
+    con = make_duckdb(SF_DIR)
     yield con
     con.close()
 
 
 def _normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
-    """Sort columns by name, then rows; canonicalize value types."""
+    """Sort columns by name, then rows; canonicalize value types
+    (type-strict, int != float, to mirror the driver's value hashing)."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def canon(v):
-        # type-strict (int != float) to mirror the driver's value hashing
-        if v is None:
-            return (0, "")
-        if isinstance(v, bool):
-            return (1, str(v))
-        if isinstance(v, float) and math.isnan(v):
-            return (2, "nan")
-        return (2, f"{type(v).__name__}:{v!r}")
-
     out = [tuple(canon(r[i]) for i in order) for r in rows]
     out.sort()
     return out

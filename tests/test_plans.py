@@ -432,12 +432,34 @@ def test_image_ahash_shuffles_hashes_not_bytes(spark):
     assert "payload" not in parts[0] and "image" not in parts[0]
 
 
-def test_audio_features_map_only(spark):
-    # WAV synth + decode + features: map-only, no exchange at all.
-    plan = formatted_plan(QUERIES["mm_audio_features"](spark, SF_DIR))
-    assert "MapInPandas" in plan
+@pytest.mark.parametrize(
+    "name",
+    [
+        "mm_resize_thumbnail",
+        "mm_decode_features",
+        "mm_png_features",
+        "mm_audio_features",
+        "mm_scene_cuts",
+        "mm_audio_vad_segments",
+        "mm_image_entropy",
+        "mm_image_resize",
+        "mm_audio_resample",
+        "mm_jpeg_features",
+        "mm_jpeg_color_stats",
+    ],
+)
+def test_payload_builder_is_one_map_stage(spark, name):
+    # container encode + real decode + features run in ONE MapInPandas
+    # stage (map_payload_rows), with zero exchanges and no join: payload
+    # bytes cross into Python once and never shuffle; no orderBy, since
+    # the driver compare sorts.
+    from tools.plan_fingerprint import node_counts
+
+    df = QUERIES[name](spark, SF_DIR)
+    plan = formatted_plan(df)
+    assert node_counts(plan)["py_map"] == 1
     assert "Join" not in plan
-    assert exchange_count(QUERIES["mm_audio_features"](spark, SF_DIR)) == 0
+    assert exchange_count(df) == 0
 
 
 def test_quality_classifier_zero_shuffle(spark):
@@ -782,8 +804,12 @@ def test_image_neardup_bands_are_equi_join(spark):
     """mm_image_neardup_pairs: candidates come from the banded equi-join
     on (band, 16-bit key) — 8-byte hashes shuffle, image bytes never do;
     no nested loop anywhere."""
+    from tools.plan_fingerprint import node_counts
+
     plan = formatted_plan(QUERIES["mm_image_neardup_pairs"](spark, SF_DIR))
     assert "NestedLoop" not in plan and "Cartesian" not in plan
+    # one hashing stage per join side: the encode→decode chain is fused
+    assert node_counts(plan)["py_map"] == 2
     assert (
         "SortMergeJoin" in plan
         or "ShuffledHashJoin" in plan
@@ -966,19 +992,6 @@ def test_q95_single_fact_pass_and_q10_or_union(spark):
     assert c10["scans"] == 6, c10
 
 
-def test_png_features_map_only(spark):
-    # PNG encode + decode + features (r9): two chained MapInPandas stages,
-    # ZERO exchanges — payload/image bytes never shuffle, and with no
-    # orderBy (the driver compare sorts) the whole query is map-only.
-    from tools.plan_fingerprint import node_counts
-
-    df = QUERIES["mm_png_features"](spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert node_counts(plan)["py_map"] == 2
-    assert "Join" not in plan
-    assert exchange_count(df) == 0
-
-
 def test_r9_session2_tpcds_shapes(spark):
     """r9 session-2 widening gates. q94: same one-pass order-grain kernel
     as q95 (2 scans, 4 aggregates, the NOT EXISTS is a negated flag — no
@@ -1032,42 +1045,6 @@ def test_r9_session3_tpcds_shapes(spark):
     assert c90["bhj"] + c90["smj"] + c90["shj"] + c90["nested_loop"] == 0, c90
 
 
-def test_image_resize_map_only(spark):
-    # PNG encode + decode + nearest-neighbor resize (r9): two chained
-    # MapInPandas stages, zero exchanges, zero joins — bytes never shuffle.
-    from tools.plan_fingerprint import node_counts
-
-    df = QUERIES["mm_image_resize"](spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert node_counts(plan)["py_map"] == 2
-    assert "Join" not in plan
-    assert exchange_count(df) == 0
-
-
-def test_audio_resample_map_only(spark):
-    # WAV synth + decode + nearest-sample resample (r9): two chained
-    # MapInPandas stages, zero exchanges, zero joins.
-    from tools.plan_fingerprint import node_counts
-
-    df = QUERIES["mm_audio_resample"](spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert node_counts(plan)["py_map"] == 2
-    assert "Join" not in plan
-    assert exchange_count(df) == 0
-
-
-def test_jpeg_features_map_only(spark):
-    # baseline-JPEG encode + full Huffman/IDCT decode (r10): two chained
-    # MapInPandas stages, zero exchanges, zero joins — bytes never shuffle.
-    from tools.plan_fingerprint import node_counts
-
-    df = QUERIES["mm_jpeg_features"](spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert node_counts(plan)["py_map"] == 2
-    assert "Join" not in plan
-    assert exchange_count(df) == 0
-
-
 def test_r10_tpcds_shapes(spark):
     """r10 widening gates (VERDICT r9 #5). q14_rollup: everything —
     three-channel presence (the spec's INTERSECT as countDistinct),
@@ -1090,15 +1067,3 @@ def test_r10_tpcds_shapes(spark):
     assert c36["nested_loop"] == 0, c36
     assert "Expand" in p36 and "Window" in p36
     assert p36.count("lineitem") <= 2, "q36_deep re-scans the fact"
-
-
-def test_jpeg_color_map_only(spark):
-    # 4:2:0 three-component JPEG leg (r10): same two-MapInPandas
-    # zero-exchange shape as the gray leg.
-    from tools.plan_fingerprint import node_counts
-
-    df = QUERIES["mm_jpeg_color_stats"](spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert node_counts(plan)["py_map"] == 2
-    assert "Join" not in plan
-    assert exchange_count(df) == 0

@@ -76,12 +76,18 @@ subset = [
             "sim_ivf_topk",
             "sim_ann_bucketed",
             "sim_pq_adc",
+            # every mm_ payload builder: map_payload_rows is module-level
+            # and its row functions reference the codecs (multimodal,
+            # jpeg_py) by reference — the foreign workers must import them
             "mm_decode_features",
+            "mm_png_features",
             "mm_resize_thumbnail",
             "mm_image_ahash",
+            "mm_image_entropy",
+            "mm_image_resize",
             "mm_audio_features",
-            # r10: the JPEG codec imports jpeg_py inside the closure —
-            # the exact by-reference pickling surface this drive probes
+            "mm_audio_resample",
+            "mm_scene_cuts",
             "mm_jpeg_features",
             "mm_jpeg_color_stats",
             # r4 kernels: cell-local grouped-map matmuls, perceptual-hash
