@@ -922,7 +922,33 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that query's candidate relation (see text.py::chunk_hashes/SQL_CHUNK_CTES)
 from datafusion_ballista_dhruvil_spark.operators.text import (  # noqa: E402
     SQL_CHUNK_CTES as _SQL_CHUNK_CTES,
+    chunk_hashes,
 )
+
+
+def chunk_pair_edges(documents: DataFrame) -> DataFrame:
+    """Distinct directed (d1, d2) pairs of documents sharing a chunk hash.
+    A chunk held by more than 64 documents adds no pairs (the
+    MAX_BUCKET_DOCS rationale: a universal-boilerplate chunk must not
+    explode the pair count)."""
+    grp = (
+        chunk_hashes(documents)
+        .groupBy("h")
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
+        .where(F.array_size("ids").between(2, 64))
+    )
+    return (
+        grp.select(
+            F.explode(
+                F.expr(
+                    "filter(flatten(transform(ids, x -> transform(ids, y -> "
+                    "struct(x AS d1, y AS d2)))), p -> p.d1 != p.d2)"
+                )
+            ).alias("p")
+        )
+        .select("p.d1", "p.d2")
+        .distinct()
+    )
 
 
 def _sql_pr_iter(prev: str, out: str) -> str:
@@ -991,27 +1017,7 @@ def dedup_chunk_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — both partition on doc ids, AQE reuses the layout. Five
     fixed iterations = five stages, no driver-side convergence loop.
     """
-    from datafusion_ballista_dhruvil_spark.operators.text import chunk_hashes
-
-    t = Tables(spark, sf_dir)
-    chunks = chunk_hashes(t.documents)
-    grp = (
-        chunks.groupBy("h")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .where(F.array_size("ids").between(2, 64))
-    )
-    pairs = (
-        grp.select(
-            F.explode(
-                F.expr(
-                    "filter(flatten(transform(ids, x -> transform(ids, y -> "
-                    "struct(x AS d1, y AS d2)))), p -> p.d1 != p.d2)"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2")
-        .distinct()
-    )
+    pairs = chunk_pair_edges(Tables(spark, sf_dir).documents)
     # NOT cached (r10 A/B): persisting deg/contrib_src here flipped the
     # initial plan's broadcasts to sort-merge (InMemoryRelation size
     # estimates exceed the broadcast bar pre-materialization) and added
@@ -1928,27 +1934,7 @@ def dedup_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange); the 64-doc group cap bounds edge fanout exactly as in
     PageRank. No driver-side convergence loop — fixed 3 stages.
     """
-    from datafusion_ballista_dhruvil_spark.operators.text import chunk_hashes
-
-    t = Tables(spark, sf_dir)
-    chunks = chunk_hashes(t.documents)
-    grp = (
-        chunks.groupBy("h")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .where(F.array_size("ids").between(2, 64))
-    )
-    pairs = (
-        grp.select(
-            F.explode(
-                F.expr(
-                    "filter(flatten(transform(ids, x -> transform(ids, y -> "
-                    "struct(x AS d1, y AS d2)))), p -> p.d1 != p.d2)"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2")
-        .distinct()
-    )
+    pairs = chunk_pair_edges(Tables(spark, sf_dir).documents)
     deg0 = pairs.groupBy(F.col("d1").alias("u")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )

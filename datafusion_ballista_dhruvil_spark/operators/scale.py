@@ -333,11 +333,16 @@ def owned_result(
     Contract for plan-only consumers (ADVICE r8 #3): the .persist()
     calls happen at plan-BUILD time, so a caller that never runs a
     wrapped action (plan-fingerprint tooling, formatted_plan tests)
-    leaves the CacheManager registration in the long-lived session.
-    That is harmless — an unmaterialized persist holds zero executor
-    memory and zero storage blocks; it is a driver-side catalog entry
-    only — but callers that want the registration gone can call the
-    returned DataFrame's ``release_owned()`` explicitly.
+    leaves the CacheManager registration in the long-lived session. An
+    unmaterialized persist holds no executor memory, but it changes
+    LATER plans: any query that shares the cached subtree plans an
+    InMemoryRelation whose size estimate exceeds the broadcast bar, so
+    its broadcasts flip to sort-merge. Measured: a plan-only build of
+    dedup_kcore_peel took dedup_chunk_pagerank's plan from 46 to 53
+    exchanges (and ev_lttb_downsample's from 24 to 29 after its
+    predecessors). A caller that reads the plan without running an
+    action must call the returned DataFrame's ``release_owned()``;
+    ``plans.inspect.fingerprints`` does so after every query.
 
     ``prepare`` (r11, ADVICE r10 #2): optional callable invoked once,
     immediately before the FIRST wrapped action runs. Queries that want a

@@ -14,6 +14,8 @@ Scale posture at 100 TB:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -2362,6 +2364,64 @@ d{r + 1} AS (
 )"""
 
 
+def _bpe_learn(docs: DataFrame, finish: Callable[[DataFrame], object]) -> tuple[list, object]:
+    """Learn the first _BPE_ROUNDS merges over ``docs``' double-spaced
+    ``s`` column (other columns ride along) and return the merge table
+    ``[(rank, t1, t2, count)]`` with ``finish(merged)``, ``merged`` being
+    the corpus after every merge.
+
+    Each round's corpus is PERSISTED, and its predecessor unpersisted once
+    the next winner collect has materialized it, so round r reads the
+    round-(r-1) cache instead of replaying all prior replaces — O(k)
+    corpus passes, not O(k^2); real tokenizer training runs thousands of
+    merges. The last round's corpus has one consumer (``finish``), so it
+    is not persisted (r11). Every cache is released before this returns,
+    also when a round or ``finish`` raises.
+    """
+    merges = []
+    prev = None
+    docs = docs.persist()
+    try:
+        for r in range(_BPE_ROUNDS):
+            tk = F.split(F.trim(F.col("s")), "  ")
+            pairs = (
+                docs.select(tk.alias("tk"))
+                .where(F.size("tk") >= 2)
+                .select(
+                    F.explode(
+                        F.expr(
+                            "transform(slice(tk, 1, size(tk) - 1), "
+                            "(x, i) -> struct(x AS t1, tk[i + 1] AS t2))"
+                        )
+                    ).alias("p")
+                )
+                .groupBy("p.t1", "p.t2")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            # this collect materializes the round-r cache; only now is the
+            # round-(r-1) copy safe to drop without forcing a lineage replay
+            best = pairs.orderBy(F.desc("c"), "t1", "t2").limit(1).collect()[0]
+            if prev is not None:
+                prev.unpersist()
+            merges.append((r + 1, best.t1, best.t2, best.c))
+            prev = docs
+            docs = docs.withColumn(
+                "s",
+                F.replace(
+                    F.col("s"),
+                    F.lit(f" {best.t1}  {best.t2} "),
+                    F.lit(f" {best.t1}_{best.t2} "),
+                ),
+            )
+            if r < _BPE_ROUNDS - 1:
+                docs = docs.persist()
+        return merges, finish(docs)
+    finally:
+        docs.unpersist()
+        if prev is not None:
+            prev.unpersist()
+
+
 @query(
     "text_bpe_merges",
     oracle="WITH d0 AS (SELECT doc_id, ' ' || array_to_string("
@@ -2398,13 +2458,8 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one map-side pair explode + a (t1,t2) partial-agg
     shuffle + ONE collected winner row (bounded by construction) + a
-    map-only replace — k rounds of the exact-dedup shuffle shape. The
-    merged corpus is PERSISTED each round (and the predecessor unpersisted
-    once its successor is materialized), so round r reads the round-r-1
-    cache instead of replaying all prior replaces from the base scan —
-    O(k) corpus passes total, not O(k^2); real tokenizer training runs
-    thousands of merges and is hopeless without this. MEMORY_AND_DISK
-    persist spills rather than OOMs at corpus scale.
+    map-only replace — k rounds of the exact-dedup shuffle shape, over
+    per-round corpus caches (see _bpe_learn).
     """
     t = Tables(spark, sf_dir)
     docs = t.documents.select(
@@ -2414,57 +2469,14 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.split(F.col("text"), " "), "  "),
             F.lit(" "),
         ).alias("s"),
-    ).persist()
-    merges = []
-    prev = None
-    for r in range(_BPE_ROUNDS):
-        tk = F.split(F.trim(F.col("s")), "  ")
-        pairs = (
-            docs.select(tk.alias("tk"))
-            .where(F.size("tk") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(slice(tk, 1, size(tk) - 1), "
-                        "(x, i) -> struct(x AS t1, tk[i + 1] AS t2))"
-                    )
-                ).alias("p")
-            )
-            .groupBy("p.t1", "p.t2")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        )
-        # this collect materializes the round-r cache; only now is the
-        # round-(r-1) copy safe to drop without forcing a lineage replay
-        best = pairs.orderBy(F.desc("c"), "t1", "t2").limit(1).collect()[0]
-        if prev is not None:
-            prev.unpersist()
-        merges.append((r + 1, best.t1, best.t2, best.c))
-        prev = docs
-        docs = docs.select(
-            "doc_id",
-            F.replace(
-                F.col("s"),
-                F.lit(f" {best.t1}  {best.t2} "),
-                F.lit(f" {best.t1}_{best.t2} "),
-            ).alias("s"),
-        )
-        # the LAST round's merged corpus has exactly ONE consumer (the
-        # final token total), so persisting it would only pay a full
-        # cache materialization for nothing; intermediate rounds persist
-        # because the next round's pair count re-reads them (r11)
-        if r < _BPE_ROUNDS - 1:
-            docs = docs.persist()
-    # materialize the bounded 1-row total eagerly so every per-round cache
-    # can be released before returning (no persisted corpus copies leak
-    # past the query's lifetime)
-    total_val = (
-        docs.select(F.size(F.split(F.trim(F.col("s")), "  ")).alias("n"))
-        .agg(F.sum("n").cast("bigint").alias("t"))
-        .collect()[0]["t"]
     )
-    if prev is not None:
-        prev.unpersist()
-    docs.unpersist()
+
+    def total_tokens(merged: DataFrame) -> int:
+        # bounded 1-row total, collected while the caches are held
+        n = F.size(F.split(F.trim(F.col("s")), "  "))
+        return merged.agg(F.sum(n).cast("bigint").alias("t")).collect()[0]["t"]
+
+    merges, total_val = _bpe_learn(docs, total_tokens)
     return local_frame(
         spark,
         [(r, t1, t2, c, int(total_val)) for r, t1, t2, c in merges],
@@ -2611,11 +2623,10 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same double-spaced replace machinery: the k learned merges replay in
     rank order as literal replaces (greedy left-to-right, engine-exact),
     then one count per doc. Scale: learning collects k bounded winner
-    rows; the merged corpus is persisted per round (predecessor
-    unpersisted after its successor materializes) so the learn phase is
-    O(k) corpus passes, not O(k^2) lineage replays — at 32k merges
-    production tokenizers batch this (longest-match tries), but the
-    dataflow (broadcast merge table, map-side apply) is identical.
+    rows over per-round corpus caches (see _bpe_learn), so the learn
+    phase is O(k) corpus passes, not O(k^2) lineage replays — at 32k
+    merges production tokenizers batch this (longest-match tries), but
+    the dataflow (broadcast merge table, map-side apply) is identical.
     """
     t = Tables(spark, sf_dir)
     docs = t.documents.select(
@@ -2629,64 +2640,33 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     before = F.size(F.split(F.trim(F.col("s")), "  ")).cast("bigint")
     docs = docs.withColumn("n_before", before)
-    cur = docs.persist()
-    prev = None
-    for r in range(_BPE_ROUNDS):
-        tk = F.split(F.trim(F.col("s")), "  ")
-        pairs = (
-            cur.select(tk.alias("tk"))
-            .where(F.size("tk") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(slice(tk, 1, size(tk) - 1), "
-                        "(x, i) -> struct(x AS t1, tk[i + 1] AS t2))"
-                    )
-                ).alias("p")
+
+    def per_source(merged: DataFrame):
+        # bounded per-source rows, collected while the caches are held
+        after = F.size(F.split(F.trim(F.col("s")), "  ")).cast("bigint")
+        res = (
+            merged.select("source", "n_before", after.alias("n_after"))
+            .groupBy("source")
+            .agg(
+                F.sum("n_before").cast("bigint").alias("tokens_before"),
+                F.sum("n_after").cast("bigint").alias("tokens_after"),
             )
-            .groupBy("p.t1", "p.t2")
-            .agg(F.count(F.lit(1)).alias("c"))
+            .select(
+                "source",
+                "tokens_before",
+                "tokens_after",
+                (F.col("tokens_before") - F.col("tokens_after")).alias(
+                    "tokens_saved"
+                ),
+                F.expr(
+                    "(tokens_before - tokens_after) * 1000000 div tokens_before"
+                ).alias("saved_ppm"),
+            )
+            .orderBy("source")
         )
-        # collect materializes the round-r cache; drop the predecessor
-        best = pairs.orderBy(F.desc("c"), "t1", "t2").limit(1).collect()[0]
-        if prev is not None:
-            prev.unpersist()
-        prev = cur
-        cur = cur.withColumn(
-            "s",
-            F.replace(
-                F.col("s"),
-                F.lit(f" {best.t1}  {best.t2} "),
-                F.lit(f" {best.t1}_{best.t2} "),
-            ),
-        ).persist()
-    after = F.size(F.split(F.trim(F.col("s")), "  ")).cast("bigint")
-    res = (
-        cur.select("source", "n_before", after.alias("n_after"))
-        .groupBy("source")
-        .agg(
-            F.sum("n_before").cast("bigint").alias("tokens_before"),
-            F.sum("n_after").cast("bigint").alias("tokens_after"),
-        )
-        .select(
-            "source",
-            "tokens_before",
-            "tokens_after",
-            (F.col("tokens_before") - F.col("tokens_after")).alias(
-                "tokens_saved"
-            ),
-            F.expr(
-                "(tokens_before - tokens_after) * 1000000 div tokens_before"
-            ).alias("saved_ppm"),
-        )
-        .orderBy("source")
-    )
-    # bounded per-source rows: materialize, then release every per-round
-    # corpus cache before returning (no persisted copies leak)
-    rows, schema = res.collect(), res.schema
-    if prev is not None:
-        prev.unpersist()
-    cur.unpersist()
+        return res.collect(), res.schema
+
+    _, (rows, schema) = _bpe_learn(docs, per_source)
     return local_frame(spark, rows, schema)
 
 

@@ -1,5 +1,6 @@
-"""Plan inspection utilities (SURVEY.md §4): assert that Catalyst produces
-the physical plans the 100 TB design depends on.
+"""Plan inspection (SURVEY.md §4): the one reader of Spark's physical
+plans, used by the plan tests, the plan-fingerprint tool and the
+plan-snapshot gate.
 
 The reference distributes plans by hand (stage split at exchanges,
 planner.rs:59-166); Spark does it automatically — so our plan QA is not
@@ -9,16 +10,23 @@ planner.rs:59-166); Spark does it automatically — so our plan QA is not
   pushed filters in ListingTableScanNode, datafusion.proto:105 +
   ballista.parquet.pruning row-group pruning);
 - scans read only referenced columns (ReadSchema column pruning);
-- tiny dims broadcast (reference CollectLeft partition mode,
-  datafusion.proto:1173-1177);
-- aggregates split partial/final (reference AggregateMode
-  PARTIAL/FINAL_PARTITIONED, datafusion.proto:1225-1229);
+- exchanges, join strategies and Python nodes are counted per plan
+  (``node_counts``) and held to a reviewed baseline
+  (PLAN_FINGERPRINTS.json);
 - expressions stay in WholeStageCodegen spans (Tungsten).
+
+Node counts read the TREE section of the formatted plan only: each node
+is named there and again in its numbered detail section, so a substring
+count of a node name counts it twice. The tree repeats a cached plan
+under every InMemoryTableScan of it, so its nodes count once per scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+import sys
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def explain_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -56,41 +64,133 @@ def scan_read_columns(df: DataFrame, table_hint: str = "") -> list[str]:
     return cols
 
 
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastExchange" in formatted_plan(df)
-
-
-def has_partial_final_agg(df: DataFrame) -> bool:
-    """Two-phase aggregation: a partial_ function before the final agg."""
-    plan = formatted_plan(df)
-    return "partial_" in plan and "HashAggregate" in plan
-
-
 def codegen_span_count(df: DataFrame) -> int:
     """Number of WholeStageCodegen spans — zero means everything fell out of
     Tungsten (e.g. a Python UDF in the hot path). Under AQE the spans only
     materialize in the executed plan, so this triggers execution."""
-    import re
-
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     # codegen stages print as "*(n) Operator" in the plan tree
     return len(set(re.findall(r"\*\((\d+)\)", plan)))
 
 
-_EXCHANGE_DETAIL = "Exchange"
+#: tree lines in `formatted` mode end with the node id: "Name [quals] (7)";
+#: detail headers START with "(7) Name" and never match this
+_TREE_LINE = re.compile(r"^[\s+:*-]*([A-Za-z][A-Za-z0-9 ]*?)(?: \[.*?\])? \(\d+\)\s*$")
 
 
-def exchange_count(df: DataFrame) -> int:
-    """Number of distinct shuffle exchanges in the plan (each is a full
-    shuffle — the quantity to minimize at 100 TB). Counts only the
-    numbered detail entries of the formatted plan, so the tree header isn't
-    double-counted; broadcast/reused exchanges are excluded."""
-    import re
-
-    plan = formatted_plan(df)
-    n = 0
+def tree_nodes(plan: str) -> list[str]:
+    """Physical node names of a formatted plan's tree, one per node."""
+    out = []
     for line in plan.splitlines():
-        if re.match(r"^\(\d+\) Exchange\s*$", line.strip()):
+        m = _TREE_LINE.match(line)
+        if m:
+            # first word = physical node name ("BroadcastHashJoin Inner
+            # BuildRight" -> BroadcastHashJoin; "Scan parquet" stays 2 words)
+            name = m.group(1).rstrip()
+            out.append(
+                name if name.startswith("Scan ") else name.split(" ")[0]
+            )
+    return out
+
+
+def _unpartitioned_windows(plan: str) -> int:
+    """Window nodes whose spec has no partition key, read from the detail
+    sections. Formatted mode omits empty argument lists, so the test is on
+    the first argument of the first windowspecdefinition(...): a sort
+    order or the frame itself means nothing was partitioned on."""
+    n = 0
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if not re.fullmatch(r"\(\d+\) Window", line.strip()):
+            continue
+        args = next((x for x in lines[i + 1 : i + 4] if x.startswith("Arguments:")), "")
+        start = args.find("windowspecdefinition(")
+        if start < 0:
+            continue
+        depth, j = 0, start + len("windowspecdefinition(")
+        for end in range(j, len(args)):
+            ch = args[end]
+            if ch in "([":
+                depth += 1
+            elif ch in ")]" and depth:
+                depth -= 1
+            elif ch in ",)" and not depth:
+                break
+        first = args[j:end].strip()
+        if first.startswith(("specifiedwindowframe", "unspecifiedframe")) or first.endswith(
+            (" NULLS FIRST", " NULLS LAST")
+        ):
             n += 1
     return n
+
+
+def node_counts(plan: str) -> dict[str, int]:
+    """A formatted plan's fingerprint (initial AQE plan — deterministic
+    for fixed testdata + confs, no execution needed):
+
+      exchanges      Exchange nodes (shuffles + broadcasts + reuses)
+      bhj/smj/shj    join strategy mix
+      nested_loop    BroadcastNestedLoopJoin + CartesianProduct
+      py_eval        ArrowEvalPython/BatchEvalPython (row/arrow UDF nodes)
+      py_map         MapInPandas/FlatMapGroupsInPandas/MapInArrow kernels
+      scans          FileScan nodes
+      aggregates     HashAggregate/SortAggregate/ObjectHashAggregate nodes
+      unpartitioned_windows
+                     Window nodes with no PARTITION BY: one task sees every
+                     row of their input, a single-partition sort at scale
+    """
+    nodes = tree_nodes(plan)
+
+    def n(*names: str) -> int:
+        return sum(1 for x in nodes if x in names)
+
+    return {
+        "exchanges": n("Exchange", "BroadcastExchange", "ReusedExchange"),
+        "bhj": n("BroadcastHashJoin"),
+        "smj": n("SortMergeJoin"),
+        "shj": n("ShuffledHashJoin"),
+        "nested_loop": n("BroadcastNestedLoopJoin", "CartesianProduct"),
+        "py_eval": n("ArrowEvalPython", "BatchEvalPython"),
+        "py_map": n(
+            "MapInPandas",
+            "FlatMapGroupsInPandas",
+            "MapInArrow",
+            "FlatMapGroupsInPandasWithState",
+            "TransformWithStateInPandas",
+        ),
+        "scans": sum(1 for x in nodes if x.startswith("Scan "))
+        + n("BatchScan", "LocalTableScan"),
+        "aggregates": n("HashAggregate", "SortAggregate", "ObjectHashAggregate"),
+        "unpartitioned_windows": _unpartitioned_windows(plan),
+    }
+
+
+def fingerprints(
+    spark: SparkSession, names: list[str], sf_dir: str
+) -> dict[str, dict[str, int]]:
+    """``node_counts`` of each named registry query, built plan-only and in
+    the given order; a query whose build fails reads ``{"error": 1}``.
+
+    A builder wrapped by ``owned_result`` registers its caches at build
+    time. Each query's registrations are released before the next one is
+    built: left in place, a later plan reads an InMemoryRelation whose
+    size estimate flips broadcasts to sort-merge, and a fingerprint then
+    depends on which queries were built before it."""
+    from datafusion_ballista_dhruvil_spark.operators import load_all
+    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
+
+    load_all()
+    out: dict[str, dict[str, int]] = {}
+    for name in names:
+        df = None
+        try:
+            df = QUERIES[name](spark, sf_dir)
+            out[name] = node_counts(formatted_plan(df))
+        except Exception as e:  # noqa: BLE001 — one broken build must not hide the rest
+            print(f"{name}: ERROR {type(e).__name__}: {e}", file=sys.stderr)
+            out[name] = {"error": 1}
+        finally:
+            if hasattr(df, "release_owned"):
+                df.release_owned()
+    return out

@@ -23,6 +23,7 @@ APIs + the executed-plan metrics module:
 Scale posture: results returned inline are capped (``max_rows``) — the
 endpoint is a control/inspection plane like the reference's, not a data
 plane; bulk results flow through the JDBC/Thrift surface or sinks.
+Only the last ``MAX_KEPT_QUERIES`` posted queries stay introspectable.
 """
 
 from __future__ import annotations
@@ -35,6 +36,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 MAX_INLINE_ROWS = 1000
+#: posted queries kept for the /api/job/<id> routes; each holds its
+#: DataFrame, so the oldest are dropped past this many
+MAX_KEPT_QUERIES = 64
 
 
 class _State:
@@ -43,6 +47,12 @@ class _State:
         self.max_rows = max_rows
         self.queries: dict[str, dict] = {}
         self.lock = threading.Lock()
+
+    def keep(self, qid: str, df, sql: str, n_rows: int) -> None:
+        with self.lock:
+            self.queries[qid] = {"df": df, "sql": sql, "n_rows": n_rows}
+            while len(self.queries) > MAX_KEPT_QUERIES:
+                del self.queries[next(iter(self.queries))]
 
 
 def _json_cell(v):
@@ -165,12 +175,7 @@ def _make_handler(state: _State):
                         with pa.ipc.new_stream(sink, tbl.schema) as w:
                             w.write_table(tbl)
                         body = sink.getvalue()
-                        with state.lock:
-                            state.queries[qid] = {
-                                "df": df,
-                                "sql": sql,
-                                "n_rows": tbl.num_rows,
-                            }
+                        state.keep(qid, df, sql, tbl.num_rows)
                         self.send_response(200)
                         self.send_header(
                             "Content-Type", "application/vnd.apache.arrow.stream"
@@ -186,12 +191,7 @@ def _make_handler(state: _State):
                     return
                 finally:
                     sc.setJobGroup(None, None)
-                with state.lock:
-                    state.queries[qid] = {
-                        "df": df,
-                        "sql": sql,
-                        "n_rows": len(rows),
-                    }
+                state.keep(qid, df, sql, len(rows))
                 self._send(
                     200,
                     {

@@ -1,11 +1,17 @@
-"""Suite-level plan-shape regression guard: every query's physical-plan
-fingerprint (exchange count, join strategy mix, Python-node count,
-windows with no partition key) is checked against the reviewed baseline
-in PLAN_FINGERPRINTS.json.
+"""Suite-level plan-shape regression guard: every baselined query's
+physical-plan fingerprint (exchange count, join strategy mix, Python-node
+count, windows with no partition key) is re-read each run and checked
+against the reviewed baseline in PLAN_FINGERPRINTS.json.
 
-A refactor that adds a shuffle, flips a broadcast join to sort-merge, or
-pushes work into a Python eval node FAILS here before it costs anything
-at scale. Improvements (fewer exchanges) pass with a re-baseline nudge.
+A refactor that adds a shuffle, flips a broadcast join to sort-merge
+(``smj``), adds a nested-loop join, or pushes work into a Python node
+FAILS here before it costs anything at scale. Improvements (fewer
+exchanges) pass; re-baseline to lock them in.
+
+The sweep is ``plans.inspect.fingerprints``, the same one the tool runs.
+It starts from a session with no cached relations: a cache registered by
+an earlier test (a plan-only build through ``owned_result``) would flip
+later plans' broadcasts to sort-merge and fail the gate on no change.
 
 Baseline regeneration (deliberate, reviewed, committed):
     python tools/plan_fingerprint.py
@@ -15,18 +21,22 @@ from __future__ import annotations
 
 import json
 import os
-import random
 import subprocess
 import sys
 
 import pytest
+
+from datafusion_ballista_dhruvil_spark.operators import load_all
+from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
+from datafusion_ballista_dhruvil_spark.plans.inspect import fingerprints
+from tools.plan_fingerprint import SKIP
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASELINE = os.path.join(REPO, "PLAN_FINGERPRINTS.json")
 SF = "/root/testdata/sf0.01"
 
 #: Counters where MORE than baseline is a scale regression.
-TIGHT = ("exchanges", "py_eval", "py_map", "nested_loop", "unpartitioned_windows")
+TIGHT = ("exchanges", "smj", "py_eval", "py_map", "nested_loop", "unpartitioned_windows")
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(BASELINE), reason="no PLAN_FINGERPRINTS.json baseline"
@@ -40,12 +50,6 @@ def _baseline() -> dict:
 
 def test_baseline_covers_registry():
     # every registered query is fingerprinted (or explicitly SKIP-listed)
-    sys.path.insert(0, REPO)
-    from datafusion_ballista_dhruvil_spark.operators import load_all
-    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
-
-    from tools.plan_fingerprint import SKIP
-
     load_all()
     missing = set(QUERIES) - set(_baseline()) - SKIP
     assert not missing, (
@@ -55,67 +59,50 @@ def test_baseline_covers_registry():
 
 
 def test_plan_shapes_do_not_regress(spark):
-    """Re-derive fingerprints for a rotating sample + the shape-critical
-    set and compare the TIGHT counters against baseline. Sampled (not
-    all 280+) to keep the suite fast; the rotation seed is the date so
-    consecutive days cover different slices, while tools/
-    plan_fingerprint.py remains the full sweep."""
-    sys.path.insert(0, REPO)
-    from datafusion_ballista_dhruvil_spark.operators import load_all
-    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
-    from datafusion_ballista_dhruvil_spark.plans.inspect import formatted_plan
-
-    from tools.plan_fingerprint import SKIP, node_counts
-
-    load_all()
-    base = _baseline()
-    critical = [
-        "q1", "q3", "q9", "q18",               # TPC-H joins/aggs
-        "dedup_minhash_lsh", "dedup_substring_spans",
-        "sim_ivf_topk", "sim_cosine_topk", "sim_residual_quantize",
-        "text_boilerplate_lines", "ev_sessionize", "dedup_url_canonical",
+    """Re-derive every baselined fingerprint and compare the TIGHT
+    counters; a query that no longer builds fails too."""
+    base = {k: v for k, v in _baseline().items() if not v.get("error")}
+    spark.catalog.clearCache()
+    got = fingerprints(spark, sorted(base), SF)
+    failures = [f"{name}: build error" for name, fp in got.items() if fp.get("error")]
+    failures += [
+        f"{name}.{key}: baseline {base[name][key]} -> {fp[key]}"
+        for name, fp in got.items()
+        if not fp.get("error")
+        for key in TIGHT
+        if fp[key] > base[name][key]
     ]
-    pool = sorted(set(base) - set(critical) - SKIP)
-    # deterministic within a day, rotates across days; pinnable via
-    # PLAN_SNAPSHOT_SEED so a failure is reproducible (the seed is printed
-    # in the assertion message on failure)
-    import datetime
-
-    env_seed = os.environ.get("PLAN_SNAPSHOT_SEED")
-    seed = (
-        int(env_seed)
-        if env_seed
-        else int(datetime.date.today().strftime("%Y%m%d"))
-    )
-    sample = random.Random(seed).sample(pool, k=min(20, len(pool)))
-    failures = []
-    for name in critical + sample:
-        if name not in base or base[name].get("error"):
-            continue
-        got = node_counts(formatted_plan(QUERIES[name](spark, SF)))
-        for key in TIGHT:
-            if got[key] > base[name][key]:
-                failures.append(
-                    f"{name}.{key}: baseline {base[name][key]} -> {got[key]}"
-                )
     assert not failures, (
-        "plan-shape regressions (more shuffles/Python nodes than the "
-        f"reviewed baseline; reproduce with PLAN_SNAPSHOT_SEED={seed}): "
-        f"{failures}"
+        "plan-shape regressions (more shuffles/sort-merge/Python nodes than "
+        f"the reviewed baseline): {failures}"
     )
+
+
+def test_plan_only_build_leaves_no_cache_behind(spark):
+    """dedup_kcore_peel persists its chunk-pair edges at build time, and
+    dedup_chunk_pagerank plans over the same edges: read after a
+    plan-only kcore build that kept its caches, pagerank plans 53
+    exchanges (broadcasts flipped to sort-merge) instead of 46."""
+    spark.catalog.clearCache()
+    got = fingerprints(spark, ["dedup_kcore_peel", "dedup_chunk_pagerank"], SF)
+    base = _baseline()["dedup_chunk_pagerank"]
+    assert got["dedup_chunk_pagerank"] == base
 
 
 def test_fingerprint_tool_runs_on_named_queries():
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "plan_fingerprint.py"),
-         "q6", "q15"],
+         "q6", "q15", "no_such_query"],
         capture_output=True,
         text=True,
         timeout=300,
     )
-    assert r.returncode == 0, r.stderr[-2000:]
+    # an unknown (or failing) query is reported and fails the run
+    assert r.returncode == 1, r.stderr[-2000:]
+    assert "no_such_query: ERROR KeyError" in r.stderr
     out = json.loads(r.stdout)
-    assert "q6" in out and out["q6"]["exchanges"] >= 1
+    assert out["no_such_query"] == {"error": 1}
+    assert out["q6"]["exchanges"] >= 1
     # q15's max-revenue window has no partition key; q6 has no window
     assert out["q15"]["unpartitioned_windows"] == 1
     assert out["q6"]["unpartitioned_windows"] == 0

@@ -3,6 +3,12 @@
 These guard against regressions that correctness tests cannot see — a lost
 filter pushdown or broadcast still returns right answers, just 100x slower
 at scale.
+
+Node counts come from ``plans.inspect`` (``node_counts``/``tree_nodes``),
+never from substring counts: a formatted plan names every node twice. A
+registry query whose baseline has no nested-loop, sort-merge or Python
+node keeps it that way through tests/test_plan_snapshot.py, which checks
+every query, so those absences are not re-asserted here.
 """
 
 from __future__ import annotations
@@ -14,12 +20,11 @@ from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
 from datafusion_ballista_dhruvil_spark.plans.inspect import (
     codegen_span_count,
-    exchange_count,
     formatted_plan,
-    has_partial_final_agg,
     has_pushed_filters,
+    node_counts,
     scan_read_columns,
-    uses_broadcast_join,
+    tree_nodes,
 )
 from datafusion_ballista_dhruvil_spark.session import Tables
 
@@ -45,20 +50,20 @@ def test_column_pruning(spark):
 
 def test_small_dims_broadcast(spark):
     # q5's nation/region joins must be broadcast, not shuffled
-    assert uses_broadcast_join(QUERIES["q5"](spark, SF_DIR))
-    assert uses_broadcast_join(QUERIES["q9"](spark, SF_DIR))
+    for name in ("q5", "q9"):
+        assert node_counts(formatted_plan(QUERIES[name](spark, SF_DIR)))["bhj"] >= 1
 
 
 def test_two_phase_aggregation(spark):
     # the reference's Partial/FinalPartitioned split (execution_graph.rs:66-96)
-    assert has_partial_final_agg(QUERIES["q1"](spark, SF_DIR))
+    assert node_counts(formatted_plan(QUERIES["q1"](spark, SF_DIR)))["aggregates"] >= 2
 
 
 def test_q1_single_shuffle(spark):
     # scan -> partial agg -> exchange -> final agg -> sort: exactly the
     # reference's canonical 2-stage shape; more exchanges = regression
-    df = QUERIES["q1"](spark, SF_DIR)
-    assert exchange_count(df) <= 2  # group-by exchange + global sort
+    nodes = tree_nodes(formatted_plan(QUERIES["q1"](spark, SF_DIR)))
+    assert nodes.count("Exchange") <= 2  # group-by exchange + global sort
 
 
 def test_codegen_alive_in_hot_path(spark):
@@ -68,14 +73,12 @@ def test_codegen_alive_in_hot_path(spark):
 
 
 def test_dedup_exact_is_single_shuffle(spark):
-    df = QUERIES["dedup_exact"](spark, SF_DIR)
+    nodes = tree_nodes(formatted_plan(QUERIES["dedup_exact"](spark, SF_DIR)))
     # hash -> partial agg -> exchange -> final agg (+topk); one real shuffle
-    assert exchange_count(df) <= 1
+    assert nodes.count("Exchange") <= 1
 
 
 def test_topk_uses_take_ordered(spark):
-    from datafusion_ballista_dhruvil_spark.plans.inspect import formatted_plan
-
     plan = formatted_plan(QUERIES["ops_topk"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan  # no global sort for LIMIT 15
 
@@ -104,8 +107,6 @@ def test_groups_frame_documented_gap(spark):
 def test_repartition_nodes(spark):
     # logical repartition node parity (datafusion.proto:154-165):
     # hash(exprs, n) and round-robin(n)
-    from datafusion_ballista_dhruvil_spark.plans.inspect import formatted_plan
-
     t = Tables(spark, SF_DIR)
     hashed = formatted_plan(t.orders.repartition(8, "o_custkey"))
     assert "hashpartitioning(o_custkey" in hashed
@@ -116,14 +117,11 @@ def test_repartition_nodes(spark):
 def test_temporal_joins_never_nested_loop(spark):
     """The whole point of the as-of/range formulations: Catalyst must plan
     hash/sort-merge joins, never a BroadcastNestedLoopJoin over the
-    inequality predicate."""
-    for name in ("asof_click_attribution", "range_recent_clicks"):
-        plan = formatted_plan(QUERIES[name](spark, SF_DIR))
-        assert "NestedLoop" not in plan, f"{name} degraded to nested-loop"
-        assert "Cartesian" not in plan, f"{name} degraded to cartesian"
+    inequality predicate (both baselines hold no nested-loop node, which
+    the plan-snapshot gate enforces)."""
     # as-of is the union-window shape: exactly one Window, a Union below it
-    asof = formatted_plan(QUERIES["asof_click_attribution"](spark, SF_DIR))
-    assert "Union" in asof and "Window" in asof
+    asof = tree_nodes(formatted_plan(QUERIES["asof_click_attribution"](spark, SF_DIR)))
+    assert "Union" in asof and asof.count("Window") == 1
 
 
 def test_ivf_assignment_is_map_side(spark):
@@ -132,16 +130,12 @@ def test_ivf_assignment_is_map_side(spark):
     over N*K rows. Exactly one Window survives (the final bounded top-3
     over probe candidates); no nested-loop join anywhere."""
     plan = formatted_plan(QUERIES["sim_ivf_topk"](spark, SF_DIR))
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-    assert plan.count("Window") - plan.count("WindowGroupLimit") <= 2
+    assert tree_nodes(plan).count("Window") <= 1
     # the assignment itself is Arrow mapInPandas (MapInPandas / ArrowEval)
-    assert "MapInPandas" in plan
+    assert "MapInPandas" in tree_nodes(plan)
     # probing is an equi-join on centroid_id -> must be a hash join
-    assert (
-        "BroadcastHashJoin" in plan
-        or "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-    )
+    c = node_counts(plan)
+    assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
 def test_tpcds_plan_shapes(spark):
@@ -150,41 +144,21 @@ def test_tpcds_plan_shapes(spark):
     single-partition reduce (the 8x I/O saving the docstring claims);
     q3/q36 broadcast their item dimension (no sort-merge on a dim); q36's
     ROLLUP runs as grouping-set Expand over the same single fact pass;
-    nothing in the family degrades to a nested-loop/cartesian join."""
-    from tools.plan_fingerprint import node_counts
-
+    nothing in the family degrades to a nested-loop/cartesian join (the
+    plan-snapshot gate holds each query's nested_loop count to its
+    baseline; q4/q23 carry a documented 1-row scalar-merge broadcast
+    crossJoin)."""
     q88 = node_counts(formatted_plan(QUERIES["tpcds_q88"](spark, SF_DIR)))
     assert q88["scans"] == 1, f"q88 re-scans the fact: {q88}"
     assert q88["exchanges"] == 1 and q88["aggregates"] == 2, q88
 
     q3 = node_counts(formatted_plan(QUERIES["tpcds_q3"](spark, SF_DIR)))
-    assert q3["bhj"] >= 1 and q3["smj"] == 0, f"q3 dim not broadcast: {q3}"
+    assert q3["bhj"] >= 1, f"q3 dim not broadcast: {q3}"
 
     p36 = formatted_plan(QUERIES["tpcds_q36"](spark, SF_DIR))
     q36 = node_counts(p36)
     assert "Expand" in p36, "q36 rollup lost its grouping-set Expand"
     assert q36["scans"] == 2, f"q36 re-scans for the window: {q36}"
-
-    # q4/q23 carry a documented 1-row scalar-merge broadcast crossJoin
-    # (global ratio / max-spend threshold); everything else must be
-    # equi-join only
-    scalar_merge_ok = {"tpcds_q4": 1, "tpcds_q23": 1}
-    for name in ("tpcds_q4", "tpcds_q14", "tpcds_q35", "tpcds_q49",
-                 "tpcds_q51", "tpcds_q59", "tpcds_q65", "tpcds_q75",
-                 "tpcds_q93", "tpcds_q97",
-                 # r6 widening
-                 "tpcds_q1", "tpcds_q5", "tpcds_q6", "tpcds_q23",
-                 "tpcds_q31", "tpcds_q38", "tpcds_q54", "tpcds_q66",
-                 "tpcds_q67", "tpcds_q87",
-                 # r7 widening
-                 "tpcds_q47", "tpcds_q57", "tpcds_q44", "tpcds_q70",
-                 # r9 widening
-                 "tpcds_q95", "tpcds_q10"):
-        plan = formatted_plan(QUERIES[name](spark, SF_DIR))
-        counts = node_counts(plan)
-        assert counts["nested_loop"] <= scalar_merge_ok.get(name, 0), (
-            f"{name} degraded to nested-loop: {counts}"
-        )
 
     # r6 widening shape gates: q5's rollup netting and q67's deep rollup
     # must run as grouping-set Expand over ONE fact pass (no re-scan per
@@ -219,8 +193,6 @@ def test_q47_q57_series_windows_over_monthly_grain(spark):
     q47 reads exactly its three join inputs once (lineitem, orders,
     part); q57's per-nation top-3 deviation rank must push the
     WindowGroupLimit heap below the rank's exchange."""
-    from tools.plan_fingerprint import node_counts
-
     p47 = formatted_plan(QUERIES["tpcds_q47"](spark, SF_DIR))
     assert node_counts(p47)["scans"] == 3, node_counts(p47)
     p57 = formatted_plan(QUERIES["tpcds_q57"](spark, SF_DIR))
@@ -237,28 +209,21 @@ def test_q44_q70_rank_shapes(spark):
     Expand must run over the restricted (region, nation) aggregate with
     the fact read exactly once — the SUM-decomposability collapse of
     TPC-DS's two-pass spelling that the docstring claims."""
-    from tools.plan_fingerprint import node_counts
-
-    from tools.plan_fingerprint import _tree_nodes
-
     p44 = formatted_plan(QUERIES["tpcds_q44"](spark, SF_DIR))
-    assert p44.count("TakeOrderedAndProject") >= 2, p44[:600]
+    nodes44 = tree_nodes(p44)
+    assert nodes44.count("TakeOrderedAndProject") >= 2, nodes44
     # both Windows sit above their TOAP — the positional row_numbers run
     # over the 10 kept rows, so the ONLY Sort node in the whole plan is
     # the final bounded orderBy of the joined 10-row result (ADVICE r7
     # #5: assert the Sort count, not just TOAP presence — a global
     # item-grain Sort sneaking in elsewhere must fail this gate)
-    nodes44 = _tree_nodes(p44)
     assert nodes44.count("Sort") <= 1, [x for x in nodes44 if x == "Sort"]
     assert nodes44.count("Window") == 2, nodes44
-    c44 = node_counts(p44)
-    assert c44["nested_loop"] == 0, c44
 
     p70 = formatted_plan(QUERIES["tpcds_q70"](spark, SF_DIR))
     c70 = node_counts(p70)
     assert "Expand" in p70, "q70 rollup lost its grouping-set Expand"
     assert c70["scans"] == 5, f"q70 re-scans a table: {c70}"
-    assert c70["nested_loop"] == 0, c70
 
 
 def test_ivf_codebook_cap_is_loud(spark):
@@ -290,7 +255,6 @@ def test_knn_label_agreement_is_cell_local(spark):
     (FlatMapGroupsInPandas on centroid_id) — no join of pair rows, no
     nested loop anywhere."""
     plan = formatted_plan(QUERIES["sim_knn_label_agreement"](spark, SF_DIR))
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" in plan
     assert "Join" not in plan
@@ -378,33 +342,26 @@ def test_lateral_join_decorrelates(spark):
     # cartesian/nested-loop node sneaks in beside it.
     plan = formatted_plan(QUERIES["ops_lateral_join"](spark, SF_DIR))
     assert "Window" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_profile_stats_single_scan(spark):
     # Profiling N columns must still scan the fact table ONCE (multi-distinct
     # goes through a single Expand), not once per column.
-    import re
-
-    plan = formatted_plan(QUERIES["ops_profile_stats"](spark, SF_DIR))
-    scan_nodes = re.findall(r"\(\d+\) Scan parquet", plan)
-    assert len(scan_nodes) == 1, scan_nodes
+    nodes = tree_nodes(formatted_plan(QUERIES["ops_profile_stats"](spark, SF_DIR)))
+    assert nodes.count("Scan parquet") == 1, nodes
 
 
 def test_bigram_lm_joins_broadcast(spark):
     # The LM count tables are vocab-bounded regardless of corpus size; the
     # scoring joins must broadcast them, never sort-merge the corpus.
     plan = formatted_plan(QUERIES["text_bigram_lm_score"](spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "SortMergeJoin" not in plan
+    assert node_counts(plan)["bhj"] >= 2
 
 
 def test_random_projection_sign_table_broadcasts(spark):
     # The 16x64 Rademacher sign table is constant-size — broadcast join.
     plan = formatted_plan(QUERIES["sim_random_projection"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_pq_adc_is_map_only_scan(spark):
@@ -413,8 +370,8 @@ def test_pq_adc_is_map_only_scan(spark):
     # kind, and the only exchange is the final top-20 global sort.
     plan = formatted_plan(QUERIES["sim_pq_adc"](spark, SF_DIR))
     assert "MapInPandas" in plan
-    assert "Join" not in plan and "CartesianProduct" not in plan
-    assert exchange_count(QUERIES["sim_pq_adc"](spark, SF_DIR)) <= 1
+    assert "Join" not in plan
+    assert tree_nodes(plan).count("Exchange") <= 1
 
 
 def test_image_ahash_shuffles_hashes_not_bytes(spark):
@@ -453,21 +410,17 @@ def test_payload_builder_is_one_map_stage(spark, name):
     # stage (map_payload_rows), with zero exchanges and no join: payload
     # bytes cross into Python once and never shuffle; no orderBy, since
     # the driver compare sorts.
-    from tools.plan_fingerprint import node_counts
-
-    df = QUERIES[name](spark, SF_DIR)
-    plan = formatted_plan(df)
+    plan = formatted_plan(QUERIES[name](spark, SF_DIR))
     assert node_counts(plan)["py_map"] == 1
     assert "Join" not in plan
-    assert exchange_count(df) == 0
+    assert "Exchange" not in tree_nodes(plan)
 
 
 def test_quality_classifier_zero_shuffle(spark):
     # Hashed-feature scoring is pure expression work: no exchange except
-    # the output sort, no UDF/python nodes at all.
+    # the output sort (no UDF/python nodes: the snapshot gate's py_* = 0).
     plan = formatted_plan(QUERIES["text_quality_classifier"](spark, SF_DIR))
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-    assert exchange_count(QUERIES["text_quality_classifier"](spark, SF_DIR)) <= 1
+    assert tree_nodes(plan).count("Exchange") <= 1
 
 
 def test_version_diff_shuffles_hashes_not_bodies(spark):
@@ -488,14 +441,12 @@ def test_merge_upsert_compresses_cdc_before_join(spark):
     # window + join + distinct-base.
     plan = formatted_plan(QUERIES["pipeline_merge_upsert"](spark, SF_DIR))
     assert "Window" in plan
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
 def test_tombstone_purge_broadcasts_tombstones(spark):
     # The deletion list is tiny — membership must be a broadcast join.
     plan = formatted_plan(QUERIES["pipeline_tombstone_purge"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_bloom_decontam_broadcasts_bit_table(spark):
@@ -503,15 +454,13 @@ def test_bloom_decontam_broadcasts_bit_table(spark):
     # broadcast; the training corpus must never be on the build side of a
     # shuffle join.
     plan = formatted_plan(QUERIES["text_bloom_decontam"](spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
+    assert node_counts(plan)["bhj"] >= 2
 
 
 def test_zorder_is_two_scans_plus_tiny_aggs(spark):
-    # Z-key computation is pure integer expressions (codegen), domain row
-    # broadcasts, no python nodes anywhere.
+    # Z-key computation is pure integer expressions (codegen; the snapshot
+    # gate holds its python nodes at 0), domain row broadcasts.
     plan = formatted_plan(QUERIES["ops_zorder_pruning"](spark, SF_DIR))
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
@@ -521,7 +470,6 @@ def test_winsorize_broadcasts_cutoffs(spark):
     # the raw values (the few-groups collapse weighted_quantile avoids).
     plan = formatted_plan(QUERIES["ops_winsorize"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_pmi_vocab_broadcasts(spark):
@@ -529,8 +477,8 @@ def test_pmi_vocab_broadcasts(spark):
     # self-join; the pair join itself is a doc_id equi-join, never a
     # cartesian product.
     plan = formatted_plan(QUERIES["text_pmi_pairs"](spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
+    assert node_counts(plan)["bhj"] >= 2
+    assert "CartesianProduct" not in tree_nodes(plan)
 
 
 def test_expectations_no_extra_scans(spark):
@@ -539,7 +487,6 @@ def test_expectations_no_extra_scans(spark):
     # check broadcasts the customer key list.
     plan = formatted_plan(QUERIES["pipeline_data_expectations"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_attribution_single_user_shuffle(spark):
@@ -578,13 +525,12 @@ def test_ivf_pq_probe_is_broadcast_equi_join(spark):
     plan = formatted_plan(QUERIES["sim_ivf_pq"](spark, SF_DIR))
     assert "MapInPandas" in plan
     assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
 
 def test_path_topk_no_joins(spark):
     # Sessionize + path prefix + rollup: pure window/aggregate pipeline.
     plan = formatted_plan(QUERIES["ev_path_topk"](spark, SF_DIR))
-    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert "Join" not in plan
     assert "Window" in plan
 
 
@@ -592,22 +538,23 @@ def test_mad_outliers_broadcasts_both_cutoff_tables(spark):
     # Median and MAD tables (5 rows each) broadcast back; the raw values
     # are never globally sorted per group.
     plan = formatted_plan(QUERIES["ops_mad_outliers"](spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "SortMergeJoin" not in plan
+    assert node_counts(plan)["bhj"] >= 2
 
 
 def test_join_cardinality_never_runs_the_raw_join(spark):
     # Both estimators join COUNT tables (pre-aggregated), never the raw
     # fact tables: every join input passes through a HashAggregate first.
-    plan = formatted_plan(QUERIES["ops_join_cardinality"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert plan.count("HashAggregate") >= 8  # partial+final per count table
+    nodes = tree_nodes(formatted_plan(QUERIES["ops_join_cardinality"](spark, SF_DIR)))
+    assert "CartesianProduct" not in nodes
+    assert nodes.count("HashAggregate") >= 8  # partial+final per count table
 
 
 def test_triangles_and_accuracy_bounded_joins(spark):
-    for name in ("dedup_graph_triangles", "dedup_minhash_accuracy"):
-        plan = formatted_plan(QUERIES[name](spark, SF_DIR))
-        assert "CartesianProduct" not in plan, name
+    # dedup_minhash_accuracy plans no nested loop at all (snapshot gate);
+    # the triangle query's two are broadcast nested loops, never a
+    # cartesian product
+    plan = formatted_plan(QUERIES["dedup_graph_triangles"](spark, SF_DIR))
+    assert "CartesianProduct" not in tree_nodes(plan)
 
 
 def test_dynamic_partition_pruning_subquery_injected(spark, tmp_path):
@@ -650,8 +597,9 @@ def test_pps_prefix_sum_windows_are_chunk_partitioned(spark):
     # bounded chunk-summary window may be unpartitioned. Offsets and the
     # total broadcast back.
     plan = formatted_plan(QUERIES["sample_pps_systematic"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastExchange") >= 2  # offsets + total scalar
+    nodes = tree_nodes(plan)
+    assert "CartesianProduct" not in nodes
+    assert nodes.count("BroadcastExchange") >= 2  # offsets + total scalar
     # the window over document rows hash-partitions on chunk (its exchange
     # is hashpartitioning(chunk, ...)), never a single global sort
     assert "hashpartitioning(chunk" in plan
@@ -661,19 +609,17 @@ def test_covariance_pairs_collapse_before_shuffle(spark):
     # The 136x pair explode must be followed by map-side partial
     # aggregation (partial+final HashAggregate), so the shuffle carries
     # <= 136 rows per partition, not exploded data.
-    df = QUERIES["sim_covariance_matrix"](spark, SF_DIR)
-    assert has_partial_final_agg(df)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan
+    plan = formatted_plan(QUERIES["sim_covariance_matrix"](spark, SF_DIR))
+    assert node_counts(plan)["aggregates"] >= 2
 
 
 def test_entity_blocking_is_equi_join(spark):
     # Banded blocking must plan as a hash/sort-merge EQUI-join on the
-    # block key — a nested-loop plan means the band predicate fell out of
-    # the join keys and pair generation went quadratic.
-    plan = formatted_plan(QUERIES["dedup_entity_blocking"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    # block key — a nested-loop plan (held at 0 by the plan-snapshot gate)
+    # means the band predicate fell out of the join keys and pair
+    # generation went quadratic.
+    c = node_counts(formatted_plan(QUERIES["dedup_entity_blocking"](spark, SF_DIR)))
+    assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
 def test_mmr_candidates_are_bucket_equi_join(spark):
@@ -681,22 +627,18 @@ def test_mmr_candidates_are_bucket_equi_join(spark):
     the rank-LSH bucket EQUI-join — the brute-force corpus-wide
     crossJoin(broadcast(q)) planned as a BroadcastNestedLoopJoin; any
     nested-loop/cartesian node here means the bucket key fell out of the
-    join condition and candidate generation went back to O(N x Q)."""
-    plan = formatted_plan(QUERIES["sim_mmr_rerank"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert (
-        "BroadcastHashJoin" in plan
-        or "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-    )
+    join condition and candidate generation went back to O(N x Q); the
+    plan-snapshot gate holds its nested_loop count at 0."""
+    c = node_counts(formatted_plan(QUERIES["sim_mmr_rerank"](spark, SF_DIR)))
+    assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
 def test_hard_negatives_and_ndcg_bucket_joins(spark):
+    # candidates meet on the bucket key in an equi-join; neither query
+    # plans a nested loop (held at 0 by the plan-snapshot gate)
     for name in ("sim_hard_negatives", "sim_ndcg_eval"):
-        plan = formatted_plan(QUERIES[name](spark, SF_DIR))
-        assert "BroadcastNestedLoopJoin" not in plan, name
-        assert "CartesianProduct" not in plan, name
+        c = node_counts(formatted_plan(QUERIES[name](spark, SF_DIR)))
+        assert c["bhj"] + c["smj"] + c["shj"] >= 1, (name, c)
 
 
 def test_decay_weighted_broadcasts_scalar_not_window(spark):
@@ -710,10 +652,9 @@ def test_decay_weighted_broadcasts_scalar_not_window(spark):
 def test_kcenter_rounds_are_take_ordered_passes(spark):
     # Each greedy round reduces a full scan to ONE row via TakeOrdered
     # (map-side partial top-1), and centers re-enter as broadcasts.
-    plan = formatted_plan(QUERIES["sample_kcenter_coreset"](spark, SF_DIR))
-    assert plan.count("TakeOrderedAndProject") >= 3
-    assert plan.count("BroadcastExchange") >= 3
-    assert "CartesianProduct" not in plan or plan.count("rows=1") >= 0
+    nodes = tree_nodes(formatted_plan(QUERIES["sample_kcenter_coreset"](spark, SF_DIR)))
+    assert nodes.count("TakeOrderedAndProject") >= 3
+    assert nodes.count("BroadcastExchange") >= 3
 
 
 def test_pipe_syntax_same_plan_as_ansi(spark):
@@ -721,27 +662,29 @@ def test_pipe_syntax_same_plan_as_ansi(spark):
     # pushed filter at the scan, two-phase agg, <= 2 exchanges
     df = QUERIES["ops_pipe_syntax"](spark, SF_DIR)
     assert has_pushed_filters(df, "o_orderdate")
-    assert has_partial_final_agg(df)
-    assert exchange_count(df) <= 2  # group-by exchange + global sort
+    nodes = tree_nodes(formatted_plan(df))
+    assert nodes.count("HashAggregate") >= 2
+    assert nodes.count("Exchange") <= 2  # group-by exchange + global sort
 
 
 def test_bitmap_distinct_two_phase_no_expand(spark):
     # the bitmap form must plan as two plain hash aggregates (bit_or then
     # sum) — if a COUNT(DISTINCT) Expand node sneaks in, the whole point
     # (shuffling 8-byte bitmaps instead of raw ids) is lost
-    df = QUERIES["ops_bitmap_distinct"](spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "Expand" not in plan
-    assert has_partial_final_agg(df)
+    nodes = tree_nodes(formatted_plan(QUERIES["ops_bitmap_distinct"](spark, SF_DIR)))
+    assert "Expand" not in nodes
+    assert nodes.count("HashAggregate") >= 2
 
 
 def test_funnel_regex_single_data_shuffle(spark):
     # one exchange groups events per user; the 4-pattern readout reduces
     # to a single row (plus the final 4-row sort) — per-event data must
     # not shuffle twice
-    df = QUERIES["ev_funnel_regex"](spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert plan.count("Exchange hashpartitioning(user_id") <= 1
+    import re
+
+    plan = formatted_plan(QUERIES["ev_funnel_regex"](spark, SF_DIR))
+    parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    assert sum(p.startswith("user_id") for p in parts) <= 1, parts
 
 
 def test_collation_group_two_phase_sort_agg(spark):
@@ -750,19 +693,10 @@ def test_collation_group_two_phase_sort_agg(spark):
     # partial (map-side) and final phases so only per-group partials
     # shuffle; this pins that shape (and documents the known scale cost:
     # a per-partition sort instead of a hash table)
-    df = QUERIES["ops_collation_group"](spark, SF_DIR)
-    plan = formatted_plan(df)
+    plan = formatted_plan(QUERIES["ops_collation_group"](spark, SF_DIR))
     assert "SortAggregate" in plan
     assert "partial_" in plan and "merge_" in plan
-    assert exchange_count(df) <= 3  # distinct-forms phase + group + sort
-
-
-def test_cdc_chunks_shuffles_digests_only(spark):
-    """dedup_cdc_chunks: chunking is window+agg inside the doc, the
-    shared-chunk test is a hash equi-join on the 32-byte digest — never a
-    pair join, never a nested loop."""
-    plan = formatted_plan(QUERIES["dedup_cdc_chunks"](spark, SF_DIR))
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
+    assert tree_nodes(plan).count("Exchange") <= 3  # distinct-forms phase + group + sort
 
 
 def test_sorted_neighborhood_candidates_are_window_not_join(spark):
@@ -770,7 +704,6 @@ def test_sorted_neighborhood_candidates_are_window_not_join(spark):
     sort order (linear), and verification is equi-joins on doc_id against
     the shingle arrays — no all-pairs shape anywhere."""
     plan = formatted_plan(QUERIES["dedup_sorted_neighborhood"](spark, SF_DIR))
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
     assert "Window" in plan
 
 
@@ -779,7 +712,6 @@ def test_dbscan_is_one_grouped_pass(spark):
     runs as ONE grouped-map matmul per label block — no pair rows, no
     joins at all; the only shuffle is groupBy(label)."""
     plan = formatted_plan(QUERIES["sim_dbscan_core"](spark, SF_DIR))
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
     assert "FlatMapGroupsInPandas" in plan
     assert "Join" not in plan
 
@@ -790,7 +722,6 @@ def test_crosslingual_profiles_broadcast(spark):
     shuffle for the argmax."""
     plan = formatted_plan(QUERIES["text_crosslingual_confusion"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_incremental_agg_pushes_partition_predicates(spark):
@@ -804,17 +735,10 @@ def test_image_neardup_bands_are_equi_join(spark):
     """mm_image_neardup_pairs: candidates come from the banded equi-join
     on (band, 16-bit key) — 8-byte hashes shuffle, image bytes never do;
     no nested loop anywhere."""
-    from tools.plan_fingerprint import node_counts
-
-    plan = formatted_plan(QUERIES["mm_image_neardup_pairs"](spark, SF_DIR))
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
+    c = node_counts(formatted_plan(QUERIES["mm_image_neardup_pairs"](spark, SF_DIR)))
     # one hashing stage per join side: the encode→decode chain is fused
-    assert node_counts(plan)["py_map"] == 2
-    assert (
-        "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-        or "BroadcastHashJoin" in plan
-    )
+    assert c["py_map"] == 2
+    assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
 def test_linear_interpolate_is_union_window(spark):
@@ -824,38 +748,38 @@ def test_linear_interpolate_is_union_window(spark):
     # grid construction broadcasts the 24-row hourly range (its nested
     # loop is over a constant relation); the DATA path (events) must not
     # join — neighbors come from the two windows over the union
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert "Window" in plan and "Union" in plan
+    nodes = tree_nodes(plan)
+    assert "ShuffledHashJoin" not in nodes
+    assert "Window" in nodes and "Union" in nodes
 
 
 def test_interval_bucket_join_is_equi_join(spark):
     # The bucketed interval-join rewrite must plan as an EQUI-join on the
     # bucket id (shuffle/broadcast hash), never a nested-loop over the raw
-    # range predicate — the whole point of the bucket discretization.
-    plan = formatted_plan(QUERIES["ops_interval_bucket_join"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    # range predicate (the plan-snapshot gate holds nested_loop at 0) —
+    # the whole point of the bucket discretization.
+    c = node_counts(formatted_plan(QUERIES["ops_interval_bucket_join"](spark, SF_DIR)))
+    assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
 def test_bootstrap_explode_is_before_partial_agg(spark):
     # The 32-way replicate explode must feed a map-side partial aggregate
     # (HashAggregate below the exchange), so the shuffle carries B rows per
     # task — not B x N rows.
-    plan = formatted_plan(QUERIES["sample_bootstrap_ci"](spark, SF_DIR))
-    assert "Generate" in plan  # the explode
-    assert plan.count("HashAggregate") >= 2  # partial + final
+    nodes = tree_nodes(formatted_plan(QUERIES["sample_bootstrap_ci"](spark, SF_DIR)))
+    assert "Generate" in nodes  # the explode
+    assert nodes.count("HashAggregate") >= 2  # partial + final
 
 
 def test_url_canonical_is_single_shuffle_codegen(spark):
     # URL canonicalization (parse_url + regexp) is pure map-side expression
     # work: the plan must show exactly one exchange (the canonical-key
-    # groupBy) with a partial aggregate below it, and no UDF evaluation.
-    plan = formatted_plan(QUERIES["dedup_url_canonical"](spark, SF_DIR))
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert plan.count("HashAggregate") >= 2  # partial + final
+    # groupBy) with a partial aggregate below it, and no UDF evaluation
+    # (the snapshot gate holds py_eval at 0).
+    nodes = tree_nodes(formatted_plan(QUERIES["dedup_url_canonical"](spark, SF_DIR)))
+    assert nodes.count("HashAggregate") >= 2  # partial + final
     # one agg exchange + the orderBy's range exchange, nothing else
-    # ("Name (" matches tree nodes only, not the detail sections)
-    assert plan.count("Exchange (") <= 2
+    assert nodes.count("Exchange") <= 2
 
 
 def test_residual_quantize_is_map_only_then_agg(spark):
@@ -863,9 +787,10 @@ def test_residual_quantize_is_map_only_then_agg(spark):
     # error terms happen in ONE Arrow map pass. No join anywhere, and the
     # only exchanges are the final 7-row agg (+ orderBy).
     plan = formatted_plan(QUERIES["sim_residual_quantize"](spark, SF_DIR))
-    assert "Join" not in plan and "CartesianProduct" not in plan
-    assert plan.count("MapInPandas (") == 1  # tree nodes only
-    assert plan.count("Exchange (") <= 2
+    assert "Join" not in plan
+    nodes = tree_nodes(plan)
+    assert nodes.count("MapInPandas") == 1
+    assert nodes.count("Exchange") <= 2
 
 
 def test_interpolate_has_no_shrinking_window_frame(spark):
@@ -890,12 +815,9 @@ def test_q64_one_fact_pass_snowflake(spark):
     (brand, nation, year) aggregate — the snowflake fact chain appears
     under InMemoryTableScan (one materialization), never as a second
     live fact pass; bounded nation/region broadcast; no nested loop."""
-    from tools.plan_fingerprint import node_counts
-
     p64 = formatted_plan(QUERIES["tpcds_q64"](spark, SF_DIR))
     assert "InMemoryTableScan" in p64, p64[:600]
     c64 = node_counts(p64)
-    assert c64["nested_loop"] == 0, c64
     assert c64["bhj"] >= 4, c64  # nation/region broadcast in the chain
 
 
@@ -903,11 +825,7 @@ def test_q29_chain_is_equi_join(spark):
     """r8 widening: the bought->returned->re-bought chain must meet in an
     EQUI-join on the (cust, pk) compound key (the d2 > d1 condition is a
     post-join filter), never a nested loop over the date predicate."""
-    from tools.plan_fingerprint import node_counts
-
-    p29 = formatted_plan(QUERIES["tpcds_q29"](spark, SF_DIR))
-    c29 = node_counts(p29)
-    assert c29["nested_loop"] == 0, c29
+    c29 = node_counts(formatted_plan(QUERIES["tpcds_q29"](spark, SF_DIR)))
     assert c29["smj"] + c29["shj"] + c29["bhj"] >= 3, c29
 
 
@@ -915,11 +833,7 @@ def test_q73_cohort_before_dimension_join(spark):
     """r8 widening: q73's HAVING band collapses the fact to cohort rows
     BEFORE the customer join; customer must not be the broadcast build
     side (it scales with SF — AQE may broadcast the bounded cohort)."""
-    from tools.plan_fingerprint import node_counts
-
-    p73 = formatted_plan(QUERIES["tpcds_q73"](spark, SF_DIR))
-    c73 = node_counts(p73)
-    assert c73["nested_loop"] == 0, c73
+    c73 = node_counts(formatted_plan(QUERIES["tpcds_q73"](spark, SF_DIR)))
     assert c73["aggregates"] >= 2, c73  # partial+final count agg above the join
 
 
@@ -927,13 +841,10 @@ def test_q78_anti_join_and_one_channel_pass(spark):
     """r8 widening: q78's return exclusion must be a real ANTI-join on
     orderkey (not a row filter) and both channels must pivot from ONE
     conditional-agg pass — no second fact pass, top-20 as a heap."""
-    from tools.plan_fingerprint import node_counts
-
     p78 = formatted_plan(QUERIES["tpcds_q78"](spark, SF_DIR))
     assert "LeftAnti" in p78, p78[:600]
     assert "TakeOrderedAndProject" in p78
     c78 = node_counts(p78)
-    assert c78["nested_loop"] == 0, c78
     assert c78["scans"] <= 3, f"q78 re-scans for a channel: {c78}"
 
 
@@ -941,11 +852,7 @@ def test_q72_date_lag_is_filter_not_range_join(spark):
     """r8 widening: q72's date-lag condition must be a post-equi-join
     filter inside one conditional-agg pass — all joins equi (the spec's
     range-join trap avoided), nation broadcast, fact read once."""
-    from tools.plan_fingerprint import node_counts
-
-    p72 = formatted_plan(QUERIES["tpcds_q72"](spark, SF_DIR))
-    c72 = node_counts(p72)
-    assert c72["nested_loop"] == 0, c72
+    c72 = node_counts(formatted_plan(QUERIES["tpcds_q72"](spark, SF_DIR)))
     assert c72["scans"] == 4, f"q72 re-scans a table: {c72}"
     assert c72["aggregates"] == 2, f"q72 lost its single agg pass: {c72}"
     assert c72["bhj"] >= 1, c72  # nation broadcast
@@ -955,12 +862,8 @@ def test_q39_one_fact_pass_month_pair(spark):
     """r8 widening: q39's consecutive-month self-join must run over the
     PERSISTED bounded (brand, month) stats (InMemoryTableScan) — one
     fact pass, equi-joins only."""
-    from tools.plan_fingerprint import node_counts
-
     p39 = formatted_plan(QUERIES["tpcds_q39"](spark, SF_DIR))
     assert "InMemoryTableScan" in p39, p39[:600]
-    c39 = node_counts(p39)
-    assert c39["nested_loop"] == 0, c39
 
 
 def test_q95_single_fact_pass_and_q10_or_union(spark):
@@ -971,12 +874,9 @@ def test_q95_single_fact_pass_and_q10_or_union(spark):
     key sets (sequential semi-joins would compute AND), the returns branch
     must compress lineitem via a semi-join BEFORE any customer-side work,
     and nothing degrades to a nested loop."""
-    from tools.plan_fingerprint import node_counts
-
     p95 = formatted_plan(QUERIES["tpcds_q95"](spark, SF_DIR))
     c95 = node_counts(p95)
     assert c95["scans"] == 2, f"q95 re-scans the fact: {c95}"
-    assert c95["nested_loop"] == 0, c95
     # the >1-supplier + returned flags and the money live in one
     # order-grain aggregate pair feeding the final global pair
     assert c95["aggregates"] == 4, c95
@@ -984,7 +884,6 @@ def test_q95_single_fact_pass_and_q10_or_union(spark):
     p10 = formatted_plan(QUERIES["tpcds_q10"](spark, SF_DIR))
     c10 = node_counts(p10)
     assert "Union" in p10, "q10 lost the OR-branch union"
-    assert c10["nested_loop"] == 0, c10
     # lineitem appears exactly once (returns branch); orders three times —
     # the spec's three EXISTS bodies; plus customer and the nation dim:
     # 6 scans total, no fact pass beyond the spec's
@@ -1000,24 +899,20 @@ def test_r9_session2_tpcds_shapes(spark):
     q99: five latency bands from ONE aggregate pair over one fact-fact
     join (never five filtered re-scans). q13: the AND-of-ORs filter keeps
     both joins hash-based (no nested loop from the disjunction)."""
-    from tools.plan_fingerprint import node_counts
-
     c94 = node_counts(formatted_plan(QUERIES["tpcds_q94"](spark, SF_DIR)))
     assert c94["scans"] == 2 and c94["aggregates"] == 4, c94
-    assert c94["nested_loop"] == 0, c94
 
     p92 = formatted_plan(QUERIES["tpcds_q92"](spark, SF_DIR))
     c92 = node_counts(p92)
-    assert c92["nested_loop"] == 0 and c92["bhj"] >= 1, c92
+    assert c92["bhj"] >= 1, c92
     # window lines + per-part avg: exactly the spec's two fact touches
     assert p92.count("lineitem") <= 4, p92[:800]
 
     c99 = node_counts(formatted_plan(QUERIES["tpcds_q99"](spark, SF_DIR)))
     assert c99["aggregates"] == 2, f"q99 bands re-scan: {c99}"
-    assert c99["scans"] == 2 and c99["nested_loop"] == 0, c99
+    assert c99["scans"] == 2, c99
 
     c13 = node_counts(formatted_plan(QUERIES["tpcds_q13"](spark, SF_DIR)))
-    assert c13["nested_loop"] == 0, c13
     assert c13["bhj"] + c13["smj"] + c13["shj"] >= 2, c13
 
 
@@ -1027,11 +922,8 @@ def test_r9_session3_tpcds_shapes(spark):
     loop. q76: three pushed-filter branches into ONE Union and ONE
     aggregate pair — zero joins anywhere. q90: one events scan, one
     aggregate pair (the two scalar subqueries collapsed), zero joins."""
-    from tools.plan_fingerprint import node_counts
-
-    p41 = formatted_plan(QUERIES["tpcds_q41"](spark, SF_DIR))
-    c41 = node_counts(p41)
-    assert c41["scans"] == 2 and c41["nested_loop"] == 0, c41
+    c41 = node_counts(formatted_plan(QUERIES["tpcds_q41"](spark, SF_DIR)))
+    assert c41["scans"] == 2, c41
     assert c41["bhj"] >= 1, f"q41 brand set not broadcast: {c41}"
 
     p76 = formatted_plan(QUERIES["tpcds_q76"](spark, SF_DIR))
@@ -1055,15 +947,9 @@ def test_r10_tpcds_shapes(spark):
     one rollup Expand + one ranking
     window over subtotal-grain rows, no join in the post-aggregate
     stage, no nested loop."""
-    from tools.plan_fingerprint import node_counts
-
     p14 = formatted_plan(QUERIES["tpcds_q14_rollup"](spark, SF_DIR))
-    c14 = node_counts(p14)
-    assert c14["nested_loop"] == 0, c14
     assert p14.count("lineitem") == 1, "q14 re-scans the fact"
 
     p36 = formatted_plan(QUERIES["tpcds_q36_deep"](spark, SF_DIR))
-    c36 = node_counts(p36)
-    assert c36["nested_loop"] == 0, c36
     assert "Expand" in p36 and "Window" in p36
     assert p36.count("lineitem") <= 2, "q36_deep re-scans the fact"

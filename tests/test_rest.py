@@ -138,3 +138,20 @@ def test_arrow_ipc_result_transport(spark, server):
     # the arrow query is introspectable like any other
     mets = _get(server, f"/api/job/{qid}/metrics")
     assert mets["operators"]
+
+
+def test_query_registry_keeps_the_most_recent(server):
+    """Each kept query holds its DataFrame: past MAX_KEPT_QUERIES posts the
+    oldest is dropped, and its job routes answer 404."""
+    from datafusion_ballista_dhruvil_spark.rest import MAX_KEPT_QUERIES
+
+    qids = [
+        _post(server, "/api/sql", {"sql": f"SELECT {i} AS i"})["query_id"]
+        for i in range(MAX_KEPT_QUERIES + 1)
+    ]
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(server, f"/api/job/{qids[0]}/metrics")
+    assert e.value.code == 404
+    assert _get(server, f"/api/job/{qids[1]}/metrics")["query_id"] == qids[1]
+    kept = {q["query_id"] for q in _get(server, "/api/jobs")["queries"]}
+    assert len(kept) == MAX_KEPT_QUERIES and qids[0] not in kept
