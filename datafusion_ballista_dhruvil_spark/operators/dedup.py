@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
+from datafusion_ballista_dhruvil_spark.operators.scale import (
+    cached,
+    release_cached,
+    top_k,
+)
 from datafusion_ballista_dhruvil_spark.session import Tables, table_path
 
 #: MinHash parameters: k = BANDS * ROWS_PER_BAND signatures.
@@ -253,11 +257,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shingle-explode -> self equi-join on shingle -> count common -> Jaccard.
     This is the exact verifier; at scale the same verification runs only on
     LSH candidates (dedup_minhash_lsh), never all pairs.
-
-    Cache lifecycle: the shingle cache is self-owning — released by
-    owned_result when this query's action completes (VERDICT r6 #3).
     """
-    arrs = _shingle_arrays(spark, sf_dir).cache()
+    arrs = cached(_shingle_arrays(spark, sf_dir))
     sh = arrs.select("doc_id", F.explode("ss").alias("s"))
     # one groupBy(shingle) + in-bucket pair explode, not a shingle self-join:
     # same O(df^2) pair cardinality (the algorithm's cost model), but one
@@ -281,15 +282,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = arrs.select(F.col("doc_id").alias("d1"), F.array_size("ss").alias("n1"))
     s2 = arrs.select(F.col("doc_id").alias("d2"), F.array_size("ss").alias("n2"))
     jac = F.col("common").cast("double") / (F.col("n1") + F.col("n2") - F.col("common"))
-    return owned_result(
+    return (
         pairs.join(s1, "d1")
         .join(s2, "d2")
         .withColumn("jaccard", jac)
         .where(F.col("jaccard") >= 0.5)
         .select("d1", "d2", "common", "n1", "n2", "jaccard")
         .orderBy(F.desc("jaccard"), "d1", "d2")
-        .limit(100),
-        arrs,
+        .limit(100)
     )
 
 
@@ -358,13 +358,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature stage (PERF.md #9). h0 is materialized as a projection so
     the K aggregate expressions share it instead of re-hashing.
     """
-    owned: list[DataFrame] = []
-    return owned_result(
-        _verified_pairs(spark, sf_dir, owned)
+    return (
+        _verified_pairs(spark, sf_dir)
         .select("d1", "d2", "jaccard")
         .orderBy(F.desc("jaccard"), "d1", "d2")
-        .limit(100),
-        *owned,
+        .limit(100)
     )
 
 
@@ -408,9 +406,7 @@ def _band_signatures(arrs: DataFrame) -> DataFrame:
     )
 
 
-def _verified_pairs(
-    spark: SparkSession, sf_dir: str, owned: list[DataFrame] | None = None
-) -> DataFrame:
+def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d1, d2, jaccard): LSH candidate pairs verified at J >= 0.5, d1 < d2.
 
     The full MinHash->bands->bucket-group->exact-verify pipeline shared by
@@ -431,25 +427,14 @@ def _verified_pairs(
       digests, shingle arrays ship only at rep grain. (The earlier direct
       form attached both arrays to every pair; before that, two exploded
       shingle self-joins — each step removed a corpus-sized shuffle.)
-
-    Cache lifecycle (VERDICT r6 #3): the shingle cache this helper creates
-    is appended to ``owned`` so the CALLING query function can hand it to
-    owned_result — each query releases its caches when its action
-    completes instead of leaking them into the long-lived session.
     """
-    arrs = _shingle_arrays(spark, sf_dir)
-    if owned is not None:
-        # cache only when a query-owned lifecycle will release it (ADVICE
-        # r7 #1) — unowned callers (tests, ad-hoc) get the plain plan.
-        # NOT eager-materialized: the five consumer subtrees (bands, dg1,
-        # dg2, ss1, ss2) race to build the cold cache in concurrent
-        # stages, but those redundant builds overlap on otherwise-idle
-        # cores; serializing the build through a count() job was MEASURED
-        # slower end-to-end (r10: minhash_lsh warm 2.43s -> 2.87s,
-        # cluster_cc 4.7s -> 5.7s) — wall time beats CPU thrift here.
-        arrs = arrs.cache()
-        owned.append(arrs)
-    return verified_pairs_of(arrs, owned)
+    # NOT prepared (materialized before the action): the five consumer
+    # subtrees (bands, dg1, dg2, ss1, ss2) race to build the cold cache
+    # in concurrent stages, but those redundant builds overlap on
+    # otherwise-idle cores; serializing the build through a count() job
+    # was MEASURED slower end-to-end (r10: minhash_lsh warm 2.43s ->
+    # 2.87s, cluster_cc 4.7s -> 5.7s) — wall time beats CPU thrift here.
+    return verified_pairs_of(cached(_shingle_arrays(spark, sf_dir)))
 
 
 def lsh_candidates(arrs: DataFrame) -> DataFrame:
@@ -481,7 +466,7 @@ def lsh_candidates(arrs: DataFrame) -> DataFrame:
     )
 
 
-def verified_pairs_of(arrs: DataFrame, owned: list | None = None) -> DataFrame:
+def verified_pairs_of(arrs: DataFrame) -> DataFrame:
     """_verified_pairs over an explicit (doc_id, ss) shingle-set relation —
     lets pipeline compositions run near-dup detection on an already
     filtered/exact-deduped corpus (see pipeline_clean_corpus).
@@ -503,19 +488,11 @@ def verified_pairs_of(arrs: DataFrame, owned: list | None = None) -> DataFrame:
     collision is the accepted failure model of every digest-keyed kernel
     in this module).
 
-    ``owned``: the digest-annotated pair set feeds BOTH the rep groupBy
-    and the verdict back-join; it is persisted (pair-grain, four longs a
-    row — bounded by the capped candidate count) so the bucket explode
-    runs once, and appended to ``owned`` for the caller's owned_result
-    release (same lifecycle contract as _verified_pairs' shingle cache).
-    Callers that pass no ``owned`` list get the unpersisted plan instead
-    (the explode recomputes once more; nothing leaks past the call) —
-    a persist with no owner would outlive the query (ADVICE r7 #1).
-    Documented and intentional (re-affirmed ADVICE r8 #4): all registry
-    queries pass ``owned``, so the unowned path is tests/ad-hoc only;
-    if its ~2x candidate-generation cost ever matters, switch the
-    unowned branch to ``cd.localCheckpoint()`` — self-releasing, so it
-    avoids both the leak and the recompute.
+    The digest-annotated pair set feeds BOTH the rep groupBy and the
+    verdict back-join; it is cached (pair-grain, four longs a row —
+    bounded by the capped candidate count) so the bucket explode runs
+    once. Outside a query build (tests, ad-hoc) ``cached`` leaves it
+    unpersisted and the explode recomputes once more.
 
     The canonical key is (xxhash64 of the sorted set, set size) — the
     size rider costs nothing (array_size of an already-built array) and
@@ -531,7 +508,7 @@ def verified_pairs_of(arrs: DataFrame, owned: list | None = None) -> DataFrame:
             F.array_size("ss").alias("n"),
         ).alias("dg"),
     )
-    cd = (
+    cd = cached(
         cand.join(
             dg.select(F.col("doc_id").alias("d1"), F.col("dg").alias("dg1")),
             "d1",
@@ -540,9 +517,6 @@ def verified_pairs_of(arrs: DataFrame, owned: list | None = None) -> DataFrame:
             "d2",
         )
     )
-    if owned is not None:
-        cd = cd.persist()
-        owned.append(cd)
     reps = top_k(cd, ["dg1", "dg2"], ["d1", "d2"], 1).select("dg1", "dg2", "d1", "d2")
     s1 = arrs.select(F.col("doc_id").alias("d1"), F.col("ss").alias("ss1"))
     s2 = arrs.select(F.col("doc_id").alias("d2"), F.col("ss").alias("ss2"))
@@ -900,14 +874,11 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB recursive CTE computing min reachable label — same
     fixpoint, declaratively.
     """
-    owned: list[DataFrame] = []
-    pairs = _verified_pairs(spark, sf_dir, owned).select("d1", "d2")
-    # the shingle cache is dead weight once the edge set materializes
-    # (min_label_components' eager localCheckpoint) — release it then,
-    # before the propagation rounds (VERDICT r6 #3)
-    labels = min_label_components(
-        pairs, after_edges=lambda: [c.unpersist() for c in owned]
-    )
+    pairs = _verified_pairs(spark, sf_dir).select("d1", "d2")
+    # the pair-stage caches are dead weight once the edge set materializes
+    # (min_label_components' eager localCheckpoint) — release them then,
+    # before the propagation rounds
+    labels = min_label_components(pairs, after_edges=release_cached)
     labels = labels.withColumnRenamed("label", "cluster_id")
     csize = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_docs"))
     return (
@@ -1087,12 +1058,11 @@ def dedup_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever paired.
     """
     t = Tables(spark, sf_dir)
-    owned: list[DataFrame] = []
-    pairs = _verified_pairs(spark, sf_dir, owned)
+    pairs = _verified_pairs(spark, sf_dir)
     a = t.documents.select(F.col("doc_id").alias("d1"), F.col("text").alias("ta"))
     b = t.documents.select(F.col("doc_id").alias("d2"), F.col("text").alias("tb"))
     ed = F.levenshtein("ta", "tb")
-    return owned_result(
+    return (
         pairs.join(a, "d1")
         .join(b, "d2")
         .select(
@@ -1107,8 +1077,7 @@ def dedup_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("edit_sim"),
         )
         .orderBy(F.desc("jaccard"), "d1", "d2")
-        .limit(100),
-        *owned,
+        .limit(100)
     )
 
 
@@ -1144,7 +1113,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted emission is machine-checked equivalent.
     """
     SPLIT = 250
-    arrs = _shingle_arrays(spark, sf_dir).cache()
+    arrs = cached(_shingle_arrays(spark, sf_dir))
     bands = _band_signatures(arrs)
     buckets = (
         bands.withColumn("is_new", F.col("doc_id") < SPLIT)
@@ -1179,7 +1148,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("common").cast("double") / (
         F.col("n1") + F.col("n2") - F.col("common")
     )
-    return owned_result(
+    return (
         cand.join(s1, "new_doc")
         .join(s2, "old_doc")
         .select(
@@ -1193,8 +1162,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("jaccard") >= 0.5)
         .select("new_doc", "old_doc", "jaccard")
         .orderBy(F.desc("jaccard"), "new_doc", "old_doc")
-        .limit(100),
-        arrs,
+        .limit(100)
     )
 
 
@@ -1463,21 +1431,17 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # md5 semi-join from the parquet scan (the r10-before plan re-scans
     # documents ~10x). Caching each stage once makes the funnel compute
     # every stage exactly once (guide §5: reuse beats recompute when the
-    # recompute is a corpus pass); owned_result releases both caches when
-    # the query's action completes.
-    clean0 = (
-        t.documents.select("doc_id", "text", "source").where(quality).cache()
-    )
+    # recompute is a corpus pass).
+    clean0 = cached(t.documents.select("doc_id", "text", "source").where(quality))
     exact_keep = (
         clean0.groupBy(F.md5("text"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    clean1 = clean0.join(exact_keep, "doc_id", "left_semi").cache()
-    arrs = shingle_arrays_of(clean1.select("doc_id", "text")).cache()
-    owned: list[DataFrame] = [clean0, clean1, arrs]
+    clean1 = cached(clean0.join(exact_keep, "doc_id", "left_semi"))
+    arrs = cached(shingle_arrays_of(clean1.select("doc_id", "text")))
     near_drop = (
-        verified_pairs_of(arrs, owned)
+        verified_pairs_of(arrs)
         .select(F.col("d2").alias("doc_id"))
         .distinct()
     )
@@ -1487,7 +1451,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df.groupBy("source").agg(F.count(F.lit(1)).alias(name))
 
     raw_s = _stage(t.documents, "n_raw")
-    return owned_result(
+    return (
         raw_s.join(_stage(clean0, "n_quality"), "source", "left")
         .join(_stage(clean1, "n_exact"), "source", "left")
         .join(_stage(clean2, "n_final"), "source", "left")
@@ -1501,8 +1465,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("n_final", F.lit(0)).cast("double") / F.col("n_raw")
             ).alias("keep_rate"),
         )
-        .orderBy("source"),
-        *owned,
+        .orderBy("source")
     )
 
 
@@ -1550,7 +1513,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     for candidates only; the exact side reuses the per-doc shingle-set
     arrays — both join build sides are doc-count-sized.
     """
-    arrs = _shingle_arrays(spark, sf_dir).cache()
+    arrs = cached(_shingle_arrays(spark, sf_dir))
     cand = lsh_candidates(arrs)
     mh = minhash_wide(arrs)
     m1 = mh.select(
@@ -1580,7 +1543,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("u", F.col("n1") + F.col("n2") - F.col("common"))
     )
-    return owned_result(
+    return (
         x.select(
             "d1",
             "d2",
@@ -1595,8 +1558,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("err_ppm"),
         )
         .orderBy(F.desc("err_ppm"), "d1", "d2")
-        .limit(100),
-        arrs,
+        .limit(100)
     )
 
 
@@ -1645,9 +1607,7 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs); the triangle join's fan-out is bounded by per-node degree
     — dup-cluster degrees, already capped upstream by MAX_BUCKET_DOCS.
     """
-    owned: list[DataFrame] = []
-    e = _verified_pairs(spark, sf_dir, owned).select("d1", "d2").cache()
-    owned.append(e)
+    e = cached(_verified_pairs(spark, sf_dir).select("d1", "d2"))
     tri = (
         e.alias("ab")
         .join(e.alias("bc"), F.col("ab.d2") == F.col("bc.d1"))
@@ -1671,7 +1631,7 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_nodes"),
     )
     ne = e.agg(F.count(F.lit(1)).alias("n_edges"))
-    return owned_result(
+    return (
         ne.crossJoin(F.broadcast(w))
         .crossJoin(F.broadcast(tri))
         .select(
@@ -1686,8 +1646,7 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0))
             .cast("bigint")
             .alias("clustering_ppm"),
-        ),
-        *owned,
+        )
     )
 
 
@@ -1942,13 +1901,10 @@ def dedup_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times (the degree count + both semi-join sides), so uncached the
     # final plan held 3^3 = 27 copies of the chunk-hash pair generation —
     # 224 Exchange nodes in the r10-before plan, all recomputed. Caching
-    # the edge set per round makes each peel compute its input once; the
-    # caches release when the query's action completes.
-    owned: list[DataFrame] = []
+    # the edge set per round makes each peel compute its input once.
     edges = pairs
     for _ in range(3):
-        edges = edges.cache()
-        owned.append(edges)
+        edges = cached(edges)
         alive = (
             edges.groupBy(F.col("d1").alias("u"))
             .agg(F.count(F.lit(1)).alias("deg"))
@@ -1965,15 +1921,14 @@ def dedup_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("deg_core"))
         .where(F.col("deg_core") >= 2)
     )
-    return owned_result(
+    return (
         dcore.join(deg0, "u")
         .select(
             F.col("u").alias("doc_id"),
             F.col("deg").alias("deg_initial"),
             "deg_core",
         )
-        .orderBy("doc_id"),
-        *owned,
+        .orderBy("doc_id")
     )
 
 
@@ -2459,11 +2414,7 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count is a parquet-footer metadata read, not a data scan).
     n_docs = Tables(spark, sf_dir).documents.count()
     p = max(1, n_docs // _TUNE_SAMPLE_TARGET)
-    arrs = (
-        _shingle_arrays(spark, sf_dir)
-        .where(F.col("doc_id") % p == 0)
-        .cache()
-    )
+    arrs = cached(_shingle_arrays(spark, sf_dir).where(F.col("doc_id") % p == 0))
     # cache the signature table too: the 4 config bandings union as
     # INDEPENDENT subplans, so without this each branch re-hashes all K
     # signatures over arrs (4x the md5 work — the sweep's dominant cost).
@@ -2472,11 +2423,10 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full shingle+md5 build with all cores busy — unlike the light
     # 1-task caches (see _verified_pairs), this build saturates the core
     # budget, so the redundant rebuilds cost real wall time (guide §5).
-    # The count() runs via owned_result's ``prepare`` hook — at the
-    # query's first ACTION, not at plan build, so explain/fingerprint
-    # tooling can construct the plan without executing the corpus job or
-    # pinning a materialized cache (ADVICE r10 #2).
-    mh = minhash_wide(arrs).cache()
+    # The count() runs right before the query's first ACTION (``prepare``),
+    # not at plan build, so explain/fingerprint tooling can construct the
+    # plan without executing the corpus job or pinning a materialized cache.
+    mh = cached(minhash_wide(arrs), prepare=True)
     per_config = []
     for b, r in _TUNE_CONFIGS:
         band_sigs = [
@@ -2550,7 +2500,7 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("b", "r")
         .agg(F.count(F.lit(1)).alias("n_true"))
     )
-    return owned_result(
+    return (
         counts.join(truth, ["b", "r"], "left")
         .select(
             F.col("b").alias("bands"),
@@ -2565,10 +2515,7 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.pow(F.lit(1.0) / F.col("b"), F.lit(1.0) / F.col("r")), 6
             ).alias("s_threshold"),
         )
-        .orderBy("rows_per_band"),
-        arrs,
-        mh,
-        prepare=lambda: mh.count(),
+        .orderBy("rows_per_band")
     )
 
 

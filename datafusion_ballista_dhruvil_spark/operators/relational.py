@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.functions.compat import dec2, dsum, sql_dsum
 from datafusion_ballista_dhruvil_spark.operators.registry import query
+from datafusion_ballista_dhruvil_spark.operators.scale import cached
 from datafusion_ballista_dhruvil_spark.session import Tables
 
 
@@ -535,20 +536,19 @@ def ops_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (6 copies of the column on one reducer, the few-groups
     collapse that dies at scale; it benched 19s at sf0.1 vs ~1s for this).
     """
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
-
     t = Tables(spark, sf_dir)
     # the (g, p, w) projection feeds BOTH weighted_quantile passes (the
     # histogram pass and the boundary-bucket resolve pass) — cache it so
     # the second pass reads ~10 bytes/row from memory instead of
     # re-scanning + re-decimal-converting lineitem (r11, guide §5; the
-    # ops_mad_outliers precedent). Released by owned_result on the
-    # query's own action.
-    staged = t.lineitem.select(
-        F.lit(1).alias("g"),
-        dec2("l_extendedprice").alias("p"),
-        F.lit(1).alias("w"),
-    ).cache()
+    # ops_mad_outliers precedent).
+    staged = cached(
+        t.lineitem.select(
+            F.lit(1).alias("g"),
+            dec2("l_extendedprice").alias("p"),
+            F.lit(1).alias("w"),
+        )
+    )
     bounds = weighted_quantile(
         staged,
         value="p",
@@ -581,7 +581,7 @@ def ops_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(lo).cast("double"), F.col(hi).cast("double")
         )
 
-    return owned_result(
+    return (
         agg.crossJoin(F.broadcast(exact)).crossJoin(F.broadcast(bounds)).select(
             "exact_parts",
             (
@@ -591,8 +591,7 @@ def ops_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             _within("_a25", "_lo25", "_hi25").alias("within_p25"),
             _within("_a50", "_lo50", "_hi50").alias("within_p50"),
             _within("_a75", "_lo75", "_hi75").alias("within_p75"),
-        ),
-        staged,
+        )
     )
 
 
@@ -1790,31 +1789,33 @@ def ops_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, and the broadcast cutoff table keys the final flagging pass
     map-side. All arithmetic is exact decimal until the two output casts.
     """
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
-
     t = Tables(spark, sf_dir)
     # staged feeds both weighted_quantile passes of the median (hist +
     # boundary-resolve scans) plus the deviation build; d feeds the MAD's
     # two passes plus the final flagging aggregate — uncached, each
     # consumer re-ran the decimal projection from the (single-split)
     # orders scan serially (guide §5 reuse; measured ~5 serialized
-    # 0.4-1.5s one-task stages per run). Caches release with the action.
-    staged = t.orders.select(
-        F.col("o_orderpriority").alias("g"),
-        dec2("o_totalprice").alias("p"),
-        F.lit(1).alias("w"),
-    ).cache()
+    # 0.4-1.5s one-task stages per run).
+    staged = cached(
+        t.orders.select(
+            F.col("o_orderpriority").alias("g"),
+            dec2("o_totalprice").alias("p"),
+            F.lit(1).alias("w"),
+        )
+    )
     medt = weighted_quantile(
         staged, value="p", weight="w", group_cols=["g"], qs={"med": (1, 2)}
     )
-    d = staged.join(F.broadcast(medt), "g").select(
-        "g", "p", "med", F.abs(F.col("p") - F.col("med")).alias("dev"),
-        F.lit(1).alias("w"),
-    ).cache()
+    d = cached(
+        staged.join(F.broadcast(medt), "g").select(
+            "g", "p", "med", F.abs(F.col("p") - F.col("med")).alias("dev"),
+            F.lit(1).alias("w"),
+        )
+    )
     madt = weighted_quantile(
         d, value="dev", weight="w", group_cols=["g"], qs={"mad": (1, 2)}
     )
-    return owned_result(
+    return (
         d.join(F.broadcast(madt), "g")
         .groupBy("g")
         .agg(
@@ -1826,9 +1827,7 @@ def ops_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_outliers"),
         )
         .withColumnRenamed("g", "priority")
-        .orderBy("priority"),
-        staged,
-        d,
+        .orderBy("priority")
     )
 
 

@@ -15,6 +15,7 @@ cases AQE can't fix alone:
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -301,24 +302,64 @@ def ops_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def owned_result(
-    df: DataFrame,
-    *caches: DataFrame,
-    prepare: Callable[[], object] | None = None,
-) -> DataFrame:
-    """Attach cache-lifecycle ownership to a query result (VERDICT r6 #3).
+#: ``scope``: the (cache, prepare) pairs of the query this thread is
+#: building, or None outside a build. Per thread, because the Flight and
+#: REST servers build queries on several threads at once.
+_build = threading.local()
 
-    Query builders persist corpus-sized intermediates that the returned
-    plan consumes several times (shingle arrays, minhash signatures,
-    candidate sets). Before r7 those caches were never unpersisted, so
-    the long-lived bench JVM accumulated dozens of cached tables whose
-    stochastic eviction made suite timing order-DEPENDENT (PERF.md r6
-    A/B: three no-clear suites read 284/316/347s with a different 5-10x
-    slow cluster each run), compensated at the protocol level by
-    clearCache+gc at family boundaries. Owning the lifecycle in the
-    query function makes timing order-independent by construction: the
-    returned DataFrame unpersists its upstream caches as soon as its own
-    terminal action (collect / toPandas / count) completes.
+
+def cached(df: DataFrame, prepare: bool = False) -> DataFrame:
+    """Persist ``df`` until the current query's action completes.
+
+    The one spelling for a builder intermediate that the returned plan
+    reads several times. Inside a build scope (every ``@query`` builder
+    runs in one, see ``owned_build``) the frame is cached and the scope
+    owns it; outside one (tests, ad-hoc helper calls) it is returned
+    unpersisted, because nothing would ever release it.
+
+    ``prepare``: materialize the cache with one ``count()`` job right
+    before the query's first action, never at plan build, so the
+    consumer subtrees of a saturating build do not race a cold cache
+    while plan-only tooling still builds the query without running it.
+    """
+    scope = getattr(_build, "scope", None)
+    if scope is None:
+        return df
+    scope.append((df.cache(), prepare))
+    return df
+
+
+def release_cached() -> None:
+    """Unpersist every cache the current build has made so far, for a
+    builder whose later stages no longer read them."""
+    scope = getattr(_build, "scope", None)
+    if scope:
+        _unpersist(c for c, _ in scope)
+        scope.clear()
+
+
+def _unpersist(caches) -> None:
+    for c in caches:
+        try:
+            c.unpersist()
+        except Exception:  # noqa: BLE001 — release must never mask the action's result
+            pass
+
+
+def owned_build(build: Callable[[], DataFrame]) -> DataFrame:
+    """Run one query build in a scope that owns every cache it makes.
+
+    Builders persist corpus-sized intermediates that the returned plan
+    consumes several times (shingle arrays, minhash signatures,
+    candidate sets), each through ``cached``. Left registered, such
+    caches accumulate in the long-lived session, and their stochastic
+    eviction made suite timing order-DEPENDENT (PERF.md r6: three
+    no-clear suites read 284/316/347 s with a different slow cluster
+    each run). The scope collects them; when the build cached
+    anything, the returned DataFrame unpersists them as soon as its own
+    terminal action (collect / toPandas / count) completes. A build
+    that caches nothing gets its frame back untouched. A build that
+    raises releases what it cached before the error propagates.
 
     persist/unpersist cannot change results — this is timing-only.
 
@@ -328,57 +369,53 @@ def owned_result(
     Release is idempotent; a second action on the same instance simply
     recomputes uncached (driver, bench, and pytest all build a fresh
     DataFrame per run, so in practice each cache lives for exactly one
-    materialization).
+    materialization). A failing action, or a failing ``prepare`` count,
+    still releases. ``toLocalIterator`` is not wrapped: it returns a
+    lazy iterator, so a release on return would fire before consumption.
 
-    Contract for plan-only consumers (ADVICE r8 #3): the .persist()
-    calls happen at plan-BUILD time, so a caller that never runs a
-    wrapped action (plan-fingerprint tooling, formatted_plan tests)
-    leaves the CacheManager registration in the long-lived session. An
-    unmaterialized persist holds no executor memory, but it changes
-    LATER plans: any query that shares the cached subtree plans an
-    InMemoryRelation whose size estimate exceeds the broadcast bar, so
-    its broadcasts flip to sort-merge. Measured: a plan-only build of
+    Contract for plan-only consumers: the caches register at plan-BUILD
+    time, so a caller that never runs a wrapped action
+    (plan-fingerprint tooling, formatted_plan tests) leaves them in the
+    session. An unmaterialized cache holds no executor memory, but it
+    changes LATER plans: any query that shares the cached subtree plans
+    an InMemoryRelation whose size estimate exceeds the broadcast bar,
+    so its broadcasts flip to sort-merge. Measured: a plan-only build of
     dedup_kcore_peel took dedup_chunk_pagerank's plan from 46 to 53
-    exchanges (and ev_lttb_downsample's from 24 to 29 after its
-    predecessors). A caller that reads the plan without running an
-    action must call the returned DataFrame's ``release_owned()``;
-    ``plans.inspect.fingerprints`` does so after every query.
+    exchanges. A caller that reads the plan without running an action
+    must call the returned DataFrame's ``release_owned()`` when it has
+    one; ``plans.inspect.fingerprints`` does so after every query.
 
-    ``prepare`` (r11, ADVICE r10 #2): optional callable invoked once,
-    immediately before the FIRST wrapped action runs. Queries that want a
-    shared cache eager-materialized (so concurrent consumer subtrees don't
-    race a cold cache) put the materializing ``count()`` here instead of at
-    plan-BUILD time — plan-only consumers (explain/fingerprint tooling)
-    then construct the query without executing a corpus-sized job or
-    pinning a materialized cache in the long-lived session.
+    A build nested in another (a builder calling a builder) adds its
+    caches to the outer scope, which owns the frame the outer returns.
     """
-    released = False
-    prepared = prepare is None
-
-    def _prepare_once() -> None:
-        nonlocal prepared
-        if prepared:
-            return
-        prepared = True
-        prepare()
+    if getattr(_build, "scope", None) is not None:
+        return build()
+    scope: list[tuple[DataFrame, bool]] = []
+    _build.scope = scope
+    try:
+        df = build()
+    except BaseException:
+        release_cached()
+        raise
+    finally:
+        _build.scope = None
+    if not scope:
+        return df
+    caches = [c for c, _ in scope]
+    warm = [c for c, prepare in scope if prepare]
 
     def _release() -> None:
-        nonlocal released
-        if released:
-            return
-        released = True
-        for c in caches:
-            try:
-                c.unpersist()
-            except Exception:  # noqa: BLE001 — release must never mask the action's result
-                pass
+        _unpersist(caches)
+        caches.clear()
+        warm.clear()
 
     def _wrap(name: str):
         orig = getattr(df, name)
 
         def wrapped(*a, **k):
             try:
-                _prepare_once()
+                while warm:
+                    warm.pop(0).count()
                 return orig(*a, **k)
             finally:
                 _release()
@@ -386,10 +423,7 @@ def owned_result(
         wrapped.__name__ = name
         return wrapped
 
-    # toLocalIterator is deliberately NOT wrapped: it returns a lazy
-    # iterator, so a finally-release would fire before consumption.
     for name in ("collect", "toPandas", "count"):
         setattr(df, name, _wrap(name))
-    # explicit path for plan-only consumers (see docstring contract)
     df.release_owned = _release
     return df

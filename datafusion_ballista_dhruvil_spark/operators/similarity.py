@@ -37,7 +37,7 @@ from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
+from datafusion_ballista_dhruvil_spark.operators.scale import cached, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables, local_frame
 
 # elements quantize to round(x * 1e7) (away-from-zero, matching Spark's
@@ -1150,32 +1150,26 @@ def sim_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # held ~27 copies of round 1's work — 126 Exchange nodes in the
     # r10-before plan, recomputed because Catalyst has no common-subplan
     # elimination between exchanges. Caching ecomp/eself once and cent
-    # per round keeps each iteration's work computed exactly once; all
-    # caches release when the query's action completes (owned_result).
-    owned: list[DataFrame] = []
-    ecomp = (
+    # per round keeps each iteration's work computed exactly once.
+    ecomp = cached(
         t.embeddings.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
         .select(
             "vec_id",
             "pos",
             F.round(F.col("x").cast("double") * 10000000).cast("long").alias("qi"),
         )
-        .cache()
     )
-    owned.append(ecomp)
-    eself = (
-        ecomp.groupBy("vec_id")
-        .agg(F.sum(F.col("qi") * F.col("qi")).cast("long").alias("selfq"))
-        .cache()
+    eself = cached(
+        ecomp.groupBy("vec_id").agg(
+            F.sum(F.col("qi") * F.col("qi")).cast("long").alias("selfq")
+        )
     )
-    owned.append(eself)
     cent = ecomp.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), "pos", F.col("qi").alias("cq")
     )
     assign = None
     for _ in range(3):
-        cent = cent.cache()
-        owned.append(cent)
+        cent = cached(cent)
         cself = cent.groupBy("cid").agg(
             F.sum(F.col("cq") * F.col("cq")).cast("long").alias("cselfq")
         )
@@ -1200,15 +1194,14 @@ def sim_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("cq")
             )
         )
-    return owned_result(
+    return (
         assign.groupBy(F.col("cid").alias("cluster"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vecs"),
             F.sum("d").cast("long").alias("inertia_q"),
             F.min("vec_id").alias("min_vec"),
         )
-        .orderBy("cluster"),
-        *owned,
+        .orderBy("cluster")
     )
 
 
@@ -3017,10 +3010,10 @@ def sim_cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (cid x label) contingency table feeds FIVE consumers (both
     # marginals, the total, the MI sum, purity) — persist the bounded
     # K x labels grain so the corpus-wide assignment (distance agg +
-    # map-side argmin) runs once (r8 sweep, VERDICT r7 #2)
-    ct = asg.groupBy("cid", "label").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cl")
-    ).persist()
+    # map-side argmin) runs once
+    ct = cached(
+        asg.groupBy("cid", "label").agg(F.count(F.lit(1)).cast("bigint").alias("n_cl"))
+    )
     nc = ct.groupBy("cid").agg(F.sum("n_cl").cast("bigint").alias("n_c"))
     nl = ct.groupBy("label").agg(F.sum("n_cl").cast("bigint").alias("n_l"))
     tot = ct.agg(F.sum("n_cl").cast("bigint").alias("n"))
@@ -3068,7 +3061,7 @@ def sim_cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     kc = nc.agg(F.count(F.lit(1)).alias("n_clusters"))
     kl = nl.agg(F.count(F.lit(1)).alias("n_labels"))
 
-    return owned_result(
+    return (
         tot.crossJoin(pur)
         .crossJoin(i)
         .crossJoin(hc)
@@ -3086,8 +3079,7 @@ def sim_cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "CAST(2 * i_num AS DOUBLE) / CAST(hc_num + hl_num AS DOUBLE)"
             ).alias("nmi"),
-        ),
-        ct,
+        )
     )
 
 
@@ -3235,11 +3227,9 @@ def sim_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for d in range(_PI_DIMS)
             ]
     finally:
-        # the returned 16-row frame never references qv, so owned_result's
-        # release-on-action would never fire for plan-only consumers and
-        # the materialized corpus-sized cache would pin the long-lived
-        # session (ADVICE r10 #1); the fixed point is done with the corpus
-        # HERE, so release synchronously.
+        # the returned 16-row frame never references qv, and the fixed
+        # point is done with the corpus HERE: release synchronously rather
+        # than pin the materialized corpus-sized cache until an action.
         qv.unpersist()
     nv = math.sqrt(float(sum(x * x for x in v)))
     rows = [

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
+from datafusion_ballista_dhruvil_spark.operators.scale import cached, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables, local_frame
 
 #: tiny embedded stopword list (documents use a synthetic lowercase vocab)
@@ -1824,14 +1824,12 @@ def text_source_entropy_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     # the (lang, tok) vocab aggregate feeds THREE consumers (corpus
-    # vocab, per-lang totals, the log join) — persist the bounded
-    # vocabulary grain so the corpus explode+agg runs once, released
-    # via owned_result (r8 sweep, VERDICT r7 #2)
-    v = (
+    # vocab, per-lang totals, the log join) — cache the bounded
+    # vocabulary grain so the corpus explode+agg runs once
+    v = cached(
         t.documents.select("lang", F.explode(_toks()).alias("tok"))
         .groupBy("lang", "tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
-        .persist()
     )
     c = v.groupBy("tok").agg(F.sum("f").cast("bigint").alias("cf"))
     tl = v.groupBy("lang").agg(F.sum("f").cast("bigint").alias("tot"))
@@ -1872,7 +1870,7 @@ def text_source_entropy_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("kl_bits"),
         )
     )
-    return owned_result(out.orderBy("lang"), v)
+    return out.orderBy("lang")
 
 
 # --------------------------------------------------------------------------

@@ -116,7 +116,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
+from datafusion_ballista_dhruvil_spark.operators.scale import cached, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables
 
 #: scaled-integer revenue: dollars x 1e6 as BIGINT (see module docstring)
@@ -2184,11 +2184,11 @@ def tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
     decides); the orderkey join is the co-partitioned fact join. The
     year self-join runs over the ALREADY-AGGREGATED bounded
     (brand x nation) grain — a tiny broadcast join, never a second fact
-    pass: the two year slices come from ONE persisted aggregate (the
-    fact chain runs once; owned_result releases it)."""
+    pass: the two year slices come from ONE cached aggregate (the
+    fact chain runs once)."""
     t = Tables(spark, sf_dir)
     yr = F.year("o_orderdate")
-    agg = (
+    agg = cached(
         t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .where(yr.isin(1996, 1997))
         .join(t.part, F.col("l_partkey") == F.col("p_partkey"))
@@ -2206,7 +2206,6 @@ def tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("cnt"),
             F.sum(F.expr(_REV6)).cast("bigint").alias("rev6"),
         )
-        .persist()
     )
     a1 = agg.where(F.col("yr") == 1996).select(
         "p_brand", "n_name",
@@ -2216,7 +2215,7 @@ def tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_brand").alias("pb2"), F.col("n_name").alias("nn2"),
         F.col("cnt").alias("cnt2"), F.col("rev6").alias("rev6_2"),
     )
-    return owned_result(
+    return (
         a1.join(
             a2,
             (F.col("p_brand") == F.col("pb2"))
@@ -2224,8 +2223,7 @@ def tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("cnt2") <= F.col("cnt1")),
         )
         .select("p_brand", "n_name", "cnt1", "rev6_1", "cnt2", "rev6_2")
-        .orderBy("p_brand", "n_name"),
-        agg,
+        .orderBy("p_brand", "n_name")
     )
 
 
@@ -2530,12 +2528,11 @@ def tpcds_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # both self-join sides read the SAME bounded (brand x month) stats —
-    # persist so the fact chain runs once (the q64 pattern), released via
-    # owned_result
-    st = (
-        inv.where((F.col("n") > 1) & (F.col("sq") > 0))
-        .select("p_brand", "mo", F.expr(_COV_PPM).alias("cov_ppm"))
-        .persist()
+    # cache so the fact chain runs once (the q64 pattern)
+    st = cached(
+        inv.where((F.col("n") > 1) & (F.col("sq") > 0)).select(
+            "p_brand", "mo", F.expr(_COV_PPM).alias("cov_ppm")
+        )
     )
     a = st.select("p_brand", F.col("mo").alias("mo1"), F.col("cov_ppm").alias("cov1"))
     b = st.select(
@@ -2544,7 +2541,7 @@ def tpcds_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cov_ppm").alias("cov2"),
     )
 
-    return owned_result(
+    return (
         a.join(
             b,
             (F.col("p_brand") == F.col("pb2"))
@@ -2552,8 +2549,7 @@ def tpcds_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where((F.col("cov1") > 500000) & (F.col("cov2") > 500000))
         .select("p_brand", "mo1", "cov1", "mo2", "cov2")
-        .orderBy("p_brand", "mo1"),
-        st,
+        .orderBy("p_brand", "mo1")
     )
 
 

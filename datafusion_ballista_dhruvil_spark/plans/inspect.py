@@ -18,7 +18,8 @@ planner.rs:59-166); Spark does it automatically — so our plan QA is not
 Node counts read the TREE section of the formatted plan only: each node
 is named there and again in its numbered detail section, so a substring
 count of a node name counts it twice. The tree repeats a cached plan
-under every InMemoryTableScan of it, so its nodes count once per scan.
+under every InMemoryTableScan of it with the same operator ids, so a
+node is counted once per id, not once per tree line.
 """
 
 from __future__ import annotations
@@ -75,16 +76,19 @@ def codegen_span_count(df: DataFrame) -> int:
 
 
 #: tree lines in `formatted` mode end with the node id: "Name [quals] (7)";
-#: detail headers START with "(7) Name" and never match this
-_TREE_LINE = re.compile(r"^[\s+:*-]*([A-Za-z][A-Za-z0-9 ]*?)(?: \[.*?\])? \(\d+\)\s*$")
+#: detail headers START with "(7) Name" and never match this. Node text may
+#: hold a catalog name ("Scan parquet spark_catalog.default.t (1)").
+_TREE_LINE = re.compile(r"^[\s+:*-]*([A-Za-z][A-Za-z0-9 _.]*?)(?: \[.*?\])? \((\d+)\)\s*$")
 
 
 def tree_nodes(plan: str) -> list[str]:
-    """Physical node names of a formatted plan's tree, one per node."""
+    """Physical node names of a formatted plan's tree, one per operator id."""
     out = []
+    seen = set()
     for line in plan.splitlines():
         m = _TREE_LINE.match(line)
-        if m:
+        if m and m.group(2) not in seen:
+            seen.add(m.group(2))
             # first word = physical node name ("BroadcastHashJoin Inner
             # BuildRight" -> BroadcastHashJoin; "Scan parquet" stays 2 words)
             name = m.group(1).rstrip()
@@ -172,8 +176,8 @@ def fingerprints(
     """``node_counts`` of each named registry query, built plan-only and in
     the given order; a query whose build fails reads ``{"error": 1}``.
 
-    A builder wrapped by ``owned_result`` registers its caches at build
-    time. Each query's registrations are released before the next one is
+    A builder's ``scale.cached`` intermediates register at build time.
+    Each query's registrations are released before the next one is
     built: left in place, a later plan reads an InMemoryRelation whose
     size estimate flips broadcasts to sort-merge, and a fingerprint then
     depends on which queries were built before it."""

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.functions.compat import dsum
 from datafusion_ballista_dhruvil_spark.operators.registry import query
-from datafusion_ballista_dhruvil_spark.operators.scale import owned_result, top_k
+from datafusion_ballista_dhruvil_spark.operators.scale import cached, top_k
 from datafusion_ballista_dhruvil_spark.session import Tables, local_frame, stream_events
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
@@ -1310,15 +1310,15 @@ def ev_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-user purchase aggregate ``u`` feeds multiple consumers (the
     exploded metric long-form, read by the quantile's histogram and
     resolve passes plus the score join, and the final segment join); it
-    is persisted and released via owned_result (VERDICT r7 #2 — relying
-    on AQE exchange reuse recomputed the events scan + groupBy up to 4x).
+    is cached (relying on AQE exchange reuse recomputed the events scan
+    + groupBy up to 4x).
     """
     from datafusion_ballista_dhruvil_spark.operators.relational import (
         weighted_quantile,
     )
 
     t = Tables(spark, sf_dir)
-    u = (
+    u = cached(
         t.events.where(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(
@@ -1330,7 +1330,6 @@ def ev_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("m_val"),
         )
-        .persist()
     )
     # one explode pass over the cached aggregate (not a 3-way union: same
     # rows, but each downstream consumer reads the cache ONCE instead of
@@ -1373,15 +1372,14 @@ def ev_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("metric") == "f", F.col("raw"))).alias("f_score"),
         F.max(F.when(F.col("metric") == "m", F.col("raw"))).alias("m_score"),
     )
-    return owned_result(
+    return (
         wide.join(u, "user_id")
         .groupBy("r_score", "f_score", "m_score")
         .agg(
             F.count(F.lit(1)).alias("n_users"),
             F.sum("m_val").cast("bigint").alias("sum_mon_cents"),
         )
-        .orderBy("r_score", "f_score", "m_score"),
-        u,
+        .orderBy("r_score", "f_score", "m_score")
     )
 
 
@@ -2161,11 +2159,11 @@ def ev_chisquare_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(unix_micros(ts) div 86400000000 + 4) % 7").alias("dow"),
     )
     # the 35-cell contingency table feeds FOUR consumers (row/col/total
-    # marginals + the contrib join); persist it so the events scan+agg
-    # runs once, released via owned_result (r8 sweep, VERDICT r7 #2)
-    cells = e.groupBy("event_type", "dow").agg(
-        F.count(F.lit(1)).cast("bigint").alias("obs")
-    ).persist()
+    # marginals + the contrib join); cache it so the events scan+agg
+    # runs once
+    cells = cached(
+        e.groupBy("event_type", "dow").agg(F.count(F.lit(1)).cast("bigint").alias("obs"))
+    )
     rt = cells.groupBy("event_type").agg(F.sum("obs").cast("bigint").alias("rt"))
     ct = cells.groupBy("dow").agg(F.sum("obs").cast("bigint").alias("ct"))
     tot = cells.agg(F.sum("obs").cast("bigint").alias("n"))
@@ -2176,14 +2174,13 @@ def ev_chisquare_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", F.expr(_CHI_CELL).alias("contrib_q6"))
     )
 
-    return owned_result(
+    return (
         q.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_cells"),
             F.sum("contrib_q6").cast("bigint").alias("row_chi2_q6"),
         )
-        .orderBy("event_type"),
-        cells,
+        .orderBy("event_type")
     )
 
 
@@ -2404,11 +2401,9 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("event_type").over(w).alias("dst"),
     ).where(F.col("dst").isNotNull())
     # the K^2-row transition matrix feeds the row-normalize, the state
-    # init, AND every unrolled iteration's join — persist so the events
-    # scan + lead window runs once (r8 sweep, VERDICT r7 #2)
-    tm = nxt.groupBy("src", "dst").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    ).persist()
+    # init, AND every unrolled iteration's join — cache so the events
+    # scan + lead window runs once
+    tm = cached(nxt.groupBy("src", "dst").agg(F.count(F.lit(1)).cast("bigint").alias("n")))
     wsrc = Window.partitionBy("src")
     p = tm.select(
         "src",
@@ -2436,14 +2431,13 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i == 0:
             pi1 = pi
 
-    return owned_result(
+    return (
         pi.join(
             pi1.select(F.col("state").alias("s1"), F.col("pi").alias("pi_ppm_iter1")),
             F.col("state") == F.col("s1"),
         )
         .select("state", F.col("pi").alias("pi_ppm"), "pi_ppm_iter1")
-        .orderBy("state"),
-        tm,
+        .orderBy("state")
     )
 
 
@@ -3536,11 +3530,13 @@ def ev_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mn = daily.agg(F.min("d").alias("d0"))
     # the bucketed (type, day) points feed FOUR consumers (bucket sums,
-    # bounds, the mid-argmax join, the edge picker) — persist the bounded
-    # daily grain so the events scan+agg runs once (r8 sweep, VERDICT r7 #2)
-    pts = daily.crossJoin(F.broadcast(mn)).select(
-        "event_type", "d", "v", F.expr("(d - d0) DIV 3").alias("b")
-    ).persist()
+    # bounds, the mid-argmax join, the edge picker) — cache the bounded
+    # daily grain so the events scan+agg runs once
+    pts = cached(
+        daily.crossJoin(F.broadcast(mn)).select(
+            "event_type", "d", "v", F.expr("(d - d0) DIV 3").alias("b")
+        )
+    )
     bs = pts.groupBy("event_type", "b").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("d").alias("sx"),
@@ -3587,14 +3583,13 @@ def ev_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    return owned_result(
+    return (
         sel_mid.unionAll(sel_edge)
         .select(
             "event_type", F.col("b").alias("bucket"),
             F.col("d").alias("day_index"), F.col("v").alias("v_cents"), "role",
         )
-        .orderBy("event_type", "day_index"),
-        pts,
+        .orderBy("event_type", "day_index")
     )
 
 
@@ -3661,18 +3656,19 @@ def ev_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges two <=|types|-row sides.
     """
     t = Tables(spark, sf_dir)
-    daily = t.events.groupBy(
-        "event_type",
-        F.datediff(
-            F.date_trunc("day", F.col("ts")).cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("long")
-        .alias("d"),
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("v_cents")).persist()
-    # ^ the bounded (type, day) rows feed the pair self-join's BOTH sides
-    # plus the tie-count pass — persist so the events scan+agg runs once
-    # (r8 sweep, VERDICT r7 #2)
+    # the bounded (type, day) rows feed the pair self-join's BOTH sides
+    # plus the tie-count pass — cache so the events scan+agg runs once
+    daily = cached(
+        t.events.groupBy(
+            "event_type",
+            F.datediff(
+                F.date_trunc("day", F.col("ts")).cast("date"),
+                F.lit("1970-01-01").cast("date"),
+            )
+            .cast("long")
+            .alias("d"),
+        ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("v_cents"))
+    )
     a = daily.select(
         "event_type", F.col("d").alias("da"), F.col("v_cents").alias("va")
     )
@@ -3713,7 +3709,7 @@ def ev_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     denom = F.sqrt(var18.cast("double") / F.lit(18.0))
 
-    return owned_result(
+    return (
         pairs.join(ties, "event_type")
         .select(
             "event_type",
@@ -3731,8 +3727,7 @@ def ev_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0.0))
             .alias("z_score"),
         )
-        .orderBy("event_type"),
-        daily,
+        .orderBy("event_type")
     )
 
 

@@ -10,7 +10,7 @@ exchanges) pass; re-baseline to lock them in.
 
 The sweep is ``plans.inspect.fingerprints``, the same one the tool runs.
 It starts from a session with no cached relations: a cache registered by
-an earlier test (a plan-only build through ``owned_result``) would flip
+an earlier test (a plan-only build of a query that caches) would flip
 later plans' broadcasts to sort-merge and fail the gate on no change.
 
 Baseline regeneration (deliberate, reviewed, committed):

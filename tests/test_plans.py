@@ -953,3 +953,33 @@ def test_r10_tpcds_shapes(spark):
     p36 = formatted_plan(QUERIES["tpcds_q36_deep"](spark, SF_DIR))
     assert "Expand" in p36 and "Window" in p36
     assert p36.count("lineitem") <= 2, "q36_deep re-scans the fact"
+
+
+def test_cached_subtree_counts_once(spark):
+    """The formatted tree repeats a cached plan under every
+    InMemoryTableScan of it, with the same operator ids: its nodes count
+    once per id, not once per scan."""
+    import re
+
+    c = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).agg(
+        F.count(F.lit(1)).alias("n")
+    ).cache()
+    try:
+        other = c.select(F.col("k").alias("k2"), F.col("n").alias("n2"))
+        plan = formatted_plan(c.join(other, F.col("k") == F.col("k2")))
+        assert len(re.findall(r"\+- Exchange \(\d+\)", plan)) == 2, plan
+        assert tree_nodes(plan).count("Exchange") == 1
+    finally:
+        c.unpersist()
+
+
+def test_catalog_table_scan_counts_as_scan(spark):
+    """A catalog table's scan names the table in its tree line
+    ("Scan parquet spark_catalog.default.t"); it is still a scan."""
+    spark.sql("DROP TABLE IF EXISTS plan_scan_t")
+    spark.range(10).write.saveAsTable("plan_scan_t")
+    try:
+        plan = formatted_plan(spark.table("plan_scan_t").agg(F.sum("id")))
+        assert node_counts(plan)["scans"] == 1, plan
+    finally:
+        spark.sql("DROP TABLE plan_scan_t")

@@ -245,51 +245,58 @@ def test_spill_resilience(tmp_path):
 
 
 def test_cache_lifecycle_no_leaks(spark):
-    """r8 (ADVICE r7 #1): the persist ledger must balance on BOTH kernel
-    paths — an UNOWNED call (no owned list: tests, ad-hoc) gets the
-    plain plan and persists nothing; an OWNED query (owned_result)
-    releases every cache when its own action completes. Either failure
-    re-opens the r6 leak pathology (stochastic eviction made suite
-    timing order-dependent)."""
-    import time as _time
-
+    """The cache ledger must balance on both paths: outside a build scope
+    (an ad-hoc helper call) ``cached`` persists nothing; a registry query
+    releases every cache it made when its own action completes, and a
+    query that caches nothing gets its frame back untouched. A leak
+    re-opens the r6 pathology (stochastic eviction made suite timing
+    order-dependent). A cache entry is removed synchronously (only the
+    RDD unpersist is asynchronous), so the entry count is exact."""
     from datafusion_ballista_dhruvil_spark.operators.dedup import _verified_pairs
     from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
 
-    jsc = spark.sparkContext._jsc
+    # start from no cached relations: an earlier test's plan-only build
+    # may have registered the same shingle plan, and unpersisting one of
+    # two identical plans drops their shared entry
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    _verified_pairs(spark, SF_DIR).collect()  # outside a scope
+    assert cm.numCachedEntries() == before
+    df = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+    assert cm.numCachedEntries() > before  # the shingle and candidate caches
+    df.collect()
+    assert cm.numCachedEntries() == before
+    assert not hasattr(QUERIES["dedup_simhash"](spark, SF_DIR), "release_owned")
 
-    def persisted_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
 
-    # the assertion is on NEW ids only: other tests' leftover caches may
-    # be asynchronously released mid-test (unpersist is async-marked),
-    # so an exact count comparison flakes — what this gate owns is that
-    # THESE two calls leave nothing behind
-    before = persisted_ids()
-    _verified_pairs(spark, SF_DIR).collect()          # unowned path
-    QUERIES["dedup_minhash_lsh"](spark, SF_DIR).collect()  # owned path
-    leaked = set()
-    for _ in range(20):
-        leaked = persisted_ids() - before
-        if not leaked:
-            break
-        _time.sleep(0.25)
-    assert not leaked, f"persisted RDDs leaked by the two calls: {leaked}"
+def _run_throwaway_query(spark, build):
+    """Register ``build`` under a throwaway name, build it through the
+    registry, and remove it again."""
+    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES, query
+
+    name = "_test_build_scope"
+    try:
+        return query(name)(build)(spark, SF_DIR)
+    finally:
+        QUERIES.pop(name)
 
 
 def test_owned_result_prepare_fires_once_at_first_action(spark):
-    """r11 (ADVICE r10 #2): eager cache materialization moved from
-    plan-BUILD time into owned_result's ``prepare`` hook — plan-only
-    consumers (explain/fingerprint tooling) must construct the query
-    without executing it; the first real action runs prepare exactly
-    once, before the action."""
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
+    """``cached(df, prepare=True)`` materializes the cache right before
+    the query's first action, not at plan build: plan-only consumers
+    (explain/fingerprint tooling) construct the query without executing
+    it, and the first real action runs the count exactly once."""
+    from datafusion_ballista_dhruvil_spark.operators.scale import cached
 
     calls: list[int] = []
-    df = owned_result(
-        spark.range(10).selectExpr("sum(id) AS s"),
-        prepare=lambda: calls.append(1),
-    )
+
+    def build(spark, sf_dir):
+        c = cached(spark.range(10).selectExpr("id AS x"), prepare=True)
+        c.count = lambda: calls.append(1)  # observe the materializing count
+        return c.selectExpr("sum(x) AS s")
+
+    df = _run_throwaway_query(spark, build)
     # plan-only consumption (schema/explain) must not trigger prepare
     _ = df.schema
     assert calls == []
@@ -300,32 +307,45 @@ def test_owned_result_prepare_fires_once_at_first_action(spark):
 
 
 def test_owned_result_releases_caches_when_prepare_raises(spark):
-    """A failing ``prepare`` must not leak the owned caches into the
-    long-lived session: release runs on that error path too."""
-    import time as _time
+    """A failing ``prepare`` count must not leak the query's caches into
+    the long-lived session: release runs on that error path too."""
+    from datafusion_ballista_dhruvil_spark.operators.scale import cached
 
-    from datafusion_ballista_dhruvil_spark.operators.scale import owned_result
-
-    jsc = spark.sparkContext._jsc
-
-    def persisted_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    before = persisted_ids()
-    cache = spark.range(100).selectExpr("id * 2 AS x").persist()
-    cache.count()
-    assert persisted_ids() - before
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
 
     def prepare():
         raise RuntimeError("prepare failed")
 
-    df = owned_result(cache.selectExpr("sum(x) AS s"), cache, prepare=prepare)
+    def build(spark, sf_dir):
+        c = cached(spark.range(100).selectExpr("id * 2 AS x"), prepare=True)
+        c.count = prepare
+        return c.selectExpr("sum(x) AS s")
+
+    df = _run_throwaway_query(spark, build)
+    assert cm.numCachedEntries() == before + 1
     with pytest.raises(RuntimeError, match="prepare failed"):
         df.collect()
-    leaked = set()
-    for _ in range(20):
-        leaked = persisted_ids() - before
-        if not leaked:
-            break
-        _time.sleep(0.25)
-    assert not leaked, f"persisted RDDs leaked by a failing prepare: {leaked}"
+    assert cm.numCachedEntries() == before
+
+
+def test_build_scope_releases_caches_when_build_raises(spark):
+    """A builder that raises after caching leaves no cache entry behind:
+    the registry's build scope releases what it collected."""
+    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
+    from datafusion_ballista_dhruvil_spark.operators.scale import cached
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    seen: list[int] = []
+
+    def build(spark, sf_dir):
+        cached(spark.range(7).selectExpr("id * 3 AS x"))
+        seen.append(cm.numCachedEntries())
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        _run_throwaway_query(spark, build)
+    assert seen == [before + 1]
+    assert cm.numCachedEntries() == before
+    assert "_test_build_scope" not in QUERIES

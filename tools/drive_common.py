@@ -39,10 +39,15 @@ def make_duckdb(sf_dir: str):
 def compare_all(spark, con, queries, oracles, names, sf_dir: str) -> int:
     """Run each named query on Spark and its oracle on DuckDB, compare
     canonically, print per-query results and a summary; return the number
-    of failures."""
+    of failures.
+
+    A query that leaves more Dataset cache entries registered after its
+    collect (or its failed build) than before its build fails as LEAK."""
     fails = []
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     t0 = time.time()
     for name in names:
+        cached_before = cache_manager.numCachedEntries()
         try:
             sdf = queries[name](spark, sf_dir)
             scols = [c.lower() for c in sdf.columns]
@@ -72,6 +77,10 @@ def compare_all(spark, con, queries, oracles, names, sf_dir: str) -> int:
                 print(f"{name}: MATCH {len(sn)} rows", flush=True)
         except Exception as ex:  # noqa: BLE001 — reported per query
             fails.append((name, f"{type(ex).__name__}: {str(ex)[:200]}"))
+        finally:
+            grown = cache_manager.numCachedEntries() - cached_before
+            if grown > 0:
+                fails.append((name, f"LEAK {grown} cache entries left registered"))
     print(f"\n{len(names)} queries in {time.time() - t0:.1f}s; {len(fails)} failures")
     for n, m in fails:
         print("FAIL", n, m)

@@ -160,9 +160,9 @@ def main() -> int:
         # k under query k-1's un-collected litter. (The r9 sf1 sweep's
         # broadcast OOM at dedup_ngram_jaccard was NOT this — it reproduces
         # on a fresh JVM: the shared-key copy corpus grows that query's
-        # exact all-pairs set ~quadratically; see PERF.md r9. Queries own
-        # their caches via owned_result, so this clear never drops a
-        # semantic cache mid-query.)
+        # exact all-pairs set ~quadratically; see PERF.md r9. The registry's
+        # build scope releases each query's caches when its collect
+        # completes, so this clear never drops a cache mid-query.)
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         fn(spark, SRC).collect()  # warm both paths
