@@ -540,10 +540,6 @@ def verified_pairs_of(arrs: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-def _simhash_bits() -> int:
-    return 16
-
-
 @query(
     "dedup_simhash",
     oracle="""

@@ -12,6 +12,19 @@ an exact-DECIMAL ``zip_with``+``aggregate`` fold: per-element lambda
 evaluation in Spark's higher-order functions is interpreted, and the Arrow
 batch path measured 5.3x faster on the same 40k-pair workload (PERF.md).
 
+Shared kernels — each shape has one definition, which every builder calls:
+- ``_quantize`` / ``_norms``: scale-7 int64 rows and their norms
+  sqrt(<q,q>/1e14); ``_collect_quantized`` does both for a bounded
+  driver-side collect sorted by id;
+- ``_cosines``: the exact cosine matrix. Its operation order — int64 dot,
+  ->double /1e14, then /(norm_a*norm_b) — is the oracles' order, and is
+  what keeps every cosine bit-identical to the SQL; never reassociate it;
+- ``_probe_top_k``: a closure-shipped probe matrix against the streamed
+  corpus, one per-batch partial top-k finished by ``scale.top_k``;
+- ``_centroid_sq_dists``: exact integer squared L2 of every vector to K=8
+  broadcast centroids, ranked by each caller;
+- ``_pq_encode``: per-subspace PQ argmin codes.
+
 Scale posture at 100 TB:
 - norms are precomputed ONCE per row before any join (norm work is O(N),
   pair work is O(pairs) x one dot product — recomputing norms per pair
@@ -61,14 +74,39 @@ def _round_half_away(x: np.ndarray) -> np.ndarray:
     return (np.sign(x) * mag).astype(np.int64)
 
 
+def _quantize(vectors) -> np.ndarray:
+    """Scale-7 int64 matrix of a sequence of float vectors, one row each
+    (collected Python lists or an Arrow batch's float32 arrays alike)."""
+    return _round_half_away(np.stack(vectors).astype(np.float64) * _SCALE)
+
+
+def _norms(q: np.ndarray) -> np.ndarray:
+    """Row norms sqrt(<q,q> / 1e14) of a quantized matrix."""
+    return np.sqrt(np.einsum("ij,ij->i", q, q) / _SCALE_SQ)
+
+
+def _cosines(
+    a: np.ndarray, an: np.ndarray, b: np.ndarray, bn: np.ndarray
+) -> np.ndarray:
+    """|a| x |b| cosine matrix of quantized rows and their norms. The op
+    order IS the oracles' — exact int64 dot, ->double /1e14, then
+    /(an*bn) — so every cosine is bit-identical to the SQL's."""
+    return (a @ b.T) / _SCALE_SQ / (an[:, None] * bn[None, :])
+
+
+def _collect_quantized(rows: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Collect a bounded (id, embedding) frame to the driver, sorted by id:
+    (ids, quantized matrix) for shipping in a map-side closure."""
+    got = sorted(rows.collect(), key=lambda r: r[0])
+    ids = np.array([r[0] for r in got], dtype=np.int64)
+    return ids, _quantize([r[1] for r in got])
+
+
 @pandas_udf(LongType())
 def _dot7(a: pd.Series, b: pd.Series) -> pd.Series:
     if len(a) == 0:
         return pd.Series([], dtype="int64")
-    am = np.stack(a.to_numpy()).astype(np.float64) * _SCALE
-    bm = np.stack(b.to_numpy()).astype(np.float64) * _SCALE
-    ai = _round_half_away(am)
-    bi = _round_half_away(bm)
+    ai, bi = _quantize(a.to_numpy()), _quantize(b.to_numpy())
     return pd.Series(np.einsum("ij,ij->i", ai, bi))
 
 
@@ -86,6 +124,64 @@ def _by_cosine() -> list[Column]:
     """Nearest-first neighbor order: cosine DESC, neighbor_id as the
     total tie-break."""
     return [F.desc("cosine"), F.asc("neighbor_id")]
+
+
+def _first_vectors(t: Tables, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """The vectors vec_id < n (a probe set, a seed codebook), collected
+    once: (ids, quantized matrix)."""
+    return _collect_quantized(
+        t.embeddings.where(F.col("vec_id") < n).select("vec_id", "embedding")
+    )
+
+
+def _probe_top_k(
+    corpus: DataFrame,
+    probes: tuple[np.ndarray, np.ndarray],
+    k: int,
+    dims: int | None = None,
+) -> DataFrame:
+    """Exact cosine top-``k`` corpus neighbors of every probe, nearest
+    first by (cosine DESC, neighbor_id ASC), a probe never its own
+    neighbor: (query_id, neighbor_id, cosine). ``probes`` is (ids,
+    quantized matrix); ``dims`` keeps a leading prefix of every vector.
+
+    The probe matrix ships in the closure and ONE mapInPandas pass over
+    the corpus quantizes each row once, scores every probe with one
+    int64 matmul per Arrow batch and emits each probe's batch-local
+    top-k. Any global top-k row is in its batch's top-k under the same
+    total order, so scale.top_k over O(batches x probes x k) rows
+    finishes exactly; the corpus never shuffles."""
+    q_ids, q_int = probes
+    q_int = q_int[:, :dims]
+    q_nrm = _norms(q_int)
+
+    def part(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            ai = _quantize(pdf["embedding"].to_numpy())[:, :dims]
+            cos = _cosines(ai, _norms(ai), q_int, q_nrm)
+            ids = pdf["vec_id"].to_numpy()
+            out_q, out_n, out_c = [], [], []
+            for j, qid in enumerate(q_ids):
+                mask = ids != qid
+                mids, mcos = ids[mask], cos[mask, j]
+                pick = np.lexsort((mids, -mcos))[:k]
+                out_q.extend([qid] * len(pick))
+                out_n.extend(mids[pick])
+                out_c.extend(mcos[pick])
+            yield pd.DataFrame(
+                {
+                    "query_id": pd.Series(out_q, dtype="int64"),
+                    "neighbor_id": pd.Series(out_n, dtype="int64"),
+                    "cosine": pd.Series(out_c, dtype="float64"),
+                }
+            )
+
+    partial = corpus.select("vec_id", "embedding").mapInPandas(
+        part, schema="query_id long, neighbor_id long, cosine double"
+    )
+    return top_k(partial, ["query_id"], _by_cosine(), k)
 
 
 _SQL_DOT = (
@@ -130,72 +226,17 @@ ORDER BY query_id, cosine DESC, neighbor_id
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for a query set (ANN baseline).
 
-    Single-kernel design (r3, after the r2 bench regression): the query
-    matrix (10 rows) is collected once and shipped in the closure; one
-    mapInPandas pass over the corpus quantizes each row ONCE, scores all
-    queries with one int64 matmul per Arrow batch, and emits only a
-    map-side partial top-5 per query per batch. The old per-pair pandas_udf
-    re-quantized every corpus row |Q| times and shuffled N*|Q| scored rows
-    into the window; now the final exact top-5 window sees <= 50 rows per
-    batch. At scale: corpus stays partitioned, queries ship to every
-    executor — no corpus shuffle, and the candidate set entering the global
-    top-k is O(partitions * |Q| * k).
-
-    Arithmetic is bit-identical to the oracle: exact int64 dot, ->double
-    /1e14, then /(qn*cn), the same op order as the SQL.
+    Single-kernel design (r3, after the r2 bench regression): the 10
+    query rows are collected once and scored by ``_probe_top_k``, whose
+    map-side partial top-5 per batch replaced a per-pair pandas_udf that
+    re-quantized every corpus row |Q| times and shuffled N*|Q| scored
+    rows into the window. At scale the corpus stays partitioned, the
+    queries ship to every executor, and the candidate set entering the
+    global top-k is O(partitions * |Q| * k).
     """
-    import numpy as _np
-
     t = Tables(spark, sf_dir)
-    qrows = sorted(
-        t.embeddings.where(F.col("vec_id") < 10)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    q_ids = _np.array([r.vec_id for r in qrows], dtype=_np.int64)
-    q_int = _round_half_away(
-        _np.stack([_np.asarray(r.embedding, dtype=_np.float64) for r in qrows])
-        * _SCALE
-    )
-    q_norm = _np.sqrt(_np.einsum("ij,ij->i", q_int, q_int) / _SCALE_SQ)
-
-    def topk_part(it):
-        import pandas as _pd
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ai = _round_half_away(
-                _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64) * _SCALE
-            )
-            cn = _np.sqrt(_np.einsum("ij,ij->i", ai, ai) / _SCALE_SQ)
-            # exact int64 dot for every (corpus row, query); bound: 64*(1e8)^2
-            cos = (ai @ q_int.T) / _SCALE_SQ / (q_norm[None, :] * cn[:, None])
-            ids = pdf["vec_id"].to_numpy()
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                mask = ids != qid
-                mids, mcos = ids[mask], cos[mask, j]
-                # partial top-5 by (cosine desc, neighbor_id asc): any global
-                # top-5 row is in its batch's top-5 under the same total order
-                pick = _np.lexsort((mids, -mcos))[:5]
-                out_q.extend([qid] * len(pick))
-                out_n.extend(mids[pick])
-                out_c.extend(mcos[pick])
-            yield _pd.DataFrame(
-                {
-                    "query_id": _pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": _pd.Series(out_n, dtype="int64"),
-                    "cosine": _pd.Series(out_c, dtype="float64"),
-                }
-            )
-
-    partial = t.embeddings.select("vec_id", "embedding").mapInPandas(
-        topk_part, schema="query_id long, neighbor_id long, cosine double"
-    )
     return (
-        top_k(partial, ["query_id"], _by_cosine(), 5)
+        _probe_top_k(t.embeddings, _first_vectors(t, 10), 5)
         .select("query_id", "neighbor_id", "cosine")
         .orderBy("query_id", F.desc("cosine"), "neighbor_id")
     )
@@ -309,26 +350,18 @@ def _ivf_codebook(t: Tables, max_k: int | None = None):
     the collected codebook exceeds ``max_k`` (default _IVF_MAX_CODEBOOK)
     — the loud guard that keeps the broadcast-closure posture honest."""
     cap = _IVF_MAX_CODEBOOK if max_k is None else max_k
-    crows = sorted(
+    cent_ids, cent_int = _collect_quantized(
         t.embeddings.where(F.col("vec_id") % _IVF_STRIDE == 0)
         .select("vec_id", "embedding")
         .limit(cap + 1)
-        .collect(),
-        key=lambda r: r.vec_id,
     )
-    if len(crows) > cap:
+    if len(cent_ids) > cap:
         raise ValueError(
             f"IVF codebook exceeds the driver-boundedness cap ({cap}): "
             "stride seeding grows K ~ N/97 — swap in fixed-K k-means "
             "centroids (K ~ sqrt(N)) before running at this corpus scale"
         )
-    cent_ids = np.array([r.vec_id for r in crows], dtype=np.int64)
-    cent_int = _round_half_away(
-        np.stack([np.asarray(r.embedding, dtype=np.float64) for r in crows])
-        * _SCALE
-    )
-    cent_nrm = np.sqrt(np.einsum("ij,ij->i", cent_int, cent_int) / _SCALE_SQ)
-    return cent_ids, cent_int, cent_nrm
+    return cent_ids, cent_int, _norms(cent_int)
 
 
 def _ivf_assigned(
@@ -343,9 +376,8 @@ def _ivf_assigned(
     one int64 matmul per Arrow batch, and emits each vector's
     top-``max_rank`` centroids directly — zero shuffle, no N*K rows ever
     materialized (the old crossJoin + row_number window shape is gone).
-    Arithmetic is bit-identical to the SQL oracle's assign CTE: exact
-    int64 dot, ->double /1e14, then /(nrm*cnrm), same op order.
-    ``carry`` columns (e.g. label) pass through untouched.
+    Cosines come from ``_cosines``, bit-identical to the SQL oracle's
+    assign CTE. ``carry`` columns (e.g. label) pass through untouched.
     """
     cent_ids, cent_int, cent_nrm = codebook
 
@@ -353,16 +385,9 @@ def _ivf_assigned(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            ai = _round_half_away(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                * _SCALE
-            )
-            nrm = np.sqrt(np.einsum("ij,ij->i", ai, ai) / _SCALE_SQ)
-            # same op order as the oracle: (int_dot/1e14) / (nrm*cnrm)
-            ccos = (
-                (ai @ cent_int.T) / _SCALE_SQ
-                / (nrm[:, None] * cent_nrm[None, :])
-            )
+            ai = _quantize(pdf["embedding"].to_numpy())
+            nrm = _norms(ai)
+            ccos = _cosines(ai, nrm, cent_int, cent_nrm)
             # top-max_rank centroids per vector, ties by centroid_id asc
             order = np.lexsort(
                 (np.broadcast_to(cent_ids, ccos.shape), -ccos), axis=1
@@ -577,13 +602,33 @@ def sim_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# raw scale-7 integer dot (no /1e14 descale): exact int64 in both engines,
-# so squared L2 distances composed from it compare exactly
+# raw scale-7 integer dot, the _dot7 kernel's SQL twin (no /1e14
+# descale): exact int64 in both engines, so squared L2 distances composed
+# from it compare exactly
 _SQL_QDOT = (
     "CAST(list_sum(list_transform(list_zip({a}, {b}), "
     "x -> CAST(round(CAST(x[1] AS DOUBLE) * 10000000) AS BIGINT)"
     " * CAST(round(CAST(x[2] AS DOUBLE) * 10000000) AS BIGINT))) AS BIGINT)"
 )
+
+
+def _centroid_sq_dists(embeddings: DataFrame, *carry: str) -> DataFrame:
+    """(vec_id, *carry, cid, d): the squared L2 distance of every vector
+    to each of K=8 deterministic centroids (vec_id < 8), as exact
+    scale-14 integers d = <a,a> + <c,c> - 2<a,c> over quantized int64
+    dots. Self-dots are computed once per row, never per pair, and the K
+    centroid rows broadcast, so the corpus never shuffles to be scored.
+    Each caller ranks ``d`` its own way."""
+    e = embeddings.select(
+        "vec_id", "embedding", *carry, _dot7("embedding", "embedding").alias("selfq")
+    )
+    c = e.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("cv"),
+        F.col("selfq").alias("cselfq"),
+    )
+    d = F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
+    return e.crossJoin(F.broadcast(c)).select("vec_id", *carry, "cid", d.alias("d"))
 
 
 @query(
@@ -631,24 +676,8 @@ def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows move between steps.
     """
     t = Tables(spark, sf_dir)
-    e = t.embeddings.select(
-        "vec_id", "embedding", _dot7("embedding", "embedding").alias("selfq")
-    )
-    c = e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        F.col("selfq").alias("cselfq"),
-    )
-    d = (
-        F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
-    ).alias("d")
     return (
-        top_k(
-            e.crossJoin(F.broadcast(c)).select("vec_id", "cid", d),
-            ["vec_id"],
-            ["d", "cid"],
-            1,
-        )
+        top_k(_centroid_sq_dists(t.embeddings), ["vec_id"], ["d", "cid"], 1)
         .select("vec_id", F.col("cid").alias("cluster"), F.col("d").alias("dist2_q"))
         .orderBy("vec_id")
     )
@@ -795,32 +824,18 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid (vec_id tie-break) — reporting how many near-semantic
     duplicates each kept item stands for.
 
-    Composition: reuses the broadcast-centroid exact-integer argmin
-    (scale.top_k) from the k-means assign step, then a per-cluster
-    lexicographic min(struct) beside the cluster-size count in one aggregate
-    — K output rows, so the second aggregation is trivially small. At
+    Composition: the k-means assign step's argmin (scale.top_k over
+    ``_centroid_sq_dists``), then a per-cluster lexicographic
+    min(struct) beside the cluster-size count in one aggregate — K
+    output rows, so the second aggregation is trivially small. At
     100 TB the cluster count scales with corpus diversity (K ~ N/dup_rate)
     and the keep-step remains one partial-agg shuffle keyed by cluster;
     an anti-join of the corpus against kept_vec_id materializes the
     deduplicated corpus without re-scoring.
     """
     t = Tables(spark, sf_dir)
-    e = t.embeddings.select(
-        "vec_id", "embedding", _dot7("embedding", "embedding").alias("selfq")
-    )
-    c = e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        F.col("selfq").alias("cselfq"),
-    )
-    d = (
-        F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
-    ).alias("d")
     assigned = top_k(
-        e.crossJoin(F.broadcast(c)).select("vec_id", "cid", d),
-        ["vec_id"],
-        ["d", "cid"],
-        1,
+        _centroid_sq_dists(t.embeddings), ["vec_id"], ["d", "cid"], 1
     ).select("vec_id", F.col("cid").alias("cluster"), "d")
     return (
         assigned.select(
@@ -1228,6 +1243,17 @@ _SQL_PQ_SUBDIST = (
 )
 
 
+def _pq_encode(X: np.ndarray, S: np.ndarray) -> np.ndarray:
+    """(B, 8) PQ codes of quantized (B, 8, 8) subvectors against a (K, 8,
+    8) codebook: per subspace, the argmin of exact int64 squared
+    distances, whose FIRST minimum is the smallest centroid id."""
+    codes = np.empty((len(X), 8), dtype=np.int64)
+    for m in range(8):
+        dm = X[:, None, m, :] - S[None, :, m, :]  # (B, K, 8)
+        codes[:, m] = np.einsum("bkd,bkd->bk", dm, dm).argmin(axis=1)
+    return codes
+
+
 @query(
     "sim_pq_adc",
     oracle=f"""
@@ -1281,16 +1307,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as _np
 
     t = Tables(spark, sf_dir)
-    srows = sorted(
-        t.embeddings.where(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    S = _round_half_away(
-        _np.stack([_np.asarray(r.embedding, dtype=_np.float64) for r in srows])
-        * _SCALE
-    ).reshape(16, 8, 8)  # [centroid k, subspace m, dim d]
+    S = _first_vectors(t, 16)[1].reshape(16, 8, 8)  # [centroid k, subspace m, dim d]
     Q = S[0]  # query vec_id=0 is seed 0: its quantized subvectors
     # ADC lookup table: lut[m, k] = ||Q_m - S_k,m||^2 (exact int64)
     diffq = Q[None, :, :] - S  # (16, 8, 8)
@@ -1303,14 +1320,9 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy()
-            X = _round_half_away(
-                _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64) * _SCALE
-            ).reshape(len(pdf), 8, 8)
-            codes = _np.empty((len(pdf), 8), dtype=_np.int64)
-            for m in range(8):
-                dm = X[:, None, m, :] - S[None, :, m, :]  # (B, 16, 8)
-                # argmin returns the FIRST minimum = smallest centroid id
-                codes[:, m] = _np.einsum("bkd,bkd->bk", dm, dm).argmin(axis=1)
+            codes = _pq_encode(
+                _quantize(pdf["embedding"].to_numpy()).reshape(len(pdf), 8, 8), S
+            )
             adc = lut[_np.arange(8)[None, :], codes].sum(axis=1)  # int64
             keep = ids != 0
             ids, codes, adc = ids[keep], codes[keep], adc[keep]
@@ -1328,65 +1340,6 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(pq_scan, schema="neighbor_id long, codes string, pq_dist double")
         .orderBy("pq_dist", "neighbor_id")
         .limit(20)
-    )
-
-
-# --------------------------------------------------------------------------
-def _exact_top3(t: Tables) -> DataFrame:
-    """Exact cosine top-3 per probe query (vec_id < 20) — brute-force
-    ground truth shared by sim_ann_recall and sim_recall_at_k_curve.
-
-    The sim_cosine_topk kernel shape: the 20-query int matrix ships in
-    the closure, the corpus streams through ONE map-side Arrow pass
-    (per-batch partial top-3), and a tiny global window finalizes —
-    O(corpus x probes) by design, zero corpus shuffle."""
-    import numpy as _np
-    import pandas as _pd
-
-    qrows = sorted(
-        t.embeddings.where(F.col("vec_id") < 20)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    q_ids = _np.array([r.vec_id for r in qrows], dtype=_np.int64)
-    q_int = _round_half_away(
-        _np.stack([_np.asarray(r.embedding, dtype=_np.float64) for r in qrows])
-        * _SCALE
-    )
-    q_norm = _np.sqrt(_np.einsum("ij,ij->i", q_int, q_int) / _SCALE_SQ)
-
-    def topk_part(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ai = _round_half_away(
-                _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64) * _SCALE
-            )
-            cn = _np.sqrt(_np.einsum("ij,ij->i", ai, ai) / _SCALE_SQ)
-            cos = (ai @ q_int.T) / _SCALE_SQ / (q_norm[None, :] * cn[:, None])
-            ids = pdf["vec_id"].to_numpy()
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                mask = ids != qid
-                mids, mcos = ids[mask], cos[mask, j]
-                pick = _np.lexsort((mids, -mcos))[:3]
-                out_q.extend([qid] * len(pick))
-                out_n.extend(mids[pick])
-                out_c.extend(mcos[pick])
-            yield _pd.DataFrame(
-                {
-                    "query_id": _pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": _pd.Series(out_n, dtype="int64"),
-                    "cosine": _pd.Series(out_c, dtype="float64"),
-                }
-            )
-
-    partial = t.embeddings.select("vec_id", "embedding").mapInPandas(
-        topk_part, schema="query_id long, neighbor_id long, cosine double"
-    )
-    return top_k(partial, ["query_id"], _by_cosine(), 3).select(
-        "query_id", "neighbor_id"
     )
 
 
@@ -1439,9 +1392,9 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality measurement every ANN deployment runs before trusting the
     index (an unmeasured ANN is a silent-correctness bug at scale).
 
-    Ground truth: exact cosine top-3 per query (the sim_cosine_topk
-    mapInPandas kernel — corpus partitioned, 20-query matrix in the
-    closure, per-batch partial top-3, one tiny global window). Candidate:
+    Ground truth: exact cosine top-3 per query from ``_probe_top_k``
+    (corpus partitioned, 20-query matrix in the closure, per-batch
+    partial top-3, one tiny global window). Candidate:
     the sim_ann_bucketed rank-LSH bucket join. Recall = |ANN ∩ exact| / 3
     per query — integer counts, so the result is hash-exact even where
     cosine values live in the last ulp.
@@ -1454,7 +1407,9 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query.
     """
     t = Tables(spark, sf_dir)
-    exact_top = _exact_top3(t)
+    exact_top = _probe_top_k(t.embeddings, _first_vectors(t, 20), 3).select(
+        "query_id", "neighbor_id"
+    )
     coded = t.embeddings.select(
         "vec_id",
         "embedding",
@@ -1602,17 +1557,10 @@ def pq_coded(embeddings: DataFrame, C, Spq) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            X = _round_half_away(
-                _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64)
-                * _SCALE
-            )
+            X = _quantize(pdf["embedding"].to_numpy())
             d = X[:, None, :] - C[None, :, :]
             cid = _np.einsum("bcd,bcd->bc", d, d).argmin(axis=1)
-            Xm = X.reshape(len(pdf), 8, 8)
-            codes = _np.empty((len(pdf), 8), dtype=_np.int64)
-            for m in range(8):
-                dm = Xm[:, None, m, :] - Spq[None, :, m, :]
-                codes[:, m] = _np.einsum("bkd,bkd->bk", dm, dm).argmin(axis=1)
+            codes = _pq_encode(X.reshape(len(pdf), 8, 8), Spq)
             yield _pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].astype("int64"),
@@ -1734,13 +1682,11 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     }
-    S = _round_half_away(
-        _np.stack([seeds[k] for k in range(16)]) * _SCALE
-    )  # (16, 64) int codebook rows
+    S = _quantize([seeds[k] for k in range(16)])  # (16, 64) int codebook rows
     Spq = S.reshape(16, 8, 8)  # [k, m, d]
     C = S[:8]  # coarse centroids (8, 64)
     qids = list(range(100, 105))
-    Q = _round_half_away(_np.stack([seeds[k] for k in qids]) * _SCALE)  # (5, 64)
+    Q = _quantize([seeds[k] for k in qids])  # (5, 64)
     Qpq = Q.reshape(5, 8, 8)
 
     # per-query ADC LUTs: lut[q][m, k] = ||Q_q,m - S_k,m||^2
@@ -1857,16 +1803,8 @@ def sim_pq_code_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-20 output works even on corpora with no collisions (the
     count column shows the collision structure either way).
     """
-    import numpy as _np
-
     t = Tables(spark, sf_dir)
-    seeds = {
-        r.vec_id: _np.asarray(r.embedding, dtype=_np.float64)
-        for r in t.embeddings.where(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .collect()
-    }
-    S = _round_half_away(_np.stack([seeds[k] for k in range(16)]) * _SCALE)
+    S = _first_vectors(t, 16)[1]
     coded = pq_coded(t.embeddings, S[:8], S.reshape(16, 8, 8))
     return (
         coded.groupBy("cid", F.col("codes_str").alias("codes"))
@@ -1932,66 +1870,19 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     and bandwidth) before retrieval quality drops. The modern counterpart
     of PQ compression: prefix dims instead of codebooks.
 
-    Both sides run the same partitioned brute-force kernel (corpus
-    streams map-side, probe queries in the closure) at different widths;
-    recall is integer overlap counts, hash-exact across engines.
+    Both sides run ``_probe_top_k`` over the 20 probes, collected once,
+    at different widths (corpus streams map-side, probe queries in the
+    closure); recall is integer overlap counts, hash-exact across
+    engines.
     """
-    import numpy as _np
-    import pandas as _pd
-
     t = Tables(spark, sf_dir)
-    qrows = sorted(
-        t.embeddings.where(F.col("vec_id") < 20)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
+    probes = _first_vectors(t, 20)
+    full_top = _probe_top_k(t.embeddings, probes, 3).select(
+        "query_id", "neighbor_id"
     )
-    q_ids = _np.array([r.vec_id for r in qrows], dtype=_np.int64)
-    q_int = _round_half_away(
-        _np.stack([_np.asarray(r.embedding, dtype=_np.float64) for r in qrows])
-        * _SCALE
+    pfx_top = _probe_top_k(t.embeddings, probes, 3, dims=16).select(
+        "query_id", F.col("neighbor_id").alias("pn")
     )
-
-    def topk_at(dims: int):
-        qd = q_int[:, :dims]
-        qn = _np.sqrt(_np.einsum("ij,ij->i", qd, qd) / _SCALE_SQ)
-
-        def part(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                ai = _round_half_away(
-                    _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64)
-                    * _SCALE
-                )[:, :dims]
-                cn = _np.sqrt(_np.einsum("ij,ij->i", ai, ai) / _SCALE_SQ)
-                cos = (ai @ qd.T) / _SCALE_SQ / (qn[None, :] * cn[:, None])
-                ids = pdf["vec_id"].to_numpy()
-                out_q, out_n, out_c = [], [], []
-                for j, qid in enumerate(q_ids):
-                    mask = ids != qid
-                    mids, mcos = ids[mask], cos[mask, j]
-                    pick = _np.lexsort((mids, -mcos))[:3]
-                    out_q.extend([qid] * len(pick))
-                    out_n.extend(mids[pick])
-                    out_c.extend(mcos[pick])
-                yield _pd.DataFrame(
-                    {
-                        "query_id": _pd.Series(out_q, dtype="int64"),
-                        "neighbor_id": _pd.Series(out_n, dtype="int64"),
-                        "cosine": _pd.Series(out_c, dtype="float64"),
-                    }
-                )
-
-        partial = t.embeddings.select("vec_id", "embedding").mapInPandas(
-            part, schema="query_id long, neighbor_id long, cosine double"
-        )
-        return top_k(partial, ["query_id"], _by_cosine(), 3).select(
-            "query_id", "neighbor_id"
-        )
-
-    full_top = topk_at(64)
-    pfx_top = topk_at(16).withColumnRenamed("neighbor_id", "pn")
     return (
         full_top.join(
             pfx_top,
@@ -2089,25 +1980,22 @@ def sim_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the assigned rows themselves, and cell size is bounded by
     # construction (balanced k-means at scale)
     def cell_topk(pdf):
-        cor = pdf[pdf["arn"] == 1]
+        is_cor = (pdf["arn"] == 1).to_numpy()
+        cor = pdf[is_cor]
         if len(cor) == 0 or len(pdf) == 0:
             return pd.DataFrame(
                 {"a_id": [], "a_label": [], "b_id": [], "b_label": [],
                  "cosine": []}
             )
-        ci = _round_half_away(
-            np.stack(cor["embedding"].to_numpy()).astype(np.float64) * _SCALE
-        )
+        pi = _quantize(pdf["embedding"].to_numpy())
+        ci = pi[is_cor]
         cn = cor["nrm"].to_numpy()
         c_ids = cor["vec_id"].to_numpy()
         c_lbl = cor["label"].to_numpy()
-        pi = _round_half_away(
-            np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * _SCALE
-        )
         pn = pdf["nrm"].to_numpy()
         p_ids = pdf["vec_id"].to_numpy()
         p_lbl = pdf["label"].to_numpy()
-        cos = (pi @ ci.T) / _SCALE_SQ / (pn[:, None] * cn[None, :])
+        cos = _cosines(pi, pn, ci, cn)
         out_a, out_al, out_b, out_bl, out_c = [], [], [], [], []
         for i in range(len(pdf)):
             mask = c_ids != p_ids[i]
@@ -2779,28 +2667,19 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-#: raw INTEGER dot (the _dot7 kernel's SQL twin, no double cast): exact
-#: BIGINT, so squared distances na + nb - 2ab stay integer end-to-end.
-_SQL_IDOT = (
-    "CAST(list_sum(list_transform(list_zip({a}, {b}), "
-    "x -> CAST(round(CAST(x[1] AS DOUBLE) * 10000000) AS BIGINT)"
-    " * CAST(round(CAST(x[2] AS DOUBLE) * 10000000) AS BIGINT))) AS BIGINT)"
-)
-
-
 @query(
     "sample_kcenter_coreset",
     oracle=f"""
 WITH e AS (
   SELECT vec_id, embedding,
-         {_SQL_IDOT.format(a='embedding', b='embedding')} AS nn
+         {_SQL_QDOT.format(a='embedding', b='embedding')} AS nn
   FROM embeddings
 ),
 p1 AS (SELECT vec_id AS c1, embedding AS e1, nn AS n1 FROM e
        ORDER BY vec_id LIMIT 1),
 d1 AS (
   SELECT e.vec_id, e.embedding, e.nn,
-         e.nn + p1.n1 - 2 * {_SQL_IDOT.format(a='e.embedding', b='p1.e1')}
+         e.nn + p1.n1 - 2 * {_SQL_QDOT.format(a='e.embedding', b='p1.e1')}
            AS dist1
   FROM e CROSS JOIN p1
 ),
@@ -2809,7 +2688,7 @@ p2 AS (SELECT vec_id AS c2, embedding AS e2, nn AS n2 FROM d1
 d2 AS (
   SELECT d1.vec_id, d1.embedding, d1.nn, d1.dist1,
          LEAST(d1.dist1,
-               d1.nn + p2.n2 - 2 * {_SQL_IDOT.format(a='d1.embedding', b='p2.e2')})
+               d1.nn + p2.n2 - 2 * {_SQL_QDOT.format(a='d1.embedding', b='p2.e2')})
            AS dmin2
   FROM d1 CROSS JOIN p2
 ),
@@ -2818,7 +2697,7 @@ p3 AS (SELECT vec_id AS c3, embedding AS e3, nn AS n3 FROM d2
 cov AS (
   SELECT MAX(LEAST(d2.dmin2,
                    d2.nn + p3.n3
-                   - 2 * {_SQL_IDOT.format(a='d2.embedding', b='p3.e3')}))
+                   - 2 * {_SQL_QDOT.format(a='d2.embedding', b='p3.e3')}))
            AS radius_sq_q14,
          COUNT(*) AS n_vectors
   FROM d2 CROSS JOIN p3
@@ -2983,27 +2862,12 @@ def sim_cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine log path) — so purity, I and both entropies are exact
     BIGINTs and NMI is one fixed double division.
 
-    Scale: assignment is the broadcast-centroid map-side argmin of
-    sim_kmeans_assign; everything downstream operates on the K x L
+    Scale: assignment is sim_kmeans_assign's map-side argmin over
+    ``_centroid_sq_dists``; everything downstream operates on the K x L
     contingency table (bounded metadata).
     """
     t = Tables(spark, sf_dir)
-    e = t.embeddings.select(
-        "vec_id", "embedding", "label", _dot7("embedding", "embedding").alias("selfq")
-    )
-    c = e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        F.col("selfq").alias("cselfq"),
-    )
-    p = e.crossJoin(F.broadcast(c)).select(
-        "vec_id",
-        "label",
-        "cid",
-        (
-            F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
-        ).alias("d"),
-    )
+    p = _centroid_sq_dists(t.embeddings, "label")
     asg = top_k(p, ["vec_id", "label"], ["d", "cid"], 1).select(
         "vec_id", "label", "cid"
     )
@@ -3285,7 +3149,7 @@ def sim_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs within/between clusters (O(N^2)); this is one broadcast pass.
 
     Exactness: a and b are exact scale-14 integer squared L2 distances
-    (same <a,a>+<c,c>-2<a,c> identity as sim_kmeans_assign); s quantizes
+    (``_centroid_sq_dists``, as in sim_kmeans_assign); s quantizes
     to si_fixed = ((b-a)*10000) div max(b,1) — truncating integer division
     on nonnegative operands, where Spark's `div` and DuckDB's `//` agree —
     and only the final mean divides as a double on exact integer sums.
@@ -3296,20 +3160,9 @@ def sim_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     per vector, then per-cluster partial aggregation.
     """
     t = Tables(spark, sf_dir)
-    e = t.embeddings.select(
-        "vec_id", "embedding", _dot7("embedding", "embedding").alias("selfq")
-    )
-    c = e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        F.col("selfq").alias("cselfq"),
-    )
-    d = (
-        F.col("selfq") + F.col("cselfq") - F.lit(2) * _dot7("embedding", "cv")
-    ).alias("d")
     ranked = (
-        e.crossJoin(F.broadcast(c))
-        .select("vec_id", F.struct(d, F.col("cid")).alias("dc"))
+        _centroid_sq_dists(t.embeddings)
+        .select("vec_id", F.struct("d", "cid").alias("dc"))
         .groupBy("vec_id")
         .agg(F.sort_array(F.collect_list("dc")).alias("ds"))
         .select(
@@ -3400,12 +3253,9 @@ def sim_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
 
     def block_roles(pdf):
-        ai = _round_half_away(
-            np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * _SCALE
-        )
-        nrm = np.sqrt(np.einsum("ij,ij->i", ai, ai) / _SCALE_SQ)
-        cos = (ai @ ai.T) / _SCALE_SQ / (nrm[:, None] * nrm[None, :])
-        adj = cos >= _DBSCAN_EPS
+        ai = _quantize(pdf["embedding"].to_numpy())
+        nrm = _norms(ai)
+        adj = _cosines(ai, nrm, ai, nrm) >= _DBSCAN_EPS
         np.fill_diagonal(adj, False)
         n_nb = adj.sum(axis=1).astype(np.int64)
         is_core = n_nb >= _DBSCAN_MINPTS
@@ -3423,6 +3273,9 @@ def sim_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
+    # no orderBy (the driver compare sorts): a range exchange above the
+    # grouped map samples its child, which ran block_roles over every
+    # block a second time (Python output rows read 2x the corpus)
     return (
         t.embeddings.select("vec_id", "label", "embedding")
         .groupBy("label")
@@ -3430,7 +3283,6 @@ def sim_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
             block_roles,
             schema="vec_id long, label long, n_nb long, role string",
         )
-        .orderBy("vec_id")
     )
 
 
@@ -3657,7 +3509,7 @@ def _srp_sig(a: pd.Series) -> pd.Series:
     hyperplanes — exact, order-free), sign bits packed LSB-first."""
     if len(a) == 0:
         return pd.Series([], dtype="int64")
-    q = _round_half_away(np.stack(a.to_numpy()).astype(np.float64) * _SCALE)
+    q = _quantize(a.to_numpy())
     planes = _srp_plane_matrix(q.shape[1])
     bits = (q @ planes.T >= 0).astype(np.int64)
     return pd.Series((bits << np.arange(_SRP_NBITS, dtype=np.int64)).sum(axis=1))
@@ -3875,36 +3727,21 @@ def sim_residual_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture at 100 TB: both codebooks are bounded collects (7 +
     9 rows) broadcast in the closure; assignment, residual, and both
     error terms are ONE map-only Arrow pass over the partitioned corpus
-    (batched numpy matmul-shaped argmin, the sim_cosine_topk kernel
-    pattern — no N x K rows ever materialize, no corpus shuffle); the
+    (batched numpy matmul-shaped argmin over ``_quantize``d rows, the
+    ``_probe_top_k`` map-side shape — no N x K rows ever materialize, no
+    corpus shuffle); the
     only shuffle is the final partial-agg groupBy to ~K rows. Adding
     RVQ levels adds map-side flops, never shuffles.
     """
     import numpy as _np
 
     t = Tables(spark, sf_dir)
-    crows = sorted(
-        t.embeddings.where(F.col("vec_id") % 83 == 0)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
+    cids, C = _collect_quantized(
+        t.embeddings.where(F.col("vec_id") % 83 == 0).select("vec_id", "embedding")
     )
-    C = _round_half_away(
-        _np.stack([_np.asarray(r.embedding, dtype=_np.float64) for r in crows])
-        * _SCALE
-    ).astype(_np.int64)
-    cids = _np.array([r.vec_id for r in crows], dtype=_np.int64)
-
-    wrows = sorted(
-        t.embeddings.where(F.col("vec_id") % 59 == 0)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
+    _, WQ = _collect_quantized(
+        t.embeddings.where(F.col("vec_id") % 59 == 0).select("vec_id", "embedding")
     )
-    WQ = _round_half_away(
-        _np.stack([_np.asarray(r.embedding, dtype=_np.float64) for r in wrows])
-        * _SCALE
-    ).astype(_np.int64)
     # residual-seed residuals: assign each seed to its nearest coarse
     # centroid (argmin = first minimum = smallest id, both engines)
     dseed = WQ[:, None, :] - C[None, :, :]
@@ -3916,10 +3753,7 @@ def sim_residual_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            X = _round_half_away(
-                _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64)
-                * _SCALE
-            ).astype(_np.int64)
+            X = _quantize(pdf["embedding"].to_numpy())
             dc = X[:, None, :] - C[None, :, :]
             a = _np.einsum("bkd,bkd->bk", dc, dc).argmin(axis=1)
             R = X - C[a]
@@ -4157,7 +3991,9 @@ def sim_recall_at_k_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = top_k(scored, ["nprobe", "query_id"], _by_cosine(), 3).select(
         "nprobe", "query_id", "neighbor_id"
     )
-    exact = _exact_top3(t)
+    exact = _probe_top_k(t.embeddings, _first_vectors(t, 20), 3).select(
+        "query_id", "neighbor_id"
+    )
     counts = scored.groupBy("nprobe").agg(
         F.count(F.lit(1)).alias("n_candidates")
     )
@@ -4245,10 +4081,10 @@ def sim_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     hubness breaks at corpus scale. Pairs with margin >= 1.005 (milli
     units, exact integers) are emitted.
 
-    Single-kernel design (the sim_cosine_topk pattern): the bounded
-    English query matrix ships in the closure; ONE mapInPandas pass over
-    the German corpus scores each batch against every query with one
-    int64 matmul and emits (a) each y's EXACT top-k-over-X neighborhood
+    Single-kernel design (the ``_probe_top_k`` shape with a margin
+    payload): the bounded English query matrix ships in the closure;
+    ONE mapInPandas pass over the German corpus scores each batch
+    against every query with one int64 matmul and emits (a) each y's EXACT top-k-over-X neighborhood
     sum (X is complete in the closure) and (b) a per-x partial top-k —
     a superset of the global top-k under the total order (q6 DESC, yid).
     The global window then fixes each x's candidate set AND its
@@ -4263,21 +4099,14 @@ def sim_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "lang")
     emb = t.embeddings.select("vec_id", "embedding")
-    xrows = sorted(
+    x_ids, x_int = _collect_quantized(
         docs.where(
             (F.col("lang") == "en") & (F.col("doc_id") < _BITEXT_X_CUTOFF)
         )
         .join(emb, F.col("doc_id") == F.col("vec_id"))
         .select("doc_id", "embedding")
-        .collect(),
-        key=lambda r: r.doc_id,
     )
-    x_ids = _np.array([r.doc_id for r in xrows], dtype=_np.int64)
-    x_int = _round_half_away(
-        _np.stack([_np.asarray(r.embedding, dtype=_np.float64) for r in xrows])
-        * _SCALE
-    )
-    x_nrm = _np.sqrt(_np.einsum("ij,ij->i", x_int, x_int) / _SCALE_SQ)
+    x_nrm = _norms(x_int)
     k = _BITEXT_K
 
     def mine_part(it):
@@ -4286,12 +4115,8 @@ def sim_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            ai = _round_half_away(
-                _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64)
-                * _SCALE
-            )
-            yn = _np.sqrt(_np.einsum("ij,ij->i", ai, ai) / _SCALE_SQ)
-            cos = (ai @ x_int.T) / _SCALE_SQ / (x_nrm[None, :] * yn[:, None])
+            ai = _quantize(pdf["embedding"].to_numpy())
+            cos = _cosines(ai, _norms(ai), x_int, x_nrm)
             q6 = _round_half_away(cos * 1e6)  # |batch| x |X|, int64
             y_ids = pdf["vec_id"].to_numpy()
             # exact per-y neighborhood sum over the COMPLETE X set

@@ -170,31 +170,38 @@ def node_counts(plan: str) -> dict[str, int]:
     }
 
 
+def query_plan(spark: SparkSession, name: str, sf_dir: str) -> str:
+    """Formatted plan of the named registry query, built plan-only.
+
+    A builder's ``scale.cached`` intermediates register at build time.
+    They are released before this returns: left in place, a later plan
+    reads an InMemoryRelation whose size estimate flips broadcasts to
+    sort-merge, and what a plan read shows then depends on which queries
+    were built before it."""
+    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
+
+    df = None
+    try:
+        df = QUERIES[name](spark, sf_dir)
+        return formatted_plan(df)
+    finally:
+        if hasattr(df, "release_owned"):
+            df.release_owned()
+
+
 def fingerprints(
     spark: SparkSession, names: list[str], sf_dir: str
 ) -> dict[str, dict[str, int]]:
-    """``node_counts`` of each named registry query, built plan-only and in
-    the given order; a query whose build fails reads ``{"error": 1}``.
-
-    A builder's ``scale.cached`` intermediates register at build time.
-    Each query's registrations are released before the next one is
-    built: left in place, a later plan reads an InMemoryRelation whose
-    size estimate flips broadcasts to sort-merge, and a fingerprint then
-    depends on which queries were built before it."""
+    """``node_counts`` of each named registry query's ``query_plan``, in
+    the given order; a query whose build fails reads ``{"error": 1}``."""
     from datafusion_ballista_dhruvil_spark.operators import load_all
-    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
 
     load_all()
     out: dict[str, dict[str, int]] = {}
     for name in names:
-        df = None
         try:
-            df = QUERIES[name](spark, sf_dir)
-            out[name] = node_counts(formatted_plan(df))
+            out[name] = node_counts(query_plan(spark, name, sf_dir))
         except Exception as e:  # noqa: BLE001 — one broken build must not hide the rest
             print(f"{name}: ERROR {type(e).__name__}: {e}", file=sys.stderr)
             out[name] = {"error": 1}
-        finally:
-            if hasattr(df, "release_owned"):
-                df.release_owned()
     return out

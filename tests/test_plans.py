@@ -23,6 +23,7 @@ from datafusion_ballista_dhruvil_spark.plans.inspect import (
     formatted_plan,
     has_pushed_filters,
     node_counts,
+    query_plan,
     scan_read_columns,
     tree_nodes,
 )
@@ -31,6 +32,29 @@ from datafusion_ballista_dhruvil_spark.session import Tables
 from tests.conftest import SF_DIR
 
 load_all()
+
+#: registry builders that register ``scale.cached`` intermediates at build
+#: time; read plan-only, each leaves them behind unless released
+CACHE_USING = [
+    "dedup_graph_triangles",
+    "ev_rfm_segments",
+    "ops_mad_outliers",
+    "tpcds_q64",
+    "tpcds_q39",
+]
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.fixture(scope="module", autouse=True)
+def cache_entries_at_start(spark):
+    """The session's cache entry count before this module's first plan
+    read. The cache is cleared first: releasing a build's cache drops an
+    identical plan's entry that an earlier test left behind."""
+    spark.catalog.clearCache()
+    return _cache_entries(spark)
 
 
 def test_filter_pushdown_reaches_parquet(spark):
@@ -51,18 +75,18 @@ def test_column_pruning(spark):
 def test_small_dims_broadcast(spark):
     # q5's nation/region joins must be broadcast, not shuffled
     for name in ("q5", "q9"):
-        assert node_counts(formatted_plan(QUERIES[name](spark, SF_DIR)))["bhj"] >= 1
+        assert node_counts(query_plan(spark, name, SF_DIR))["bhj"] >= 1
 
 
 def test_two_phase_aggregation(spark):
     # the reference's Partial/FinalPartitioned split (execution_graph.rs:66-96)
-    assert node_counts(formatted_plan(QUERIES["q1"](spark, SF_DIR)))["aggregates"] >= 2
+    assert node_counts(query_plan(spark, "q1", SF_DIR))["aggregates"] >= 2
 
 
 def test_q1_single_shuffle(spark):
     # scan -> partial agg -> exchange -> final agg -> sort: exactly the
     # reference's canonical 2-stage shape; more exchanges = regression
-    nodes = tree_nodes(formatted_plan(QUERIES["q1"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "q1", SF_DIR))
     assert nodes.count("Exchange") <= 2  # group-by exchange + global sort
 
 
@@ -73,13 +97,13 @@ def test_codegen_alive_in_hot_path(spark):
 
 
 def test_dedup_exact_is_single_shuffle(spark):
-    nodes = tree_nodes(formatted_plan(QUERIES["dedup_exact"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "dedup_exact", SF_DIR))
     # hash -> partial agg -> exchange -> final agg (+topk); one real shuffle
     assert nodes.count("Exchange") <= 1
 
 
 def test_topk_uses_take_ordered(spark):
-    plan = formatted_plan(QUERIES["ops_topk"](spark, SF_DIR))
+    plan = query_plan(spark, "ops_topk", SF_DIR)
     assert "TakeOrderedAndProject" in plan  # no global sort for LIMIT 15
 
 
@@ -120,7 +144,7 @@ def test_temporal_joins_never_nested_loop(spark):
     inequality predicate (both baselines hold no nested-loop node, which
     the plan-snapshot gate enforces)."""
     # as-of is the union-window shape: exactly one Window, a Union below it
-    asof = tree_nodes(formatted_plan(QUERIES["asof_click_attribution"](spark, SF_DIR)))
+    asof = tree_nodes(query_plan(spark, "asof_click_attribution", SF_DIR))
     assert "Union" in asof and asof.count("Window") == 1
 
 
@@ -129,7 +153,7 @@ def test_ivf_assignment_is_map_side(spark):
     map-side broadcast-matrix kernel, NOT a crossJoin + row_number window
     over N*K rows. Exactly one Window survives (the final bounded top-3
     over probe candidates); no nested-loop join anywhere."""
-    plan = formatted_plan(QUERIES["sim_ivf_topk"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_ivf_topk", SF_DIR)
     assert tree_nodes(plan).count("Window") <= 1
     # the assignment itself is Arrow mapInPandas (MapInPandas / ArrowEval)
     assert "MapInPandas" in tree_nodes(plan)
@@ -148,14 +172,14 @@ def test_tpcds_plan_shapes(spark):
     plan-snapshot gate holds each query's nested_loop count to its
     baseline; q4/q23 carry a documented 1-row scalar-merge broadcast
     crossJoin)."""
-    q88 = node_counts(formatted_plan(QUERIES["tpcds_q88"](spark, SF_DIR)))
+    q88 = node_counts(query_plan(spark, "tpcds_q88", SF_DIR))
     assert q88["scans"] == 1, f"q88 re-scans the fact: {q88}"
     assert q88["exchanges"] == 1 and q88["aggregates"] == 2, q88
 
-    q3 = node_counts(formatted_plan(QUERIES["tpcds_q3"](spark, SF_DIR)))
+    q3 = node_counts(query_plan(spark, "tpcds_q3", SF_DIR))
     assert q3["bhj"] >= 1, f"q3 dim not broadcast: {q3}"
 
-    p36 = formatted_plan(QUERIES["tpcds_q36"](spark, SF_DIR))
+    p36 = query_plan(spark, "tpcds_q36", SF_DIR)
     q36 = node_counts(p36)
     assert "Expand" in p36, "q36 rollup lost its grouping-set Expand"
     assert q36["scans"] == 2, f"q36 re-scans for the window: {q36}"
@@ -165,11 +189,11 @@ def test_tpcds_plan_shapes(spark):
     # level); q66's 12-month pivot must be one scan + one aggregate pair
     # (no 12-way self-join); q6's pricey-part set must reach the fact as
     # a broadcast semijoin
-    p5 = formatted_plan(QUERIES["tpcds_q5"](spark, SF_DIR))
+    p5 = query_plan(spark, "tpcds_q5", SF_DIR)
     assert "Expand" in p5 and node_counts(p5)["scans"] == 2, p5[:500]
-    p67 = formatted_plan(QUERIES["tpcds_q67"](spark, SF_DIR))
+    p67 = query_plan(spark, "tpcds_q67", SF_DIR)
     assert "Expand" in p67 and node_counts(p67)["scans"] == 3, p67[:500]
-    p66 = node_counts(formatted_plan(QUERIES["tpcds_q66"](spark, SF_DIR)))
+    p66 = node_counts(query_plan(spark, "tpcds_q66", SF_DIR))
     assert p66["aggregates"] == 2, f"q66 pivot is not one agg pair: {p66}"
     # q6's pricey-part semijoin: pin the SPECIFIC join — same line in the
     # simple-mode plan (two independent substring checks would pass with
@@ -193,9 +217,9 @@ def test_q47_q57_series_windows_over_monthly_grain(spark):
     q47 reads exactly its three join inputs once (lineitem, orders,
     part); q57's per-nation top-3 deviation rank must push the
     WindowGroupLimit heap below the rank's exchange."""
-    p47 = formatted_plan(QUERIES["tpcds_q47"](spark, SF_DIR))
+    p47 = query_plan(spark, "tpcds_q47", SF_DIR)
     assert node_counts(p47)["scans"] == 3, node_counts(p47)
-    p57 = formatted_plan(QUERIES["tpcds_q57"](spark, SF_DIR))
+    p57 = query_plan(spark, "tpcds_q57", SF_DIR)
     assert "WindowGroupLimit" in p57
     assert node_counts(p57)["scans"] == 4, node_counts(p57)
 
@@ -209,7 +233,7 @@ def test_q44_q70_rank_shapes(spark):
     Expand must run over the restricted (region, nation) aggregate with
     the fact read exactly once — the SUM-decomposability collapse of
     TPC-DS's two-pass spelling that the docstring claims."""
-    p44 = formatted_plan(QUERIES["tpcds_q44"](spark, SF_DIR))
+    p44 = query_plan(spark, "tpcds_q44", SF_DIR)
     nodes44 = tree_nodes(p44)
     assert nodes44.count("TakeOrderedAndProject") >= 2, nodes44
     # both Windows sit above their TOAP — the positional row_numbers run
@@ -220,7 +244,7 @@ def test_q44_q70_rank_shapes(spark):
     assert nodes44.count("Sort") <= 1, [x for x in nodes44 if x == "Sort"]
     assert nodes44.count("Window") == 2, nodes44
 
-    p70 = formatted_plan(QUERIES["tpcds_q70"](spark, SF_DIR))
+    p70 = query_plan(spark, "tpcds_q70", SF_DIR)
     c70 = node_counts(p70)
     assert "Expand" in p70, "q70 rollup lost its grouping-set Expand"
     assert c70["scans"] == 5, f"q70 re-scans a table: {c70}"
@@ -254,7 +278,7 @@ def test_knn_label_agreement_is_cell_local(spark):
     assignment kernel (MapInPandas) feeding a grouped-map top-k
     (FlatMapGroupsInPandas on centroid_id) — no join of pair rows, no
     nested loop anywhere."""
-    plan = formatted_plan(QUERIES["sim_knn_label_agreement"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_knn_label_agreement", SF_DIR)
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" in plan
     assert "Join" not in plan
@@ -275,7 +299,7 @@ def test_per_group_topk_uses_window_group_limit(spark, name):
     # a scale.top_k rank<=k filter must push a per-partition top-k heap
     # BELOW the shuffle (WindowGroupLimit, Spark >= 3.5) — at scale the
     # exchange then carries <= k rows per (partition, group), not the corpus.
-    plan = formatted_plan(QUERIES[name](spark, SF_DIR))
+    plan = query_plan(spark, name, SF_DIR)
     assert "WindowGroupLimit" in plan
 
 
@@ -340,27 +364,27 @@ def test_lateral_join_decorrelates(spark):
     # window join — never a per-outer-row nested-loop re-execution. Assert
     # both halves of the contract: the window rewrite IS there, and no
     # cartesian/nested-loop node sneaks in beside it.
-    plan = formatted_plan(QUERIES["ops_lateral_join"](spark, SF_DIR))
+    plan = query_plan(spark, "ops_lateral_join", SF_DIR)
     assert "Window" in plan
 
 
 def test_profile_stats_single_scan(spark):
     # Profiling N columns must still scan the fact table ONCE (multi-distinct
     # goes through a single Expand), not once per column.
-    nodes = tree_nodes(formatted_plan(QUERIES["ops_profile_stats"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "ops_profile_stats", SF_DIR))
     assert nodes.count("Scan parquet") == 1, nodes
 
 
 def test_bigram_lm_joins_broadcast(spark):
     # The LM count tables are vocab-bounded regardless of corpus size; the
     # scoring joins must broadcast them, never sort-merge the corpus.
-    plan = formatted_plan(QUERIES["text_bigram_lm_score"](spark, SF_DIR))
+    plan = query_plan(spark, "text_bigram_lm_score", SF_DIR)
     assert node_counts(plan)["bhj"] >= 2
 
 
 def test_random_projection_sign_table_broadcasts(spark):
     # The 16x64 Rademacher sign table is constant-size — broadcast join.
-    plan = formatted_plan(QUERIES["sim_random_projection"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_random_projection", SF_DIR)
     assert "BroadcastHashJoin" in plan
 
 
@@ -368,7 +392,7 @@ def test_pq_adc_is_map_only_scan(spark):
     # PQ encode + ADC scan must be one map-only mapInPandas pass over the
     # partitioned corpus (codebook ships in the closure): no join of any
     # kind, and the only exchange is the final top-20 global sort.
-    plan = formatted_plan(QUERIES["sim_pq_adc"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_pq_adc", SF_DIR)
     assert "MapInPandas" in plan
     assert "Join" not in plan
     assert tree_nodes(plan).count("Exchange") <= 1
@@ -379,7 +403,7 @@ def test_image_ahash_shuffles_hashes_not_bytes(spark):
     # — binary image/payload columns must never reach an exchange.
     import re
 
-    plan = formatted_plan(QUERIES["mm_image_ahash"](spark, SF_DIR))
+    plan = query_plan(spark, "mm_image_ahash", SF_DIR)
     assert "MapInPandas" in plan
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     # the window over ahash requires exactly one hash exchange...
@@ -410,7 +434,7 @@ def test_payload_builder_is_one_map_stage(spark, name):
     # stage (map_payload_rows), with zero exchanges and no join: payload
     # bytes cross into Python once and never shuffle; no orderBy, since
     # the driver compare sorts.
-    plan = formatted_plan(QUERIES[name](spark, SF_DIR))
+    plan = query_plan(spark, name, SF_DIR)
     assert node_counts(plan)["py_map"] == 1
     assert "Join" not in plan
     assert "Exchange" not in tree_nodes(plan)
@@ -419,7 +443,7 @@ def test_payload_builder_is_one_map_stage(spark, name):
 def test_quality_classifier_zero_shuffle(spark):
     # Hashed-feature scoring is pure expression work: no exchange except
     # the output sort (no UDF/python nodes: the snapshot gate's py_* = 0).
-    plan = formatted_plan(QUERIES["text_quality_classifier"](spark, SF_DIR))
+    plan = query_plan(spark, "text_quality_classifier", SF_DIR)
     assert tree_nodes(plan).count("Exchange") <= 1
 
 
@@ -428,7 +452,7 @@ def test_version_diff_shuffles_hashes_not_bodies(spark):
     # full-outer join's exchanges carry `h`, never the `text` column.
     import re
 
-    plan = formatted_plan(QUERIES["pipeline_version_diff"](spark, SF_DIR))
+    plan = query_plan(spark, "pipeline_version_diff", SF_DIR)
     assert "FullOuter" in plan
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     assert parts, "expected hash exchanges in the diff plan"
@@ -439,13 +463,13 @@ def test_merge_upsert_compresses_cdc_before_join(spark):
     # Latest-wins compression is a window on the CDC side; the base join
     # must be on the compressed output, with no extra exchange beyond
     # window + join + distinct-base.
-    plan = formatted_plan(QUERIES["pipeline_merge_upsert"](spark, SF_DIR))
+    plan = query_plan(spark, "pipeline_merge_upsert", SF_DIR)
     assert "Window" in plan
 
 
 def test_tombstone_purge_broadcasts_tombstones(spark):
     # The deletion list is tiny — membership must be a broadcast join.
-    plan = formatted_plan(QUERIES["pipeline_tombstone_purge"](spark, SF_DIR))
+    plan = query_plan(spark, "pipeline_tombstone_purge", SF_DIR)
     assert "BroadcastHashJoin" in plan
 
 
@@ -453,14 +477,14 @@ def test_bloom_decontam_broadcasts_bit_table(spark):
     # Both the position (set-bit) table and the exact-verify eval set are
     # broadcast; the training corpus must never be on the build side of a
     # shuffle join.
-    plan = formatted_plan(QUERIES["text_bloom_decontam"](spark, SF_DIR))
+    plan = query_plan(spark, "text_bloom_decontam", SF_DIR)
     assert node_counts(plan)["bhj"] >= 2
 
 
 def test_zorder_is_two_scans_plus_tiny_aggs(spark):
     # Z-key computation is pure integer expressions (codegen; the snapshot
     # gate holds its python nodes at 0), domain row broadcasts.
-    plan = formatted_plan(QUERIES["ops_zorder_pruning"](spark, SF_DIR))
+    plan = query_plan(spark, "ops_zorder_pruning", SF_DIR)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
@@ -468,7 +492,7 @@ def test_winsorize_broadcasts_cutoffs(spark):
     # The per-group cutoff table (5 rows) must broadcast back onto the
     # fact table; the plan must not contain a per-group global sort of
     # the raw values (the few-groups collapse weighted_quantile avoids).
-    plan = formatted_plan(QUERIES["ops_winsorize"](spark, SF_DIR))
+    plan = query_plan(spark, "ops_winsorize", SF_DIR)
     assert "BroadcastHashJoin" in plan
 
 
@@ -476,7 +500,7 @@ def test_pmi_vocab_broadcasts(spark):
     # Vocabulary (top-40) joins broadcast on both sides of the pair
     # self-join; the pair join itself is a doc_id equi-join, never a
     # cartesian product.
-    plan = formatted_plan(QUERIES["text_pmi_pairs"](spark, SF_DIR))
+    plan = query_plan(spark, "text_pmi_pairs", SF_DIR)
     assert node_counts(plan)["bhj"] >= 2
     assert "CartesianProduct" not in tree_nodes(plan)
 
@@ -485,7 +509,7 @@ def test_expectations_no_extra_scans(spark):
     # 7 expectations over 5 tables: each table is scanned at most twice
     # (documents carries 3 expectations on shared scans), and the RI
     # check broadcasts the customer key list.
-    plan = formatted_plan(QUERIES["pipeline_data_expectations"](spark, SF_DIR))
+    plan = query_plan(spark, "pipeline_data_expectations", SF_DIR)
     assert "BroadcastHashJoin" in plan
 
 
@@ -494,7 +518,7 @@ def test_attribution_single_user_shuffle(spark):
     # exchange on user_id before the final rollup; no self-join.
     import re
 
-    plan = formatted_plan(QUERIES["ev_attribution"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_attribution", SF_DIR)
     assert "Join" not in plan
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     assert any("user_id" in p for p in parts)
@@ -503,7 +527,7 @@ def test_attribution_single_user_shuffle(spark):
 def test_rfm_cutoffs_broadcast(spark):
     # Quintile cutoff table (3 metrics x 4 cutoffs) must broadcast back;
     # no global sort of the user metrics (binned quantile path).
-    plan = formatted_plan(QUERIES["ev_rfm_segments"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_rfm_segments", SF_DIR)
     assert "BroadcastHashJoin" in plan
 
 
@@ -512,7 +536,7 @@ def test_centroid_drift_single_shuffle_of_sums(spark):
     # carries integer partial sums, never raw embedding arrays.
     import re
 
-    plan = formatted_plan(QUERIES["sim_centroid_drift"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_centroid_drift", SF_DIR)
     assert "Join" not in plan
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     assert parts and all("embedding" not in p for p in parts), parts
@@ -522,14 +546,14 @@ def test_ivf_pq_probe_is_broadcast_equi_join(spark):
     # Encode is one mapInPandas pass; the probe joins the coded corpus to
     # the broadcast (query, list) table on cid — an equi-join, never a
     # cartesian scan of all lists; ADC is an Arrow-vectorized udf.
-    plan = formatted_plan(QUERIES["sim_ivf_pq"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_ivf_pq", SF_DIR)
     assert "MapInPandas" in plan
     assert "BroadcastHashJoin" in plan
 
 
 def test_path_topk_no_joins(spark):
     # Sessionize + path prefix + rollup: pure window/aggregate pipeline.
-    plan = formatted_plan(QUERIES["ev_path_topk"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_path_topk", SF_DIR)
     assert "Join" not in plan
     assert "Window" in plan
 
@@ -537,14 +561,14 @@ def test_path_topk_no_joins(spark):
 def test_mad_outliers_broadcasts_both_cutoff_tables(spark):
     # Median and MAD tables (5 rows each) broadcast back; the raw values
     # are never globally sorted per group.
-    plan = formatted_plan(QUERIES["ops_mad_outliers"](spark, SF_DIR))
+    plan = query_plan(spark, "ops_mad_outliers", SF_DIR)
     assert node_counts(plan)["bhj"] >= 2
 
 
 def test_join_cardinality_never_runs_the_raw_join(spark):
     # Both estimators join COUNT tables (pre-aggregated), never the raw
     # fact tables: every join input passes through a HashAggregate first.
-    nodes = tree_nodes(formatted_plan(QUERIES["ops_join_cardinality"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "ops_join_cardinality", SF_DIR))
     assert "CartesianProduct" not in nodes
     assert nodes.count("HashAggregate") >= 8  # partial+final per count table
 
@@ -553,7 +577,7 @@ def test_triangles_and_accuracy_bounded_joins(spark):
     # dedup_minhash_accuracy plans no nested loop at all (snapshot gate);
     # the triangle query's two are broadcast nested loops, never a
     # cartesian product
-    plan = formatted_plan(QUERIES["dedup_graph_triangles"](spark, SF_DIR))
+    plan = query_plan(spark, "dedup_graph_triangles", SF_DIR)
     assert "CartesianProduct" not in tree_nodes(plan)
 
 
@@ -596,7 +620,7 @@ def test_pps_prefix_sum_windows_are_chunk_partitioned(spark):
     # The corpus-sized window must partition by chunk (parallel); only the
     # bounded chunk-summary window may be unpartitioned. Offsets and the
     # total broadcast back.
-    plan = formatted_plan(QUERIES["sample_pps_systematic"](spark, SF_DIR))
+    plan = query_plan(spark, "sample_pps_systematic", SF_DIR)
     nodes = tree_nodes(plan)
     assert "CartesianProduct" not in nodes
     assert nodes.count("BroadcastExchange") >= 2  # offsets + total scalar
@@ -609,7 +633,7 @@ def test_covariance_pairs_collapse_before_shuffle(spark):
     # The 136x pair explode must be followed by map-side partial
     # aggregation (partial+final HashAggregate), so the shuffle carries
     # <= 136 rows per partition, not exploded data.
-    plan = formatted_plan(QUERIES["sim_covariance_matrix"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_covariance_matrix", SF_DIR)
     assert node_counts(plan)["aggregates"] >= 2
 
 
@@ -618,7 +642,7 @@ def test_entity_blocking_is_equi_join(spark):
     # block key — a nested-loop plan (held at 0 by the plan-snapshot gate)
     # means the band predicate fell out of the join keys and pair
     # generation went quadratic.
-    c = node_counts(formatted_plan(QUERIES["dedup_entity_blocking"](spark, SF_DIR)))
+    c = node_counts(query_plan(spark, "dedup_entity_blocking", SF_DIR))
     assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
@@ -629,7 +653,7 @@ def test_mmr_candidates_are_bucket_equi_join(spark):
     nested-loop/cartesian node here means the bucket key fell out of the
     join condition and candidate generation went back to O(N x Q); the
     plan-snapshot gate holds its nested_loop count at 0."""
-    c = node_counts(formatted_plan(QUERIES["sim_mmr_rerank"](spark, SF_DIR)))
+    c = node_counts(query_plan(spark, "sim_mmr_rerank", SF_DIR))
     assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
@@ -637,14 +661,14 @@ def test_hard_negatives_and_ndcg_bucket_joins(spark):
     # candidates meet on the bucket key in an equi-join; neither query
     # plans a nested loop (held at 0 by the plan-snapshot gate)
     for name in ("sim_hard_negatives", "sim_ndcg_eval"):
-        c = node_counts(formatted_plan(QUERIES[name](spark, SF_DIR)))
+        c = node_counts(query_plan(spark, name, SF_DIR))
         assert c["bhj"] + c["smj"] + c["shj"] >= 1, (name, c)
 
 
 def test_decay_weighted_broadcasts_scalar_not_window(spark):
     # max(ts) must arrive as a broadcast 1-row join, not as an
     # unpartitioned window over the event log.
-    plan = formatted_plan(QUERIES["ev_decay_weighted"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_decay_weighted", SF_DIR)
     assert "BroadcastExchange" in plan
     assert "Window" not in plan
 
@@ -652,7 +676,7 @@ def test_decay_weighted_broadcasts_scalar_not_window(spark):
 def test_kcenter_rounds_are_take_ordered_passes(spark):
     # Each greedy round reduces a full scan to ONE row via TakeOrdered
     # (map-side partial top-1), and centers re-enter as broadcasts.
-    nodes = tree_nodes(formatted_plan(QUERIES["sample_kcenter_coreset"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "sample_kcenter_coreset", SF_DIR))
     assert nodes.count("TakeOrderedAndProject") >= 3
     assert nodes.count("BroadcastExchange") >= 3
 
@@ -671,7 +695,7 @@ def test_bitmap_distinct_two_phase_no_expand(spark):
     # the bitmap form must plan as two plain hash aggregates (bit_or then
     # sum) — if a COUNT(DISTINCT) Expand node sneaks in, the whole point
     # (shuffling 8-byte bitmaps instead of raw ids) is lost
-    nodes = tree_nodes(formatted_plan(QUERIES["ops_bitmap_distinct"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "ops_bitmap_distinct", SF_DIR))
     assert "Expand" not in nodes
     assert nodes.count("HashAggregate") >= 2
 
@@ -682,7 +706,7 @@ def test_funnel_regex_single_data_shuffle(spark):
     # not shuffle twice
     import re
 
-    plan = formatted_plan(QUERIES["ev_funnel_regex"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_funnel_regex", SF_DIR)
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     assert sum(p.startswith("user_id") for p in parts) <= 1, parts
 
@@ -693,7 +717,7 @@ def test_collation_group_two_phase_sort_agg(spark):
     # partial (map-side) and final phases so only per-group partials
     # shuffle; this pins that shape (and documents the known scale cost:
     # a per-partition sort instead of a hash table)
-    plan = formatted_plan(QUERIES["ops_collation_group"](spark, SF_DIR))
+    plan = query_plan(spark, "ops_collation_group", SF_DIR)
     assert "SortAggregate" in plan
     assert "partial_" in plan and "merge_" in plan
     assert tree_nodes(plan).count("Exchange") <= 3  # distinct-forms phase + group + sort
@@ -703,7 +727,7 @@ def test_sorted_neighborhood_candidates_are_window_not_join(spark):
     """dedup_sorted_neighborhood: candidates come from lead() over the
     sort order (linear), and verification is equi-joins on doc_id against
     the shingle arrays — no all-pairs shape anywhere."""
-    plan = formatted_plan(QUERIES["dedup_sorted_neighborhood"](spark, SF_DIR))
+    plan = query_plan(spark, "dedup_sorted_neighborhood", SF_DIR)
     assert "Window" in plan
 
 
@@ -711,7 +735,7 @@ def test_dbscan_is_one_grouped_pass(spark):
     """sim_dbscan_core: the whole classification (degree, core, border)
     runs as ONE grouped-map matmul per label block — no pair rows, no
     joins at all; the only shuffle is groupBy(label)."""
-    plan = formatted_plan(QUERIES["sim_dbscan_core"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_dbscan_core", SF_DIR)
     assert "FlatMapGroupsInPandas" in plan
     assert "Join" not in plan
 
@@ -720,7 +744,7 @@ def test_crosslingual_profiles_broadcast(spark):
     """text_crosslingual_confusion: the (vocab x langs) profile tables
     must broadcast — scoring stays map-side; only per-(doc, lang) sums
     shuffle for the argmax."""
-    plan = formatted_plan(QUERIES["text_crosslingual_confusion"](spark, SF_DIR))
+    plan = query_plan(spark, "text_crosslingual_confusion", SF_DIR)
     assert "BroadcastHashJoin" in plan
 
 
@@ -735,7 +759,7 @@ def test_image_neardup_bands_are_equi_join(spark):
     """mm_image_neardup_pairs: candidates come from the banded equi-join
     on (band, 16-bit key) — 8-byte hashes shuffle, image bytes never do;
     no nested loop anywhere."""
-    c = node_counts(formatted_plan(QUERIES["mm_image_neardup_pairs"](spark, SF_DIR)))
+    c = node_counts(query_plan(spark, "mm_image_neardup_pairs", SF_DIR))
     # one hashing stage per join side: the encode→decode chain is fused
     assert c["py_map"] == 2
     assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
@@ -744,7 +768,7 @@ def test_image_neardup_bands_are_equi_join(spark):
 def test_linear_interpolate_is_union_window(spark):
     """ev_linear_interpolate: the union-window shape — no join; both
     neighbors resolve in one sort per event_type."""
-    plan = formatted_plan(QUERIES["ev_linear_interpolate"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_linear_interpolate", SF_DIR)
     # grid construction broadcasts the 24-row hourly range (its nested
     # loop is over a constant relation); the DATA path (events) must not
     # join — neighbors come from the two windows over the union
@@ -758,7 +782,7 @@ def test_interval_bucket_join_is_equi_join(spark):
     # bucket id (shuffle/broadcast hash), never a nested-loop over the raw
     # range predicate (the plan-snapshot gate holds nested_loop at 0) —
     # the whole point of the bucket discretization.
-    c = node_counts(formatted_plan(QUERIES["ops_interval_bucket_join"](spark, SF_DIR)))
+    c = node_counts(query_plan(spark, "ops_interval_bucket_join", SF_DIR))
     assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
 
 
@@ -766,7 +790,7 @@ def test_bootstrap_explode_is_before_partial_agg(spark):
     # The 32-way replicate explode must feed a map-side partial aggregate
     # (HashAggregate below the exchange), so the shuffle carries B rows per
     # task — not B x N rows.
-    nodes = tree_nodes(formatted_plan(QUERIES["sample_bootstrap_ci"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "sample_bootstrap_ci", SF_DIR))
     assert "Generate" in nodes  # the explode
     assert nodes.count("HashAggregate") >= 2  # partial + final
 
@@ -776,7 +800,7 @@ def test_url_canonical_is_single_shuffle_codegen(spark):
     # work: the plan must show exactly one exchange (the canonical-key
     # groupBy) with a partial aggregate below it, and no UDF evaluation
     # (the snapshot gate holds py_eval at 0).
-    nodes = tree_nodes(formatted_plan(QUERIES["dedup_url_canonical"](spark, SF_DIR)))
+    nodes = tree_nodes(query_plan(spark, "dedup_url_canonical", SF_DIR))
     assert nodes.count("HashAggregate") >= 2  # partial + final
     # one agg exchange + the orderBy's range exchange, nothing else
     assert nodes.count("Exchange") <= 2
@@ -786,7 +810,7 @@ def test_residual_quantize_is_map_only_then_agg(spark):
     # Both RVQ codebooks ship in the closure; assignment + residual + both
     # error terms happen in ONE Arrow map pass. No join anywhere, and the
     # only exchanges are the final 7-row agg (+ orderBy).
-    plan = formatted_plan(QUERIES["sim_residual_quantize"](spark, SF_DIR))
+    plan = query_plan(spark, "sim_residual_quantize", SF_DIR)
     assert "Join" not in plan
     nodes = tree_nodes(plan)
     assert nodes.count("MapInPandas") == 1
@@ -797,7 +821,7 @@ def test_interpolate_has_no_shrinking_window_frame(spark):
     # Forward-neighbor lookup must be the REVERSED growing frame, never a
     # (1, unboundedFollowing) shrinking frame: Spark re-scans current->end
     # per row for shrinking frames — O(n^2), measured 242s vs 2s at sf0.1.
-    plan = formatted_plan(QUERIES["ev_linear_interpolate"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_linear_interpolate", SF_DIR)
     low = plan.lower()
     assert "unboundedfollowing" not in low, "shrinking frame reintroduced"
     assert low.count("desc nulls last") >= 3  # the reversed total order
@@ -806,7 +830,7 @@ def test_interpolate_has_no_shrinking_window_frame(spark):
 def test_time_to_convert_has_no_shrinking_frame(spark):
     # same class as the interpolate fix: forward as-of must be the
     # reversed growing frame, never (currentRow, unboundedFollowing)
-    plan = formatted_plan(QUERIES["ev_time_to_convert"](spark, SF_DIR))
+    plan = query_plan(spark, "ev_time_to_convert", SF_DIR)
     assert "unboundedfollowing" not in plan.lower()
 
 
@@ -815,7 +839,7 @@ def test_q64_one_fact_pass_snowflake(spark):
     (brand, nation, year) aggregate — the snowflake fact chain appears
     under InMemoryTableScan (one materialization), never as a second
     live fact pass; bounded nation/region broadcast; no nested loop."""
-    p64 = formatted_plan(QUERIES["tpcds_q64"](spark, SF_DIR))
+    p64 = query_plan(spark, "tpcds_q64", SF_DIR)
     assert "InMemoryTableScan" in p64, p64[:600]
     c64 = node_counts(p64)
     assert c64["bhj"] >= 4, c64  # nation/region broadcast in the chain
@@ -825,7 +849,7 @@ def test_q29_chain_is_equi_join(spark):
     """r8 widening: the bought->returned->re-bought chain must meet in an
     EQUI-join on the (cust, pk) compound key (the d2 > d1 condition is a
     post-join filter), never a nested loop over the date predicate."""
-    c29 = node_counts(formatted_plan(QUERIES["tpcds_q29"](spark, SF_DIR)))
+    c29 = node_counts(query_plan(spark, "tpcds_q29", SF_DIR))
     assert c29["smj"] + c29["shj"] + c29["bhj"] >= 3, c29
 
 
@@ -833,7 +857,7 @@ def test_q73_cohort_before_dimension_join(spark):
     """r8 widening: q73's HAVING band collapses the fact to cohort rows
     BEFORE the customer join; customer must not be the broadcast build
     side (it scales with SF — AQE may broadcast the bounded cohort)."""
-    c73 = node_counts(formatted_plan(QUERIES["tpcds_q73"](spark, SF_DIR)))
+    c73 = node_counts(query_plan(spark, "tpcds_q73", SF_DIR))
     assert c73["aggregates"] >= 2, c73  # partial+final count agg above the join
 
 
@@ -841,7 +865,7 @@ def test_q78_anti_join_and_one_channel_pass(spark):
     """r8 widening: q78's return exclusion must be a real ANTI-join on
     orderkey (not a row filter) and both channels must pivot from ONE
     conditional-agg pass — no second fact pass, top-20 as a heap."""
-    p78 = formatted_plan(QUERIES["tpcds_q78"](spark, SF_DIR))
+    p78 = query_plan(spark, "tpcds_q78", SF_DIR)
     assert "LeftAnti" in p78, p78[:600]
     assert "TakeOrderedAndProject" in p78
     c78 = node_counts(p78)
@@ -852,7 +876,7 @@ def test_q72_date_lag_is_filter_not_range_join(spark):
     """r8 widening: q72's date-lag condition must be a post-equi-join
     filter inside one conditional-agg pass — all joins equi (the spec's
     range-join trap avoided), nation broadcast, fact read once."""
-    c72 = node_counts(formatted_plan(QUERIES["tpcds_q72"](spark, SF_DIR)))
+    c72 = node_counts(query_plan(spark, "tpcds_q72", SF_DIR))
     assert c72["scans"] == 4, f"q72 re-scans a table: {c72}"
     assert c72["aggregates"] == 2, f"q72 lost its single agg pass: {c72}"
     assert c72["bhj"] >= 1, c72  # nation broadcast
@@ -862,7 +886,7 @@ def test_q39_one_fact_pass_month_pair(spark):
     """r8 widening: q39's consecutive-month self-join must run over the
     PERSISTED bounded (brand, month) stats (InMemoryTableScan) — one
     fact pass, equi-joins only."""
-    p39 = formatted_plan(QUERIES["tpcds_q39"](spark, SF_DIR))
+    p39 = query_plan(spark, "tpcds_q39", SF_DIR)
     assert "InMemoryTableScan" in p39, p39[:600]
 
 
@@ -874,14 +898,14 @@ def test_q95_single_fact_pass_and_q10_or_union(spark):
     key sets (sequential semi-joins would compute AND), the returns branch
     must compress lineitem via a semi-join BEFORE any customer-side work,
     and nothing degrades to a nested loop."""
-    p95 = formatted_plan(QUERIES["tpcds_q95"](spark, SF_DIR))
+    p95 = query_plan(spark, "tpcds_q95", SF_DIR)
     c95 = node_counts(p95)
     assert c95["scans"] == 2, f"q95 re-scans the fact: {c95}"
     # the >1-supplier + returned flags and the money live in one
     # order-grain aggregate pair feeding the final global pair
     assert c95["aggregates"] == 4, c95
 
-    p10 = formatted_plan(QUERIES["tpcds_q10"](spark, SF_DIR))
+    p10 = query_plan(spark, "tpcds_q10", SF_DIR)
     c10 = node_counts(p10)
     assert "Union" in p10, "q10 lost the OR-branch union"
     # lineitem appears exactly once (returns branch); orders three times —
@@ -899,20 +923,20 @@ def test_r9_session2_tpcds_shapes(spark):
     q99: five latency bands from ONE aggregate pair over one fact-fact
     join (never five filtered re-scans). q13: the AND-of-ORs filter keeps
     both joins hash-based (no nested loop from the disjunction)."""
-    c94 = node_counts(formatted_plan(QUERIES["tpcds_q94"](spark, SF_DIR)))
+    c94 = node_counts(query_plan(spark, "tpcds_q94", SF_DIR))
     assert c94["scans"] == 2 and c94["aggregates"] == 4, c94
 
-    p92 = formatted_plan(QUERIES["tpcds_q92"](spark, SF_DIR))
+    p92 = query_plan(spark, "tpcds_q92", SF_DIR)
     c92 = node_counts(p92)
     assert c92["bhj"] >= 1, c92
     # window lines + per-part avg: exactly the spec's two fact touches
     assert p92.count("lineitem") <= 4, p92[:800]
 
-    c99 = node_counts(formatted_plan(QUERIES["tpcds_q99"](spark, SF_DIR)))
+    c99 = node_counts(query_plan(spark, "tpcds_q99", SF_DIR))
     assert c99["aggregates"] == 2, f"q99 bands re-scan: {c99}"
     assert c99["scans"] == 2, c99
 
-    c13 = node_counts(formatted_plan(QUERIES["tpcds_q13"](spark, SF_DIR)))
+    c13 = node_counts(query_plan(spark, "tpcds_q13", SF_DIR))
     assert c13["bhj"] + c13["smj"] + c13["shj"] >= 2, c13
 
 
@@ -922,17 +946,17 @@ def test_r9_session3_tpcds_shapes(spark):
     loop. q76: three pushed-filter branches into ONE Union and ONE
     aggregate pair — zero joins anywhere. q90: one events scan, one
     aggregate pair (the two scalar subqueries collapsed), zero joins."""
-    c41 = node_counts(formatted_plan(QUERIES["tpcds_q41"](spark, SF_DIR)))
+    c41 = node_counts(query_plan(spark, "tpcds_q41", SF_DIR))
     assert c41["scans"] == 2, c41
     assert c41["bhj"] >= 1, f"q41 brand set not broadcast: {c41}"
 
-    p76 = formatted_plan(QUERIES["tpcds_q76"](spark, SF_DIR))
+    p76 = query_plan(spark, "tpcds_q76", SF_DIR)
     c76 = node_counts(p76)
     assert "Union" in p76
     assert c76["aggregates"] == 2, f"q76 re-aggregates per channel: {c76}"
     assert c76["bhj"] + c76["smj"] + c76["shj"] + c76["nested_loop"] == 0, c76
 
-    c90 = node_counts(formatted_plan(QUERIES["tpcds_q90"](spark, SF_DIR)))
+    c90 = node_counts(query_plan(spark, "tpcds_q90", SF_DIR))
     assert c90["scans"] == 1 and c90["aggregates"] == 2, c90
     assert c90["bhj"] + c90["smj"] + c90["shj"] + c90["nested_loop"] == 0, c90
 
@@ -947,10 +971,10 @@ def test_r10_tpcds_shapes(spark):
     one rollup Expand + one ranking
     window over subtotal-grain rows, no join in the post-aggregate
     stage, no nested loop."""
-    p14 = formatted_plan(QUERIES["tpcds_q14_rollup"](spark, SF_DIR))
+    p14 = query_plan(spark, "tpcds_q14_rollup", SF_DIR)
     assert p14.count("lineitem") == 1, "q14 re-scans the fact"
 
-    p36 = formatted_plan(QUERIES["tpcds_q36_deep"](spark, SF_DIR))
+    p36 = query_plan(spark, "tpcds_q36_deep", SF_DIR)
     assert "Expand" in p36 and "Window" in p36
     assert p36.count("lineitem") <= 2, "q36_deep re-scans the fact"
 
@@ -983,3 +1007,12 @@ def test_catalog_table_scan_counts_as_scan(spark):
         assert node_counts(plan)["scans"] == 1, plan
     finally:
         spark.sql("DROP TABLE plan_scan_t")
+
+
+def test_plan_reads_leave_no_cache_behind(spark, cache_entries_at_start):
+    """Every ``query_plan`` read in this module released its build's
+    caches, the cache-using builders' included: a leftover cache flips
+    later plans in the shared session from broadcast to sort-merge."""
+    for name in CACHE_USING:
+        query_plan(spark, name, SF_DIR)
+    assert _cache_entries(spark) == cache_entries_at_start
