@@ -42,5 +42,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; omitted keys get a rows-only check."""
+    """DuckDB-equivalent SQL for every query in ``queries()``."""
     return registry.export_ordered(registry.ORACLES)

@@ -258,10 +258,6 @@ def udf_grouped_map_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return (
-        src.groupBy("event_type")
-        .applyInPandas(
-            normalize, schema="event_id long, event_type string, scaled_ppm long"
-        )
-        .orderBy("event_id")
+    return src.groupBy("event_type").applyInPandas(
+        normalize, schema="event_id long, event_type string, scaled_ppm long"
     )

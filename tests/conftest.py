@@ -1,8 +1,12 @@
-"""Shared fixtures: one local SparkSession per test run + a DuckDB oracle.
+"""Shared fixtures: one local SparkSession per test run + a DuckDB oracle,
+and the oracle gate.
 
-The comparator mirrors the driver's t2 check: sort columns by name, sort rows,
-compare values. Floats must be *exactly* equal — the engine's determinism
-contract (exact decimal aggregation surfaced as double) makes that achievable.
+The gate checks every registered query against its DuckDB oracle exactly
+once, through ``tools.drive_common.check``: the drive tools' compare,
+LEAK rule included. ``oracle_home`` gives each query one test module;
+each module's gate parametrizes over ``homed_queries(__name__)``. Floats
+must be *exactly* equal — the engine's determinism contract (exact decimal
+aggregation surfaced as double) makes that achievable.
 """
 
 from __future__ import annotations
@@ -11,11 +15,44 @@ import os
 
 import pytest
 
+from datafusion_ballista_dhruvil_spark.operators import load_all
+from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
+from datafusion_ballista_dhruvil_spark.operators.tpch import ALL_TPCH
 from datafusion_ballista_dhruvil_spark.session import create_session
-from tools.drive_common import canon, make_duckdb
+from tools.drive_common import check, make_duckdb
+
+load_all()
 
 # sf0.01 = the driver's t2 correctness gate scale
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
+
+#: family test modules, by query-name prefix
+_FAMILIES = (
+    ("test_relational", ("ops_",)),
+    ("test_h2o_udf", ("h2o_", "udf_", "nyctaxi")),
+    (
+        "test_pipeline_ops",
+        ("dedup_", "sim_", "text_", "mm_", "ev_", "split_", "sample_", "pack_", "pipeline_"),
+    ),
+)
+
+
+def oracle_home(name: str) -> str:
+    """The one test module whose gate checks ``name``; a query outside
+    every family lands in test_query_coverage."""
+    if name in ALL_TPCH:
+        return "test_tpch"
+    if name in ("asof_click_attribution", "range_recent_clicks"):
+        return "test_temporal"
+    for module, prefixes in _FAMILIES:
+        if name.startswith(prefixes):
+            return module
+    return "test_query_coverage"
+
+
+def homed_queries(module: str) -> list[str]:
+    home = module.rsplit(".", 1)[-1]
+    return sorted(n for n in QUERIES if oracle_home(n) == home)
 
 
 def pytest_configure(config):
@@ -40,32 +77,6 @@ def oracle():
     con.close()
 
 
-def _normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
-    """Sort columns by name, then rows; canonicalize value types
-    (type-strict, int != float, to mirror the driver's value hashing)."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(canon(r[i]) for i in order) for r in rows]
-    out.sort()
-    return out
-
-
-def assert_query_matches(spark, oracle, query_fn, oracle_sql: str, min_rows: int = 0):
-    sdf = query_fn(spark, SF_DIR)
-    scols = [c.lower() for c in sdf.columns]
-    srows = [tuple(r) for r in sdf.collect()]
-
-    cur = oracle.execute(oracle_sql)
-    ocols = [d[0].lower() for d in cur.description]
-    orows = cur.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"columns differ: {scols} vs {ocols}"
-    assert len(srows) == len(orows), f"row count {len(srows)} vs oracle {len(orows)}"
-    assert len(srows) >= min_rows, f"query returned {len(srows)} rows (< {min_rows})"
-
-    sn = _normalize(srows, scols)
-    on = _normalize(orows, ocols)
-    mismatches = [(a, b) for a, b in zip(sn, on) if a != b]
-    assert not mismatches, (
-        f"{len(mismatches)}/{len(sn)} rows differ; first: spark={mismatches[0][0]} "
-        f"oracle={mismatches[0][1]}"
-    )
+def assert_query_matches(spark, oracle, build, sql: str, min_rows: int = 1):
+    failure = check(spark, oracle, build, sql, SF_DIR, min_rows)
+    assert failure is None, failure

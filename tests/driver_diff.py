@@ -3,8 +3,10 @@
 Usage: python tests/driver_diff.py q1 q2 ...   (default: the r1 red rows)
        python tests/driver_diff.py all
 
-Mimics the driver: run Spark query + DuckDB oracle at sf0.01, sort columns
-by name, sort rows by all columns, stringify floats, diff cell-by-cell.
+Mimics the driver: run Spark query + DuckDB oracle at sf0.01 and report a
+query OK only when both compares in tools/drive_common pass: ``check`` (the
+type-strict value hash, LEAK rule included) and ``pandas_diff`` (sorted
+columns and rows, ``str()`` cells, strict pandas dtype).
 
 CANONICALIZER QUIRKS (hard-won; see also tools/drive_common.canon) — the
 driver's value-hash is sensitive to all of these, so query + oracle must
@@ -44,24 +46,14 @@ from __future__ import annotations
 
 import os
 import sys
-
-import duckdb
-import pandas as pd
+import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-    return df
+from tools.drive_common import check, make_duckdb, pandas_diff  # noqa: E402
 
 
 def main(names: list[str]) -> None:
@@ -78,83 +70,28 @@ def main(names: list[str]) -> None:
         .appName("driver-diff")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.isdir(p):
-            # Spark-written table (stress corpora): directory of part files
-            p = os.path.join(p, "*.parquet")
-        elif not os.path.exists(p):
-            continue
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    import time as _time
+    con = make_duckdb(SF_DIR)
 
     summary: dict[str, str] = {}
     for name in names:
         print(f"===== {name} =====", flush=True)
-        t0 = _time.time()
-        try:
-            sdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
-        except Exception as e:  # noqa: BLE001
-            summary[name] = f"SPARK_ERR {type(e).__name__}: {str(e)[:200]}"
-            print(summary[name])
-            continue
-        osql = registry.ORACLES.get(name)
-        if osql is None:
-            # mimic the driver: canonicalize the spark frame (catches
-            # unhashable list-cells even without an oracle)
+        t0 = time.time()
+        build, sql = registry.QUERIES[name], registry.ORACLES[name]
+        failure = check(spark, con, build, sql, SF_DIR, min_rows=0)
+        if failure is None:
             try:
-                _canon(sdf.astype(str))
-                summary[name] = f"no_oracle rows={len(sdf)}"
+                failure = pandas_diff(
+                    build(spark, SF_DIR).toPandas(), con.execute(sql).fetchdf()
+                )
             except Exception as e:  # noqa: BLE001
-                summary[name] = f"CANON_ERR {type(e).__name__}: {str(e)[:120]}"
-            print(summary[name])
-            continue
-        try:
-            odf = con.execute(osql).fetchdf()
-        except Exception as e:  # noqa: BLE001
-            summary[name] = f"ORACLE_ERR {type(e).__name__}: {str(e)[:200]}"
-            print(summary[name])
-            continue
-        try:
-            s, o = _canon(sdf), _canon(odf)
-        except Exception as e:  # noqa: BLE001
-            summary[name] = f"CANON_ERR {type(e).__name__}: {str(e)[:120]}"
-            print(summary[name])
-            continue
-        if sorted(s.columns) != sorted(o.columns):
-            summary[name] = f"SCHEMA_MISMATCH spark={list(s.columns)} duck={list(o.columns)}"
-            print(summary[name])
-            continue
-        if len(s) != len(o):
-            summary[name] = f"ROWS_MISMATCH spark={len(s)} duck={len(o)}"
-            print(summary[name])
-            continue
-        ndiff = 0
-        dtw = ""
-        for col in s.columns:
-            if str(s[col].dtype) != str(o[col].dtype):
-                dtw += f" [{col}: {s[col].dtype} vs {o[col].dtype}]"
-            sv, ov = s[col], o[col]
-            for i in range(len(s)):
-                a, b = sv.iloc[i], ov.iloc[i]
-                same = (pd.isna(a) is True and pd.isna(b) is True) or str(a) == str(b)
-                if not same:
-                    ndiff += 1
-                    if ndiff <= 8:
-                        print(
-                            f"  row {i} col {col}: spark={a!r} ({type(a).__name__}) "
-                            f"duck={b!r} ({type(b).__name__})"
-                        )
-        status = "OK" if ndiff == 0 else f"DIFF cells={ndiff}"
-        summary[name] = f"{status} rows={len(s)} {dtw} ({_time.time()-t0:.1f}s)"
+                failure = f"PANDAS_ERR {type(e).__name__}: {str(e)[:200]}"
+        summary[name] = f"{failure or 'OK'} ({time.time() - t0:.1f}s)"
         print(summary[name])
     spark.stop()
     print("\n######## SUMMARY ########")
     bad = 0
     for name, st in summary.items():
-        flag = "" if st.startswith(("OK", "no_oracle")) else "  <<<< BAD"
+        flag = "" if st.startswith("OK") else "  <<<< BAD"
         if flag:
             bad += 1
         print(f"{name}: {st}{flag}")

@@ -5,37 +5,14 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES, QUERIES
 
-from tests.conftest import SF_DIR, assert_query_matches
-
-load_all()
-
-PREFIXES = (
-    "dedup_", "sim_", "text_", "mm_", "ev_", "split_", "sample_", "pack_",
-    "pipeline_",
-)
-PIPELINE = sorted(n for n in QUERIES if n.startswith(PREFIXES))
-
-# queries whose result can legitimately be empty at small SF (near-dup
-# detectors over random text may find nothing)
-MAY_BE_EMPTY = {
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_cluster_cc",
-    "sim_embedding_neardup",
-}
+from tests.conftest import SF_DIR, assert_query_matches, homed_queries
 
 
-@pytest.mark.parametrize("name", PIPELINE)
+@pytest.mark.parametrize("name", homed_queries(__name__))
 def test_pipeline_matches_oracle(spark, oracle, name):
-    if name not in ORACLES:
-        df = QUERIES[name](spark, SF_DIR)
-        assert len(df.collect()) > 0
-        return
-    min_rows = 0 if name in MAY_BE_EMPTY else 1
-    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name], min_rows=min_rows)
+    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name])
 
 
 def test_decode_features_deterministic(spark):

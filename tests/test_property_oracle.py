@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 from datafusion_ballista_dhruvil_spark.functions.compat import dsum, sql_dsum
 from datafusion_ballista_dhruvil_spark.session import Tables
 
-from tests.conftest import SF_DIR, _normalize
+from tests.conftest import SF_DIR
+from tools.drive_common import diff
 
 NUM_COLS = {
     "l_quantity": (1.0, 50.0),
@@ -80,7 +81,7 @@ def test_random_query_matches_oracle(spark, oracle, ast):
 
     sdf = df.groupBy(*keys).agg(agg_expr) if keys else df.agg(agg_expr)
     srows = [tuple(r) for r in sdf.collect()]
-    scols = [c.lower() for c in sdf.columns]
+    scols = sdf.columns
 
     sql = f"SELECT {', '.join(keys + [agg_sql])} FROM lineitem"
     if where_sql:
@@ -88,11 +89,7 @@ def test_random_query_matches_oracle(spark, oracle, ast):
     if keys:
         sql += " GROUP BY " + ", ".join(keys)
     cur = oracle.execute(sql)
-    ocols = [d[0].lower() for d in cur.description]
-    orows = cur.fetchall()
-
-    assert len(srows) == len(orows), sql
-    assert _normalize(srows, scols) == _normalize(orows, ocols), sql
+    assert diff(scols, srows, [d[0] for d in cur.description], cur.fetchall()) is None, sql
 
 
 # ---------------------------------------------------------------------------
@@ -196,10 +193,9 @@ def test_random_window_matches_oracle(spark, oracle, ast):
     srows = [tuple(r) for r in spark.sql(sql).collect()]
     cur = oracle.execute(sql)
     orows = cur.fetchall()
-    assert len(srows) == len(orows) > 0, sql
-    assert _normalize(srows, ["o_orderkey", "v"]) == _normalize(
-        orows, ["o_orderkey", "v"]
-    ), sql
+    assert len(srows) > 0, sql
+    cols = ["o_orderkey", "v"]
+    assert diff(cols, srows, cols, orows) is None, sql
 
 
 @given(

@@ -1,12 +1,7 @@
-"""Catch-all oracle coverage: every registered query must be exercised by
-pytest, not only by the driver/contract tools.
-
-The family tests (test_relational / test_pipeline_ops / test_h2o_udf /
-test_tpch / test_temporal) parametrize over name prefixes; queries whose
-names fall outside every family — the connector round-trips, the snapshot
-time-travel query, hybrid retrieval, the mixture resampler, YoY growth,
-and anything added later under a new prefix — land here automatically, so
-a new query can never silently skip the pytest oracle gate.
+"""Catch-all oracle coverage: the gate's home for every query outside the
+family modules (conftest.oracle_home) — the connector round-trips, the
+snapshot time-travel query, hybrid retrieval, the mixture resampler, YoY
+growth, and anything added later under a new prefix.
 """
 
 from __future__ import annotations
@@ -14,56 +9,33 @@ from __future__ import annotations
 import glob
 import json
 import os
-import re
 
 import pytest
 
-from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES, QUERIES
 
-from tests.conftest import SF_DIR, assert_query_matches
-
-load_all()
-
-#: prefixes parametrized by the dedicated family test modules
-_FAMILY_PREFIXES = (
-    "ops_", "dedup_", "sim_", "text_", "mm_", "ev_", "split_", "sample_",
-    "pack_", "pipeline_", "h2o_", "udf_", "nyctaxi",
-)
-#: individually tested in test_temporal.py
-_TESTED_ELSEWHERE = {"asof_click_attribution", "range_recent_clicks"}
-
-REMAINDER = sorted(
-    n
-    for n in QUERIES
-    if not n.startswith(_FAMILY_PREFIXES)
-    and not re.fullmatch(r"q\d+", n)
-    and n not in _TESTED_ELSEWHERE
-)
+from tests.conftest import SF_DIR, assert_query_matches, homed_queries, oracle_home
+from tools.drive_common import pandas_diff
 
 
 def test_every_query_has_a_pytest_home():
-    # if a family module drops a prefix, its queries reappear in REMAINDER
-    # and get tested below — this is just a sanity floor
-    assert len(REMAINDER) >= 10
+    # a renamed home module would silently drop its queries from the gate
+    here = os.path.dirname(os.path.abspath(__file__))
+    for home in {oracle_home(n) for n in QUERIES}:
+        assert os.path.exists(os.path.join(here, f"{home}.py")), home
 
 
-@pytest.mark.parametrize("name", REMAINDER)
+@pytest.mark.parametrize("name", homed_queries(__name__))
 def test_remainder_matches_oracle(spark, oracle, name):
-    if name not in ORACLES:
-        df = QUERIES[name](spark, SF_DIR)
-        assert len(df.collect()) > 0
-        return
-    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name], min_rows=1)
+    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name])
 
 
 # ---------------------------------------------------------------------------
 # Driver-parity gate for the never-verdicted tail (VERDICT r4 item 5): the
-# family tests above compare collected VALUES; the driver additionally
-# hashes through pandas, where a value-equal column can still drift on
-# dtype (the r4 ns-vs-us timestamp flags). This test runs the driver's
-# exact toPandas-level compare — sorted columns, sorted rows, stringified
-# cells, STRICT pandas dtype equality — on every registered query that is
+# oracle gate compares collected VALUES; the driver additionally hashes
+# through pandas, where a value-equal column can still drift on dtype (the
+# r4 ns-vs-us timestamp flags). This test runs the driver's toPandas-level
+# compare (drive_common.pandas_diff) on every registered query that is
 # absent from all CORRECTNESS_r*.json, so additions can never accumulate
 # an unverdicted tail that surprises a later rotation.
 
@@ -81,51 +53,14 @@ def _driver_verdicted() -> set[str]:
 UNVERDICTED = sorted(set(QUERIES) - _driver_verdicted())
 
 
-def _canon_pandas(df):
-    df = df[sorted(df.columns)]
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-
-
 @pytest.mark.driver_parity
 @pytest.mark.parametrize("name", UNVERDICTED)
 def test_unverdicted_queries_are_driver_green(spark, oracle, name):
-    import pandas as pd
-
     sdf = QUERIES[name](spark, SF_DIR).toPandas()
-    osql = ORACLES.get(name)
-    if osql is None:
-        # driver falls back to a rows-only check for oracle-less queries
-        assert len(sdf) > 0
-        return
-    odf = oracle.execute(osql).fetchdf()
-    s, o = _canon_pandas(sdf), _canon_pandas(odf)
-    assert sorted(s.columns) == sorted(o.columns), (
-        f"schema: spark={list(s.columns)} duck={list(o.columns)}"
-    )
-    assert len(s) == len(o), f"rows: spark={len(s)} duck={len(o)}"
-    for col in s.columns:
-        assert str(s[col].dtype) == str(o[col].dtype), (
-            f"dtype drift on {col}: spark {s[col].dtype} vs "
-            f"duck {o[col].dtype} — value-equal today, hash-divergent in "
-            "the driver; normalize (cast/string-render) both sides"
-        )
-        sv, ov = s[col], o[col]
-        for i in range(len(s)):
-            a, b = sv.iloc[i], ov.iloc[i]
-            # bool(): pd.isna returns numpy.bool_ for numpy scalars and
-            # `numpy.bool_(True) is True` is False — the identity check
-            # made this branch silently unreachable (ADVICE r5)
-            a_na, b_na = bool(pd.isna(a)), bool(pd.isna(b))
-            if a_na and b_na:
-                continue
-            assert a_na == b_na, (
-                f"NA-status diff row {i} col {col}: spark={a!r} duck={b!r}"
-            )
-            assert str(a) == str(b), (
-                f"cell diff row {i} col {col}: spark={a!r} duck={b!r}"
-            )
+    failure = pandas_diff(sdf, oracle.execute(ORACLES[name]).fetchdf())
+    # dtype drift is value-equal today but hash-divergent in the driver:
+    # normalize (cast/string-render) both sides
+    assert failure is None, failure
 
 
 def test_export_priority_covers_every_unverdicted_query():

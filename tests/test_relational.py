@@ -4,24 +4,14 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES, QUERIES
 
-from tests.conftest import assert_query_matches
-
-load_all()
-
-OPS = sorted(n for n in QUERIES if n.startswith("ops_"))
+from tests.conftest import assert_query_matches, homed_queries
 
 
-@pytest.mark.parametrize("name", OPS)
+@pytest.mark.parametrize("name", homed_queries(__name__))
 def test_ops_matches_oracle(spark, oracle, name):
-    if name not in ORACLES:
-        # rows-only operators: still must run and return rows
-        df = QUERIES[name](spark, "/root/testdata/sf0.01")
-        assert len(df.collect()) > 0
-        return
-    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name], min_rows=1)
+    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name])
 
 
 def test_weighted_quantile_helper(spark):

@@ -273,13 +273,18 @@ def test_cache_lifecycle_no_leaks(spark):
 def _run_throwaway_query(spark, build):
     """Register ``build`` under a throwaway name, build it through the
     registry, and remove it again."""
-    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES, query
+    from datafusion_ballista_dhruvil_spark.operators.registry import (
+        ORACLES,
+        QUERIES,
+        query,
+    )
 
     name = "_test_build_scope"
     try:
-        return query(name)(build)(spark, SF_DIR)
+        return query(name, "SELECT 1")(build)(spark, SF_DIR)
     finally:
         QUERIES.pop(name)
+        ORACLES.pop(name)
 
 
 def test_owned_result_prepare_fires_once_at_first_action(spark):

@@ -1,23 +1,22 @@
 """Dual-dialect SQL conformance: every TPC-H oracle SQL string runs
-UNMODIFIED on Spark SQL and produces exactly the rows the DataFrame
-implementation produces (which in turn hash-matches DuckDB running the same
-string). One SQL text -> two engines -> identical results: the strongest
-form of the conformance the reference's own harness approximates with
-row-by-row golden files (benchmarks/src/bin/tpch.rs:1002-1022).
+UNMODIFIED on Spark SQL and hash-matches DuckDB running the same string.
+The oracle gate (test_tpch) shows each DataFrame implementation matches the
+same DuckDB rows under the same compare, and equality is transitive, so the
+SQL text also equals the DataFrame. One SQL text -> two engines -> identical
+results: the strongest form of the conformance the reference's own harness
+approximates with row-by-row golden files
+(benchmarks/src/bin/tpch.rs:1002-1022).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from datafusion_ballista_dhruvil_spark.operators import load_all
-from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES, QUERIES
+from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES
 from datafusion_ballista_dhruvil_spark.operators.tpch import ALL_TPCH
 from datafusion_ballista_dhruvil_spark.session import register_tables
 
-from tests.conftest import SF_DIR, _normalize
-
-load_all()
+from tests.conftest import SF_DIR, assert_query_matches
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -26,12 +25,6 @@ def _views(spark):
 
 
 @pytest.mark.parametrize("name", ALL_TPCH)
-def test_sql_text_equals_dataframe(spark, name):
-    sql_df = spark.sql(ORACLES[name])
-    api_df = QUERIES[name](spark, SF_DIR)
-    srows = [tuple(r) for r in sql_df.collect()]
-    arows = [tuple(r) for r in api_df.collect()]
-    scols = [c.lower() for c in sql_df.columns]
-    acols = [c.lower() for c in api_df.columns]
-    assert sorted(scols) == sorted(acols)
-    assert _normalize(srows, scols) == _normalize(arows, acols)
+def test_sql_text_equals_dataframe(spark, oracle, name):
+    sql = ORACLES[name]
+    assert_query_matches(spark, oracle, lambda s, _: s.sql(sql), sql)

@@ -83,6 +83,8 @@ def test_asof_join_tolerance(spark):
     assert out2[1].asof_rid is None
 
 
+# The oracle gate's home for these two queries (conftest.oracle_home), with
+# a floor of 10 rows: at sf0.01 they return 2,006 and 2,014.
 def test_asof_click_attribution_oracle(spark, oracle):
     assert_query_matches(
         spark,

