@@ -12,9 +12,9 @@ cpus-stamped copy (the driver's 8-core scaling run must not overwrite the
 32-core detail), beside a ``layers`` record per query: medians over its
 timed iterations of build wall and CPU time, the Catalyst phases, the Spark
 jobs' work (jobs, stages, tasks, task CPU and run time, GC, shuffle, spill,
-Python-worker time), result return time and the host's granted CPU share,
-read through perfbench/ledger.py. tools/bench_gate.py judges regressions
-between two such files on task CPU.
+Python-worker time, classes compiled by the code generator), result return
+time and the host's granted CPU share, read through perfbench/ledger.py.
+tools/bench_gate.py judges regressions between two such files on task CPU.
 
 Mirrors the reference harness (benchmarks/src/bin/tpch.rs:90-109,963-1000):
 iterations=3 per query (override BENCH_ITERS), median reported. Each timing
@@ -238,6 +238,12 @@ def fit_summary_line(summary: dict, limit: int = SUMMARY_LINE_MAX) -> str:
         queries.popitem()
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def timed_iteration(spark, tracer, fn, sf_dir: str, group: str) -> tuple[float, dict]:
     """One timed iteration of a query under its own Spark job group.
 
@@ -245,9 +251,11 @@ def timed_iteration(spark, tracer, fn, sf_dir: str, group: str) -> tuple[float, 
     the action's completion as in every protocol-v2 artifact, and the
     iteration's run record for :func:`query_layers`. Only the job-group
     tagging (``inline_s``), two span stamps and two ``process_time`` reads
-    happen inside the timed interval; the host tick reads sit outside it.
+    happen inside the timed interval; the host tick reads and the codegen
+    compile count reads sit outside it.
     """
     c0 = cpu_ticks()
+    k0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     spark.sparkContext.setJobGroup(group, group)
     inline = time.perf_counter() - t0
@@ -265,6 +273,7 @@ def timed_iteration(spark, tracer, fn, sf_dir: str, group: str) -> tuple[float, 
         "build_cpu_s": build_cpu,
         "end": action["end"],
         "granted": granted(c0, cpu_ticks()),
+        "compiles": codegen_compiles(spark) - k0,
         "inline_s": inline,
     }
 
@@ -288,6 +297,9 @@ def query_layers(store, runs: list[dict]) -> dict[str, float]:
         rec["operators.build_cpu_s"] = run["build_cpu_s"]
         rec["result.return_s"] = max(0.0, run["end"] - last_job_end) if last_job_end else 0.0
         rec["host.granted_share"] = run["granted"]
+        # a warm codegen cache reads 0; a cold one or code that emits new
+        # Java source on every build reads more
+        rec["exec.codegen_compiles"] = run["compiles"]
         rec["trace.inline_s"] = run["inline_s"]
         per.append(rec)
     out = {k: round(statistics.median(r[k] for r in per), 6) for k in per[0]}

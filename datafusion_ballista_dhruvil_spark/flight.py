@@ -9,8 +9,9 @@ IPC *encoding* over HTTP (rest.py) but not the native Flight gRPC framing —
 grpcio is absent in-container. ``pyarrow.flight`` bundles its own gRPC,
 so the real wire ships after all:
 
-- ``GetFlightInfo(command=SQL)``  -> plan the query, return schema + ticket
-  (reference get_flight_info_statement, flight_sql.rs:625-639)
+- ``GetFlightInfo(command=SQL)``  -> parse and analyze the query, return
+  schema + ticket (reference get_flight_info_statement,
+  flight_sql.rs:625-639); no optimizer run, physical plan or Spark job
 - ``DoGet(ticket)``               -> execute + stream Arrow record batches
   (reference do_get_fallback/record_batch_to_resp, flight_sql.rs:548,451)
 - ``ListFlights``                 -> catalog tables as flights (reference
@@ -24,6 +25,12 @@ driver still collects the result (same as the reference scheduler pulling
 shuffle partitions to answer a fetch). Serve aggregated/final results this
 way; bulk raw data belongs in parquet sinks. The server binds in-driver,
 exactly like serving.py (Thrift) and rest.py (REST).
+
+Repeated statements reuse their compiled code: ``session.create_session``
+sizes Spark's generated-class cache (``CODEGEN_CACHE_ENTRIES``) past the
+engine's working set, so a DoGet of a statement already served compiles
+nothing. A session the engine did not build keeps Spark's 100 entries, and
+a mix of statements that needs more recompiles on every pass.
 """
 
 from __future__ import annotations
@@ -34,6 +41,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.flight as flight
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class SparkFlightServer(flight.FlightServerBase):
@@ -54,9 +62,14 @@ class SparkFlightServer(flight.FlightServerBase):
             return self._prepared.get(sql, sql)
 
     def _plan_schema(self, sql: str) -> pa.Schema:
-        # schema without execution: Spark resolves the plan lazily; toArrow
-        # on LIMIT 0 runs only the planner (reference df_schema_to_arrow)
-        return self._spark.sql(sql).limit(0).toArrow().schema
+        # the analyzed plan's schema, converted as DataFrame.toArrow does
+        # (reference df_schema_to_arrow): no optimizer, physical plan or job
+        df = self._spark.sql(sql)
+        return to_arrow_schema(
+            df.schema,
+            error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+        )
 
     # -- Flight RPCs -------------------------------------------------------
     def get_flight_info(self, context, descriptor):
@@ -75,8 +88,10 @@ class SparkFlightServer(flight.FlightServerBase):
         return flight.GeneratorStream(table.schema, table.to_batches())
 
     def list_flights(self, context, criteria):
-        for t in self._spark.catalog.listTables():
-            name = f"{t.namespace[0]}.{t.name}" if t.namespace else t.name
+        # SHOW TABLES runs no job; catalog.listTables reads its rows with
+        # toLocalIterator, one Spark job per partition
+        for t in self._spark.sql("SHOW TABLES").collect():
+            name = f"{t.namespace}.{t.tableName}" if t.namespace else t.tableName
             sql = f"SELECT * FROM {name}"
             descriptor = flight.FlightDescriptor.for_command(sql.encode())
             endpoint = flight.FlightEndpoint(

@@ -42,6 +42,17 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: Generated classes Spark keeps compiled (``spark.sql.codegen.cache.maxEntries``,
+#: default 100). One sf0.01 pass over all 354 registered queries compiles
+#: about 4,660 distinct classes, the largest single query 76, and the 8
+#: Flight TPC-H statements of perfbench's flight_mixed about 140: at 100
+#: entries every warm pass of that mix recompiled 125 classes and ran them
+#: before the JIT had warmed them. Holding a whole registry pass costs about
+#: 52 MB of JVM non-heap (426 MB against 374 MB at 100 entries, after a
+#: full GC). A static conf: a session the engine did not build keeps
+#: Spark's 100.
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def _cpus() -> int:
     try:
@@ -100,6 +111,8 @@ def create_session(
         # reader rejects; read as raw int64 nanos and convert at load
         # (load_table) — values are µs-aligned so the conversion is lossless.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Compile each generated class once per JVM (CODEGEN_CACHE_ENTRIES).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Quieter driver logs for bench runs.
         .config("spark.ui.showConsoleProgress", "false")
     )

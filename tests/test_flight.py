@@ -15,7 +15,7 @@ pa_flight = pytest.importorskip(
 from datafusion_ballista_dhruvil_spark.flight import start_flight_endpoint
 from datafusion_ballista_dhruvil_spark.session import register_tables
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -39,10 +39,34 @@ SQL = (
 )
 
 
-def test_get_flight_info_plans_without_executing(client):
-    info = client.get_flight_info(pa_flight.FlightDescriptor.for_command(SQL))
+#: DECIMAL, DATE, TIMESTAMP and STRING columns: the types whose Arrow
+#: mapping a schema-only conversion could get wrong
+TYPED_SQL = (
+    "SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(15, 2)) AS price, "
+    "CAST(o_orderdate AS DATE) AS day, CAST(o_orderdate AS TIMESTAMP) AS ts, "
+    "o_orderpriority FROM orders WHERE o_orderkey < 100 ORDER BY o_orderkey"
+)
+
+
+def test_get_flight_info_plans_without_executing(spark, server):
+    descriptor = pa_flight.FlightDescriptor.for_command(SQL)
+    info, jobs = count_jobs(spark, lambda: server.get_flight_info(None, descriptor))
+    assert jobs == 0
     assert [f.name for f in info.schema] == ["n_regionkey", "n"]
     assert len(info.endpoints) == 1
+    infos, jobs = count_jobs(spark, lambda: list(server.list_flights(None, None)))
+    assert jobs == 0
+    assert any("nation" in fi.descriptor.command.decode() for fi in infos)
+
+
+def test_flight_info_schema_is_the_streamed_schema(client):
+    info = client.get_flight_info(pa_flight.FlightDescriptor.for_command(TYPED_SQL))
+    table = client.do_get(info.endpoints[0].ticket).read_all()
+    assert table.num_rows > 0
+    assert info.schema == table.schema
+    assert [str(f.type) for f in info.schema][1:4] == [
+        "decimal128(15, 2)", "date32[day]", "timestamp[us, tz=UTC]"
+    ]
 
 
 def test_do_get_streams_query_result(spark, client):

@@ -1,5 +1,5 @@
 """The session seams: schema-bound table reads, driver-side local frames,
-and the SPARK_GRAFT_EXTRA_CONF parser."""
+the generated-class cache and the SPARK_GRAFT_EXTRA_CONF parser."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import os
 import shutil
 import subprocess
 import sys
-import uuid
 
 import pytest
 
@@ -19,21 +18,7 @@ from datafusion_ballista_dhruvil_spark.session import (
     table_path,
 )
 
-from tests.conftest import SF_DIR
-
-
-def _jobs(spark, fn):
-    """(result of fn(), number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"test-session-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    # job-start events reach the status tracker through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import SF_DIR, count_jobs
 
 
 @pytest.fixture
@@ -45,9 +30,9 @@ def sf_copy(tmp_path):
 
 
 def test_second_load_table_launches_no_job(spark, sf_copy):
-    _, first = _jobs(spark, lambda: load_table(spark, sf_copy, "nation"))
+    _, first = count_jobs(spark, lambda: load_table(spark, sf_copy, "nation"))
     assert first >= 1  # the one schema inference
-    df, second = _jobs(spark, lambda: load_table(spark, sf_copy, "nation"))
+    df, second = count_jobs(spark, lambda: load_table(spark, sf_copy, "nation"))
     assert second == 0
     assert df.count() == 25
 
@@ -55,15 +40,15 @@ def test_second_load_table_launches_no_job(spark, sf_copy):
 def test_touched_file_infers_again(spark, sf_copy):
     path = table_path(sf_copy, "region")
     load_table(spark, sf_copy, "region")
-    _, cached = _jobs(spark, lambda: load_table(spark, sf_copy, "region"))
+    _, cached = count_jobs(spark, lambda: load_table(spark, sf_copy, "region"))
     assert cached == 0
     st = os.stat(path)
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))  # new mtime
-    _, after_touch = _jobs(spark, lambda: load_table(spark, sf_copy, "region"))
+    _, after_touch = count_jobs(spark, lambda: load_table(spark, sf_copy, "region"))
     assert after_touch >= 1
     # a rewrite with different content (size) is seen as well
     shutil.copy(table_path(SF_DIR, "nation"), path)
-    df, after_rewrite = _jobs(spark, lambda: load_table(spark, sf_copy, "region"))
+    df, after_rewrite = count_jobs(spark, lambda: load_table(spark, sf_copy, "region"))
     assert after_rewrite >= 1
     assert df.count() == 25 and "n_nationkey" in df.columns
 
@@ -74,6 +59,20 @@ def test_bound_schema_matches_inferred_schema(spark):
     for name in TABLE_NAMES:
         path = table_path(SF_DIR, name)
         assert session.table_schema(spark, path) == spark.read.parquet(path).schema, name
+
+
+def _probe(code: str, tmp_path) -> str:
+    """stdout of ``code`` run in its own Python process, hence its own JVM."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(tmp_path),
+        env={**os.environ, "PYTHONPATH": repo, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    return out.stdout + out.stderr[-2000:]
 
 
 def test_schemas_belong_to_the_spark_context(tmp_path):
@@ -92,16 +91,8 @@ assert session.load_table(spark, sf, "nation").count() == 25
 spark.stop()
 print("SCHEMA_PROBE_OK")
 """
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = subprocess.run(
-        [sys.executable, "-c", probe],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd=str(tmp_path),
-        env={**os.environ, "PYTHONPATH": repo, "SPARK_GRAFT_DRIVER_MEM": "1g"},
-    )
-    assert "SCHEMA_PROBE_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+    out = _probe(probe, tmp_path)
+    assert "SCHEMA_PROBE_OK" in out, out[-4000:]
 
 
 def test_local_frame_round_trips_without_a_job(spark):
@@ -118,15 +109,48 @@ def test_local_frame_round_trips_without_a_job(spark):
     ]
     df = local_frame(spark, rows, schema)
     assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
-    got, jobs = _jobs(spark, df.collect)
+    got, jobs = count_jobs(spark, df.collect)
     assert jobs == 0
     assert [tuple(r) for r in got] == rows
     assert df.schema == spark.createDataFrame([], schema).schema
 
     empty = local_frame(spark, [], df.schema)
-    got, jobs = _jobs(spark, empty.collect)
+    got, jobs = count_jobs(spark, empty.collect)
     assert got == [] and jobs == 0
     assert empty.schema == df.schema
+
+
+def test_warm_pass_compiles_nothing(tmp_path):
+    """The generated-class cache holds a whole pass of perfbench
+    flight_mixed's statements (``perfbench/workloads.FLIGHT_SQL``), whose
+    generated code is the same on every build, so a second pass compiles
+    nothing; Spark's 100 entries recompiled ~125. The probe has its own
+    JVM: the shared test session's cache holds the suite's earlier
+    classes, and its compile counter counts every thread's compiles."""
+    probe = f"""
+from datafusion_ballista_dhruvil_spark import session
+from datafusion_ballista_dhruvil_spark.operators import load_all
+from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES
+load_all()
+spark = session.create_session(app_name="codegen-probe", master="local[2]")
+assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+    session.CODEGEN_CACHE_ENTRIES
+)
+session.register_tables(spark, {SF_DIR!r})
+compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+counts = []
+for _ in range(2):
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    for name in ["q3", "q4", "q5", "q7", "q9", "q10", "q11", "q20"]:
+        spark.sql(ORACLES[name]).toArrow()
+    counts.append(compiles.METRIC_COMPILATION_TIME().getCount() - before)
+spark.stop()
+print("COMPILES", *counts)
+"""
+    out = _probe(probe, tmp_path)
+    assert "COMPILES " in out, out[-4000:]
+    first, second = map(int, out.split("COMPILES ", 1)[1].split()[:2])
+    assert first > 0 and second == 0, (first, second)
 
 
 def test_extra_conf_items():
