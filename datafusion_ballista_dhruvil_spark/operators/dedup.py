@@ -19,6 +19,7 @@ Scale posture at 100 TB:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +27,7 @@ from pyspark.sql.window import Window
 
 from datafusion_ballista_dhruvil_spark.operators.registry import query
 from datafusion_ballista_dhruvil_spark.operators.scale import (
+    after_action,
     cached,
     release_cached,
     top_k,
@@ -55,16 +57,17 @@ def observe_bucket_cap(df: DataFrame, ids_col: str, tag: str, cap: int = None):
     """Make MAX_BUCKET_DOCS truncation detectable instead of silent.
 
     Attaches a row-transparent ``observe`` node counting buckets whose
-    member array exceeds ``cap`` (plus the max bucket size seen), and a
-    daemon thread that logs a WARNING once the first action on the plan
-    completes. Truncation drops every pair involving a doc outside a
-    degenerate bucket's ``cap`` smallest ids — recall loss that must be
-    visible at runtime, not discovered downstream. Returns
-    ``(df, observation)``; callers that want programmatic access (tests,
-    pipeline health checks) read ``observation.get`` after an action.
+    member array exceeds ``cap`` (plus the max bucket size seen), and,
+    inside a query build, a ``scale.after_action`` check that logs a
+    WARNING after the query's action if any bucket was truncated (a
+    plan-only build drops it unrun). Truncation drops every pair
+    involving a doc outside a degenerate bucket's ``cap`` smallest ids —
+    recall loss that must be visible at runtime, not discovered
+    downstream. ``bucket_pairs`` attaches it to every capped explode.
+    Returns ``(df, observation)``; tests and pipeline health checks read
+    ``observation.get`` after an action.
     """
     import logging
-    import threading
 
     from pyspark.sql import Observation
 
@@ -78,22 +81,75 @@ def observe_bucket_cap(df: DataFrame, ids_col: str, tag: str, cap: int = None):
         F.max(F.array_size(F.col(ids_col))).alias("max_bucket"),
     )
 
-    def _wait() -> None:
+    def _warn() -> None:
+        log = logging.getLogger(__name__)
         try:
-            m = obs.get  # blocks until the first action completes
+            # the listener bus completes the observation just after the
+            # action returns; each read waits at most 100 ms
+            if not any(obs._jo.getRowOrEmpty().isDefined() for _ in range(20)):
+                return
+            m = obs.get
             if (m.get("n_truncated") or 0) > 0:
-                logging.getLogger(__name__).warning(
+                log.warning(
                     "%s: %d bucket(s) exceeded MAX_BUCKET_DOCS=%d "
                     "(largest=%d); pairs beyond the %d smallest doc_ids per "
                     "bucket were dropped — degenerate corpus, run exact "
                     "dedup first or raise the cap",
                     tag, m["n_truncated"], cap, m["max_bucket"], cap,
                 )
-        except Exception:
-            pass  # observation thread must never take down the driver
+        except Exception:  # noqa: BLE001 — the check must never take down the query's result
+            log.debug("%s: bucket-cap check failed", tag, exc_info=True)
 
-    threading.Thread(target=_wait, daemon=True).start()
+    after_action(_warn)
     return out, obs
+
+
+def bucket_pairs(
+    buckets: DataFrame, members: str, tag: str, keys: Sequence[str] = ()
+) -> DataFrame:
+    """(*keys, d1, d2): each unordered pair of a bucket's members once,
+    d1 < d2 — the in-bucket pair explode of every banded candidate
+    generator. ``members`` holds doc ids, or structs whose first field is
+    the doc id (d1 and d2 are then the structs); a doc appears at most
+    once per bucket. ``keys`` are bucket columns carried onto each pair.
+    Members sort and only the MAX_BUCKET_DOCS smallest pair (read at
+    call time), under ``observe_bucket_cap``'s counter; each member pairs
+    with the members after it, so no pair is built twice."""
+    buckets, _ = observe_bucket_cap(buckets.where(F.array_size(members) >= 2), members, tag)
+    ids = F.slice(F.array_sort(members), 1, MAX_BUCKET_DOCS).alias("__ids")
+    pair = F.expr(
+        "flatten(transform(__ids, (x, i) -> transform("
+        "slice(__ids, i + 2, size(__ids) - i - 1), y -> struct(x AS d1, y AS d2))))"
+    )
+    return (
+        buckets.select(*keys, ids)
+        .select(*keys, F.explode(pair).alias("__p"))
+        .select(*keys, "__p.d1", "__p.d2")
+    )
+
+
+def set_overlap(
+    pairs: DataFrame, arrs: DataFrame, left: str = "d1", right: str = "d2"
+) -> DataFrame:
+    """``pairs`` with the shingle-set overlap of the docs in its ``left``
+    and ``right`` columns, read from the (doc_id, ss) relation ``arrs``:
+    bigint ``common``, ``n1``, ``n2`` and double ``jaccard`` = common /
+    (n1 + n2 - common), NULL when both sets are empty — the one
+    verification step of every candidate-then-verify builder."""
+    s1 = arrs.select(F.col("doc_id").alias(left), F.col("ss").alias("__ss1"))
+    s2 = arrs.select(F.col("doc_id").alias(right), F.col("ss").alias("__ss2"))
+    common = F.array_size(F.array_intersect("__ss1", "__ss2")).cast("bigint")
+    n1 = F.array_size("__ss1").cast("bigint")
+    n2 = F.array_size("__ss2").cast("bigint")
+    return (
+        pairs.join(s1, left)
+        .join(s2, right)
+        .select(*pairs.columns, common.alias("common"), n1.alias("n1"), n2.alias("n2"))
+        .withColumn(
+            "jaccard",
+            F.try_divide(F.col("common").cast("double"), F.expr("n1 + n2 - common")),
+        )
+    )
 
 
 def _tokens(col: str = "text"):
@@ -262,7 +318,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = arrs.select("doc_id", F.explode("ss").alias("s"))
     # one groupBy(shingle) + in-bucket pair explode, not a shingle self-join:
     # same O(df^2) pair cardinality (the algorithm's cost model), but one
-    # shuffle of the shingle table instead of two plus a join.
+    # shuffle of the shingle table instead of two plus a join. Not
+    # bucket_pairs: this is the exact verifier, and its MAX_BUCKET_DOCS cap
+    # would change the answer.
     pairs = (
         sh.groupBy("s")
         .agg(F.collect_list("doc_id").alias("ids"))
@@ -414,62 +472,46 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_cluster_cc).
 
     Shape choices (each replaces a join with something cheaper):
-    - candidates come from ONE groupBy(band, sig) + in-bucket pair explode,
-      not a bands-self-join: the self-join shuffled (and under a cold cache
-      computed) the signature table twice. O(bucket^2) pair generation is
-      the algorithm's intent — LSH's guarantee IS that buckets stay small;
-      degenerate boilerplate mega-buckets are capped at MAX_BUCKET_DOCS
-      (deterministic smallest-doc_id sample) so no task ever owns an
-      unbounded quadratic explode.
+    - candidates come from ONE groupBy(band, sig) + ``bucket_pairs``, not
+      a bands-self-join: the self-join shuffled (and under a cold cache
+      computed) the signature table twice. The kernel caps degenerate
+      mega-buckets at MAX_BUCKET_DOCS (deterministic smallest-doc_id
+      sample), so no task ever owns an unbounded quadratic explode.
     - verification is digest-representative (see verified_pairs_of): one
-      array_intersect per DISTINCT canonical-digest pair, joined back to
+      ``set_overlap`` per DISTINCT canonical-digest pair, joined back to
       all candidate pairs by digest — pair-grain shuffles carry 16-byte
       digests, shingle arrays ship only at rep grain. (The earlier direct
       form attached both arrays to every pair; before that, two exploded
       shingle self-joins — each step removed a corpus-sized shuffle.)
     """
     # NOT prepared (materialized before the action): the five consumer
-    # subtrees (bands, dg1, dg2, ss1, ss2) race to build the cold cache
-    # in concurrent stages, but those redundant builds overlap on
-    # otherwise-idle cores; serializing the build through a count() job
-    # was MEASURED slower end-to-end (r10: minhash_lsh warm 2.43s ->
-    # 2.87s, cluster_cc 4.7s -> 5.7s) — wall time beats CPU thrift here.
+    # subtrees (bands, dg1, dg2, set_overlap's two sides) race to build
+    # the cold cache in concurrent stages, but those redundant builds
+    # overlap on otherwise-idle cores; serializing the build through a
+    # count() job was MEASURED slower end-to-end (r10: minhash_lsh warm
+    # 2.43s -> 2.87s, cluster_cc 4.7s -> 5.7s) — wall time beats CPU
+    # thrift here.
     return verified_pairs_of(cached(_shingle_arrays(spark, sf_dir)))
 
 
 def lsh_candidates(arrs: DataFrame) -> DataFrame:
     """(d1, d2): distinct LSH candidate pairs — docs sharing any band
-    bucket, d1 < d2, mega-buckets capped at MAX_BUCKET_DOCS (deterministic
-    smallest-doc_id sample; see observe_bucket_cap for the loud counter)."""
-    bands = _band_signatures(arrs)
+    bucket, d1 < d2, from ``bucket_pairs`` (mega-buckets capped at
+    MAX_BUCKET_DOCS, a deterministic smallest-doc_id sample)."""
     buckets = (
-        bands.groupBy("band", "sig")
-        .agg(F.collect_list("doc_id").alias("ids0"))
-        .where(F.array_size("ids0") >= 2)
+        _band_signatures(arrs)
+        .groupBy("band", "sig")
+        .agg(F.collect_list("doc_id").alias("ids"))
     )
-    buckets, _ = observe_bucket_cap(buckets, "ids0", "minhash_lsh")
-    return (
-        buckets
-        # mega-bucket guard: sort (deterministic regardless of collect_list
-        # order) and keep at most MAX_BUCKET_DOCS smallest doc_ids
-        .select(F.slice(F.array_sort("ids0"), 1, MAX_BUCKET_DOCS).alias("ids"))
-        .select(
-            F.explode(
-                F.expr(
-                    "filter(flatten(transform(ids, x -> transform(ids, y -> "
-                    "struct(x AS d1, y AS d2)))), p -> p.d1 < p.d2)"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2")
-        .distinct()
-    )
+    return bucket_pairs(buckets, "ids", "minhash_lsh").distinct()
 
 
 def verified_pairs_of(arrs: DataFrame) -> DataFrame:
     """_verified_pairs over an explicit (doc_id, ss) shingle-set relation —
     lets pipeline compositions run near-dup detection on an already
     filtered/exact-deduped corpus (see pipeline_clean_corpus).
+    Candidates are ``lsh_candidates`` (``bucket_pairs`` over the band
+    buckets); each representative pair is scored by ``set_overlap``.
 
     Digest-representative verification (r7, from the Zipf-skew stress):
     Jaccard is a function of the two shingle SETS only, so docs with
@@ -518,21 +560,8 @@ def verified_pairs_of(arrs: DataFrame) -> DataFrame:
         )
     )
     reps = top_k(cd, ["dg1", "dg2"], ["d1", "d2"], 1).select("dg1", "dg2", "d1", "d2")
-    s1 = arrs.select(F.col("doc_id").alias("d1"), F.col("ss").alias("ss1"))
-    s2 = arrs.select(F.col("doc_id").alias("d2"), F.col("ss").alias("ss2"))
-    common = F.array_size(F.array_intersect(F.col("ss1"), F.col("ss2")))
-    jac = F.col("common").cast("double") / (F.col("n1") + F.col("n2") - F.col("common"))
     verdicts = (
-        reps.join(s1, "d1")
-        .join(s2, "d2")
-        .select(
-            "dg1",
-            "dg2",
-            common.alias("common"),
-            F.array_size("ss1").alias("n1"),
-            F.array_size("ss2").alias("n2"),
-        )
-        .withColumn("jaccard", jac)
+        set_overlap(reps, arrs)
         .where(F.col("jaccard") >= 0.5)
         .select("dg1", "dg2", "jaccard")
     )
@@ -720,40 +749,27 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b"),
     ).select("doc_id", "sig", "b.k", "b.seg")
-    # emit a pair only from the FIRST band where the halves agree (band 1
+    buckets = segs.groupBy("k", "seg").agg(
+        F.collect_list(F.struct("doc_id", "sig")).alias("ids")
+    )
+    # keep a pair only from the FIRST band where the halves agree (band 1
     # additionally requires differing low halves): no pair is produced twice,
     # so no distinct — that was a second full shuffle of the candidate set
     # (324k structs at sf0.1; 5.5s -> see PERF.md). Hamming filters inline
     # before the only remaining exchange (the output sort).
-    buckets = (
-        segs.groupBy("k", "seg")
-        .agg(F.collect_list(F.struct("doc_id", "sig")).alias("ids0"))
-        .where(F.array_size("ids0") >= 2)
+    low = 1073741823
+    first_band = (F.col("k") == 0) | (
+        F.col("d1.sig").bitwiseAND(low) != F.col("d2.sig").bitwiseAND(low)
     )
-    buckets, _ = observe_bucket_cap(buckets, "ids0", "simhash_bands")
-    cand = (
-        buckets
-        # mega-bucket guard (see MAX_BUCKET_DOCS): struct array sorts by
-        # doc_id first, so the kept sample is the smallest doc_ids
-        .select(
-            "k",
-            F.slice(F.array_sort("ids0"), 1, MAX_BUCKET_DOCS).alias("ids"),
-        )
-        .select(
-            F.explode(
-                F.expr(
-                    "filter(flatten(transform(ids, x -> transform(ids, y -> "
-                    "struct(x.doc_id AS d1, y.doc_id AS d2, x.sig AS sig1, "
-                    "y.sig AS sig2)))), p -> p.d1 < p.d2 AND (k = 0 OR "
-                    "(p.sig1 & 1073741823) != (p.sig2 & 1073741823)))"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2", "p.sig1", "p.sig2")
-    )
-    hamming = F.bit_count(F.col("sig1").bitwiseXOR(F.col("sig2")))
+    hamming = F.bit_count(F.col("d1.sig").bitwiseXOR(F.col("d2.sig")))
     return (
-        cand.select("d1", "d2", hamming.alias("hamming"))
+        bucket_pairs(buckets, "ids", "simhash_bands", keys=["k"])
+        .where(first_band)
+        .select(
+            F.col("d1.doc_id").alias("d1"),
+            F.col("d2.doc_id").alias("d2"),
+            hamming.alias("hamming"),
+        )
         .where(F.col("hamming") <= 1)
         .orderBy("hamming", "d1", "d2")
     )
@@ -897,7 +913,9 @@ def chunk_pair_edges(documents: DataFrame) -> DataFrame:
     """Distinct directed (d1, d2) pairs of documents sharing a chunk hash.
     A chunk held by more than 64 documents adds no pairs (the
     MAX_BUCKET_DOCS rationale: a universal-boilerplate chunk must not
-    explode the pair count)."""
+    explode the pair count). Not bucket_pairs: an oversize chunk drops
+    out whole instead of pairing its smallest ids, and pairs are
+    directed."""
     grp = (
         chunk_hashes(documents)
         .groupBy("h")
@@ -1122,6 +1140,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.array_size("new0") >= 1) & (F.array_size("old0") >= 1))
     )
     buckets, _ = observe_bucket_cap(buckets, "old0", "incremental_lsh")
+    # not bucket_pairs: the explode is bipartite (new x old, each side
+    # capped on its own), |new|*|old| per bucket instead of |bucket|^2
     cand = (
         buckets.select(
             F.slice(F.array_sort("new0"), 1, MAX_BUCKET_DOCS).alias("nids"),
@@ -1138,23 +1158,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.new_doc", "p.old_doc")
         .distinct()
     )
-    s1 = arrs.select(F.col("doc_id").alias("new_doc"), F.col("ss").alias("ss1"))
-    s2 = arrs.select(F.col("doc_id").alias("old_doc"), F.col("ss").alias("ss2"))
-    common = F.array_size(F.array_intersect(F.col("ss1"), F.col("ss2")))
-    jac = F.col("common").cast("double") / (
-        F.col("n1") + F.col("n2") - F.col("common")
-    )
     return (
-        cand.join(s1, "new_doc")
-        .join(s2, "old_doc")
-        .select(
-            "new_doc",
-            "old_doc",
-            common.alias("common"),
-            F.array_size("ss1").alias("n1"),
-            F.array_size("ss2").alias("n2"),
-        )
-        .withColumn("jaccard", jac)
+        set_overlap(cand, arrs, "new_doc", "old_doc")
         .where(F.col("jaccard") >= 0.5)
         .select("new_doc", "old_doc", "jaccard")
         .orderBy(F.desc("jaccard"), "new_doc", "old_doc")
@@ -1521,24 +1526,10 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     est_num = sum(
         F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0) for j in range(K)
     ).cast("bigint")
-    s1 = arrs.select(F.col("doc_id").alias("d1"), F.col("ss").alias("ss1"))
-    s2 = arrs.select(F.col("doc_id").alias("d2"), F.col("ss").alias("ss2"))
-    x = (
-        cand.join(m1, "d1")
-        .join(m2, "d2")
-        .select("d1", "d2", est_num.alias("est_num"))
-        .join(s1, "d1")
-        .join(s2, "d2")
-        .select(
-            "d1",
-            "d2",
-            "est_num",
-            F.array_size(F.array_intersect("ss1", "ss2")).cast("bigint").alias("common"),
-            F.array_size("ss1").cast("bigint").alias("n1"),
-            F.array_size("ss2").cast("bigint").alias("n2"),
-        )
-        .withColumn("u", F.col("n1") + F.col("n2") - F.col("common"))
-    )
+    x = set_overlap(
+        cand.join(m1, "d1").join(m2, "d2").select("d1", "d2", est_num.alias("est_num")),
+        arrs,
+    ).withColumn("u", F.col("n1") + F.col("n2") - F.col("common"))
     return (
         x.select(
             "d1",
@@ -1548,7 +1539,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n1",
             "n2",
             (F.col("est_num") / F.lit(float(K))).alias("est_jaccard"),
-            (F.col("common").cast("double") / F.col("u")).alias("jaccard"),
+            "jaccard",
             F.expr(
                 f"abs(est_num * u - common * {K}) * 1000000 div ({K} * u)"
             ).alias("err_ppm"),
@@ -2080,8 +2071,8 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-bucket) at scale — neighborhoods crossing partition edges lose
     at most W-2 pairs per boundary, the documented SNM property.
 
-    Verification reuses the shared shingle-set arrays (one
-    array_intersect per candidate, no shingle re-explode).
+    Verification is ``set_overlap`` on the shared shingle-set arrays (one
+    intersection per candidate, no shingle re-explode).
     """
     t = Tables(spark, sf_dir)
     keyed = t.documents.select(
@@ -2106,25 +2097,8 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    arrs = shingle_arrays_of(t.documents)
-    a = arrs.select(F.col("doc_id").alias("d1"), F.col("ss").alias("ss1"))
-    bb = arrs.select(F.col("doc_id").alias("d2"), F.col("ss").alias("ss2"))
-    joined = cand.join(a, "d1").join(bb, "d2")
-    common = F.array_size(F.array_intersect("ss1", "ss2")).cast("bigint")
-    n1 = F.array_size("ss1").cast("bigint")
-    n2 = F.array_size("ss2").cast("bigint")
     return (
-        joined.select(
-            "d1",
-            "d2",
-            common.alias("common"),
-            n1.alias("n1"),
-            n2.alias("n2"),
-            (
-                common.cast("double")
-                / (n1 + n2 - common).cast("double")
-            ).alias("jaccard"),
-        )
+        set_overlap(cand, shingle_arrays_of(t.documents))
         .where(F.col("common") > 0)
         .orderBy(F.desc("jaccard"), "d1", "d2")
         .limit(100)
@@ -2392,8 +2366,8 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     always — bands re-group existing signature columns map-side); the
     4-config band table unions before ONE groupBy(b, r, band, sig), so
     the sweep shuffles 4x the signature rows of a single-config run,
-    never 4x the corpus; in-bucket pair explode is the audited
-    MAX_BUCKET_DOCS-capped house kernel. Production tunes on a sampled
+    never 4x the corpus; the in-bucket pair explode is ``bucket_pairs``,
+    capped at MAX_BUCKET_DOCS. Production tunes on a sampled
     corpus slice — made mechanical here: a deterministic fixed-SIZE
     sample of ~_TUNE_SAMPLE_TARGET docs (doc_id % P with P derived from
     the corpus count, mirrored in the oracle), so the sweep is O(1) in
@@ -2444,50 +2418,16 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in per_config[1:]:
         bands = bands.unionAll(p)
     buckets = bands.groupBy("b", "r", "band", "sig").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds0")
+        F.collect_list("doc_id").alias("ds")
     )
-    # loud-truncation contract (house kernels do the same): the r=1 configs
-    # bucket on a single minhash value and are the likeliest to exceed the
-    # cap at scale — truncation understates n_candidates/precision_ppm, the
-    # very numbers the tuning decision reads, so it must be visible.
-    buckets, _ = observe_bucket_cap(buckets, "ds0", "lsh_tuning_curve")
-    buckets = buckets.select(
-        "b", "r", F.slice("ds0", 1, MAX_BUCKET_DOCS).alias("ds")
-    )
-    pairs = (
-        buckets.where(F.size("ds") >= 2)
-        .select(
-            "b",
-            "r",
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> "
-                    "transform(slice(ds, i + 2, size(ds) - i - 1), "
-                    "y -> struct(x AS d1, y AS d2))))"
-                )
-            ).alias("p"),
-        )
-        .select("b", "r", F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
-        .distinct()
-    )
-    s1 = arrs.select(F.col("doc_id").alias("d1"), F.col("ss").alias("ss1"))
-    s2 = arrs.select(F.col("doc_id").alias("d2"), F.col("ss").alias("ss2"))
-    verified = (
-        pairs.join(s1, "d1")
-        .join(s2, "d2")
-        .select(
-            "b",
-            "r",
-            (
-                F.size(F.array_intersect("ss1", "ss2")).cast("double")
-                / (
-                    F.size("ss1")
-                    + F.size("ss2")
-                    - F.size(F.array_intersect("ss1", "ss2"))
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-    )
+    # the r=1 configs bucket on a single minhash value and are the
+    # likeliest to exceed the cap at scale — truncation understates
+    # n_candidates/precision_ppm, the very numbers the tuning decision
+    # reads, so bucket_pairs' loud counter matters most here.
+    pairs = bucket_pairs(
+        buckets, "ds", "lsh_tuning_curve", keys=["b", "r"]
+    ).distinct()
+    verified = set_overlap(pairs, arrs)
     counts = pairs.groupBy("b", "r").agg(
         F.count(F.lit(1)).alias("n_candidates")
     )

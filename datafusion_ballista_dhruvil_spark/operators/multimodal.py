@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_ballista_dhruvil_spark.operators.dedup import bucket_pairs
 from datafusion_ballista_dhruvil_spark.operators.registry import query
 from datafusion_ballista_dhruvil_spark.session import Tables
 
@@ -1105,19 +1106,19 @@ LIMIT 100
 def mm_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate PAIRS from perceptual-hash banding: the
     64-bit dHash splits into 4x16-bit bands; images sharing ANY band
-    become candidates (equi-join per band — by pigeonhole, any pair
-    within Hamming <= 8 of each other shares an untouched band, so
+    become candidates (one bucket per (band, key) — by pigeonhole, any
+    pair within Hamming <= 8 of each other shares an untouched band, so
     candidate recall at that radius is EXACT), each scored by full
     Hamming distance; callers threshold at their dedup radius.
     Completes the image-dedup pipeline: decode -> dHash
     (mm_image_dhash) -> banded candidates -> verified pairs — the LSH
     banding trick applied to perceptual hashes.
 
-    Scale: hashes are 8 bytes/image; the band join shuffles (band,
-    16-bit-key, id) rows only — image bytes never move; per-bucket
-    fan-out is bounded by hash-collision rates exactly like MinHash-LSH
-    bands (cap with MAX_BUCKET_DOCS machinery if a degenerate corpus
-    demands it).
+    Scale: hashes are 8 bytes/image and each image hashes once; the
+    bucket groupBy shuffles (band, 16-bit-key, id, hash) rows only —
+    image bytes never move; in-bucket pairs come from
+    ``dedup.bucket_pairs``, capped at MAX_BUCKET_DOCS like the
+    MinHash-LSH bands.
     """
     pow2 = 1 << np.arange(64, dtype=np.int64)
 
@@ -1125,29 +1126,25 @@ def mm_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (int(pow2[dhash_bits(data)].sum()),)
 
     hashed = map_payload_rows(spark, sf_dir, row, "doc_id long, h long")
-    bands = hashed.select(
-        "doc_id",
-        "h",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 3), "
-                "band -> struct(band, shiftright(h, band * 16) & 65535 AS k))"
-            )
-        ).alias("b"),
-    ).select("doc_id", "h", "b.band", "b.k")
-    a = bands.select(
-        F.col("doc_id").alias("d1"), F.col("h").alias("h1"), "band", "k"
-    )
-    bb = bands.select(
-        F.col("doc_id").alias("d2"), F.col("h").alias("h2"), "band", "k"
+    buckets = (
+        hashed.select(
+            F.struct("doc_id", "h").alias("m"),
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, 3), "
+                    "band -> struct(band, shiftright(h, band * 16) & 65535 AS k))"
+                )
+            ).alias("b"),
+        )
+        .groupBy("b.band", "b.k")
+        .agg(F.collect_list("m").alias("ms"))
     )
     return (
-        a.join(bb, ["band", "k"])
-        .where(F.col("d1") < F.col("d2"))
+        bucket_pairs(buckets, "ms", "image_dhash_bands")
         .select(
-            "d1",
-            "d2",
-            F.expr("bit_count(h1 ^ h2)").cast("bigint").alias("hamming"),
+            F.col("d1.doc_id").alias("d1"),
+            F.col("d2.doc_id").alias("d2"),
+            F.expr("bit_count(d1.h ^ d2.h)").cast("bigint").alias("hamming"),
         )
         .distinct()
         .orderBy("hamming", "d1", "d2")

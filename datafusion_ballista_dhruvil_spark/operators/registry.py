@@ -47,22 +47,25 @@ def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
 #: only the FIRST 50 registered queries, so export order IS coverage.
 #: Every registered query has a green latest verdict (none unverdicted
 #: through r11). Tranche composition (changed-code-first):
-#: 0) udf_grouped_map_normalize, which lost the orderBy after its
+#: 0) the 11 builders moved onto dedup.bucket_pairs / dedup.set_overlap,
+#:    verified_pairs_of's users included;
+#: 1) udf_grouped_map_normalize, which lost the orderBy after its
 #:    grouped map;
-#: 1) the 19 builders whose code moved onto a shared similarity kernel
-#:    (_probe_top_k, _centroid_sq_dists, _quantize/_norms/_cosines,
-#:    _collect_quantized, _pq_encode), sim_dbscan_core also without its
-#:    orderBy;
-#: 2) the build-scope change's 22 other builders and the first 8 mm_
-#:    payload builders, all changed since r11 with no verdict since.
+#: 2) the 19 builders whose code moved onto a shared similarity kernel,
+#:    sim_dbscan_core also without its orderBy;
+#: 3) the rest of the build-scope change's builders and of the first 8
+#:    mm_ payload builders, all changed since r11 with no verdict since.
 #: Dropped from the previous list to keep the tranche at 50: its last
-#: row, mm_audio_vad_segments. The callers of dot()/norm() whose own code
-#: is unchanged (the _dot7 body now calls _quantize) are not listed:
-#: the kernel's values are unchanged and their rows stay in the suite.
+#: two rows, mm_image_resize and mm_audio_features.
 #: All names below are asserted against QUERIES at import (see bottom of
 #: load_all in __init__); a typo here raises instead of silently dropping
 #: a verdict slot.
 EXPORT_PRIORITY: list[str] = [
+    # ---- moved onto bucket_pairs / set_overlap (changed code)
+    "dedup_minhash_lsh", "dedup_cluster_cc", "dedup_editdist_verify",
+    "pipeline_clean_corpus", "dedup_graph_triangles", "dedup_minhash_accuracy",
+    "dedup_simhash_pairs", "dedup_incremental_lsh", "dedup_sorted_neighborhood",
+    "dedup_lsh_tuning_curve", "mm_image_neardup_pairs",
     # ---- grouped map without its orderBy (changed code)
     "udf_grouped_map_normalize",
     # ---- moved onto a shared similarity kernel (changed code)
@@ -74,17 +77,14 @@ EXPORT_PRIORITY: list[str] = [
     "sim_pq_code_dedup", "sim_residual_quantize", "sim_srp_agreement_audit",
     "sample_kcenter_coreset",
     # ---- build-scope change, not yet verdicted
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_cluster_cc",
-    "dedup_editdist_verify", "dedup_incremental_lsh", "pipeline_clean_corpus",
-    "dedup_minhash_accuracy", "dedup_graph_triangles", "dedup_kcore_peel",
-    "dedup_lsh_tuning_curve", "ev_rfm_segments", "ev_chisquare_matrix",
-    "ev_markov_stationary", "ev_lttb_downsample", "ev_mann_kendall",
-    "ops_agg_approx", "ops_mad_outliers", "text_source_entropy_kl",
-    "sim_kmeans_iterate", "sim_pca_power_iteration", "tpcds_q64", "tpcds_q39",
+    "dedup_ngram_jaccard", "dedup_kcore_peel", "ev_rfm_segments",
+    "ev_chisquare_matrix", "ev_markov_stationary", "ev_lttb_downsample",
+    "ev_mann_kendall", "ops_agg_approx", "ops_mad_outliers",
+    "text_source_entropy_kl", "sim_kmeans_iterate", "sim_pca_power_iteration",
+    "tpcds_q64", "tpcds_q39",
     # ---- changed since r11, not yet verdicted
     "mm_decode_features", "mm_png_features", "mm_image_ahash",
-    "mm_image_dhash", "mm_image_neardup_pairs", "mm_image_entropy",
-    "mm_image_resize", "mm_audio_features",
+    "mm_image_dhash", "mm_image_entropy",
 ]
 
 

@@ -302,10 +302,16 @@ def ops_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: ``scope``: the (cache, prepare) pairs of the query this thread is
-#: building, or None outside a build. Per thread, because the Flight and
-#: REST servers build queries on several threads at once.
+#: ``scope``: the caches and post-action checks of the query this thread
+#: is building, or None outside a build. Per thread, because the Flight
+#: and REST servers build queries on several threads at once.
 _build = threading.local()
+
+
+class _Scope:
+    def __init__(self) -> None:
+        self.caches: list[tuple[DataFrame, bool]] = []  # (cache, prepare)
+        self.checks: list[Callable[[], None]] = []
 
 
 def cached(df: DataFrame, prepare: bool = False) -> DataFrame:
@@ -325,17 +331,27 @@ def cached(df: DataFrame, prepare: bool = False) -> DataFrame:
     scope = getattr(_build, "scope", None)
     if scope is None:
         return df
-    scope.append((df.cache(), prepare))
+    scope.caches.append((df.cache(), prepare))
     return df
+
+
+def after_action(check: Callable[[], None]) -> None:
+    """Run ``check`` once the current query's first action has returned,
+    to read what it observed (``dedup.observe_bucket_cap``). A failed
+    action, a plan-only build (``release_owned``) and a call outside a
+    build scope drop it unrun: nothing waits for an action."""
+    scope = getattr(_build, "scope", None)
+    if scope is not None:
+        scope.checks.append(check)
 
 
 def release_cached() -> None:
     """Unpersist every cache the current build has made so far, for a
     builder whose later stages no longer read them."""
     scope = getattr(_build, "scope", None)
-    if scope:
-        _unpersist(c for c, _ in scope)
-        scope.clear()
+    if scope is not None:
+        _unpersist(c for c, _ in scope.caches)
+        scope.caches.clear()
 
 
 def _unpersist(caches) -> None:
@@ -359,7 +375,9 @@ def owned_build(build: Callable[[], DataFrame]) -> DataFrame:
     anything, the returned DataFrame unpersists them as soon as its own
     terminal action (collect / toPandas / count) completes. A build
     that caches nothing gets its frame back untouched. A build that
-    raises releases what it cached before the error propagates.
+    raises releases what it cached before the error propagates. The
+    scope also holds the build's ``after_action`` checks: they run after
+    that first action returns, and are dropped with the caches.
 
     persist/unpersist cannot change results — this is timing-only.
 
@@ -383,14 +401,15 @@ def owned_build(build: Callable[[], DataFrame]) -> DataFrame:
     dedup_kcore_peel took dedup_chunk_pagerank's plan from 46 to 53
     exchanges. A caller that reads the plan without running an action
     must call the returned DataFrame's ``release_owned()`` when it has
-    one; ``plans.inspect.fingerprints`` does so after every query.
+    one; ``plans.inspect.fingerprints`` does so after every query. It
+    drops the checks without running them.
 
     A build nested in another (a builder calling a builder) adds its
     caches to the outer scope, which owns the frame the outer returns.
     """
     if getattr(_build, "scope", None) is not None:
         return build()
-    scope: list[tuple[DataFrame, bool]] = []
+    scope = _Scope()
     _build.scope = scope
     try:
         df = build()
@@ -399,26 +418,32 @@ def owned_build(build: Callable[[], DataFrame]) -> DataFrame:
         raise
     finally:
         _build.scope = None
-    if not scope:
+    if not scope.caches and not scope.checks:
         return df
-    caches = [c for c, _ in scope]
-    warm = [c for c, prepare in scope if prepare]
+    caches = [c for c, _ in scope.caches]
+    warm = [c for c, prepare in scope.caches if prepare]
+    checks = scope.checks
 
     def _release() -> None:
         _unpersist(caches)
         caches.clear()
         warm.clear()
+        checks.clear()
 
     def _wrap(name: str):
         orig = getattr(df, name)
 
         def wrapped(*a, **k):
+            run = list(checks)
             try:
                 while warm:
                     warm.pop(0).count()
-                return orig(*a, **k)
+                out = orig(*a, **k)
             finally:
                 _release()
+            for check in run:
+                check()
+            return out
 
         wrapped.__name__ = name
         return wrapped

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import re
 import sys
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -75,10 +76,12 @@ def codegen_span_count(df: DataFrame) -> int:
     return len(set(re.findall(r"\*\((\d+)\)", plan)))
 
 
-#: tree lines in `formatted` mode end with the node id: "Name [quals] (7)";
-#: detail headers START with "(7) Name" and never match this. Node text may
-#: hold a catalog name ("Scan parquet spark_catalog.default.t (1)").
-_TREE_LINE = re.compile(r"^[\s+:*-]*([A-Za-z][A-Za-z0-9 _.]*?)(?: \[.*?\])? \((\d+)\)\s*$")
+#: tree lines in `formatted` mode end with the node id: "Name [quals] (7)",
+#: or the id and an argument group: "InMemoryTableScan (1) (columnarIn=
+#: false, columnarOut=true)". Detail headers START with "(7) Name" and
+#: never match this. Node text may hold a catalog name ("Scan parquet
+#: spark_catalog.default.t (1)").
+_TREE_LINE = re.compile(r"^[\s+:*-]*([A-Za-z][A-Za-z0-9 _.]*?)(?: \[.*?\])? \((\d+)\)(?: \([^()]*\))?\s*$")
 
 
 def tree_nodes(plan: str) -> list[str]:
@@ -189,18 +192,34 @@ def query_plan(spark: SparkSession, name: str, sf_dir: str) -> str:
             df.release_owned()
 
 
+def count_jobs(spark: SparkSession, fn):
+    """(result of fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def fingerprints(
     spark: SparkSession, names: list[str], sf_dir: str
 ) -> dict[str, dict[str, int]]:
     """``node_counts`` of each named registry query's ``query_plan``, in
-    the given order; a query whose build fails reads ``{"error": 1}``."""
+    the given order, plus ``build_jobs``: the Spark jobs the plan-only
+    build launched. A query whose build fails reads ``{"error": 1}``."""
     from datafusion_ballista_dhruvil_spark.operators import load_all
 
     load_all()
     out: dict[str, dict[str, int]] = {}
     for name in names:
         try:
-            out[name] = node_counts(query_plan(spark, name, sf_dir))
+            plan, jobs = count_jobs(spark, lambda: query_plan(spark, name, sf_dir))
+            out[name] = {**node_counts(plan), "build_jobs": jobs}
         except Exception as e:  # noqa: BLE001 — one broken build must not hide the rest
             print(f"{name}: ERROR {type(e).__name__}: {e}", file=sys.stderr)
             out[name] = {"error": 1}

@@ -43,23 +43,10 @@ class _FilePartition(InputPartition):
 
 
 def _resolve_version(root: str, options: dict) -> int:
-    snaps = _snap._list_snapshots(root)
-    if not snaps:
-        raise FileNotFoundError(f"no snapshots at {root}")
-    if "version" in options:
-        v = int(options["version"])
-        if v not in snaps:
-            raise FileNotFoundError(f"snapshot {v} not found in {root}")
-        return v
-    if "as_of_ts_ms" in options:
-        cut = int(options["as_of_ts_ms"])
-        eligible = [
-            n for n in snaps if _snap._read_manifest(root, n)["ts_ms"] <= cut
-        ]
-        if not eligible:
-            raise FileNotFoundError(f"no snapshot at or before ts {cut}")
-        return eligible[-1]
-    return snaps[-1]
+    def opt(key: str) -> int | None:
+        return int(options[key]) if key in options else None
+
+    return _snap.resolve_version(root, opt("version"), opt("as_of_ts_ms"))
 
 
 class SnapshotLogDataSource(DataSource):

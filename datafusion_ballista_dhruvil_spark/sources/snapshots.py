@@ -145,16 +145,11 @@ def publish(
     raise CommitConflict(f"lost {max_retries} append races at {root}")
 
 
-def read_snapshot(
-    spark: SparkSession,
-    root: str,
-    version: int | None = None,
-    as_of_ts_ms: int | None = None,
-) -> DataFrame:
-    """Read the table at a snapshot: latest by default, an explicit
-    ``version``, or time-travel to the newest snapshot with
-    ``ts_ms <= as_of_ts_ms``. Plans a plain parquet scan over exactly the
-    snapshot's files — pushdown, pruning and AQE all apply unchanged."""
+def resolve_version(
+    root: str, version: int | None = None, as_of_ts_ms: int | None = None
+) -> int:
+    """The snapshot a read sees: ``version`` when given, else the newest
+    with ``ts_ms <= as_of_ts_ms`` when that is given, else the latest."""
     snaps = _list_snapshots(root)
     if not snaps:
         raise FileNotFoundError(f"no snapshots at {root}")
@@ -166,12 +161,25 @@ def read_snapshot(
             raise FileNotFoundError(
                 f"no snapshot at or before ts {as_of_ts_ms} in {root}"
             )
-        version = eligible[-1]
+        return eligible[-1]
     if version is None:
-        version = snaps[-1]
+        return snaps[-1]
     if version not in snaps:
         raise FileNotFoundError(f"snapshot {version} not found in {root}")
-    m = _read_manifest(root, version)
+    return version
+
+
+def read_snapshot(
+    spark: SparkSession,
+    root: str,
+    version: int | None = None,
+    as_of_ts_ms: int | None = None,
+) -> DataFrame:
+    """Read the table at a snapshot: latest by default, an explicit
+    ``version``, or time-travel to the newest snapshot with
+    ``ts_ms <= as_of_ts_ms``. Plans a plain parquet scan over exactly the
+    snapshot's files — pushdown, pruning and AQE all apply unchanged."""
+    m = _read_manifest(root, resolve_version(root, version, as_of_ts_ms))
     if not m["files"]:
         from pyspark.sql.types import StructType
 

@@ -12,7 +12,6 @@ aggregation surfaced as double) makes that achievable.
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 
@@ -76,20 +75,6 @@ def oracle():
     con = make_duckdb(SF_DIR)
     yield con
     con.close()
-
-
-def count_jobs(spark, fn):
-    """(result of fn(), number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"test-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    # job-start events reach the status tracker through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def assert_query_matches(spark, oracle, build, sql: str, min_rows: int = 1):

@@ -13,9 +13,10 @@ pa_flight = pytest.importorskip(
 )
 
 from datafusion_ballista_dhruvil_spark.flight import start_flight_endpoint
+from datafusion_ballista_dhruvil_spark.plans.inspect import count_jobs
 from datafusion_ballista_dhruvil_spark.session import register_tables
 
-from tests.conftest import SF_DIR, count_jobs
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")

@@ -12,6 +12,8 @@ The sweep is ``plans.inspect.fingerprints``, the same one the tool runs.
 It starts from a session with no cached relations: a cache registered by
 an earlier test (a plan-only build of a query that caches) would flip
 later plans' broadcasts to sort-merge and fail the gate on no change.
+The same sweep records the Spark jobs each plan-only build launches;
+a query may launch one only from the BUILD_JOBS allowlist.
 
 Baseline regeneration (deliberate, reviewed, committed):
     python tools/plan_fingerprint.py
@@ -29,6 +31,7 @@ import pytest
 from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
 from datafusion_ballista_dhruvil_spark.plans.inspect import fingerprints
+from datafusion_ballista_dhruvil_spark.session import TABLE_NAMES, table_path, table_schema
 from tools.plan_fingerprint import SKIP
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -58,16 +61,63 @@ def test_baseline_covers_registry():
     )
 
 
-def test_plan_shapes_do_not_regress(spark):
+#: Queries whose plan-only build launches Spark jobs, each with its reason.
+#: A build that only plans must run nothing: every plan reader (explain,
+#: the fingerprint tool, the plan tests) pays these jobs. The list may
+#: only shrink.
+_VECTORS = "collects bounded probe or codebook vectors (_collect_quantized)"
+BUILD_JOBS = {
+    "avro_roundtrip_agg": "writes the Avro files it reads, then reads one header",
+    "csv_roundtrip_agg": "writes the CSV files it reads",
+    "json_roundtrip_agg": "writes the JSON files it reads",
+    "orc_roundtrip_agg": "writes the ORC files it reads",
+    "xml_roundtrip_agg": "writes the XML files it reads",
+    "partitioned_roundtrip_agg": "writes the partitioned files it reads",
+    "schema_evolution_agg": "writes both schema versions it reads",
+    "snapshot_pysource_agg": "commits the snapshots it reads",
+    "snapshot_timetravel_agg": "commits the snapshots it reads",
+    "dedup_cluster_cc": "one convergence count per min-label round",
+    "dedup_lsh_tuning_curve": "counts documents to size its fixed-size sample",
+    "ev_markov_attribution": "collects the K^2-row transition matrix",
+    "sim_ann_recall": _VECTORS,
+    "sim_bitext_margin_mining": _VECTORS,
+    "sim_cosine_topk": _VECTORS,
+    "sim_ivf_balance_audit": _VECTORS,
+    "sim_ivf_pq": "collects the 21 codebook seed vectors",
+    "sim_ivf_topk": _VECTORS,
+    "sim_knn_label_agreement": _VECTORS,
+    "sim_matryoshka_recall": _VECTORS,
+    "sim_pca_power_iteration": "one bounded collect per power-iteration round",
+    "sim_pq_adc": _VECTORS,
+    "sim_pq_code_dedup": _VECTORS,
+    "sim_recall_at_k_curve": _VECTORS,
+    "sim_residual_quantize": "collects both codebook levels' seed vectors",
+    "text_bpe_merges": "one collect per BPE merge round, plus token totals",
+    "text_bpe_tokenize": "one collect per BPE merge round, plus the result",
+    "text_crosslingual_confusion": "collects the bounded language profile",
+}
+
+
+@pytest.fixture(scope="module")
+def sweep(spark):
+    """One plan-only build of every baselined query, read by both gates.
+    Table schemas are inferred first: the first read of a table in a
+    session infers its schema with a job, whichever query reads it."""
+    spark.catalog.clearCache()
+    for t in TABLE_NAMES:
+        table_schema(spark, table_path(SF, t))
+    base = _baseline()
+    return fingerprints(spark, sorted(k for k, v in base.items() if not v.get("error")), SF)
+
+
+def test_plan_shapes_do_not_regress(sweep):
     """Re-derive every baselined fingerprint and compare the TIGHT
     counters; a query that no longer builds fails too."""
-    base = {k: v for k, v in _baseline().items() if not v.get("error")}
-    spark.catalog.clearCache()
-    got = fingerprints(spark, sorted(base), SF)
-    failures = [f"{name}: build error" for name, fp in got.items() if fp.get("error")]
+    base = _baseline()
+    failures = [f"{name}: build error" for name, fp in sweep.items() if fp.get("error")]
     failures += [
         f"{name}.{key}: baseline {base[name][key]} -> {fp[key]}"
-        for name, fp in got.items()
+        for name, fp in sweep.items()
         if not fp.get("error")
         for key in TIGHT
         if fp[key] > base[name][key]
@@ -78,6 +128,17 @@ def test_plan_shapes_do_not_regress(spark):
     )
 
 
+def test_build_jobs_are_allowlisted(sweep):
+    """A plan-only build launches no Spark job unless BUILD_JOBS names
+    the query; an allowlisted query that launches none fails too, so the
+    list only shrinks."""
+    ran = {name for name, fp in sweep.items() if fp.get("build_jobs")}
+    new = {n: sweep[n]["build_jobs"] for n in sorted(ran - set(BUILD_JOBS))}
+    assert not new, f"plan-only builds that launch jobs: {new}"
+    gone = sorted(set(BUILD_JOBS) - ran)
+    assert not gone, f"launch no job any more, drop from BUILD_JOBS: {gone}"
+
+
 def test_plan_only_build_leaves_no_cache_behind(spark):
     """dedup_kcore_peel persists its chunk-pair edges at build time, and
     dedup_chunk_pagerank plans over the same edges: read after a
@@ -85,8 +146,8 @@ def test_plan_only_build_leaves_no_cache_behind(spark):
     exchanges (broadcasts flipped to sort-merge) instead of 46."""
     spark.catalog.clearCache()
     got = fingerprints(spark, ["dedup_kcore_peel", "dedup_chunk_pagerank"], SF)
-    base = _baseline()["dedup_chunk_pagerank"]
-    assert got["dedup_chunk_pagerank"] == base
+    got["dedup_chunk_pagerank"].pop("build_jobs")
+    assert got["dedup_chunk_pagerank"] == _baseline()["dedup_chunk_pagerank"]
 
 
 def test_fingerprint_tool_runs_on_named_queries():

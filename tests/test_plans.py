@@ -755,14 +755,14 @@ def test_incremental_agg_pushes_partition_predicates(spark):
     assert has_pushed_filters(df, "ts")
 
 
-def test_image_neardup_bands_are_equi_join(spark):
-    """mm_image_neardup_pairs: candidates come from the banded equi-join
-    on (band, 16-bit key) — 8-byte hashes shuffle, image bytes never do;
-    no nested loop anywhere."""
+def test_image_neardup_bands_hash_once(spark):
+    """mm_image_neardup_pairs: candidates come from one groupBy on (band,
+    16-bit key) and bucket_pairs — 8-byte hashes shuffle, image bytes
+    never do; no join, so each image hashes once."""
     c = node_counts(query_plan(spark, "mm_image_neardup_pairs", SF_DIR))
-    # one hashing stage per join side: the encode→decode chain is fused
-    assert c["py_map"] == 2
-    assert c["bhj"] + c["smj"] + c["shj"] >= 1, c
+    # one fused encode→decode→hash stage
+    assert c["py_map"] == 1
+    assert c["bhj"] + c["smj"] + c["shj"] + c["nested_loop"] == 0, c
 
 
 def test_linear_interpolate_is_union_window(spark):
@@ -993,6 +993,7 @@ def test_cached_subtree_counts_once(spark):
         plan = formatted_plan(c.join(other, F.col("k") == F.col("k2")))
         assert len(re.findall(r"\+- Exchange \(\d+\)", plan)) == 2, plan
         assert tree_nodes(plan).count("Exchange") == 1
+        assert tree_nodes(plan).count("InMemoryTableScan") == 2
     finally:
         c.unpersist()
 

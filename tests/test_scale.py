@@ -270,6 +270,32 @@ def test_cache_lifecycle_no_leaks(spark):
     assert not hasattr(QUERIES["dedup_simhash"](spark, SF_DIR), "release_owned")
 
 
+def test_plan_only_builds_leave_no_thread(spark):
+    """Every builder that caps a bucket explode registers its truncation
+    check with the build scope, to run after the query's action. A
+    plan-only build runs no action: ``release_owned`` drops the check,
+    and no thread is left waiting for the action."""
+    import threading
+
+    from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
+
+    before = threading.active_count()
+    for name in (
+        "dedup_minhash_lsh",
+        "dedup_cluster_cc",
+        "dedup_editdist_verify",
+        "pipeline_clean_corpus",
+        "dedup_minhash_accuracy",
+        "dedup_graph_triangles",
+        "dedup_simhash_pairs",
+        "dedup_incremental_lsh",
+        "dedup_lsh_tuning_curve",
+        "mm_image_neardup_pairs",
+    ):
+        QUERIES[name](spark, SF_DIR).release_owned()
+    assert threading.active_count() == before
+
+
 def _run_throwaway_query(spark, build):
     """Register ``build`` under a throwaway name, build it through the
     registry, and remove it again."""

@@ -11,6 +11,7 @@ import sys
 import pytest
 
 from datafusion_ballista_dhruvil_spark import session
+from datafusion_ballista_dhruvil_spark.plans.inspect import count_jobs
 from datafusion_ballista_dhruvil_spark.session import (
     TABLE_NAMES,
     load_table,
@@ -18,7 +19,7 @@ from datafusion_ballista_dhruvil_spark.session import (
     table_path,
 )
 
-from tests.conftest import SF_DIR, count_jobs
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture
