@@ -185,15 +185,13 @@ def udf_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, tok
 
     spark.udtf.register("token_positions", TokenPositions)
-    t.documents.where(F.col("doc_id") < 20).createOrReplaceTempView(
-        "udtf_docs"
-    )
     return spark.sql(
         """
         SELECT d.doc_id, tp.pos, tp.token
-        FROM udtf_docs d, LATERAL token_positions(d.text) tp
+        FROM {docs} d, LATERAL token_positions(d.text) tp
         ORDER BY d.doc_id, tp.pos
-        """
+        """,
+        docs=t.documents.where(F.col("doc_id") < 20),
     )
 
 

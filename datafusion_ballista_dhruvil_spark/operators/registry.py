@@ -47,20 +47,29 @@ def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
 #: only the FIRST 50 registered queries, so export order IS coverage.
 #: Every registered query has a green latest verdict (none unverdicted
 #: through r11). Tranche composition (changed-code-first):
-#: 0) the 11 builders moved onto dedup.bucket_pairs / dedup.set_overlap,
+#: 0) the 17 builders that now pass their frames to SQL as arguments
+#:    instead of registering temp views;
+#: 1) the 11 builders moved onto dedup.bucket_pairs / dedup.set_overlap,
 #:    verified_pairs_of's users included;
-#: 1) udf_grouped_map_normalize, which lost the orderBy after its
+#: 2) udf_grouped_map_normalize, which lost the orderBy after its
 #:    grouped map;
-#: 2) the 19 builders whose code moved onto a shared similarity kernel,
+#: 3) the 19 builders whose code moved onto a shared similarity kernel,
 #:    sim_dbscan_core also without its orderBy;
-#: 3) the rest of the build-scope change's builders and of the first 8
-#:    mm_ payload builders, all changed since r11 with no verdict since.
+#: 4) the first 2 of the build-scope change's builders.
 #: Dropped from the previous list to keep the tranche at 50: its last
-#: two rows, mm_image_resize and mm_audio_features.
+#: 17 rows, the rest of the build-scope change and the first mm_ payload
+#: builders.
 #: All names below are asserted against QUERIES at import (see bottom of
 #: load_all in __init__); a typo here raises instead of silently dropping
 #: a verdict slot.
 EXPORT_PRIORITY: list[str] = [
+    # ---- frames passed to SQL as arguments (changed code)
+    "ops_grouping_sets", "ops_lateral_join", "ops_distinct_on",
+    "ops_qualify_rewrite", "ops_recursive_cte", "ops_listagg_within_group",
+    "ops_pipe_syntax", "ops_group_order_by_all", "ops_session_variables",
+    "ops_execute_immediate", "ops_identifier_clause",
+    "ops_lateral_column_alias", "ops_not_in_null_semantics",
+    "ev_rollup_multires", "ev_forecast_holt", "q15", "udf_table_function",
     # ---- moved onto bucket_pairs / set_overlap (changed code)
     "dedup_minhash_lsh", "dedup_cluster_cc", "dedup_editdist_verify",
     "pipeline_clean_corpus", "dedup_graph_triangles", "dedup_minhash_accuracy",
@@ -77,14 +86,7 @@ EXPORT_PRIORITY: list[str] = [
     "sim_pq_code_dedup", "sim_residual_quantize", "sim_srp_agreement_audit",
     "sample_kcenter_coreset",
     # ---- build-scope change, not yet verdicted
-    "dedup_ngram_jaccard", "dedup_kcore_peel", "ev_rfm_segments",
-    "ev_chisquare_matrix", "ev_markov_stationary", "ev_lttb_downsample",
-    "ev_mann_kendall", "ops_agg_approx", "ops_mad_outliers",
-    "text_source_entropy_kl", "sim_kmeans_iterate", "sim_pca_power_iteration",
-    "tpcds_q64", "tpcds_q39",
-    # ---- changed since r11, not yet verdicted
-    "mm_decode_features", "mm_png_features", "mm_image_ahash",
-    "mm_image_dhash", "mm_image_entropy",
+    "dedup_ngram_jaccard", "dedup_kcore_peel",
 ]
 
 

@@ -21,6 +21,8 @@ the DuckDB oracle hash-matches exactly.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -218,17 +220,17 @@ def ops_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = t.customer.join(
         F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey")
     ).join(F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey"))
-    joined.createOrReplaceTempView("ops_gs_input")
     return spark.sql(
         f"""
         SELECT r_name, c_mktsegment,
                CAST(grouping(r_name) AS INT) AS g_region,
                CAST(grouping(c_mktsegment) AS INT) AS g_segment,
                COUNT(*) AS n, {sql_dsum('CAST(c_acctbal AS DECIMAL(12,2))')} AS total_bal
-        FROM ops_gs_input
+        FROM {{joined}}
         GROUP BY GROUPING SETS ((r_name, c_mktsegment), (r_name), ())
         ORDER BY g_region, g_segment, r_name NULLS FIRST, c_mktsegment NULLS FIRST
-        """
+        """,
+        joined=joined,
     )
 
 
@@ -1456,17 +1458,17 @@ def ops_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-@query(
-    "ops_lateral_join",
-    oracle="""
+_LATERAL_SQL = """
 SELECT n.n_name, c.c_name, c.c_acctbal
 FROM nation n,
 LATERAL (SELECT c_name, c_acctbal FROM customer
          WHERE c_nationkey = n.n_nationkey
          ORDER BY c_acctbal DESC, c_name LIMIT 2) c
 ORDER BY n.n_name, c.c_acctbal DESC, c.c_name
-""",
-)
+"""
+
+
+@query("ops_lateral_join", oracle=_LATERAL_SQL)
 def ops_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery join (top-2 customers per nation by
     balance) — the decorrelation shape the reference's optimizer handles by
@@ -1480,17 +1482,11 @@ def ops_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic: full tie-breaking ORDER BY inside and outside.
     """
     t = Tables(spark, sf_dir)
-    t.nation.createOrReplaceTempView("nation")
-    t.customer.createOrReplaceTempView("customer")
     return spark.sql(
-        """
-        SELECT n.n_name, c.c_name, c.c_acctbal
-        FROM nation n,
-        LATERAL (SELECT c_name, c_acctbal FROM customer
-                 WHERE c_nationkey = n.n_nationkey
-                 ORDER BY c_acctbal DESC, c_name LIMIT 2) c
-        ORDER BY n.n_name, c.c_acctbal DESC, c.c_name
-        """
+        "WITH nation AS (SELECT * FROM {n}), customer AS (SELECT * FROM {c}) "
+        + _LATERAL_SQL,
+        n=t.nation,
+        c=t.customer,
     )
 
 
@@ -1951,8 +1947,10 @@ def ops_distinct_on(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_ballista_dhruvil_spark.sql.rewrite import rewrite_sql
 
     t = Tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("orders")
-    return spark.sql(rewrite_sql(_DISTINCT_ON_SQL))
+    return spark.sql(
+        "WITH orders AS (SELECT * FROM {o}) " + rewrite_sql(_DISTINCT_ON_SQL),
+        o=t.orders,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1985,8 +1983,10 @@ def ops_qualify_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_ballista_dhruvil_spark.sql.rewrite import rewrite_sql
 
     t = Tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("orders")
-    return spark.sql(rewrite_sql(_QUALIFY_SQL))
+    return spark.sql(
+        "WITH orders AS (SELECT * FROM {o}) " + rewrite_sql(_QUALIFY_SQL),
+        o=t.orders,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2027,8 +2027,12 @@ def ops_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-rolled loop, but planned and fused by Catalyst.
     """
     t = Tables(spark, sf_dir)
-    t.documents.createOrReplaceTempView("documents")
-    return spark.sql(_RECURSIVE_SQL)
+    return spark.sql(
+        _RECURSIVE_SQL.replace(
+            "WITH RECURSIVE ", "WITH RECURSIVE documents AS (SELECT * FROM {d}), ", 1
+        ),
+        d=t.documents,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2362,18 +2366,18 @@ def ops_listagg_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     by group cardinality (25 nations).
     """
     t = Tables(spark, sf_dir)
-    t.customer.createOrReplaceTempView("customer")
     return spark.sql(
         """
 WITH d AS (
-  SELECT DISTINCT c_mktsegment AS seg, c_nationkey AS nk FROM customer
+  SELECT DISTINCT c_mktsegment AS seg, c_nationkey AS nk FROM {customer}
 )
 SELECT seg,
        CAST(COUNT(*) AS BIGINT) AS n_nations,
        listagg(CAST(nk AS STRING), ',') WITHIN GROUP (ORDER BY nk)
          AS nations_csv
 FROM d GROUP BY seg ORDER BY seg
-"""
+""",
+        customer=t.customer,
     )
 
 
@@ -2382,7 +2386,7 @@ FROM d GROUP BY seg ORDER BY seg
 #: by GoogleSQL). DuckDB has no pipe dialect, so the oracle is the exact
 #: ANSI desugaring of the same plan.
 _PIPE_SQL = """
-FROM orders
+FROM {orders}
 |> WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
 |> AGGREGATE COUNT(*) AS n_orders,
              CAST(SUM(o_custkey) AS BIGINT) AS sum_cust,
@@ -2419,8 +2423,7 @@ def ops_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches the parquet scan as a pushed filter.
     """
     t = Tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("orders")
-    return spark.sql(_PIPE_SQL)
+    return spark.sql(_PIPE_SQL, orders=t.orders)
 
 
 # ---------------------------------------------------------------------------
@@ -2673,9 +2676,7 @@ def ops_calendar_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-@query(
-    "ops_group_order_by_all",
-    oracle="""
+_GROUP_ALL_SQL = """
 SELECT l_returnflag, l_linestatus,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(l_quantity) AS BIGINT) AS qty
@@ -2683,8 +2684,10 @@ FROM lineitem
 WHERE l_shipdate < TIMESTAMP '1995-06-01 00:00:00'
 GROUP BY ALL
 ORDER BY ALL
-""",
-)
+"""
+
+
+@query("ops_group_order_by_all", oracle=_GROUP_ALL_SQL)
 def ops_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``GROUP BY ALL`` / ``ORDER BY ALL`` (Spark 4 + DuckDB shared
     dialect): grouping keys inferred from the non-aggregate select items,
@@ -2697,18 +2700,7 @@ def ops_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is unchanged.
     """
     t = Tables(spark, sf_dir)
-    t.lineitem.createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-SELECT l_returnflag, l_linestatus,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(l_quantity) AS BIGINT) AS qty
-FROM lineitem
-WHERE l_shipdate < TIMESTAMP '1995-06-01 00:00:00'
-GROUP BY ALL
-ORDER BY ALL
-"""
-    )
+    return spark.sql("WITH lineitem AS (SELECT * FROM {l}) " + _GROUP_ALL_SQL, l=t.lineitem)
 
 
 # ---------------------------------------------------------------------------
@@ -2733,22 +2725,26 @@ def ops_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; the oracle is the equivalent constant-folded ANSI SQL.
     """
     t = Tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("orders")
     spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 0.0")
     spark.sql("DECLARE OR REPLACE VARIABLE date_floor STRING DEFAULT '1990-01-01'")
-    spark.sql("SET VAR price_floor = 150000.0")
-    spark.sql("SET VAR date_floor = '1996-01-01 00:00:00'")
-    return spark.sql(
-        """
+    try:
+        spark.sql("SET VAR price_floor = 150000.0, date_floor = '1996-01-01 00:00:00'")
+        return spark.sql(
+            """
 SELECT o_orderpriority,
        CAST(COUNT(*) AS BIGINT) AS n
-FROM orders
+FROM {orders}
 WHERE o_totalprice > price_floor
   AND o_orderdate >= CAST(date_floor AS TIMESTAMP)
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-"""
-    )
+""",
+            orders=t.orders,
+        )
+    finally:
+        # the values are already bound in the analyzed plan
+        spark.sql("DROP TEMPORARY VARIABLE price_floor")
+        spark.sql("DROP TEMPORARY VARIABLE date_floor")
 
 
 # ---------------------------------------------------------------------------
@@ -2771,16 +2767,21 @@ def ops_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a literal in the resolved plan, so predicate pushdown is intact.
     """
     t = Tables(spark, sf_dir)
-    t.customer.createOrReplaceTempView("customer")
     stmt = (
         "SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_cust, "
         "CAST(SUM(CAST(c_acctbal * 100 AS DECIMAL(18,0))) AS BIGINT) AS bal_cents "
-        "FROM customer WHERE c_nationkey = :nk "
+        "FROM IDENTIFIER(:tbl) WHERE c_nationkey = :nk "
         "GROUP BY c_mktsegment ORDER BY c_mktsegment"
     )
-    spark.sql("DECLARE OR REPLACE VARIABLE stmt_text STRING")
-    spark.sql("SET VAR stmt_text = ?", args=[stmt])
-    return spark.sql("EXECUTE IMMEDIATE stmt_text USING 7 AS nk")
+    spark.sql("DECLARE OR REPLACE VARIABLE stmt_text STRING DEFAULT ?", args=[stmt])
+    try:
+        # the formatter writes the frame's view name into the string literal
+        return spark.sql(
+            "EXECUTE IMMEDIATE stmt_text USING 7 AS nk, '{customer}' AS tbl",
+            customer=t.customer,
+        )
+    finally:
+        spark.sql("DROP TEMPORARY VARIABLE stmt_text")
 
 
 # ---------------------------------------------------------------------------
@@ -2896,21 +2897,23 @@ def ops_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     its target table per run without string-splicing SQL.
     """
     t = Tables(spark, sf_dir)
-    t.nation.createOrReplaceTempView("nation_ident")
-    return spark.sql(
-        """
+    # a parameter can only name a catalog table, so the frame gets a
+    # unique view that lives until the plan is analyzed (views inline there)
+    tbl = f"nation_{uuid.uuid4().hex}"
+    t.nation.createTempView(tbl)
+    try:
+        return spark.sql(
+            """
 SELECT IDENTIFIER(:keycol), CAST(COUNT(*) AS BIGINT) AS n_nations,
        MIN(IDENTIFIER(:namecol)) AS first_name
 FROM IDENTIFIER(:tbl)
 GROUP BY IDENTIFIER(:keycol)
 ORDER BY IDENTIFIER(:keycol)
 """,
-        args={
-            "tbl": "nation_ident",
-            "keycol": "n_regionkey",
-            "namecol": "n_name",
-        },
-    )
+            args={"tbl": tbl, "keycol": "n_regionkey", "namecol": "n_name"},
+        )
+    finally:
+        spark.catalog.dropTempView(tbl)
 
 
 # ---------------------------------------------------------------------------
@@ -2935,8 +2938,7 @@ def ops_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization).
     """
     t = Tables(spark, sf_dir)
-    t.lineitem.createOrReplaceTempView("lineitem")
-    return spark.sql(_LCA_SQL)
+    return spark.sql("WITH lineitem AS (SELECT * FROM {l}) " + _LCA_SQL, l=t.lineitem)
 
 
 # ---------------------------------------------------------------------------
@@ -3046,50 +3048,7 @@ def ops_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-@query(
-    "ops_not_in_null_semantics",
-    oracle="""
-WITH probe AS (
-  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey < 2000
-),
-keys AS (
-  SELECT CASE WHEN c_custkey % 50 = 0 THEN NULL ELSE c_custkey END AS k
-  FROM customer WHERE c_custkey < 300
-)
-SELECT 'not_in' AS variant, CAST(COUNT(*) AS BIGINT) AS n FROM probe
-WHERE o_custkey NOT IN (SELECT k FROM keys)
-UNION ALL
-SELECT 'not_exists', CAST(COUNT(*) AS BIGINT) FROM probe p
-WHERE NOT EXISTS (SELECT 1 FROM keys WHERE k = p.o_custkey)
-UNION ALL
-SELECT 'except_keys', CAST(COUNT(*) AS BIGINT) FROM (
-  SELECT o_custkey FROM probe
-  EXCEPT
-  SELECT k FROM keys
-)
-ORDER BY variant
-""",
-)
-def ops_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NOT IN null trap, hash-pinned: against a subquery whose result
-    CONTAINS A NULL, ``NOT IN`` returns ZERO rows (three-valued logic:
-    x <> NULL is UNKNOWN, so the conjunction never reaches TRUE), while
-    ``NOT EXISTS`` — the anti-join — returns the intuitive complement,
-    and ``EXCEPT`` a third distinct answer (set semantics, NULL-safe).
-    All three variants run on both engines and must agree exactly — the
-    classic migration-breaking semantics difference pinned under the
-    hash gate (the reference's decorrelation layer handles the same
-    null-aware anti-join, q16's NOT IN path).
-
-    Scale: null-aware anti-join is the expensive plan shape (Spark must
-    broadcast-null-check); the query keeps the subquery bounded the way
-    production rewrites should.
-    """
-    t = Tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("orders")
-    t.customer.createOrReplaceTempView("customer")
-    return spark.sql(
-        """
+_NOT_IN_SQL = """
 WITH probe AS (
   SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey < 2000
 ),
@@ -3110,6 +3069,31 @@ SELECT 'except_keys', CAST(COUNT(*) AS BIGINT) FROM (
 )
 ORDER BY variant
 """
+
+
+@query("ops_not_in_null_semantics", oracle=_NOT_IN_SQL)
+def ops_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The NOT IN null trap, hash-pinned: against a subquery whose result
+    CONTAINS A NULL, ``NOT IN`` returns ZERO rows (three-valued logic:
+    x <> NULL is UNKNOWN, so the conjunction never reaches TRUE), while
+    ``NOT EXISTS`` — the anti-join — returns the intuitive complement,
+    and ``EXCEPT`` a third distinct answer (set semantics, NULL-safe).
+    All three variants run on both engines and must agree exactly — the
+    classic migration-breaking semantics difference pinned under the
+    hash gate (the reference's decorrelation layer handles the same
+    null-aware anti-join, q16's NOT IN path).
+
+    Scale: null-aware anti-join is the expensive plan shape (Spark must
+    broadcast-null-check); the query keeps the subquery bounded the way
+    production rewrites should.
+    """
+    t = Tables(spark, sf_dir)
+    return spark.sql(
+        _NOT_IN_SQL.replace(
+            "WITH ", "WITH orders AS (SELECT * FROM {o}), customer AS (SELECT * FROM {c}), ", 1
+        ),
+        o=t.orders,
+        c=t.customer,
     )
 
 

@@ -631,7 +631,7 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q15 — view + scalar MAX subquery (top supplier by quarterly revenue).
-# Exercises CREATE TEMP VIEW on the Spark side. Adapted: no s_address/s_phone.
+# The reference's view is a plain frame here. Adapted: no s_address/s_phone.
 # --------------------------------------------------------------------------
 @query(
     "q15",
@@ -651,7 +651,7 @@ ORDER BY s_suppkey
 )
 def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
-    revenue0 = (
+    rev = (
         t.lineitem.where(
             (F.col("l_shipdate") >= _date("1996-01-01"))
             & (F.col("l_shipdate") < _date("1996-04-01"))
@@ -659,9 +659,6 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(dsum(disc_price_expr()).alias("total_revenue"))
     )
-    # Parity with the reference's CREATE VIEW revenue0 (q15.sql).
-    revenue0.createOrReplaceTempView("revenue0")
-    rev = spark.table("revenue0")
     # max via an unpartitioned window over the ALREADY-AGGREGATED view (one
     # row per supplier) instead of a scalar-subquery self-recompute — the
     # naive form scans lineitem twice; this scans it once. The window input

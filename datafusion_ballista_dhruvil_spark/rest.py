@@ -10,7 +10,7 @@ APIs + the executed-plan metrics module:
 
 - ``GET  /api/state``               scheduler state (app id, uptime, cores)
 - ``GET  /api/executors``           executor infos from the status tracker
-- ``GET  /api/jobs``                recent Spark jobs + states
+- ``GET  /api/jobs``                kept queries + their Spark jobs' states
 - ``POST /api/sql``                 run SQL: ``{"sql": ...}`` -> job id + rows
 - ``POST /api/sql?format=arrow``    same, result as an Arrow IPC stream —
   the reference's FlightSQL RESULT ENCODING (Arrow record batches,
@@ -36,8 +36,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 MAX_INLINE_ROWS = 1000
-#: posted queries kept for the /api/job/<id> routes; each holds its
-#: DataFrame, so the oldest are dropped past this many
+#: posted queries kept for the /api/job/<id> routes; each holds the
+#: DataFrame that ran, so the oldest are dropped past this many
 MAX_KEPT_QUERIES = 64
 
 
@@ -106,17 +106,20 @@ def _make_handler(state: _State):
                     )
                 self._send(200, {"executors": out})
             elif parts == ["api", "jobs"]:
+                # each posted query runs under its own job group (its id)
                 tracker = sc.statusTracker()
-                jobs = []
-                for jid in sorted(tracker.getJobIdsForGroup(None) or [])[-50:]:
-                    info = tracker.getJobInfo(jid)
-                    if info:
-                        jobs.append({"job_id": jid, "status": info.status})
                 with state.lock:
-                    queries = [
-                        {"query_id": k, "n_rows": v["n_rows"], "sql": v["sql"]}
-                        for k, v in state.queries.items()
-                    ]
+                    kept = list(state.queries.items())
+                jobs = [
+                    {"job_id": jid, "query_id": qid, "status": info.status}
+                    for qid, _ in kept
+                    for jid in sorted(tracker.getJobIdsForGroup(qid))
+                    if (info := tracker.getJobInfo(jid))
+                ]
+                queries = [
+                    {"query_id": k, "n_rows": v["n_rows"], "sql": v["sql"]}
+                    for k, v in kept
+                ]
                 self._send(200, {"spark_jobs": jobs, "queries": queries})
             elif len(parts) == 4 and parts[:2] == ["api", "job"]:
                 qid, what = parts[2], parts[3]
@@ -161,7 +164,9 @@ def _make_handler(state: _State):
                 sc = state.spark.sparkContext
                 sc.setJobGroup(qid, f"rest:{qid}", interruptOnCancel=True)
                 try:
-                    df = state.spark.sql(sql)
+                    # the limited frame is the one that runs, so it is the
+                    # one kept: its executed plan carries the metrics
+                    df = state.spark.sql(sql).limit(state.max_rows)
                     if want_arrow:
                         # Arrow IPC result transport (FlightSQL's encoding):
                         # executor batches arrive Arrow-native via
@@ -170,7 +175,7 @@ def _make_handler(state: _State):
 
                         import pyarrow as pa
 
-                        tbl = df.limit(state.max_rows).toArrow()
+                        tbl = df.toArrow()
                         sink = io.BytesIO()
                         with pa.ipc.new_stream(sink, tbl.schema) as w:
                             w.write_table(tbl)
@@ -185,7 +190,7 @@ def _make_handler(state: _State):
                         self.end_headers()
                         self.wfile.write(body)
                         return
-                    rows = df.limit(state.max_rows).collect()
+                    rows = df.collect()
                 except Exception as e:  # noqa: BLE001 - surface to client
                     self._send(400, {"error": str(e).split("\n")[0]})
                     return

@@ -174,7 +174,6 @@ def ev_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dsum surfaces exact scale-4 decimals as doubles, so the cast back to
     # DECIMAL(27,4) is lossless and the re-aggregation stays exact
-    minute_agg.createOrReplaceTempView("ev_minute_agg")
     return spark.sql(
         """
         SELECT date_format(date_trunc('day', m), 'yyyy-MM-dd HH:mm:ss') AS day,
@@ -182,10 +181,11 @@ def ev_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
                event_type, SUM(n) AS n_events,
                CAST(CAST(SUM(CAST(v AS DECIMAL(27,4))) AS DECIMAL(38,4)) AS DOUBLE)
                  AS total_value
-        FROM ev_minute_agg
+        FROM {minute_agg}
         GROUP BY event_type, ROLLUP (date_trunc('day', m), date_trunc('hour', m))
         ORDER BY day NULLS FIRST, hour NULLS FIRST, event_type
-        """
+        """,
+        minute_agg=minute_agg,
     )
 
 
@@ -2859,8 +2859,9 @@ def ev_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as _pd
 
     t = Tables(spark, sf_dir)
-    t.events.createOrReplaceTempView("events")
-    series = spark.sql(_HOLT_DAILY_SQL).where(F.col("d") <= 14)
+    series = spark.sql(
+        "WITH events AS (SELECT * FROM {e}) " + _HOLT_DAILY_SQL, e=t.events
+    ).where(F.col("d") <= 14)
 
     def holt_kernel(pdf: _pd.DataFrame) -> _pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)

@@ -78,3 +78,30 @@ def test_build_that_leaves_a_cache_is_a_leak(spark):
         for df in left:
             df.unpersist()
         con.close()
+
+
+def test_build_that_leaves_a_view_is_a_leak(spark):
+    """A view that is new after the collect, or after a failed build, is
+    a LEAK; a view that was already there is not."""
+    con = duckdb.connect()
+    sql = "SELECT range AS id FROM range(3)"
+
+    def leaky(s, _):
+        df = s.range(3)
+        df.createOrReplaceTempView("leaked_view")
+        return df
+
+    def broken(s, _):
+        s.range(1).createOrReplaceTempView("leaked_by_failure")
+        raise ValueError("boom")
+
+    try:
+        assert check(spark, con, leaky, sql, "") == "LEAK temp views left: leaked_view"
+        assert check(spark, con, leaky, sql, "") is None
+        assert check(spark, con, broken, sql, "") == (
+            "LEAK temp views left: leaked_by_failure; ValueError: boom"
+        )
+    finally:
+        spark.catalog.dropTempView("leaked_view")
+        spark.catalog.dropTempView("leaked_by_failure")
+        con.close()

@@ -13,7 +13,8 @@ It starts from a session with no cached relations: a cache registered by
 an earlier test (a plan-only build of a query that caches) would flip
 later plans' broadcasts to sort-merge and fail the gate on no change.
 The same sweep records the Spark jobs each plan-only build launches;
-a query may launch one only from the BUILD_JOBS allowlist.
+a query may launch one only from the BUILD_JOBS allowlist. It also
+holds a user view named ``orders``, which no build may read or replace.
 
 Baseline regeneration (deliberate, reviewed, committed):
     python tools/plan_fingerprint.py
@@ -27,11 +28,13 @@ import subprocess
 import sys
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
 from datafusion_ballista_dhruvil_spark.plans.inspect import fingerprints
 from datafusion_ballista_dhruvil_spark.session import TABLE_NAMES, table_path, table_schema
+from tools.drive_common import temp_views
 from tools.plan_fingerprint import SKIP
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -98,27 +101,57 @@ BUILD_JOBS = {
 }
 
 
+#: Session variables that builders declare; none may outlive its build.
+SESSION_VARIABLES = ("price_floor", "date_floor", "stmt_text")
+
+
+def _resolves(spark, name: str) -> bool:
+    try:
+        spark.sql(f"SELECT {name}")
+        return True
+    except AnalysisException:
+        return False
+
+
 @pytest.fixture(scope="module")
 def sweep(spark):
-    """One plan-only build of every baselined query, read by both gates.
-    Table schemas are inferred first: the first read of a table in a
-    session infers its schema with a job, whichever query reads it."""
+    """One plan-only build of every registered query, read by the gates
+    below, with a 3-row user view named ``orders`` in place. Returns the
+    fingerprints and what the session catalog held after the sweep; the
+    session's own ``orders`` view, if any, is restored. Table schemas are
+    inferred first: the first read of a table in a session infers its
+    schema with a job, whichever query reads it."""
     spark.catalog.clearCache()
     for t in TABLE_NAMES:
         table_schema(spark, table_path(SF, t))
-    base = _baseline()
-    return fingerprints(spark, sorted(k for k, v in base.items() if not v.get("error")), SF)
+    views = temp_views(spark)
+    held = spark.table("orders") if "orders" in views else None
+    spark.range(3).toDF("o_orderkey").createOrReplaceTempView("orders")
+    try:
+        fps = fingerprints(spark, sorted(QUERIES), SF)
+        catalog = {
+            "orders_rows": spark.table("orders").count(),
+            "new_views": sorted(temp_views(spark) - views - {"orders"}),
+            "variables": [v for v in SESSION_VARIABLES if _resolves(spark, v)],
+        }
+    finally:
+        if held is None:
+            spark.catalog.dropTempView("orders")
+        else:
+            held.createOrReplaceTempView("orders")
+    return fps, catalog
 
 
 def test_plan_shapes_do_not_regress(sweep):
     """Re-derive every baselined fingerprint and compare the TIGHT
     counters; a query that no longer builds fails too."""
     base = _baseline()
-    failures = [f"{name}: build error" for name, fp in sweep.items() if fp.get("error")]
+    fps = sweep[0]
+    failures = [f"{name}: build error" for name, fp in fps.items() if fp.get("error")]
     failures += [
         f"{name}.{key}: baseline {base[name][key]} -> {fp[key]}"
-        for name, fp in sweep.items()
-        if not fp.get("error")
+        for name, fp in fps.items()
+        if name in base and not fp.get("error")
         for key in TIGHT
         if fp[key] > base[name][key]
     ]
@@ -129,14 +162,23 @@ def test_plan_shapes_do_not_regress(sweep):
 
 
 def test_build_jobs_are_allowlisted(sweep):
-    """A plan-only build launches no Spark job unless BUILD_JOBS names
-    the query; an allowlisted query that launches none fails too, so the
-    list only shrinks."""
-    ran = {name for name, fp in sweep.items() if fp.get("build_jobs")}
-    new = {n: sweep[n]["build_jobs"] for n in sorted(ran - set(BUILD_JOBS))}
+    """A plan-only build of a baselined query launches no Spark job
+    unless BUILD_JOBS names the query; an allowlisted query that launches
+    none fails too, so the list only shrinks."""
+    fps = sweep[0]
+    ran = {name for name, fp in fps.items() if fp.get("build_jobs") and name not in SKIP}
+    new = {n: fps[n]["build_jobs"] for n in sorted(ran - set(BUILD_JOBS))}
     assert not new, f"plan-only builds that launch jobs: {new}"
     gone = sorted(set(BUILD_JOBS) - ran)
     assert not gone, f"launch no job any more, drop from BUILD_JOBS: {gone}"
+
+
+def test_sweep_keeps_a_user_view_and_leaves_no_names(sweep):
+    """Builders hand their frames to SQL as arguments, so a user view
+    named like a table keeps its rows, and no build leaves a temporary
+    view or a session variable behind. The LEAK rule sees only new view
+    names; this covers a replaced one."""
+    assert sweep[1] == {"orders_rows": 3, "new_views": [], "variables": []}
 
 
 def test_plan_only_build_leaves_no_cache_behind(spark):

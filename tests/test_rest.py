@@ -39,6 +39,14 @@ def _post(srv, path, payload=None):
         return json.loads(r.read())
 
 
+def _groupless_jobs(spark) -> set[int]:
+    """Ids of the jobs run outside any job group, which is where the
+    server's GET handler threads run theirs."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
 def test_state_and_executors(spark, server):
     st = _get(server, "/api/state")
     assert st["status"] == "ACTIVE"
@@ -61,18 +69,25 @@ def test_sql_roundtrip_and_job_introspection(spark, server):
     assert sum(r[1] for r in res["rows"]) == spark.table("orders").count()
 
     qid = res["query_id"]
+    before = _groupless_jobs(spark)
+    ran = set(spark.sparkContext.statusTracker().getJobIdsForGroup(qid))
+    assert ran
     jobs = _get(server, "/api/jobs")
     assert any(q["query_id"] == qid for q in jobs["queries"])
+    assert {j["job_id"] for j in jobs["spark_jobs"] if j["query_id"] == qid} == ran
 
+    # the routes read the frame that ran, so they start no job of their own
     dot = _get(server, f"/api/job/{qid}/dot")
     assert dot["dot"].startswith("digraph")
-
     mets = _get(server, f"/api/job/{qid}/metrics")
-    assert any(
-        "output rows" in k
+    assert _groupless_jobs(spark) == before
+    top_rows = next(
+        v
         for op in mets["operators"]
-        for k in op["metrics"]
+        for k, v in op["metrics"].items()
+        if "output rows" in k
     )
+    assert top_rows == res["n_rows"]
 
 
 def test_sql_error_is_clean_400(server):

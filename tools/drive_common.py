@@ -3,7 +3,8 @@ hostile drives, and ``tests/driver_diff.py`` all call it, so none of them
 can diverge on what MATCH means.
 
 - ``diff`` compares collected rows, type-strict (see ``canon``).
-- ``check`` builds, collects and diffs one query, with the LEAK rule.
+- ``check`` builds, collects and diffs one query, with the LEAK rule
+  (cache entries and temporary views a query leaves behind).
 - ``pandas_diff`` is the driver's toPandas-level compare, which also
   catches dtype drift that a value-equal row compare cannot see.
 """
@@ -71,16 +72,23 @@ def diff(scols, srows, ocols, orows) -> str | None:
     )
 
 
+def temp_views(spark) -> set[str]:
+    """Names of the session's temporary views. SHOW TABLES runs no job;
+    catalog.listTables reads its rows with one Spark job per partition."""
+    return {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary}
+
+
 def check(spark, con, build, sql: str, sf_dir: str, min_rows: int = 1) -> str | None:
     """Run ``build(spark, sf_dir)`` on Spark and ``sql`` on DuckDB ``con``;
     return None on a match of at least ``min_rows`` rows, else a failure
     message. An exception is reported, in full, as the message.
 
-    LEAK rule: a query that leaves more Dataset cache entries registered
-    after its collect (or its failed build) than before its build fails
-    as LEAK."""
+    LEAK rule: a query fails as LEAK if, after its collect (or its failed
+    build), more Dataset cache entries are registered than before its
+    build, or a temporary view exists that did not exist before it."""
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     cached_before = cache_manager.numCachedEntries()
+    views_before = temp_views(spark)
     try:
         sdf = build(spark, sf_dir)
         scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
@@ -90,9 +98,15 @@ def check(spark, con, build, sql: str, sf_dir: str, min_rows: int = 1) -> str | 
             failure = f"{len(srows)} rows (< {min_rows})"
     except Exception as ex:  # noqa: BLE001 — reported per query
         failure = f"{type(ex).__name__}: {ex}"
+    leaks = []
     grown = cache_manager.numCachedEntries() - cached_before
     if grown > 0:
-        leak = f"LEAK {grown} cache entries left registered"
+        leaks.append(f"{grown} cache entries left registered")
+    views = sorted(temp_views(spark) - views_before)
+    if views:
+        leaks.append(f"temp views left: {', '.join(views)}")
+    if leaks:
+        leak = "LEAK " + "; ".join(leaks)
         failure = leak if failure is None else f"{leak}; {failure}"
     return failure
 
