@@ -17,6 +17,8 @@ reference's ``.so`` plugin_dir mechanism.
 
 from __future__ import annotations
 
+import uuid
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -184,15 +186,21 @@ def udf_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, tok in enumerate((text or "").split(" "), start=1):
                 yield i, tok
 
-    spark.udtf.register("token_positions", TokenPositions)
-    return spark.sql(
-        """
-        SELECT d.doc_id, tp.pos, tp.token
-        FROM {docs} d, LATERAL token_positions(d.text) tp
-        ORDER BY d.doc_id, tp.pos
-        """,
-        docs=t.documents.where(F.col("doc_id") < 20),
-    )
+    # SQL reaches a UDTF only by name: a unique temporary function that
+    # lives until the plan is analyzed (the UDTF is bound there)
+    fn = f"token_positions_{uuid.uuid4().hex}"
+    spark.udtf.register(fn, TokenPositions)
+    try:
+        return spark.sql(
+            f"""
+            SELECT d.doc_id, tp.pos, tp.token
+            FROM {{docs}} d, LATERAL {fn}(d.text) tp
+            ORDER BY d.doc_id, tp.pos
+            """,
+            docs=t.documents.where(F.col("doc_id") < 20),
+        )
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION {fn}")
 
 
 # --------------------------------------------------------------------------

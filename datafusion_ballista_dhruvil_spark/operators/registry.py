@@ -47,46 +47,40 @@ def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
 #: only the FIRST 50 registered queries, so export order IS coverage.
 #: Every registered query has a green latest verdict (none unverdicted
 #: through r11). Tranche composition (changed-code-first):
-#: 0) the 17 builders that now pass their frames to SQL as arguments
-#:    instead of registering temp views;
-#: 1) the 11 builders moved onto dedup.bucket_pairs / dedup.set_overlap,
-#:    verified_pairs_of's users included;
-#: 2) udf_grouped_map_normalize, which lost the orderBy after its
-#:    grouped map;
-#: 3) the 19 builders whose code moved onto a shared similarity kernel,
-#:    sim_dbscan_core also without its orderBy;
-#: 4) the first 2 of the build-scope change's builders.
-#: Dropped from the previous list to keep the tranche at 50: its last
-#: 17 rows, the rest of the build-scope change and the first mm_ payload
-#: builders.
+#: 0) udf_table_function, whose UDTF is now a uniquely named temporary
+#:    function dropped once its plan is analyzed;
+#: 1) the 47 builders with a Python stage (``py_eval`` or ``py_map`` in
+#:    PLAN_FINGERPRINTS.json), whose workers now fork from the engine's
+#:    daemon (``worker_daemon``);
+#: 2) the first 2 rows of the previous list.
+#: Dropped from the previous list to keep the tranche at 50: the rest of
+#: its frames-as-SQL-arguments and bucket_pairs / set_overlap rows and
+#: the 2 build-scope builders.
 #: All names below are asserted against QUERIES at import (see bottom of
 #: load_all in __init__); a typo here raises instead of silently dropping
 #: a verdict slot.
 EXPORT_PRIORITY: list[str] = [
-    # ---- frames passed to SQL as arguments (changed code)
-    "ops_grouping_sets", "ops_lateral_join", "ops_distinct_on",
-    "ops_qualify_rewrite", "ops_recursive_cte", "ops_listagg_within_group",
-    "ops_pipe_syntax", "ops_group_order_by_all", "ops_session_variables",
-    "ops_execute_immediate", "ops_identifier_clause",
-    "ops_lateral_column_alias", "ops_not_in_null_semantics",
-    "ev_rollup_multires", "ev_forecast_holt", "q15", "udf_table_function",
-    # ---- moved onto bucket_pairs / set_overlap (changed code)
-    "dedup_minhash_lsh", "dedup_cluster_cc", "dedup_editdist_verify",
-    "pipeline_clean_corpus", "dedup_graph_triangles", "dedup_minhash_accuracy",
-    "dedup_simhash_pairs", "dedup_incremental_lsh", "dedup_sorted_neighborhood",
-    "dedup_lsh_tuning_curve", "mm_image_neardup_pairs",
-    # ---- grouped map without its orderBy (changed code)
-    "udf_grouped_map_normalize",
-    # ---- moved onto a shared similarity kernel (changed code)
-    "sim_cosine_topk", "sim_ann_recall", "sim_recall_at_k_curve",
-    "sim_matryoshka_recall", "sim_ivf_topk", "sim_knn_label_agreement",
-    "sim_ivf_balance_audit", "sim_kmeans_assign", "dedup_semantic_keep",
-    "sim_cluster_purity_nmi", "sim_silhouette", "sim_dbscan_core",
-    "sim_bitext_margin_mining", "sim_pq_adc", "sim_ivf_pq",
-    "sim_pq_code_dedup", "sim_residual_quantize", "sim_srp_agreement_audit",
-    "sample_kcenter_coreset",
-    # ---- build-scope change, not yet verdicted
-    "dedup_ngram_jaccard", "dedup_kcore_peel",
+    # ---- UDTF dropped after analysis (changed code)
+    "udf_table_function",
+    # ---- Python stages on the engine's worker daemon (changed code)
+    "avro_roundtrip_agg", "dedup_semantic_keep", "ev_forecast_holt",
+    "hybrid_search_rrf", "mm_audio_features", "mm_audio_resample",
+    "mm_audio_vad_segments", "mm_decode_features", "mm_image_ahash",
+    "mm_image_dhash", "mm_image_entropy", "mm_image_neardup_pairs",
+    "mm_image_resize", "mm_jpeg_color_stats", "mm_jpeg_features",
+    "mm_png_features", "mm_resize_thumbnail", "mm_scene_cuts",
+    "sample_kcenter_coreset", "sim_anisotropy_audit", "sim_ann_bucketed",
+    "sim_ann_recall", "sim_bitext_margin_mining", "sim_cluster_purity_nmi",
+    "sim_cosine_topk", "sim_dbscan_core", "sim_embedding_neardup",
+    "sim_hard_negatives", "sim_ivf_balance_audit", "sim_ivf_pq",
+    "sim_ivf_topk", "sim_kmeans_assign", "sim_knn_label_agreement",
+    "sim_matryoshka_recall", "sim_mmr_rerank", "sim_ndcg_eval", "sim_pq_adc",
+    "sim_pq_code_dedup", "sim_recall_at_k_curve", "sim_residual_quantize",
+    "sim_silhouette", "sim_srp_agreement_audit", "sim_triplet_margin",
+    "text_heavy_hitters", "udf_grouped_agg", "udf_grouped_map_normalize",
+    "udf_vectorized_score",
+    # ---- frames passed to SQL as arguments (previous list)
+    "ops_grouping_sets", "ops_lateral_join",
 ]
 
 

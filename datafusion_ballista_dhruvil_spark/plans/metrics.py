@@ -20,12 +20,13 @@ from pyspark.sql import DataFrame
 
 
 def _final_plan(df: DataFrame):
+    """The executed plan; an adaptive plan's final plan once its query ran,
+    else its current one. ``finalPhysicalPlan()`` on an adaptive plan that
+    never ran executes its stages, so a read of an unexecuted frame would
+    run its jobs."""
     plan = df._jdf.queryExecution().executedPlan()
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        try:
-            plan = plan.finalPhysicalPlan()
-        except Exception:  # noqa: BLE001 - not yet executed: keep initial plan
-            pass
+        plan = plan.finalPhysicalPlan() if plan.isFinalPlan() else plan.executedPlan()
     return plan
 
 

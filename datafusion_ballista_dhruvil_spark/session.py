@@ -53,6 +53,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: Spark's 100.
 CODEGEN_CACHE_ENTRIES = 8192
 
+#: The Python worker daemon the engine's session runs (``worker_daemon``):
+#: Spark's own, except that a worker re-reads an archive on its path (the
+#: spark-core jar, ``pyspark.zip``) at the start of a task only when the
+#: file changed, where Spark's re-reads both on every task (about 170 ms).
+#: A static conf, like ``CODEGEN_CACHE_ENTRIES``: a session the engine did
+#: not build keeps Spark's daemon.
+WORKER_DAEMON = "datafusion_ballista_dhruvil_spark.worker_daemon"
+
 
 def _cpus() -> int:
     try:
@@ -73,9 +81,12 @@ def create_session(
     spark-submit; ``shuffle_partitions`` should then be ~2-3x total cores.
     """
     cpus = _cpus()
-    # Spark's Python workers re-exec python and resolve pickled-by-reference
-    # functions via import; make this package importable for them even when
-    # the driver was launched from outside the repo.
+    # Spark's Python workers re-exec python, resolve pickled-by-reference
+    # functions via import and run WORKER_DAEMON; make this package
+    # importable for them even when the driver was launched from outside
+    # the repo. The environment reaches a JVM this call launches; the
+    # executor env reaches every Python function's workers, also in a JVM
+    # that an earlier session launched.
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if pkg_root not in existing.split(os.pathsep):
@@ -113,6 +124,9 @@ def create_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Compile each generated class once per JVM (CODEGEN_CACHE_ENTRIES).
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Re-read the workers' archives only when they change (WORKER_DAEMON).
+        .config("spark.python.daemon.module", WORKER_DAEMON)
+        .config("spark.executorEnv.PYTHONPATH", pkg_root)
         # Quieter driver logs for bench runs.
         .config("spark.ui.showConsoleProgress", "false")
     )
@@ -144,6 +158,14 @@ _REQUIRED_SQL_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+#: Whole-stage codegen puts the stage id in a generated class's name, and
+#: AQE numbers stages in planning order, so a warm build of the same query
+#: emitted new source and compiled again (sim_mmr_rerank: 14 classes per
+#: warm build); without the id, identical stages share one cached class.
+#: A runtime conf that changes speed, not results: ``ensure_session_confs``
+#: sets it on any session, but it is not in ``_REQUIRED_SQL_CONFS``.
+_STABLE_CLASS_NAMES = ("spark.sql.codegen.useIdInClassName", "false")
+
 
 def _extra_conf_items(raw: str) -> list[tuple[str, str]]:
     """Parse ``SPARK_GRAFT_EXTRA_CONF`` (``k=v`` items separated by ``;``).
@@ -168,8 +190,9 @@ def _extra_conf_items(raw: str) -> list[tuple[str, str]]:
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
-    """Apply correctness-critical runtime SQL confs to an externally-created
-    session (idempotent), and ship this package to the Python workers.
+    """Apply correctness-critical runtime SQL confs (and stable generated-class
+    names) to an externally-created session (idempotent), and ship this
+    package to the Python workers.
 
     The driver/harness may hand us a session whose Python workers don't
     have this package on their path; closures that reference module-level
@@ -178,7 +201,7 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     package. ``addPyFile`` of a zip of the package fixes that at runtime
     for any session — guarded per-SparkContext so it runs once.
     """
-    for k, v in _REQUIRED_SQL_CONFS.items():
+    for k, v in [*_REQUIRED_SQL_CONFS.items(), _STABLE_CLASS_NAMES]:
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)

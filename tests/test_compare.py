@@ -81,8 +81,8 @@ def test_build_that_leaves_a_cache_is_a_leak(spark):
 
 
 def test_build_that_leaves_a_view_is_a_leak(spark):
-    """A view that is new after the collect, or after a failed build, is
-    a LEAK; a view that was already there is not."""
+    """A view or function that is new after the collect, or a view new
+    after a failed build, is a LEAK; one that was already there is not."""
     con = duckdb.connect()
     sql = "SELECT range AS id FROM range(3)"
 
@@ -90,6 +90,10 @@ def test_build_that_leaves_a_view_is_a_leak(spark):
         df = s.range(3)
         df.createOrReplaceTempView("leaked_view")
         return df
+
+    def leaky_function(s, _):
+        s.udf.register("leaked_fn", lambda x: x, "long")
+        return s.range(3)
 
     def broken(s, _):
         s.range(1).createOrReplaceTempView("leaked_by_failure")
@@ -101,7 +105,10 @@ def test_build_that_leaves_a_view_is_a_leak(spark):
         assert check(spark, con, broken, sql, "") == (
             "LEAK temp views left: leaked_by_failure; ValueError: boom"
         )
+        assert check(spark, con, leaky_function, sql, "") == "LEAK functions left: leaked_fn"
+        assert check(spark, con, leaky_function, sql, "") is None
     finally:
         spark.catalog.dropTempView("leaked_view")
         spark.catalog.dropTempView("leaked_by_failure")
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS leaked_fn")
         con.close()

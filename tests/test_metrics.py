@@ -5,9 +5,11 @@ resolved client-side from Spark's SQLMetrics."""
 from __future__ import annotations
 
 import duckdb
+from pyspark.sql import functions as F
 
 from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
+from datafusion_ballista_dhruvil_spark.plans.inspect import count_jobs
 from datafusion_ballista_dhruvil_spark.plans.metrics import (
     executed_metrics,
     metric_total,
@@ -63,3 +65,24 @@ def test_plan_dot_renders_tree(spark):
     declared = set(re.findall(r"(n\d+) \[", dot))
     for a, b in re.findall(r"(n\d+) -> (n\d+)", dot):
         assert a in declared and b in declared
+
+
+def test_unexecuted_frame_reads_run_no_job(spark):
+    """An adaptive plan's final plan exists only once its query ran;
+    reading the metrics of a frame that never ran reads its current plan
+    and launches no job. After the collect the reads see the final plan."""
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().orderBy("k")
+    for read in (
+        lambda: executed_metrics(df),
+        lambda: plan_dot(df),
+        lambda: metric_total(df, "output rows"),
+    ):
+        assert count_jobs(spark, read)[1] == 0
+    assert metric_total(df, "output rows") == 0
+    df.collect()
+    rows = executed_metrics(df)
+    assert any("QueryStage" in r["node"] for r in rows)
+    # the final plan's leaf counts the rows it produced
+    ranges = [r["metrics"]["number of output rows"] for r in rows if r["node"] == "Range"]
+    assert ranges == [1000]
+    assert metric_total(df, "output rows") > 1000

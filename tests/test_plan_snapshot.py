@@ -34,7 +34,7 @@ from datafusion_ballista_dhruvil_spark.operators import load_all
 from datafusion_ballista_dhruvil_spark.operators.registry import QUERIES
 from datafusion_ballista_dhruvil_spark.plans.inspect import fingerprints
 from datafusion_ballista_dhruvil_spark.session import TABLE_NAMES, table_path, table_schema
-from tools.drive_common import temp_views
+from tools.drive_common import temp_views, user_functions
 from tools.plan_fingerprint import SKIP
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -125,6 +125,7 @@ def sweep(spark):
     for t in TABLE_NAMES:
         table_schema(spark, table_path(SF, t))
     views = temp_views(spark)
+    functions = user_functions(spark)
     held = spark.table("orders") if "orders" in views else None
     spark.range(3).toDF("o_orderkey").createOrReplaceTempView("orders")
     try:
@@ -132,6 +133,7 @@ def sweep(spark):
         catalog = {
             "orders_rows": spark.table("orders").count(),
             "new_views": sorted(temp_views(spark) - views - {"orders"}),
+            "new_functions": sorted(user_functions(spark) - functions),
             "variables": [v for v in SESSION_VARIABLES if _resolves(spark, v)],
         }
     finally:
@@ -176,9 +178,14 @@ def test_build_jobs_are_allowlisted(sweep):
 def test_sweep_keeps_a_user_view_and_leaves_no_names(sweep):
     """Builders hand their frames to SQL as arguments, so a user view
     named like a table keeps its rows, and no build leaves a temporary
-    view or a session variable behind. The LEAK rule sees only new view
-    names; this covers a replaced one."""
-    assert sweep[1] == {"orders_rows": 3, "new_views": [], "variables": []}
+    view, function or session variable behind. The LEAK rule sees only
+    new view names; this covers a replaced one."""
+    assert sweep[1] == {
+        "orders_rows": 3,
+        "new_views": [],
+        "new_functions": [],
+        "variables": [],
+    }
 
 
 def test_plan_only_build_leaves_no_cache_behind(spark):

@@ -125,13 +125,16 @@ def test_warm_pass_compiles_nothing(tmp_path):
     """The generated-class cache holds a whole pass of perfbench
     flight_mixed's statements (``perfbench/workloads.FLIGHT_SQL``), whose
     generated code is the same on every build, so a second pass compiles
-    nothing; Spark's 100 entries recompiled ~125. The probe has its own
+    nothing; Spark's 100 entries recompiled ~125. A second build of
+    ops_setops compiles nothing either: its classes are not named after
+    the stage ids AQE assigns in planning order (``_STABLE_CLASS_NAMES``);
+    with the id every warm build compiled about 12. The probe has its own
     JVM: the shared test session's cache holds the suite's earlier
     classes, and its compile counter counts every thread's compiles."""
     probe = f"""
 from datafusion_ballista_dhruvil_spark import session
 from datafusion_ballista_dhruvil_spark.operators import load_all
-from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES
+from datafusion_ballista_dhruvil_spark.operators.registry import ORACLES, QUERIES
 load_all()
 spark = session.create_session(app_name="codegen-probe", master="local[2]")
 assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
@@ -139,19 +142,31 @@ assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
 )
 session.register_tables(spark, {SF_DIR!r})
 compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-counts = []
-for _ in range(2):
-    before = compiles.METRIC_COMPILATION_TIME().getCount()
-    for name in ["q3", "q4", "q5", "q7", "q9", "q10", "q11", "q20"]:
-        spark.sql(ORACLES[name]).toArrow()
-    counts.append(compiles.METRIC_COMPILATION_TIME().getCount() - before)
+passes = {{
+    "flight": lambda: [
+        spark.sql(ORACLES[n]).toArrow()
+        for n in ["q3", "q4", "q5", "q7", "q9", "q10", "q11", "q20"]
+    ],
+    "setops": lambda: QUERIES["ops_setops"](spark, {SF_DIR!r}).collect(),
+}}
+for name, run in passes.items():
+    counts = []
+    for _ in range(2):
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        run()
+        counts.append(compiles.METRIC_COMPILATION_TIME().getCount() - before)
+    print("COMPILES", name, *counts)
 spark.stop()
-print("COMPILES", *counts)
 """
     out = _probe(probe, tmp_path)
-    assert "COMPILES " in out, out[-4000:]
-    first, second = map(int, out.split("COMPILES ", 1)[1].split()[:2])
-    assert first > 0 and second == 0, (first, second)
+    counts = {
+        line.split()[1]: tuple(map(int, line.split()[2:4]))
+        for line in out.splitlines()
+        if line.startswith("COMPILES ")
+    }
+    assert set(counts) == {"flight", "setops"}, out[-4000:]
+    for first, second in counts.values():
+        assert first > 0 and second == 0, counts
 
 
 def test_extra_conf_items():

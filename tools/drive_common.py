@@ -4,7 +4,7 @@ can diverge on what MATCH means.
 
 - ``diff`` compares collected rows, type-strict (see ``canon``).
 - ``check`` builds, collects and diffs one query, with the LEAK rule
-  (cache entries and temporary views a query leaves behind).
+  (cache entries, temporary views and functions a query leaves behind).
 - ``pandas_diff`` is the driver's toPandas-level compare, which also
   catches dtype drift that a value-equal row compare cannot see.
 """
@@ -78,6 +78,12 @@ def temp_views(spark) -> set[str]:
     return {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary}
 
 
+def user_functions(spark) -> set[str]:
+    """Names of the session's user-defined functions, temporary ones
+    included. SHOW USER FUNCTIONS runs no job."""
+    return {r.function for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+
+
 def check(spark, con, build, sql: str, sf_dir: str, min_rows: int = 1) -> str | None:
     """Run ``build(spark, sf_dir)`` on Spark and ``sql`` on DuckDB ``con``;
     return None on a match of at least ``min_rows`` rows, else a failure
@@ -85,10 +91,12 @@ def check(spark, con, build, sql: str, sf_dir: str, min_rows: int = 1) -> str | 
 
     LEAK rule: a query fails as LEAK if, after its collect (or its failed
     build), more Dataset cache entries are registered than before its
-    build, or a temporary view exists that did not exist before it."""
+    build, or a temporary view or function exists that did not exist
+    before it."""
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     cached_before = cache_manager.numCachedEntries()
     views_before = temp_views(spark)
+    functions_before = user_functions(spark)
     try:
         sdf = build(spark, sf_dir)
         scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
@@ -105,6 +113,9 @@ def check(spark, con, build, sql: str, sf_dir: str, min_rows: int = 1) -> str | 
     views = sorted(temp_views(spark) - views_before)
     if views:
         leaks.append(f"temp views left: {', '.join(views)}")
+    functions = sorted(user_functions(spark) - functions_before)
+    if functions:
+        leaks.append(f"functions left: {', '.join(functions)}")
     if leaks:
         leak = "LEAK " + "; ".join(leaks)
         failure = leak if failure is None else f"{leak}; {failure}"
