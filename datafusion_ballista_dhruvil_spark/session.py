@@ -58,7 +58,8 @@ CODEGEN_CACHE_ENTRIES = 8192
 #: spark-core jar, ``pyspark.zip``) at the start of a task only when the
 #: file changed, where Spark's re-reads both on every task (about 170 ms).
 #: A static conf, like ``CODEGEN_CACHE_ENTRIES``: a session the engine did
-#: not build keeps Spark's daemon.
+#: not build keeps Spark's daemon, and so does one on a cluster master
+#: (``_python_worker_confs``).
 WORKER_DAEMON = "datafusion_ballista_dhruvil_spark.worker_daemon"
 
 
@@ -67,6 +68,27 @@ def _cpus() -> int:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     except ValueError:
         return 32
+
+
+def _python_worker_confs(master: str) -> dict[str, str]:
+    """Confs that run ``WORKER_DAEMON`` on a ``local`` master.
+
+    Spark starts the daemon with ``python -m`` before any ``addPyFile``
+    content is on the worker's path, so the package must already be
+    importable from the path in ``spark.executorEnv.PYTHONPATH``, which
+    PySpark passes to every Python function's workers (also in a JVM an
+    earlier session launched). That path is this driver's checkout, which
+    only a ``local`` master's workers share; on any other master the
+    workers keep Spark's daemon and get the package from
+    ``ensure_session_confs``' ``addPyFile``.
+    """
+    if not master.startswith("local"):
+        return {}
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return {
+        "spark.python.daemon.module": WORKER_DAEMON,
+        "spark.executorEnv.PYTHONPATH": pkg_root,
+    }
 
 
 def create_session(
@@ -81,21 +103,10 @@ def create_session(
     spark-submit; ``shuffle_partitions`` should then be ~2-3x total cores.
     """
     cpus = _cpus()
-    # Spark's Python workers re-exec python, resolve pickled-by-reference
-    # functions via import and run WORKER_DAEMON; make this package
-    # importable for them even when the driver was launched from outside
-    # the repo. The environment reaches a JVM this call launches; the
-    # executor env reaches every Python function's workers, also in a JVM
-    # that an earlier session launched.
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
-        )
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         # local-mode tasks all live in the driver JVM, whose Spark default
         # is a 1 GiB heap — 32 concurrent tasks' join/agg hash maps OOM'd
         # the salted 10x stress corpus there (PERF.md r4). Size the heap
@@ -124,12 +135,11 @@ def create_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Compile each generated class once per JVM (CODEGEN_CACHE_ENTRIES).
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        # Re-read the workers' archives only when they change (WORKER_DAEMON).
-        .config("spark.python.daemon.module", WORKER_DAEMON)
-        .config("spark.executorEnv.PYTHONPATH", pkg_root)
         # Quieter driver logs for bench runs.
         .config("spark.ui.showConsoleProgress", "false")
     )
+    for k, v in _python_worker_confs(master).items():
+        builder = builder.config(k, v)
     # Suite-level conf A/B knob (r11, guide §1.2 "config last"): semicolon-
     # separated k=v pairs, e.g.
     #   SPARK_GRAFT_EXTRA_CONF="spark.io.compression.codec=zstd;..."

@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql.functions import pandas_udf
 
+from datafusion_ballista_dhruvil_spark import session
 from datafusion_ballista_dhruvil_spark.worker_daemon import invalidate_caches
 
 from tests.test_session import _probe
@@ -89,6 +90,20 @@ def test_removed_archive_behaves_as_before(tmp_path, reads):
     _write(path, {"dbds_a": "X = 4\n"})
     invalidate_caches(ours)
     assert _load(ours, "dbds_a").X == 4
+
+
+def test_only_a_local_master_runs_the_daemon():
+    """The daemon module must import before ``addPyFile`` content is on a
+    worker's path, and only a local master's workers share the driver's
+    checkout; a cluster master keeps Spark's daemon and worker path."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    for master in ("local[4]", "local", "local-cluster[2,1,1024]"):
+        assert session._python_worker_confs(master) == {
+            "spark.python.daemon.module": session.WORKER_DAEMON,
+            "spark.executorEnv.PYTHONPATH": root,
+        }
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:443"):
+        assert session._python_worker_confs(master) == {}
 
 
 def test_session_workers_run_the_wrapper(spark):
